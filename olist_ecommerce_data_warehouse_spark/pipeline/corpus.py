@@ -28,7 +28,7 @@ grams against the (small) eval gram set before any wide join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -46,6 +46,7 @@ from olist_ecommerce_data_warehouse_spark.operators.textdedup import (
     token_hashes_expr,
 )
 from olist_ecommerce_data_warehouse_spark.sources.audit import AuditLog
+from olist_ecommerce_data_warehouse_spark.sources.csv import write_table
 from olist_ecommerce_data_warehouse_spark.sources.jsonl import read_jsonl, split_corrupt
 from olist_ecommerce_data_warehouse_spark.streaming.packing import greedy_pack_batch
 
@@ -122,44 +123,31 @@ class CorpusPipeline:
             )
         return self.spark.read.parquet(self.path(layer, name))
 
-    def _audited_write(
-        self, df: DataFrame, layer: str, name: str, source_object: str = ""
-    ) -> int:
-        run_id, started = self.audit.start_run(source_object or name, layer, name)
-        try:
-            df.write.mode("overwrite").parquet(self.path(layer, name))
-            n = self.spark.read.parquet(self.path(layer, name)).count()
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=n)
-        return n
-
     # -------------------------------------------------------------- bronze
 
     def ingest_bronze(self, jsonl_path: str) -> dict[str, int]:
         """JSONL → bronze/documents (+ bronze/quarantine for corrupt
-        lines — quarantined WITH their raw text, never dropped)."""
-        run_id, started = self.audit.start_run(jsonl_path, "bronze", "documents", source_path=jsonl_path)
-        try:
-            raw = read_jsonl(self.spark, jsonl_path, DOC_SCHEMA)
-            clean, corrupt = split_corrupt(raw)
-            clean.write.mode("overwrite").parquet(self.path("bronze", "documents"))
-            corrupt.write.mode("overwrite").parquet(self.path("bronze", "quarantine"))
-            n = self.read("bronze", "documents").count()
-            nq = self.read("bronze", "quarantine").count()
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=n)
-        return {"documents": n, "quarantined": nq}
+        lines — quarantined WITH their raw text, never dropped), both
+        under the one documents audit row."""
+        out = {}
+
+        def documents() -> DataFrame:
+            clean, corrupt = split_corrupt(read_jsonl(self.spark, jsonl_path, DOC_SCHEMA))
+            out["quarantined"] = write_table(corrupt, self.path("bronze", "quarantine"))
+            return clean
+
+        out["documents"] = self.audit.write_table(
+            documents, self.base, "bronze", "documents",
+            source_object=jsonl_path, source_path=jsonl_path,
+        )
+        return out
 
     def ingest_bronze_df(self, docs: DataFrame) -> dict[str, int]:
         """Bronze from an in-engine frame (parquet-sourced corpora —
         the driver's documents table): same layer contract, no
         quarantine split needed."""
-        n = self._audited_write(
-            docs.select("doc_id", "text", "lang", "source"), "bronze", "documents"
+        n = self.audit.write_table(
+            docs.select("doc_id", "text", "lang", "source"), self.base, "bronze", "documents"
         )
         return {"documents": n, "quarantined": 0}
 
@@ -191,32 +179,19 @@ class CorpusPipeline:
         Rejected docs keep their reject_reason — a filter you cannot
         audit is a filter you cannot trust."""
         flagged = self._apply_gates(self.read("bronze", "documents"))
-        run_id, started = self.audit.start_run("bronze/documents", "silver", "gated")
-        try:
-            (
-                flagged.withColumn(
-                    "gate", F.coalesce(F.col("reject_reason"), F.lit("keep"))
-                )
-                .drop("reject_reason")
-                .write.mode("overwrite")
-                .partitionBy("gate")
-                .parquet(self.path("silver", "gated"))
-            )
-            # one count over the WRITTEN files, split by the partition
-            # column — no recompute of the gates
-            counts = {
-                r["gate"]: r["n"]
-                for r in self.spark.read.parquet(self.path("silver", "gated"))
-                .groupBy("gate")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        n_total = int(sum(counts.values()))
-        self.audit.finish_run(run_id, started, rows_inserted=n_total)
-        return int(counts.get("keep", 0))
+        keep = Observation()
+        gated = (
+            flagged.withColumn("gate", F.coalesce(F.col("reject_reason"), F.lit("keep")))
+            .drop("reject_reason")
+            .observe(keep, F.count_if(F.col("gate") == "keep").alias("n"))
+        )
+        # the total is the write's own count(1); the keep count rides
+        # along the same write — no re-read of the partitions
+        self.audit.write_table(
+            gated, self.base, "silver", "gated",
+            source_object="bronze/documents", partition_by=["gate"],
+        )
+        return keep.get["n"]
 
     def load_silver_deduped(self) -> int:
         """Exact dedup (content-fingerprint hash-agg, min doc_id kept)
@@ -245,19 +220,17 @@ class CorpusPipeline:
             verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
         )
         keep_ids = comp.groupBy("component").agg(F.min("id").alias("doc_id"))
-        n = self._audited_write(
-            exact.join(keep_ids.select("doc_id"), "doc_id"), "silver", "deduped"
+        n = self.audit.write_table(
+            exact.join(keep_ids.select("doc_id"), "doc_id"), self.base, "silver", "deduped"
         )
         kept = self.read("silver", "deduped")
-        self._audited_write(
+        self.audit.write_table(
             kept.select("doc_id", F.md5("text").alias("fp")),
-            "silver",
-            "index_fingerprints",
+            self.base, "silver", "index_fingerprints",
         )
-        self._audited_write(
+        self.audit.write_table(
             minhash_band_signatures(shingle_hash_table(kept)),
-            "silver",
-            "index_band_sigs",
+            self.base, "silver", "index_band_sigs",
         )
         return n
 
@@ -281,7 +254,7 @@ class CorpusPipeline:
         scored = ngram_lm_score(docs, bigram, context, v).join(
             docs.select("doc_id", "lang"), "doc_id"
         )
-        n = self._audited_write(ppl_buckets(scored), "silver", "lm_scored")
+        n = self.audit.write_table(ppl_buckets(scored), self.base, "silver", "lm_scored")
         bigram.unpersist()
         return {"lm_scored": n, "lm_vocab": v}
 
@@ -476,13 +449,13 @@ class CorpusPipeline:
             .select("doc_id")
         )
         decon = docs.join(train_overlap, "doc_id", "left_anti")
-        n_clean = self._audited_write(decon, "gold", "decontaminated")
+        n_clean = self.audit.write_table(decon, self.base, "gold", "decontaminated")
 
         mixed = sample_by_weight(
             self.read("gold", "decontaminated").filter(F.col("split") == "train"),
             weights or {},
         )
-        n_mixed = self._audited_write(mixed, "gold", "train_mixture")
+        n_mixed = self.audit.write_table(mixed, self.base, "gold", "train_mixture")
 
         sized = self.read("gold", "train_mixture").select(
             # epoch replicas must pack as distinct rows: synthesize a
@@ -492,7 +465,7 @@ class CorpusPipeline:
             F.size(token_hashes_expr("text")).alias("n_tokens"),
         )
         packed = greedy_pack_batch(sized, budget=self.seq_budget)
-        n_packed = self._audited_write(packed, "gold", "packed")
+        n_packed = self.audit.write_table(packed, self.base, "gold", "packed")
         return {"decontaminated": n_clean, "train_mixture": n_mixed, "packed": n_packed}
 
     def export_shards(self, n_shards: int = 8, epoch: int = 0) -> dict:

@@ -42,7 +42,7 @@ from olist_ecommerce_data_warehouse_spark.operators.surrogate import (
     add_surrogate_key_simple,
 )
 from olist_ecommerce_data_warehouse_spark.sources.audit import AuditLog
-from olist_ecommerce_data_warehouse_spark.sources.csv import read_csv_bronze, write_table
+from olist_ecommerce_data_warehouse_spark.sources.csv import all_string_schema, read_csv_bronze
 
 BRONZE_COLUMNS: dict[str, list[str]] = {
     "customers": [
@@ -97,22 +97,10 @@ class MedallionPipeline:
         return f"{self.base}/{layer}/{name}"
 
     def read(self, layer: str, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(layer, name))
-
-    def _audited_write(
-        self, df: DataFrame, layer: str, name: str, source_object: str = ""
-    ) -> int:
-        """C4: STARTED → write → SUCCESS(rows) / FAILED(error) + re-raise
-        (the TRY/CATCH + re-THROW of every reference SP)."""
-        run_id, started = self.audit.start_run(source_object or name, layer, name)
-        try:
-            write_table(df, self.path(layer, name))
-            n = self.spark.read.parquet(self.path(layer, name)).count()
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=n)
-        return n
+        reader = self.spark.read
+        if layer == "bronze":  # declared schema: no footer-inference job
+            reader = reader.schema(all_string_schema(BRONZE_COLUMNS[name]))
+        return reader.parquet(self.path(layer, name))
 
     # ---------------------------------------------------------- EP1: bronze
 
@@ -122,18 +110,12 @@ class MedallionPipeline:
         """The source read happens INSIDE the audit scope — a missing
         or unreadable file must leave a FAILED audit row, exactly like
         the reference's CATCH block (03_load_csv_to_bronze.sql:62-72)."""
-        run_id, started = self.audit.start_run(csv_path, "bronze", name, source_path=csv_path)
-        try:
-            df = read_csv_bronze(
+        return self.audit.write_table(
+            lambda: read_csv_bronze(
                 self.spark, csv_path, BRONZE_COLUMNS[name], sep=sep, multi_line=multi_line
-            )
-            write_table(df, self.path("bronze", name))
-            n = self.spark.read.parquet(self.path("bronze", name)).count()
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=n)
-        return n
+            ),
+            self.base, "bronze", name, source_object=csv_path, source_path=csv_path,
+        )
 
     # ---------------------------------------------------------- EP2: silver
 
@@ -149,7 +131,7 @@ class MedallionPipeline:
             F.lit("olist_csv").alias("source_system"),
             F.current_timestamp().alias("loaded_at"),
         )
-        return self._audited_write(s, "silver", "customers")
+        return self.audit.write_table(s, self.base, "silver", "customers")
 
     def load_silver_sellers(self) -> int:
         """sp_load_silver_sellers.sql:22-38."""
@@ -162,7 +144,7 @@ class MedallionPipeline:
             F.lit("olist_csv").alias("source_system"),
             F.current_timestamp().alias("loaded_at"),
         )
-        return self._audited_write(s, "silver", "sellers")
+        return self.audit.write_table(s, self.base, "silver", "sellers")
 
     def load_silver_category_translation(self) -> int:
         b = self.read("bronze", "category_translation")
@@ -170,7 +152,7 @@ class MedallionPipeline:
             clean_text("product_category_name").alias("product_category_name"),
             clean_text("product_category_name_english").alias("product_category_name_english"),
         )
-        return self._audited_write(s, "silver", "category_translation")
+        return self.audit.write_table(s, self.base, "silver", "category_translation")
 
     def load_silver_products(self) -> int:
         """sp_load_silver_products.sql:22-50: decimal-comma repair,
@@ -208,7 +190,7 @@ class MedallionPipeline:
                 ).cast("decimal(19,2)"),
             )
         )
-        return self._audited_write(enriched, "silver", "products")
+        return self.audit.write_table(enriched, self.base, "silver", "products")
 
     def load_silver_geolocation(self) -> int:
         """sp_load_silver_geolocation.sql:22-43: accent/case fold +
@@ -228,7 +210,7 @@ class MedallionPipeline:
             )
             .distinct()
         )
-        return self._audited_write(s, "silver", "geolocation")
+        return self.audit.write_table(s, self.base, "silver", "geolocation")
 
     def load_silver_orders(self) -> int:
         """sp_load_silver_orders.sql:22-47 + computed columns
@@ -265,7 +247,7 @@ class MedallionPipeline:
                 F.when(F.col("order_delivered_customer_date").isNotNull(), 1).otherwise(0),
             )
         )
-        return self._audited_write(s, "silver", "orders")
+        return self.audit.write_table(s, self.base, "silver", "orders")
 
     def load_silver_order_items(self) -> int:
         """sp_load_silver_order_items.sql:22-47: castable item id
@@ -292,7 +274,7 @@ class MedallionPipeline:
                 (F.col("price") + F.col("freight_value")).cast("decimal(12,2)"),
             )
         )
-        return self._audited_write(s, "silver", "order_items")
+        return self.audit.write_table(s, self.base, "silver", "order_items")
 
     def load_silver_order_payments(self) -> int:
         """sp_load_silver_order_payments.sql:22-41."""
@@ -308,7 +290,7 @@ class MedallionPipeline:
             try_int("payment_installments").alias("payment_installments"),
             decimal_comma("payment_value").alias("payment_value"),
         )
-        return self._audited_write(s, "silver", "order_payments")
+        return self.audit.write_table(s, self.base, "silver", "order_payments")
 
     def load_silver_order_reviews(self) -> int:
         """sp_load_silver_order_reviews.sql:22-67: keep-latest dedup on
@@ -346,7 +328,7 @@ class MedallionPipeline:
             .withColumn("is_promoter", F.when(F.col("review_score") >= 4, 1).otherwise(0))
             .withColumn("is_detractor", F.when(F.col("review_score") <= 2, 1).otherwise(0))
         )
-        return self._audited_write(flagged, "silver", "order_reviews")
+        return self.audit.write_table(flagged, self.base, "silver", "order_reviews")
 
     def load_silver_all(self) -> dict[str, int]:
         """C1/C2: dependency-ordered fail-fast silver orchestrator
@@ -376,7 +358,7 @@ class MedallionPipeline:
         except Exception:
             pass
         dim = build_date_dim(self.spark, dt.date(2016, 1, 1), dt.date(2022, 12, 31))
-        return self._audited_write(dim, "gold", "dim_date")
+        return self.audit.write_table(dim, self.base, "gold", "dim_date")
 
     def load_gold_dim_customer(self) -> int:
         """07_etl_silver_to_gold.sql:99-116 — J2 two-key left join to
@@ -397,7 +379,7 @@ class MedallionPipeline:
             .distinct()
         )
         dim = add_surrogate_key_simple(decorated, ["customer_id"], sk_col="customer_sk")
-        return self._audited_write(dim, "gold", "dim_customer")
+        return self.audit.write_table(dim, self.base, "gold", "dim_customer")
 
     def load_gold_dim_product(self) -> int:
         """07_etl_silver_to_gold.sql:133-155 — full dim_product
@@ -409,14 +391,14 @@ class MedallionPipeline:
             "product_volume_cm3",
         )
         dim = add_surrogate_key_simple(p, ["product_id"], sk_col="product_sk")
-        return self._audited_write(dim, "gold", "dim_product")
+        return self.audit.write_table(dim, self.base, "gold", "dim_product")
 
     def load_gold_dim_seller(self) -> int:
         s = self.read("silver", "sellers").select(
             "seller_id", "seller_zip_code_prefix", "seller_city", "seller_state"
         )
         dim = add_surrogate_key_simple(s, ["seller_id"], sk_col="seller_sk")
-        return self._audited_write(dim, "gold", "dim_seller")
+        return self.audit.write_table(dim, self.base, "gold", "dim_seller")
 
     def load_gold_fact_orders(self) -> int:
         """07_etl_silver_to_gold.sql:190-240: J3 inner SK join,
@@ -472,7 +454,7 @@ class MedallionPipeline:
             )
         )
         fact = add_surrogate_key(fact, ["order_id"], sk_col="order_sk")
-        return self._audited_write(fact, "gold", "fact_orders")
+        return self.audit.write_table(fact, self.base, "gold", "fact_orders")
 
     def load_gold_fact_order_items(self) -> int:
         """07_etl_silver_to_gold.sql:252-279: J4 SK-resolution chain,
@@ -492,7 +474,7 @@ class MedallionPipeline:
                 "price", "freight_value", "total_item_value",
             )
         )
-        return self._audited_write(fact, "gold", "fact_order_items")
+        return self.audit.write_table(fact, self.base, "gold", "fact_order_items")
 
     def load_gold_fact_reviews(self) -> int:
         """07_etl_silver_to_gold.sql:298-317: J5 + comment/sentiment
@@ -503,7 +485,7 @@ class MedallionPipeline:
             "order_sk", "review_id", "review_score",
             "has_comment", "is_promoter", "is_detractor",
         )
-        return self._audited_write(fact, "gold", "fact_reviews")
+        return self.audit.write_table(fact, self.base, "gold", "fact_reviews")
 
     def load_gold_all(self) -> dict[str, int]:
         """EP3 orchestrator: dims before facts; facts in orders →

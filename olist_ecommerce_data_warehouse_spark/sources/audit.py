@@ -16,10 +16,13 @@ from __future__ import annotations
 import datetime as dt
 import traceback
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from olist_ecommerce_data_warehouse_spark.sources.csv import write_table
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -79,6 +82,34 @@ class AuditLog:
             (run_id, base[1], base[2], base[3], base[4], base[5],
              started, ended, status, rows_inserted, msg)
         )
+
+    def write_table(
+        self,
+        df: DataFrame | Callable[[], DataFrame],
+        base: str,
+        target_schema: str,
+        target_table: str,
+        *,
+        source_object: str = "",
+        source_path: str = "",
+        partition_by: list[str] | None = None,
+    ) -> int:
+        """C4, the one audited write of every stage: STARTED → write →
+        SUCCESS(rows) / FAILED(error) + re-raise.  The table lands at
+        ``{base}/{target_schema}/{target_table}``; ``rows_inserted`` is the
+        write's own observed count.  ``df`` may be a zero-argument callable
+        so a source read runs inside the audit scope."""
+        run_id, started = self.start_run(
+            source_object or target_table, target_schema, target_table, source_path
+        )
+        try:
+            path = f"{base}/{target_schema}/{target_table}"
+            n = write_table(df() if callable(df) else df, path, partition_by)
+        except BaseException as e:
+            self.finish_run(run_id, started, error=e)
+            raise
+        self.finish_run(run_id, started, rows_inserted=n)
+        return n
 
     def to_df(self) -> DataFrame:
         return self.spark.createDataFrame(self.rows, AUDIT_SCHEMA)

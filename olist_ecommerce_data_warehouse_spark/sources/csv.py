@@ -14,7 +14,7 @@ repair becomes an in-engine ``regexp_replace`` (S3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,11 +66,17 @@ def strip_embedded_newlines(df: DataFrame, cols: list[str]) -> DataFrame:
     return df
 
 
-def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
     """S5: idempotent full-refresh sink (TRUNCATE+INSERT ⇒
     mode('overwrite')).  ``partition_by`` enables partition pruning on
-    date-key style columns for 100 TB fact tables."""
-    w = df.write.mode("overwrite")
+    date-key style columns for 100 TB fact tables.
+
+    Returns the rows written, counted by an observed ``count(1)`` that
+    rides along the write job (no job re-reads the table); a failed
+    write raises before the observation is read."""
+    rows = Observation()
+    w = df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+    return rows.get["n"]

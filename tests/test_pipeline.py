@@ -201,12 +201,23 @@ def test_gold_dim_date_idempotency_guard(pipeline):
     assert pipeline.load_gold_dim_date() == 0  # C3: already populated → skip
 
 
+def _assert_rows_inserted_match_tables(spark, pipe) -> int:
+    """Every SUCCESS audit row's rows_inserted equals a fresh count of the
+    table it names; returns how many rows were checked."""
+    success = [r for r in pipe.audit.rows if r[8] == "SUCCESS"]
+    for r in success:
+        written = spark.read.parquet(pipe.path(r[3], r[4])).count()
+        assert r[9] == written, f"{r[3]}.{r[4]}: audit says {r[9]}, table holds {written}"
+    return len(success)
+
+
 def test_audit_lifecycle_and_summary(pipeline, spark):
     audit = pipeline.audit.to_df()
     assert audit.filter(F.col("status") == "FAILED").count() == 0
     started = audit.filter(F.col("status") == "STARTED").count()
     success = audit.filter(F.col("status") == "SUCCESS").count()
     assert started == success and started >= 17  # 9 bronze + 9 silver + gold - skip
+    assert _assert_rows_inserted_match_tables(spark, pipeline) == success
     summary = load_summary(audit, within_minutes=None)
     row = summary.first()
     assert row["status"] == "SUCCESS" and row["duration_sec"] >= 0
@@ -218,6 +229,69 @@ def test_fail_fast_records_failed_audit_row(spark, tmp_path):
         p.ingest_bronze("customers", str(tmp_path / "missing.csv"))
     statuses = [r[8] for r in p.audit.rows]
     assert "FAILED" in statuses
+
+
+def test_zero_row_writes_report_zero(spark, tmp_path):
+    """A header-only CSV lands an empty bronze table and an empty silver
+    table from it; a clean JSONL lands an empty quarantine.  Each write
+    counts 0 rows."""
+    from olist_ecommerce_data_warehouse_spark.pipeline.corpus import CorpusPipeline
+
+    csv = tmp_path / "customers.csv"
+    csv.write_text(CUSTOMERS_CSV.splitlines()[0] + "\n", encoding="utf-8")
+    p = MedallionPipeline(spark, str(tmp_path / "wh"))
+    assert p.ingest_bronze("customers", str(csv)) == 0
+    assert p.load_silver_customers() == 0
+    assert [r[9] for r in p.audit.rows if r[8] == "SUCCESS"] == [0, 0]
+    assert _assert_rows_inserted_match_tables(spark, p) == 2
+
+    jsonl = tmp_path / "clean.jsonl"
+    jsonl.write_text('{"doc_id": 1, "text": "a b c", "lang": "en", "source": "s"}\n')
+    cp = CorpusPipeline(spark, str(tmp_path / "cp"))
+    assert cp.ingest_bronze(str(jsonl)) == {"documents": 1, "quarantined": 0}
+    assert spark.read.parquet(cp.path("bronze", "quarantine")).count() == 0
+    assert _assert_rows_inserted_match_tables(spark, cp) == 1
+
+
+def test_write_time_failure_records_failed_audit_row(spark, tmp_path, monkeypatch):
+    """A failure raised while the write runs, injected into the shared
+    audited write through one silver and one gold stage, leaves a FAILED
+    row carrying the error, re-raises, writes no SUCCESS row for that
+    run, and returns without waiting on the failed write's row count."""
+    import threading
+
+    from olist_ecommerce_data_warehouse_spark.sources.audit import AuditLog
+
+    csv = tmp_path / "category_translation.csv"
+    csv.write_text(TRANSLATION_CSV, encoding="utf-8")
+    p = MedallionPipeline(spark, str(tmp_path / "wh"))
+    p.ingest_bronze("category_translation", str(csv))
+
+    write_table = AuditLog.write_table
+
+    def poisoned(self, df, *args, **kwargs):
+        df = df.withColumn("poison", F.raise_error(F.lit("injected write failure")))
+        return write_table(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(AuditLog, "write_table", poisoned)
+    for stage in (p.load_silver_category_translation, p.load_gold_dim_date):
+        raised = []
+
+        def run(stage=stage):
+            try:
+                stage()
+            except Exception as e:
+                raised.append(e)
+
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive(), f"{stage.__name__} blocked after its write failed"
+        assert len(raised) == 1 and "injected write failure" in str(raised[0])
+        run_id = p.audit.rows[-1][0]
+        mine = [r for r in p.audit.rows if r[0] == run_id]
+        assert [r[8] for r in mine] == ["STARTED", "FAILED"]
+        assert "injected write failure" in mine[1][10] and mine[1][9] is None
 
 
 def test_sql_entry_surface(spark):
@@ -403,6 +477,10 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path_factory):
     pipe2 = CorpusPipeline(spark, str(base / "wh2"), min_tokens=2)
     out2 = pipe2.run_all(jsonl_path=src, weights={"dupfarm": 2.0})
     assert out2 == out
+
+    # every stage's rows_inserted is the true row count of what it wrote
+    assert _assert_rows_inserted_match_tables(spark, pipe) >= 10
+    assert _assert_rows_inserted_match_tables(spark, pipe2) >= 7
 
     import pytest as _pytest
 
