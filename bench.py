@@ -678,8 +678,8 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     # Session-lifecycle scratch retention (round 10, verdict task 5):
-    # run the full policy sweep (IVF indexes, CSV fixtures, sf* trees,
-    # stamped bench records) BEFORE the session starts, so every bench
+    # run the full policy sweep (IVF indexes, CSV fixtures, sf* trees)
+    # BEFORE the session starts, so every bench
     # session bounds the scratch areas — the policy existed since
     # round 9 but only ran manually.  Before Spark startup and outside
     # any timed region; removals are noted on stderr (stdout carries

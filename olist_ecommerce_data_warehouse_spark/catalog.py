@@ -102,11 +102,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All tables as a dict — convenience for pipelines and tests."""
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so ``spark.sql`` plans can
     name them exactly like the DuckDB oracle does."""

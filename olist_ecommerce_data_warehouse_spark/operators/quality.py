@@ -148,27 +148,6 @@ def quality_scored(
     )
 
 
-def quality_score_sql(feat_col: str = "f") -> dict[str, str]:
-    """SQL twins of :func:`quality_score_cols`, as expressions over an
-    ALREADY-MATERIALIZED feature-list column (compute
-    :func:`quality_features_sql` once in a prior CTE — inlining it here
-    would re-tokenize the document for every reference)."""
-    wsum = (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform({feat_col}, h -> {_weight_sql('h')})), (a, b) -> a + b)"
-    )
-    n = f"len({feat_col})"
-    return {
-        "qc_n_features": f"CAST({n} AS BIGINT)",
-        "qc_logit_sum": wsum,
-        "qc_score": (
-            f"CASE WHEN {n} > 0 THEN CAST({wsum} AS DOUBLE) / ({QC_W_HALF} * {n}) "
-            f"ELSE 0.0 END"
-        ),
-        "qc_pass": f"CASE WHEN {wsum} >= 0 THEN 1 ELSE 0 END",
-    }
-
-
 # ---------------------------------------------------------------------------
 # TRAINED head: the same hashed-feature space, with weights learned on
 # the corpus by the integer perceptron (operators/perceptron.py)

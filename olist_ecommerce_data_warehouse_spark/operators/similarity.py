@@ -32,26 +32,6 @@ def quantized(col: Column | str) -> Column:
     return F.transform(c, lambda x: F.floor(x.cast("double") * QUANT).cast("bigint"))
 
 
-def dot_q(a: Column, b: Column) -> Column:
-    """Exact integer dot product of two quantized vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm_sq_q(a: Column) -> Column:
-    return dot_q(a, a)
-
-
-def cosine_q(a: Column, b: Column) -> Column:
-    """Cosine over quantized vectors: exact-int dot / sqrt(na)·sqrt(nb)."""
-    return dot_q(a, b).cast("double") / (
-        F.sqrt(norm_sq_q(a).cast("double")) * F.sqrt(norm_sq_q(b).cast("double"))
-    )
-
-
 def _collect_query_matrix(queries: DataFrame):
     """Collect (query_id, qvec) into sorted numpy arrays.  The query
     set is broadcast-sized by contract (Q ≪ N — the same assumption a

@@ -2,8 +2,9 @@
 
 ALL plans here are oracle-checked — no rows-only registrations
 (``test_every_plan_is_oracled`` enforces this repo-wide).
-``multimodal_metadata`` is straight SQL-expressible binary plumbing;
-the mapInPandas decode/frame-sample kernels are oracle-checked too,
+``multimodal_metadata`` is straight SQL-expressible binary plumbing
+plus closed-form codec gates, one per row of ``GATE_FAMILIES``; the
+mapInPandas decode/frame-sample kernels are oracle-checked too,
 because the stubbed decode is a pure function of the payload bytes
 that the SQL oracle recomputes with character ops (byte-identical on
 the ASCII-only fixture).  Exact-value kernel assertions additionally
@@ -11,32 +12,310 @@ live in tests/test_multimodal.py."""
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable, Sequence
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olist_ecommerce_data_warehouse_spark.catalog import table
 from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
     SYNTH_FIELDS_SQL,
+    _flac_sample_stats,
+    _g711_sample_stats,
+    _jpeg_luma_stats,
+    _jpeg_ycc_stats,
+    _mp4_sample_table_stats,
+    _ogg_packet_stats,
+    _parse_bmp,
+    _parse_gif,
+    _png_pixel_stats,
+    _png_weighted_stats,
+    _synth_bmp8_bytes,
+    _synth_bmp_bytes,
+    _synth_container_bytes,
+    _synth_flac_bytes,
+    _synth_gif_bytes,
+    _synth_jpeg12_gray_bytes,
+    _synth_jpeg_420_bytes,
+    _synth_jpeg_gray_bytes,
+    _synth_jpeg_progressive_bytes,
+    _synth_mp4_stbl_bytes,
+    _synth_ogg_bytes,
+    _synth_png16_bytes,
+    _synth_png_adam7_bytes,
+    _synth_png_pal_bytes,
+    _synth_png_sub8_adam7_bytes,
+    _synth_png_sub8_bytes,
+    _synth_tiff_bytes,
+    _synth_wav_mulaw_bytes,
+    _tiff_pixel_stats,
+    _wav_pcm_stats,
     decode_media,
-    bmp_pixel_sums,
-    gif_pixel_sums,
-    png_pixel_sums,
-    synthesize_bmps,
-    synthesize_bmp8s,
-    synthesize_palette_pngs,
+    decode_stats,
     probe_media_headers,
-    synthesize_gifs,
-    synthesize_gray_jpegs,
-    synthesize_adam7_pngs,
-    synthesize_png16s,
-    jpeg_pixel_sums,
-    png_weighted_sums,
-    wav_sample_sums,
     sample_frames,
+    synthesize,
     synthesize_media,
-    synthesize_real_containers,
 )
-from olist_ecommerce_data_warehouse_spark.plans.registry import query
+from olist_ecommerce_data_warehouse_spark.plans.registry import query, track_persist
+
+
+class GateFamily(NamedTuple):
+    """One closed-form decode gate of ``multimodal_metadata``.  The
+    docs with ``doc_id % modulus == residue`` are synthesized by
+    ``synth`` (``None``: filter the shared real-container persist
+    instead), decoded to exact integers by ``stats``, and rolled up as
+    ``n_media`` plus one ``sum`` per name in ``names`` — the metrics
+    the oracle's ``*_agg`` CTE for ``kind`` derives in closed form from
+    the same id arithmetic, never parsing a byte."""
+
+    kind: str
+    modulus: int
+    residue: int
+    synth: Callable[[int], bytes] | None
+    stats: Callable[[bytes], tuple[int, ...]]
+    names: tuple[str, ...]
+
+
+GATE_FAMILIES: tuple[GateFamily, ...] = (
+    # kind='decode:png' — the REAL-DECODE gate: the png ids' containers
+    # are synthesized with ALL FIVE scanline filters cycling across ids
+    # ((id//4) % 5) but KNOWN raw pixel content ((i + y) % 251),
+    # decoded through the actual zlib-inflate + defilter path, and the
+    # exact integer pixel sums compared against the oracle's
+    # closed-form double sum — a defilter bug in any branch changes
+    # the pixels and fails the driver hash.
+    GateFamily(
+        "decode:png", 4, 0, None,
+        _png_pixel_stats, ("sum_pixels", "sum_npixels"),
+    ),
+    # kind='decode:wav' — the same device for the PCM path: the wav
+    # ids' containers carry known int16 sample content
+    # (((j * 37) % 2048) - 1024 over the interleaved stream), and the
+    # real ``wave``-module decode must recover the exact sample sums.
+    GateFamily(
+        "decode:wav", 4, 2, None,
+        _wav_pcm_stats, ("sum_samples", "sum_nsamples"),
+    ),
+    # kind='decode:gif' — the device applied to the LZW decoder (the
+    # most intricate codec in the repo): known index stream (k % 4)
+    # encoded as real LZW, known 4-color palette; the real decode
+    # (variable-width codes, table growth / width bumps, clears) plus
+    # palette resolution must recover the closed-form RGB byte sums.
+    # ``_parse_gif`` is the decoder real_decode_media runs, input
+    # checks included.
+    GateFamily(
+        "decode:gif", 4, 1,
+        lambda mid: _synth_gif_bytes(3 + mid % 6, 2 + mid % 4),
+        lambda b: _parse_gif(b)[2:], ("sum_rgb", "sum_nrgb"),
+    ),
+    # kind='decode:bmp' — the stride gate: known pixel bytes with rows
+    # PADDED to 4-byte boundaries (w = 2 + id % 5 gives padded strides
+    # for most widths); the sum only matches a reader that applies the
+    # real stride arithmetic and never counts padding.  ``_parse_bmp``
+    # is the decoder real_decode_media runs, EOF checks included.
+    GateFamily(
+        "decode:bmp", 4, 3,
+        lambda mid: _synth_bmp_bytes(2 + mid % 5, 1 + mid % 3),
+        lambda b: _parse_bmp(b)[3:], ("sum_px", "sum_npx"),
+    ),
+    # kind='decode:png-pal' (round 5) — the palette gate: color-type-3
+    # PNGs with a known index plane (same dims as the RGB png gate),
+    # every defilter branch cycling at bpp=1 ((id // 4) % 5), indices
+    # resolved through PLTE; the exact RGB sums only match if BOTH the
+    # 1-byte/pixel filter offsets and the palette resolution are right.
+    GateFamily(
+        "decode:png-pal", 4, 2,
+        lambda mid: _synth_png_pal_bytes(1 + mid % 7, 1 + mid % 5, (mid // 4) % 5),
+        _png_pixel_stats, ("sum_pixels", "sum_npixels"),
+    ),
+    # kind='decode:bmp8' (round 5) — indexed BMP: known index bytes in
+    # stride-padded rows (most widths pad) over a known 16-entry BGRA
+    # color table; the sum only matches a reader that skips padding
+    # AND resolves indices to intensities.
+    GateFamily(
+        "decode:bmp8", 4, 0,
+        lambda mid: _synth_bmp8_bytes(2 + mid % 5, 1 + mid % 3),
+        lambda b: _parse_bmp(b)[3:], ("sum_px", "sum_npx"),
+    ),
+    # kind='decode:jpeg' (round 6) — the baseline-DCT gate: real
+    # grayscale JPEGs with block-constant known content
+    # ((bx·7 + by·13 + id) % 256 per 8×8 block: exact integer DC, zero
+    # AC under unit quantization) go through the FULL decode path —
+    # segment walk, DQT/DHT parse, canonical-Huffman entropy decode
+    # with byte unstuffing, DC-diff EXTEND, dequantize, de-zigzag,
+    # float IDCT, level shift — and the exact pixel sums must match
+    # the oracle's closed form over the same id arithmetic.
+    GateFamily(
+        "decode:jpeg", 4, 1,
+        lambda mid: _synth_jpeg_gray_bytes(8 * (1 + mid % 3), 8 * (1 + mid % 2), mid),
+        _jpeg_luma_stats, ("sum_pixels", "sum_npixels"),
+    ),
+    # kind='decode:png-adam7' (round 6) — Adam7 interlace gated by a
+    # POSITION-WEIGHTED sum (a plain pixel sum is permutation-invariant,
+    # so a decoder that scattered a pass to the wrong lattice would
+    # pass it); dims straddle all seven passes' empty/non-empty
+    # boundaries across ids.
+    GateFamily(
+        "decode:png-adam7", 4, 2,
+        lambda mid: _synth_png_adam7_bytes(3 + mid % 11, 2 + mid % 9),
+        _png_weighted_stats, ("sum_wpx", "sum_npixels"),
+    ),
+    # kind='decode:png16' (round 6) — 16-bit gated at the 2-byte filter
+    # unit with the high-byte precision fold pinned in the closed form
+    # (the same position-weighted statistic).
+    GateFamily(
+        "decode:png16", 4, 3,
+        lambda mid: _synth_png16_bytes(2 + mid % 7, 1 + mid % 5),
+        _png_weighted_stats, ("sum_wpx", "sum_npixels"),
+    ),
+    # kind='decode:jpeg420' (round 7) — CHROMA-SUBSAMPLED color JPEG,
+    # the web-dominant class the round-6 verdict ranked the #1
+    # remaining decode gap: real 4:2:0 files (Y 2×2, Cb/Cr 1×1) with
+    # block-constant known content go through the full interleaved-MCU
+    # decode — per-component DC prediction, IDCT, nearest-neighbor
+    # chroma upsample — and the LUMA and combined UPSAMPLED-CHROMA sums
+    # gate separately (a broken upsampler fails cbcr; misplaced MCU
+    # blocks fail both).
+    GateFamily(
+        "decode:jpeg420", 4, 3,
+        lambda mid: _synth_jpeg_420_bytes(16 * (1 + mid % 2), 16 * (1 + mid % 3), mid),
+        _jpeg_ycc_stats, ("sum_y", "sum_cbcr", "sum_npixels"),
+    ),
+    # kind='decode:jpegprog' (round 7) — PROGRESSIVE SOF2 under the
+    # driver hash: DC-only 4:2:0 files (closed-form sums shared with
+    # the jpeg420 device; luma DC parity keeps the refinement scan real
+    # and rounds away in the pixels) run the full multi-scan decode —
+    # DC first+refine with real parity bits, cross-block EOB runs
+    # through every AC band, and per-file restart layouts (id % 3 ∈
+    # {none, every MCU, every other MCU}, a third of the family each).
+    # The AC insertion/correction machinery is pinned by the
+    # cross-codec equality pytest (progressive ≡ baseline decode of the
+    # same coefficient field, bit-for-bit), where the oracle burden is
+    # a bit-identical baseline decode rather than SQL.
+    # id % 8 (not % 4): the 12-scan pure-Python encode+decode pair
+    # costs ~4 ms/file, and 1/8 of the corpus (625 files at sf0.1)
+    # already covers every restart layout (id % 3) and every size
+    # class (id % 3 × id % 2) — doubling the family would double the
+    # slot's Python wall for zero additional gate coverage.
+    GateFamily(
+        "decode:jpegprog", 8, 1,
+        lambda mid: _synth_jpeg_progressive_bytes(
+            16 * (1 + mid % 3), 16 * (1 + mid % 2), mid,
+            color=True, restart_interval=mid % 3, dc_only=True,
+        ),
+        _jpeg_ycc_stats, ("sum_y", "sum_cbcr", "sum_npixels"),
+    ),
+    # kind='decode:png-sub8' (round 8) — the last stdlib-feasible PNG
+    # raise closed: 1/2/4-bit grayscale (depth (1, 2, 4)[id % 3])
+    # packed MSB-first, defiltered at the spec's 1-byte filter unit
+    # over PACKED rows (filters 0/1/2 cycling), unpacked and scaled by
+    # the exact integer 255/(2^d - 1).  Widths straddle byte alignment
+    # at every depth, so most rows carry trailing pad bits.  Gated by
+    # the POSITION-WEIGHTED sum (same device as Adam7): a decoder that
+    # misreads pad bits or unpacks LSB-first permutes / shifts values
+    # and diverges.  Half the family ((id // 24) % 2 == 1) is ALSO
+    # Adam7-interlaced — interlacing only permutes storage, so the
+    # closed form is shared, and a pass-mapping bug in the packed-row
+    # pass walk diverges from it.  id % 8 family — tiny images, the
+    # unpack is the only new Python cost.
+    GateFamily(
+        "decode:png-sub8", 8, 5,
+        lambda mid: (
+            _synth_png_sub8_adam7_bytes if (mid // 24) % 2 else _synth_png_sub8_bytes
+        )(2 + mid % 9, 1 + mid % 6, (1, 2, 4)[mid % 3], mid),
+        _png_weighted_stats, ("sum_wpx", "sum_npixels"),
+    ),
+    # kind='decode:jpeg12' (round 8) — 12-BIT PRECISION JPEG through
+    # the extended-sequential process: SOF1 P=12 with Pq=1 16-bit
+    # quant tables, level shift 2048, clip at 4095, uint16 planes.
+    # Two regimes alternate by (id // 8) parity: q0=256 content (the
+    # two-byte quant format is load-bearing) and q0=1 full-range
+    # content whose DC diffs span the deep SSSS categories (up to 15)
+    # that only exist at 12-bit precision.  id % 8 family, ≤6 blocks
+    # per file — the decode reuses the baseline luma statistic
+    # unchanged (int64 accumulation holds 12-bit planes).
+    GateFamily(
+        "decode:jpeg12", 8, 3,
+        lambda mid: _synth_jpeg12_gray_bytes(8 * (1 + mid % 3), 8 * (1 + mid % 2), mid),
+        _jpeg_luma_stats, ("sum_pixels", "sum_npixels"),
+    ),
+    # kind='decode:tiff' (round 8) — a FIFTH real image container:
+    # baseline TIFF 6.0 through a real typed-IFD walk in BOTH byte
+    # orders, strip assembly under RowsPerStrip=2 (ragged tail),
+    # external LONG offset/bytecount arrays (inline when the 4-byte
+    # rule says so), per-row PackBits runs/literals, per-strip LZW, and
+    # gray/RGB layouts — the (id//8, id//16, id//48) parity matrix
+    # cycles endianness × {none, PackBits, LZW} × {gray, RGB} across
+    # the family, so every variant is under the driver hash.  id % 8,
+    # tiny images; JPEG-in-TIFF and exotic photometrics/bit depths stay
+    # the honest NotImplementedError boundary.
+    GateFamily(
+        "decode:tiff", 8, 6,
+        lambda mid: _synth_tiff_bytes(3 + mid % 6, 2 + mid % 5, mid),
+        _tiff_pixel_stats, ("sum_pixels", "sum_npixels"),
+    ),
+    # kind='decode:flac' (round 8) — a real COMPRESSED audio codec
+    # beyond PCM WAV: full FLAC decode (STREAMINFO, multi-frame walk
+    # with UTF-8 frame numbers and a short tail frame, CRC-8-verified
+    # headers + CRC-16-verified frames, constant/verbatim/fixed/LPC
+    # subframes, Rice residuals with partition orders and raw escapes,
+    # wasted-bits shifts, and all three stereo decorrelation modes).
+    # The id matrix cycles subframe kind × channels × decorrelation ×
+    # partition order under one WAV-style closed-form sample sum, so a
+    # predictor, Rice, CRC or decorrelation bug in any variant fails
+    # the driver hash.
+    GateFamily(
+        "decode:flac", 8, 2, _synth_flac_bytes,
+        _flac_sample_stats, ("sum_samples", "sum_nsamples"),
+    ),
+    # kind='decode:wav-ulaw' (round 8) — G.711 companded WAV
+    # (WAVE_FORMAT_MULAW / ALAW, the telephony/archive formats the
+    # stdlib wave module refuses; µ-law and A-law alternate on
+    # (id // 8) % 2 over 24 + id % 48 companded bytes): RIFF walk to
+    # the fmt chunk, then the published expansion per companded byte
+    # (µ-law: complement, sign/exponent/mantissa split, magnitude
+    # (m·8 + 132)·2^e − 132 — spec anchors 0xFF→0 and max 32124 pinned
+    # in pytest).  The oracle replays the identical integer formula
+    # over the known byte stream, so a wrong bias/segment/sign decodes
+    # to different sums.
+    GateFamily(
+        "decode:wav-ulaw", 8, 0,
+        lambda mid: _synth_wav_mulaw_bytes(24 + mid % 48, mid, alaw=bool((mid // 8) % 2)),
+        _g711_sample_stats, ("sum_samples", "sum_nsamples"),
+    ),
+    # kind='probe:ogg' (round 8) — the Vorbis/Opus container walked for
+    # real per RFC 3533: page capture/version checks, per-page CRC-32
+    # verified with the field zeroed, BOS/EOS/continuation flag
+    # discipline, and segment-table LACING reassembly including a
+    # packet that SPANS the page boundary (all-255 run → continuation
+    # page).  Packet count, byte totals and content sums are pinned
+    # closed-form; the codec payload stays opaque (the libvorbis/libopus
+    # boundary, honestly outside).
+    GateFamily(
+        "probe:ogg", 8, 4, _synth_ogg_bytes, _ogg_packet_stats,
+        ("sum_pages", "sum_packets", "sum_packet_bytes", "sum_payload"),
+    ),
+    # kind='probe:mp4-stbl' (round 8) — the MP4 honesty boundary
+    # narrowed to pixel decode only: a real moov→trak→mdia→minf→stbl
+    # walk over spec-shaped sample tables — stsz sizes, stco offsets,
+    # every stts run, and run-length stsc resolution against the chunk
+    # count — each pinned by its own closed-form sum.
+    GateFamily(
+        "probe:mp4-stbl", 8, 7, _synth_mp4_stbl_bytes, _mp4_sample_table_stats,
+        ("sum_samples", "sum_sample_bytes", "sum_chunks", "sum_duration",
+         "sum_offsets", "sum_stsc_samples"),
+    ),
+)
+
+
+def _long(agg: DataFrame, kind: str, metrics: Sequence[str]) -> DataFrame:
+    """(kind, metric, value) rows from a rollup with one column per
+    metric; ``kind`` is a SQL expression."""
+    pairs = ", ".join(f"'{m}', {m}" for m in metrics)
+    return agg.selectExpr(kind, f"stack({len(metrics)}, {pairs}) AS (metric, value)")
 
 
 @query(
@@ -501,138 +780,21 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate/depth/progressive field in any container, the sums diverge
     and the driver hash fails.
 
-    kind='decode:png' — the REAL-DECODE gate: the png ids are
-    re-synthesized with ALL FIVE PNG scanline filters cycling across
-    ids but KNOWN raw pixel content ((i + y) % 251), decoded through
-    the actual zlib-inflate + defilter path, and the exact integer
-    pixel sums compared against the oracle's closed-form double sum —
-    a defilter bug in any of the five branches changes the decoded
-    pixels and fails the driver hash.
-
-    kind='decode:wav' — the same device for the PCM path: the wav
-    ids' containers carry known int16 sample content
-    (((j * 37) % 2048) - 1024 over the interleaved stream), and the
-    real ``wave``-module decode must recover the exact sample sums.
-
-    kind='decode:gif' — the device applied to the LZW decoder: known
-    index stream (k % 4) encoded as real LZW, known 4-color palette;
-    the real decode (variable-width codes, table growth, clears) plus
-    palette resolution must recover the closed-form RGB byte sums.
-
-    kind='decode:bmp' — the stride gate: known pixel bytes in rows
-    padded to 4-byte boundaries; the sum only matches a reader that
-    applies real stride arithmetic and never counts padding.
-
-    kind='decode:png-pal' (round 5) — color-type-3 PNGs: known index
-    plane defiltered at bpp=1 (all five filters cycling), indices
-    resolved through a known PLTE; gates the palette path end-to-end.
-
-    kind='decode:bmp8' (round 5) — indexed BMPs: known index bytes in
-    stride-padded rows resolved through a known 16-entry BGRA table.
-
-    kind='decode:jpegprog' (round 7) — PROGRESSIVE (SOF2) color JPEG
-    under the driver hash: DC-only 4:2:0 files with the closed-form
-    block values run the full multi-scan decode (DC first + refine
-    with real parity bits, cross-block EOB runs through every AC
-    band, per-file restart layouts id%3); the AC insertion /
-    correction machinery is pinned by the cross-codec equality
-    pytest (progressive ≡ baseline decode of the same coefficient
-    field, bit-for-bit).
-
-    kind='decode:png-sub8' (round 8) — 1/2/4-bit grayscale PNG: packed
-    MSB-first rows defiltered at the spec's 1-byte filter unit,
-    unpacked and scaled by the exact integer 255/(2^d - 1), gated by
-    the position-weighted sum (pad-bit reads or LSB-first unpacking
-    diverge).  Closes the last stdlib-feasible PNG raise.
-
-    kind='decode:jpeg12' (round 8) — 12-BIT PRECISION JPEG decodes
-    for real through the extended-sequential process (SOF1 P=12, Pq=1
-    16-bit quant tables, level shift 2048, clip 0..4095, uint16
-    planes): two closed-form regimes alternate by (id // 8) parity —
-    q0=256 block content that the two-byte quant format must be
-    parsed to reconstruct, and q0=1 full-range content whose DC
-    diffs exercise the deep SSSS categories (up to 15) unique to
-    12-bit files.
-
-    kind='decode:tiff' (round 8) — a fifth real image container:
-    baseline grayscale TIFF 6.0 decodes through a real typed-IFD walk
-    in BOTH byte orders (II/MM), strip assembly under RowsPerStrip=2
-    with a ragged tail strip, external LONG offset/bytecount arrays
-    (inline when the 4-byte rule says so), and real PackBits
-    inflate — the id-parity matrix cycles endianness × compression so
-    every variant is under the driver hash.  LZW inflates for real
-    too (late round 8 — the gated id matrix cycles none/PackBits/LZW
-    × gray/RGB); only JPEG-in-TIFF and exotic photometrics/bit
-    depths remain the honest NotImplementedError boundary.
-
-    kind='decode:wav-ulaw' (round 8) — G.711 µ-law WAV decodes for
-    real: RIFF walk to the WAVE_FORMAT_MULAW fmt chunk, then the
-    published expansion per companded byte (complement, sign/
-    exponent/mantissa split, magnitude (m·8 + 132)·2^e − 132 — spec
-    anchors 0xFF→0 and max 32124 pinned in pytest); the oracle
-    replays the identical integer formula over the known byte stream.
-
-    kind='probe:ogg' (round 8) — the Ogg container (RFC 3533) walked
-    for real: page capture/version checks, per-page CRC-32 verified
-    with the field zeroed, BOS/EOS/continuation flag discipline, and
-    segment-table LACING reassembly including packets spanning the
-    page boundary.  Packet count, byte totals and content sums are
-    pinned closed-form; the codec payload stays opaque (the
-    libvorbis/libopus boundary, honestly outside).
-
-    kind='decode:flac' (round 8) — real COMPRESSED audio: the FLAC
-    format decodes end-to-end (STREAMINFO, fixed-blocksize frames with
-    UTF-8-coded numbers, CRC-8 header + CRC-16 frame verification,
-    constant/verbatim/fixed-order/LPC subframes, Rice residuals with
-    partition orders and raw escapes, wasted-bits shifts, and
-    left/side / right/side / mid/side stereo reconstruction).  The id
-    matrix cycles subframe kind × channels × decorrelation ×
-    partition order under one WAV-style closed-form sample sum, so a
-    predictor, Rice, CRC or decorrelation bug in any variant fails
-    the driver hash.
-
-    kind='probe:mp4-stbl' (round 8) — the MP4 honesty boundary
-    narrowed to pixel decode only: a real moov→trak→mdia→minf→stbl
-    walk over spec-shaped sample tables — stsz sizes, stco offsets,
-    every stts run, and run-length stsc resolution against the chunk
-    count — each pinned by its own closed-form sum.
-
-    kind='decode:jpeg420' (round 7) — CHROMA-SUBSAMPLED color JPEG,
-    the web-dominant class the round-6 verdict ranked the #1 remaining
-    decode gap: real 4:2:0 files (Y 2×2, Cb/Cr 1×1) with
-    block-constant known content go through the full interleaved-MCU
-    decode — per-component DC prediction, IDCT, nearest-neighbor
-    chroma upsample — and the LUMA and combined UPSAMPLED-CHROMA sums
-    gate separately (a broken upsampler fails cbcr; misplaced MCU
-    blocks fail both).
+    kind='decode:*', 'probe:ogg', 'probe:mp4-stbl' — one REAL-DECODE
+    gate per row of ``GATE_FAMILIES``: known-content containers whose
+    exact integer decode statistics the oracle derives in closed form.
+    Each row's comment says which codec path its gate pins and why its
+    id selector and statistic are what they are.
 
     Scale shape: synthesis, probing and decoding are Arrow maps (no
-    shuffle); the rollups are small aggregates.  Round 7 also
-    de-duplicates the heaviest synthesis: ``synthesize_real_containers``
+    shuffle) — one ``synthesize`` and one ``decode_stats`` map per
+    family; the rollups are small aggregates.  Round 7 also
+    de-duplicates the heaviest synthesis: the real-container synthesis
     used to run THREE times (probe over all docs, png decode over
     id%4==0, wav decode over id%4==2) — it now synthesizes once into a
     tracked persist the three branches filter (the slot was at 1.94×
     its r04 anchor; two of three Python synthesis passes were pure
     waste)."""
-    from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        jpeg420_pixel_sums,
-        mp4_sample_tables,
-        synthesize_420_jpegs,
-        synthesize_jpeg12s,
-        synthesize_mp4_stbls,
-        synthesize_progressive_jpegs,
-        flac_sample_sums,
-        mulaw_sample_sums,
-        ogg_packet_stats,
-        synthesize_flacs,
-        synthesize_mulaw_wavs,
-        synthesize_oggs,
-        synthesize_sub8_pngs,
-        synthesize_tiffs,
-        tiff_pixel_sums,
-    )
-    from olist_ecommerce_data_warehouse_spark.plans.registry import track_persist
-
     docs = table(spark, sf_dir, "documents")
     media = synthesize_media(docs)
     n_bytes = F.octet_length("payload")
@@ -642,15 +804,12 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(n_bytes).cast("bigint").alias("min_bytes"),
         F.max(n_bytes).cast("bigint").alias("max_bytes"),
     )
-    bytes_long = bytes_agg.selectExpr(
-        "kind",
-        "stack(4, 'n_media', n_media, 'total_bytes', total_bytes, "
-        "'min_bytes', min_bytes, 'max_bytes', max_bytes) AS (metric, value)",
-    )
+    branches = [
+        _long(bytes_agg, "kind", ("n_media", "total_bytes", "min_bytes", "max_bytes"))
+    ]
     # ONE synthesis pass for the three real-container consumers
-    containers = track_persist(synthesize_real_containers(docs))
-    probed = probe_media_headers(containers)
-    probe_agg = probed.groupBy(
+    containers = track_persist(synthesize(docs, _synth_container_bytes))
+    probe_agg = probe_media_headers(containers).groupBy(
         F.concat(F.lit("probe:"), F.col("format")).alias("kind")
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_media"),
@@ -661,407 +820,19 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("bit_depth").cast("bigint").alias("sum_depth"),
         F.sum("progressive").cast("bigint").alias("sum_progressive"),
     )
-    probe_long = probe_agg.selectExpr(
-        "kind",
-        "stack(7, 'n_media', n_media, 'sum_width', sum_width, "
-        "'sum_height', sum_height, 'sum_channels', sum_channels, "
-        "'sum_rate', sum_rate, 'sum_depth', sum_depth, "
-        "'sum_progressive', sum_progressive) AS (metric, value)",
-    )
-    # kind='decode:png' — the REAL-DECODE gate: the png ids' containers
-    # are re-synthesized with ALL FIVE scanline filters cycling across
-    # ids ((id//4) % 5) but KNOWN raw pixel content, decoded through
-    # the actual zlib-inflate + defilter path, and the exact integer
-    # pixel sums compared against the oracle's closed-form double sum
-    # — a defilter bug in any branch changes the pixels and fails the
-    # driver hash.
-    png_sums = png_pixel_sums(containers.filter(F.col("media_id") % 4 == 0))
-    decode_agg = png_sums.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_media"),
-        F.sum("pixel_sum").cast("bigint").alias("sum_pixels"),
-        F.sum("n_pixels").cast("bigint").alias("sum_npixels"),
-    ).select(F.lit("decode:png").alias("kind"), "n_media", "sum_pixels", "sum_npixels")
-    decode_long = decode_agg.selectExpr(
-        "kind",
-        "stack(3, 'n_media', n_media, 'sum_pixels', sum_pixels, "
-        "'sum_npixels', sum_npixels) AS (metric, value)",
-    )
-    # kind='decode:wav' — the same device for the PCM path: WAV ids'
-    # containers carry known int16 sample content; the real wave-module
-    # decode must recover the exact interleaved sample sums.
-    wav_sums = wav_sample_sums(containers.filter(F.col("media_id") % 4 == 2))
-    wavdec_agg = wav_sums.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_media"),
-        F.sum("sample_sum").cast("bigint").alias("sum_samples"),
-        F.sum("n_samples").cast("bigint").alias("sum_nsamples"),
-    ).select(F.lit("decode:wav").alias("kind"), "n_media", "sum_samples", "sum_nsamples")
-    wavdec_long = wavdec_agg.selectExpr(
-        "kind",
-        "stack(3, 'n_media', n_media, 'sum_samples', sum_samples, "
-        "'sum_nsamples', sum_nsamples) AS (metric, value)",
-    )
-    # kind='decode:gif' — the device applied to the LZW decoder (the
-    # most intricate codec in the repo): known index stream + known
-    # palette, real LZW decode with table growth / width bumps / clear
-    # handling, exact palette-resolved RGB sums vs closed form.
-    gif_sums = gif_pixel_sums(
-        synthesize_gifs(docs.filter(F.col("doc_id") % 4 == 1))
-    )
-    gifdec_agg = gif_sums.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_media"),
-        F.sum("rgb_sum").cast("bigint").alias("sum_rgb"),
-        F.sum("n_rgb").cast("bigint").alias("sum_nrgb"),
-    ).select(F.lit("decode:gif").alias("kind"), "n_media", "sum_rgb", "sum_nrgb")
-    gifdec_long = gifdec_agg.selectExpr(
-        "kind",
-        "stack(3, 'n_media', n_media, 'sum_rgb', sum_rgb, "
-        "'sum_nrgb', sum_nrgb) AS (metric, value)",
-    )
-    # kind='decode:bmp' — the stride gate: known pixel bytes with rows
-    # PADDED to 4-byte boundaries; the sum only matches if the reader
-    # applies the real stride arithmetic and never counts padding.
-    bmp_sums = bmp_pixel_sums(
-        synthesize_bmps(docs.filter(F.col("doc_id") % 4 == 3))
-    )
-    bmpdec_agg = bmp_sums.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_media"),
-        F.sum("px_sum").cast("bigint").alias("sum_px"),
-        F.sum("n_px_bytes").cast("bigint").alias("sum_npx"),
-    ).select(F.lit("decode:bmp").alias("kind"), "n_media", "sum_px", "sum_npx")
-    bmpdec_long = bmpdec_agg.selectExpr(
-        "kind",
-        "stack(3, 'n_media', n_media, 'sum_px', sum_px, "
-        "'sum_npx', sum_npx) AS (metric, value)",
-    )
-    # kind='decode:png-pal' (round 5) — the palette gate: color-type-3
-    # PNGs with a known index plane, every defilter branch cycling at
-    # bpp=1, indices resolved through PLTE; the exact RGB sums only
-    # match if BOTH the 1-byte/pixel filter offsets and the palette
-    # resolution are right.
-    pngpal_sums = png_pixel_sums(
-        synthesize_palette_pngs(docs.filter(F.col("doc_id") % 4 == 2))
-    )
-    pngpal_agg = pngpal_sums.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_media"),
-        F.sum("pixel_sum").cast("bigint").alias("sum_pixels"),
-        F.sum("n_pixels").cast("bigint").alias("sum_npixels"),
-    ).select(
-        F.lit("decode:png-pal").alias("kind"), "n_media", "sum_pixels", "sum_npixels"
-    )
-    pngpal_long = pngpal_agg.selectExpr(
-        "kind",
-        "stack(3, 'n_media', n_media, 'sum_pixels', sum_pixels, "
-        "'sum_npixels', sum_npixels) AS (metric, value)",
-    )
-    # kind='decode:bmp8' (round 5) — indexed BMP: known index bytes in
-    # stride-padded rows over a known 16-entry BGRA color table; the
-    # sum only matches a reader that skips padding AND resolves
-    # indices to intensities.
-    bmp8_sums = bmp_pixel_sums(
-        synthesize_bmp8s(docs.filter(F.col("doc_id") % 4 == 0))
-    )
-    bmp8_agg = bmp8_sums.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_media"),
-        F.sum("px_sum").cast("bigint").alias("sum_px"),
-        F.sum("n_px_bytes").cast("bigint").alias("sum_npx"),
-    ).select(F.lit("decode:bmp8").alias("kind"), "n_media", "sum_px", "sum_npx")
-    bmp8_long = bmp8_agg.selectExpr(
-        "kind",
-        "stack(3, 'n_media', n_media, 'sum_px', sum_px, "
-        "'sum_npx', sum_npx) AS (metric, value)",
-    )
-    # kind='decode:jpeg' (round 6) — the baseline-DCT gate: real
-    # grayscale JPEGs with block-constant known content (exact integer
-    # DC, zero AC under unit quantization) go through the FULL decode
-    # path — segment walk, DQT/DHT parse, canonical-Huffman entropy
-    # decode with byte unstuffing, DC-diff EXTEND, dequantize,
-    # de-zigzag, float IDCT, level shift — and the exact pixel sums
-    # must match the oracle's closed form over the same id arithmetic.
-    jpeg_sums = jpeg_pixel_sums(
-        synthesize_gray_jpegs(docs.filter(F.col("doc_id") % 4 == 1))
-    )
-    jpegdec_agg = jpeg_sums.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_media"),
-        F.sum("px_sum").cast("bigint").alias("sum_pixels"),
-        F.sum("n_px").cast("bigint").alias("sum_npixels"),
-    ).select(
-        F.lit("decode:jpeg").alias("kind"), "n_media", "sum_pixels", "sum_npixels"
-    )
-    jpegdec_long = jpegdec_agg.selectExpr(
-        "kind",
-        "stack(3, 'n_media', n_media, 'sum_pixels', sum_pixels, "
-        "'sum_npixels', sum_npixels) AS (metric, value)",
-    )
-    # kind='decode:png-adam7' / 'decode:png16' (round 6) — the last
-    # two PNG raises closed: Adam7 interlace gated by a POSITION-
-    # WEIGHTED sum (a plain pixel sum is permutation-invariant, so a
-    # decoder that scattered a pass to the wrong lattice would pass
-    # it); 16-bit gated at the 2-byte filter unit with the high-byte
-    # precision fold pinned in the closed form.
-    def _wsum_branch(kind: str, synth_fn, mod: int, modulus: int = 4):
-        sums = png_weighted_sums(
-            synth_fn(docs.filter(F.col("doc_id") % modulus == mod))
-        )
-        agg = sums.agg(
+    branches.append(_long(probe_agg, "kind", probe_agg.columns[1:]))
+    for fam in GATE_FAMILIES:
+        if fam.synth is None:
+            fam_media = containers.filter(F.col("media_id") % fam.modulus == fam.residue)
+        else:
+            fam_docs = docs.filter(F.col("doc_id") % fam.modulus == fam.residue)
+            fam_media = synthesize(fam_docs, fam.synth)
+        agg = decode_stats(fam_media, fam.stats, fam.names).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_media"),
-            F.sum("pos_weighted_sum").cast("bigint").alias("sum_wpx"),
-            F.sum("n_px").cast("bigint").alias("sum_npixels"),
-        ).select(F.lit(kind).alias("kind"), "n_media", "sum_wpx", "sum_npixels")
-        return agg.selectExpr(
-            "kind",
-            "stack(3, 'n_media', n_media, 'sum_wpx', sum_wpx, "
-            "'sum_npixels', sum_npixels) AS (metric, value)",
+            *(F.sum(n).cast("bigint").alias(n) for n in fam.names),
         )
-
-    adam7_long = _wsum_branch("decode:png-adam7", synthesize_adam7_pngs, 2)
-    png16_long = _wsum_branch("decode:png16", synthesize_png16s, 3)
-    # kind='decode:jpeg420' (round 7) — see docstring
-    j420_agg = jpeg420_pixel_sums(
-        synthesize_420_jpegs(docs.filter(F.col("doc_id") % 4 == 3))
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_media"),
-        F.sum("y_sum").cast("bigint").alias("sum_y"),
-        F.sum("cbcr_sum").cast("bigint").alias("sum_cbcr"),
-        F.sum("n_px").cast("bigint").alias("sum_npixels"),
-    ).select(
-        F.lit("decode:jpeg420").alias("kind"),
-        "n_media", "sum_y", "sum_cbcr", "sum_npixels",
-    )
-    j420_long = j420_agg.selectExpr(
-        "kind",
-        "stack(4, 'n_media', n_media, 'sum_y', sum_y, "
-        "'sum_cbcr', sum_cbcr, 'sum_npixels', sum_npixels) AS (metric, value)",
-    )
-    # kind='decode:jpegprog' (round 7) — PROGRESSIVE SOF2 under the
-    # driver hash: DC-only 4:2:0 files (closed-form sums shared with
-    # the jpeg420 device; luma DC parity keeps the refinement scan
-    # real and rounds away in the pixels) run the full multi-scan
-    # decode — DC first+refine, cross-block EOB runs through every AC
-    # band, and per-file restart layouts (id % 3 ∈ {none, every MCU,
-    # every other MCU}); AC insertion/correction machinery is pinned
-    # by the cross-codec equality pytest, where the oracle burden is a
-    # bit-identical baseline decode rather than SQL.
-    # id % 8 (not % 4): the 12-scan pure-Python encode+decode pair
-    # costs ~4 ms/file, and 1/8 of the corpus (625 files at sf0.1)
-    # already covers every restart layout (id % 3) and every size
-    # class (id % 3 × id % 2) — doubling the family would double the
-    # slot's Python wall for zero additional gate coverage
-    jprog_long = (
-        jpeg420_pixel_sums(
-            synthesize_progressive_jpegs(docs.filter(F.col("doc_id") % 8 == 1))
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_media"),
-            F.sum("y_sum").cast("bigint").alias("sum_y"),
-            F.sum("cbcr_sum").cast("bigint").alias("sum_cbcr"),
-            F.sum("n_px").cast("bigint").alias("sum_npixels"),
-        )
-        .select(
-            F.lit("decode:jpegprog").alias("kind"),
-            "n_media", "sum_y", "sum_cbcr", "sum_npixels",
-        )
-        .selectExpr(
-            "kind",
-            "stack(4, 'n_media', n_media, 'sum_y', sum_y, "
-            "'sum_cbcr', sum_cbcr, 'sum_npixels', sum_npixels) AS (metric, value)",
-        )
-    )
-    # kind='decode:png-sub8' (round 8) — the last stdlib-feasible PNG
-    # raise closed: 1/2/4-bit grayscale packed MSB-first, defiltered
-    # at the spec's 1-byte filter unit over PACKED rows (filters 0/1/2
-    # cycling), unpacked and scaled by the exact integer 255/(2^d - 1).
-    # Gated by the POSITION-WEIGHTED sum (same device as Adam7): a
-    # decoder that misreads pad bits or unpacks LSB-first permutes /
-    # shifts values and diverges.  id % 8 family — tiny images, the
-    # unpack is the only new Python cost.
-    sub8_long = _wsum_branch(
-        "decode:png-sub8", synthesize_sub8_pngs, 5, modulus=8
-    )
-    # kind='decode:jpeg12' (round 8) — 12-BIT PRECISION JPEG through
-    # the extended-sequential process: SOF1 P=12 with Pq=1 16-bit
-    # quant tables, level shift 2048, clip at 4095, uint16 planes.
-    # Two regimes alternate by (id // 8) parity: q0=256 content (the
-    # two-byte quant format is load-bearing) and q0=1 full-range
-    # content whose DC diffs span the deep SSSS categories (up to 15)
-    # that only exist at 12-bit precision.  id % 8 family, ≤6 blocks
-    # per file — the decode reuses jpeg_pixel_sums unchanged (int64
-    # accumulation holds 12-bit planes).
-    jpeg12_long = (
-        jpeg_pixel_sums(
-            synthesize_jpeg12s(docs.filter(F.col("doc_id") % 8 == 3))
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_media"),
-            F.sum("px_sum").cast("bigint").alias("sum_pixels"),
-            F.sum("n_px").cast("bigint").alias("sum_npixels"),
-        )
-        .select(
-            F.lit("decode:jpeg12").alias("kind"),
-            "n_media", "sum_pixels", "sum_npixels",
-        )
-        .selectExpr(
-            "kind",
-            "stack(3, 'n_media', n_media, 'sum_pixels', sum_pixels, "
-            "'sum_npixels', sum_npixels) AS (metric, value)",
-        )
-    )
-    # kind='decode:tiff' (round 8) — a FIFTH real image container:
-    # baseline grayscale TIFF 6.0 through a real typed-IFD walk in
-    # BOTH byte orders, strip assembly under RowsPerStrip=2 (ragged
-    # tail), external LONG offset/bytecount arrays, per-row PackBits
-    # runs/literals, per-strip LZW, and gray/RGB layouts — the
-    # (id//8, id//16, id//48) parity matrix cycles endianness ×
-    # {none, PackBits, LZW} × {gray, RGB} across the family.  id % 8,
-    # tiny images; JPEG-in-TIFF stays an honest raise.
-    tiff_long = (
-        tiff_pixel_sums(
-            synthesize_tiffs(docs.filter(F.col("doc_id") % 8 == 6))
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_media"),
-            F.sum("px_sum").cast("bigint").alias("sum_pixels"),
-            F.sum("n_px").cast("bigint").alias("sum_npixels"),
-        )
-        .select(
-            F.lit("decode:tiff").alias("kind"),
-            "n_media", "sum_pixels", "sum_npixels",
-        )
-        .selectExpr(
-            "kind",
-            "stack(3, 'n_media', n_media, 'sum_pixels', sum_pixels, "
-            "'sum_npixels', sum_npixels) AS (metric, value)",
-        )
-    )
-    # kind='decode:wav-ulaw' (round 8) — G.711 µ-law companded WAV
-    # (WAVE_FORMAT_MULAW, the telephony/archive format the stdlib wave
-    # module refuses): RIFF walk + the published expansion
-    # ((m·8 + 132) << e − 132, sign from the complemented byte); the
-    # oracle replays the same formula over the known companded bytes,
-    # so a wrong bias/segment/sign decodes to different sums.
-    ulaw_long = (
-        mulaw_sample_sums(
-            synthesize_mulaw_wavs(docs.filter(F.col("doc_id") % 8 == 0))
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_media"),
-            F.sum("sample_sum").cast("bigint").alias("sum_samples"),
-            F.sum("n_samples").cast("bigint").alias("sum_nsamples"),
-        )
-        .select(
-            F.lit("decode:wav-ulaw").alias("kind"),
-            "n_media", "sum_samples", "sum_nsamples",
-        )
-        .selectExpr(
-            "kind",
-            "stack(3, 'n_media', n_media, 'sum_samples', sum_samples, "
-            "'sum_nsamples', sum_nsamples) AS (metric, value)",
-        )
-    )
-    # kind='probe:ogg' (round 8) — the Vorbis/Opus container walked
-    # for real per RFC 3533: page capture/version checks, per-page
-    # CRC-32 (field zeroed), BOS/EOS/continuation flags, and lacing
-    # reassembly including a packet that SPANS the page boundary
-    # (all-255 run → continuation page).  Codec payloads stay opaque
-    # (the libvorbis boundary); the closed form pins reassembled
-    # packet count/bytes/content sums.
-    ogg_long = (
-        ogg_packet_stats(
-            synthesize_oggs(docs.filter(F.col("doc_id") % 8 == 4))
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_media"),
-            F.sum("n_pages").cast("bigint").alias("sum_pages"),
-            F.sum("n_packets").cast("bigint").alias("sum_packets"),
-            F.sum("packet_bytes").cast("bigint").alias("sum_packet_bytes"),
-            F.sum("payload_sum").cast("bigint").alias("sum_payload"),
-        )
-        .select(
-            F.lit("probe:ogg").alias("kind"),
-            "n_media", "sum_pages", "sum_packets",
-            "sum_packet_bytes", "sum_payload",
-        )
-        .selectExpr(
-            "kind",
-            "stack(5, 'n_media', n_media, 'sum_pages', sum_pages, "
-            "'sum_packets', sum_packets, "
-            "'sum_packet_bytes', sum_packet_bytes, "
-            "'sum_payload', sum_payload) AS (metric, value)",
-        )
-    )
-    # kind='decode:flac' (round 8) — a real COMPRESSED audio codec
-    # beyond PCM WAV: full FLAC decode (STREAMINFO, multi-frame walk
-    # with UTF-8 frame numbers and a short tail frame, CRC-8-verified
-    # headers + CRC-16-verified frames, constant/verbatim/fixed/LPC
-    # subframes, Rice residuals with partition orders, and all three
-    # stereo decorrelation modes).  The id matrix cycles subframe kind
-    # × channels × decorrelation × partition order; the closed form is
-    # the WAV device over the per-channel sample arithmetic.
-    flac_long = (
-        flac_sample_sums(
-            synthesize_flacs(docs.filter(F.col("doc_id") % 8 == 2))
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_media"),
-            F.sum("sample_sum").cast("bigint").alias("sum_samples"),
-            F.sum("n_samples").cast("bigint").alias("sum_nsamples"),
-        )
-        .select(
-            F.lit("decode:flac").alias("kind"),
-            "n_media", "sum_samples", "sum_nsamples",
-        )
-        .selectExpr(
-            "kind",
-            "stack(3, 'n_media', n_media, 'sum_samples', sum_samples, "
-            "'sum_nsamples', sum_nsamples) AS (metric, value)",
-        )
-    )
-    # kind='probe:mp4-stbl' (round 8) — the MP4 raise narrowed to
-    # pixel decode only: real ISO-BMFF sample-table walk (stsz sizes,
-    # stco offsets, ALL stts runs, run-length stsc resolution against
-    # the chunk count), each table pinned by its own closed-form sum.
-    stbl_agg = mp4_sample_tables(
-        synthesize_mp4_stbls(docs.filter(F.col("doc_id") % 8 == 7))
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_media"),
-        F.sum("n_samples").cast("bigint").alias("sum_samples"),
-        F.sum("sum_sample_bytes").cast("bigint").alias("sum_sample_bytes"),
-        F.sum("n_chunks").cast("bigint").alias("sum_chunks"),
-        F.sum("duration").cast("bigint").alias("sum_duration"),
-        F.sum("sum_offsets").cast("bigint").alias("sum_offsets"),
-        F.sum("stsc_samples").cast("bigint").alias("sum_stsc_samples"),
-    ).select(
-        F.lit("probe:mp4-stbl").alias("kind"),
-        "n_media", "sum_samples", "sum_sample_bytes", "sum_chunks",
-        "sum_duration", "sum_offsets", "sum_stsc_samples",
-    )
-    stbl_long = stbl_agg.selectExpr(
-        "kind",
-        "stack(7, 'n_media', n_media, 'sum_samples', sum_samples, "
-        "'sum_sample_bytes', sum_sample_bytes, 'sum_chunks', sum_chunks, "
-        "'sum_duration', sum_duration, 'sum_offsets', sum_offsets, "
-        "'sum_stsc_samples', sum_stsc_samples) AS (metric, value)",
-    )
-    return (
-        bytes_long.unionByName(probe_long)
-        .unionByName(decode_long)
-        .unionByName(wavdec_long)
-        .unionByName(gifdec_long)
-        .unionByName(bmpdec_long)
-        .unionByName(pngpal_long)
-        .unionByName(bmp8_long)
-        .unionByName(jpegdec_long)
-        .unionByName(adam7_long)
-        .unionByName(png16_long)
-        .unionByName(j420_long)
-        .unionByName(jprog_long)
-        .unionByName(sub8_long)
-        .unionByName(jpeg12_long)
-        .unionByName(tiff_long)
-        .unionByName(flac_long)
-        .unionByName(ulaw_long)
-        .unionByName(ogg_long)
-        .unionByName(stbl_long)
-    )
+        branches.append(_long(agg, f"'{fam.kind}' AS kind", ("n_media", *fam.names)))
+    return functools.reduce(DataFrame.unionByName, branches)
 
 
 @query(

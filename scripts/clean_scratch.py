@@ -18,11 +18,10 @@ What accumulates and the policy applied:
 - ``.scratch/sf1`` / ``.scratch/sf10`` … — synthesized scale-stress
   parquet trees (gen_sf1 pattern, the big one: ~177 MB at sf1): kept
   ``--keep-sf-days`` (default 7) since re-synthesis costs minutes.
-- ``bench_ab/bench_full_*.json`` — round-stamped full bench records:
-  keep the newest ``--keep-bench`` (default 12) plus
-  ``bench_full_latest.json``; anchoring records referenced from
-  BASELINE.md (``anchoring_*``) and the A/B log ``bench_ab.jsonl``
-  are never touched.
+
+``bench_ab/`` is never touched: its stamped ``bench_full_*.json``
+records are committed evidence (``bench.py`` cites them), and git, not
+this sweep, bounds that history.
 
 Run ``python scripts/clean_scratch.py`` (add ``--dry-run`` to list
 without deleting), or call :func:`sweep` — one policy, one code path.
@@ -40,7 +39,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRATCH = os.path.join(REPO, ".scratch")
-BENCH_AB = os.path.join(REPO, "bench_ab")
 
 
 def _rm(path: str, dry: bool, removed: list[str]) -> None:
@@ -57,19 +55,16 @@ def _rm(path: str, dry: bool, removed: list[str]) -> None:
 
 def sweep(
     scratch: str = SCRATCH,
-    bench_ab: str = BENCH_AB,
     dry_run: bool = False,
     max_age_hours: float = 24.0,
     keep_sf_days: float = 7.0,
-    keep_bench: int = 12,
 ) -> list[str]:
     """Apply the full retention policy (module docstring) and return
     the removed (or, under ``dry_run``, would-be-removed) paths.  The
     session-lifecycle entry point: bench.py / verify_driver.py call
     this at startup so a dirty scratch tree is provably bounded by any
     bench or verify session (round 10; planted-stale-dir test in
-    tests/test_bench_gate.py).  Idempotent; never touches anchoring
-    records, ``bench_ab.jsonl`` or ``bench_full_latest.json``."""
+    tests/test_bench_gate.py).  Idempotent; never touches ``bench_ab/``."""
     if REPO not in sys.path:
         sys.path.insert(0, REPO)
     from olist_ecommerce_data_warehouse_spark.operators.ann_index import (
@@ -99,15 +94,6 @@ def sweep(
             elif name.startswith("sf") and name[2:].replace(".", "").isdigit():
                 if mtime < now - keep_sf_days * 86400.0:
                     _rm(p, dry_run, removed)
-
-    # 4. round-stamped bench records: keep newest N
-    if os.path.isdir(bench_ab):
-        stamped = sorted(
-            n for n in os.listdir(bench_ab)
-            if n.startswith("bench_full_") and n != "bench_full_latest.json"
-        )
-        for name in stamped[: max(0, len(stamped) - keep_bench)]:
-            _rm(os.path.join(bench_ab, name), dry_run, removed)
     return removed
 
 
@@ -118,15 +104,12 @@ def main() -> int:
                     help="age limit for per-session artifacts")
     ap.add_argument("--keep-sf-days", type=float, default=7.0,
                     help="age limit for synthesized sf* parquet trees")
-    ap.add_argument("--keep-bench", type=int, default=12,
-                    help="newest bench_full_*.json records to keep")
     args = ap.parse_args()
 
     removed = sweep(
         dry_run=args.dry_run,
         max_age_hours=args.max_age_hours,
         keep_sf_days=args.keep_sf_days,
-        keep_bench=args.keep_bench,
     )
     tag = "would remove" if args.dry_run else "removed"
     for p in removed:

@@ -1,9 +1,9 @@
-"""Capture `explain("formatted")` snapshots for optimization round 11.
+"""Capture `explain("formatted")` snapshots for one optimization round.
 
-    python scripts/r11_plans.py before q1 q2 ...
-    python scripts/r11_plans.py after  q1 q2 ...
+    python scripts/round_plans.py r11 before q1 q2 ...
+    python scripts/round_plans.py r11 after  q1 q2 ...
 
-Writes plans/r11/<query>_<tag>.txt — the committed evidence the
+Writes plans/<round>/<query>_<tag>.txt — the committed evidence the
 optimization deliverable requires.  Output is the full formatted plan,
 capped at 400 lines (the iterative plans unroll megabytes of lineage;
 the shape claims live in the first segment)."""
@@ -23,14 +23,14 @@ CAP = 400
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     from olist_ecommerce_data_warehouse_spark.plans import REGISTRY
     from olist_ecommerce_data_warehouse_spark.session import get_spark
 
-    out_dir = REPO / "plans" / "r11"
+    out_dir = REPO / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark("r11_plans", cpus=8)
+    spark = get_spark(f"{rnd}_plans", cpus=8)
     for name in names:
         df = REGISTRY[name].fn(spark, SF)
         buf = io.StringIO()

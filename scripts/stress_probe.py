@@ -27,9 +27,10 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from olist_ecommerce_data_warehouse_spark.catalog import table  # noqa: E402
 from olist_ecommerce_data_warehouse_spark.operators.multimodal import (  # noqa: E402
+    _synth_container_bytes,
     _synth_fields,
     probe_media_headers,
-    synthesize_real_containers,
+    synthesize,
 )
 from olist_ecommerce_data_warehouse_spark.session import get_spark  # noqa: E402
 
@@ -49,7 +50,7 @@ def main() -> None:
     )
 
     t0 = time.time()
-    probed = probe_media_headers(synthesize_real_containers(big))
+    probed = probe_media_headers(synthesize(big, _synth_container_bytes))
     got = {
         r["format"]: r
         for r in probed.groupBy("format")

@@ -31,7 +31,7 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 
 # Session-lifecycle scratch retention (round 10, verdict task 5): the
 # full policy sweep runs at startup so any verify session bounds a
-# dirty .scratch/bench_ab instead of the policy being manual-only.
+# dirty .scratch instead of the policy being manual-only.
 sys.path.insert(0, "/root/repo/scripts")
 from clean_scratch import sweep as _scratch_sweep
 _swept = _scratch_sweep()

@@ -320,9 +320,10 @@ def test_r9_subsecond_jitter_stays_under_gate():
 def test_scratch_sweep_bounds_planted_stale_dirs(tmp_path):
     """Round-10 verdict task 5: the session-lifecycle sweep (run at
     bench.py / verify_driver.py startup) must remove a planted stale
-    IVF index, a stale CSV fixture, a stale sf tree and over-quota
-    stamped bench records — and keep fresh artifacts, anchoring
-    records and bench_full_latest.json."""
+    IVF index, a stale CSV fixture and a stale sf tree — and keep
+    fresh artifacts and every bench_ab record: stamped records (they
+    are committed evidence), anchoring records and
+    bench_full_latest.json."""
     import os
     import sys
     import time
@@ -352,7 +353,7 @@ def test_scratch_sweep_bounds_planted_stale_dirs(tmp_path):
     (bench_ab / "bench_full_latest.json").write_text("{}")
     (bench_ab / "anchoring_r6_run1.json").write_text("{}")
 
-    removed = sweep(scratch=str(scratch), bench_ab=str(bench_ab), keep_bench=12)
+    removed = sweep(scratch=str(scratch))
     removed_names = {os.path.basename(p) for p in removed}
     assert {"ivf_index_stale_v1", "csv_roundtrip_sf0.1", "sf1"} <= removed_names
     for d in stale:
@@ -363,8 +364,8 @@ def test_scratch_sweep_bounds_planted_stale_dirs(tmp_path):
         n for n in os.listdir(bench_ab)
         if n.startswith("bench_full_") and n != "bench_full_latest.json"
     ]
-    assert len(stamped_left) == 12
+    assert len(stamped_left) == 15
     assert (bench_ab / "bench_full_latest.json").exists()
     assert (bench_ab / "anchoring_r6_run1.json").exists()
     # idempotent: a second sweep removes nothing
-    assert sweep(scratch=str(scratch), bench_ab=str(bench_ab), keep_bench=12) == []
+    assert sweep(scratch=str(scratch)) == []

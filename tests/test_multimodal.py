@@ -1196,23 +1196,32 @@ def test_png_sub8_interlace_decodes():
         _png_pixels(bad)
 
 
+# column names for the sample-table walk's six statistics
+MP4_STBL_NAMES = (
+    "n_samples", "sum_sample_bytes", "n_chunks", "duration", "sum_offsets",
+    "stsc_samples",
+)
+
+
 def test_mp4_stbl_walk_exact(spark):
     """Round 8: the sample-table walk recovers every known quantity —
     stsz count + size sum, stco count + offset sum, ALL stts runs, and
     the run-length stsc resolution (which must agree with the stsz
     count on a consistent file)."""
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
+        _mp4_sample_table_stats,
         _mp4_stbl_fields,
         _synth_mp4_stbl_bytes,
-        mp4_sample_tables,
-        synthesize_mp4_stbls,
+        decode_stats,
+        synthesize,
     )
 
     ids = [7, 15, 23, 31, 39, 55, 103]
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
+    media = synthesize(docs, _synth_mp4_stbl_bytes)
     got = {
         r["media_id"]: r
-        for r in mp4_sample_tables(synthesize_mp4_stbls(docs)).collect()
+        for r in decode_stats(media, _mp4_sample_table_stats, MP4_STBL_NAMES).collect()
     }
     assert set(got) == set(ids)
     for mid in ids:
@@ -1233,7 +1242,8 @@ def test_mp4_stbl_uniform_stsz(spark):
     import struct
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        mp4_sample_tables,
+        _mp4_sample_table_stats,
+        decode_stats,
     )
 
     def box(btype, payload):
@@ -1252,7 +1262,7 @@ def test_mp4_stbl_uniform_stsz(spark):
         box(b"trak", box(b"mdia", box(b"minf", box(b"stbl", stbl)))),
     )
     media = spark.createDataFrame([(1, bytearray(b))], "media_id bigint, payload binary")
-    r = mp4_sample_tables(media).collect()[0]
+    r = decode_stats(media, _mp4_sample_table_stats, MP4_STBL_NAMES).collect()[0]
     assert r["n_samples"] == 5
     assert r["sum_sample_bytes"] == 240
     assert r["n_chunks"] == 3
@@ -2045,128 +2055,30 @@ def test_flac_utf8_code_large_frame_numbers():
         assert decode(_flac_utf8_code(n)) == n, n
 
 
-def _backend_gate_fixtures(spark):
-    """The backend-parity gate fixtures: one payload per format the
-    external routing table claims exact parity for (8-bit RGB PNG,
-    palette PNG, 24bpp BMP, 8bpp palette BMP, GIF, PCM-16 WAV) plus
-    two payloads the external backend must FALL BACK on (16-bit PNG
-    territory is approximated here by a G.711 µ-law WAV and a FLAC,
-    which stay stdlib-routed by policy)."""
-    import io
-    import struct
-    import wave
-    import zlib
+def test_gate_decode_rejects_truncated_gif_and_bmp(spark):
+    """The decode:gif and decode:bmp gates run the same decoders as
+    real_decode_media (``_parse_gif`` / ``_parse_bmp``), input checks
+    included: a 24bpp BMP cut inside its last pixel row and a GIF whose
+    sub-block chain is cut before its terminator raise ValueError, both
+    per row and through the gate's Arrow map — never a silently short
+    sum or an untyped IndexError."""
+    from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
+        _synth_bmp_bytes,
+        _synth_gif_bytes,
+        decode_stats,
+    )
+    from olist_ecommerce_data_warehouse_spark.plans.multimodal import GATE_FAMILIES
 
-    pixels = [
-        [((x * 37 + y * 11) % 256, (x * 5) % 256, (y * 73) % 256) for x in range(5)]
-        for y in range(5)
+    fams = {f.kind: f for f in GATE_FAMILIES}
+    cases = [
+        (fams["decode:bmp"], _synth_bmp_bytes(4, 3)[:-5], "BMP pixel array past EOF"),
+        (fams["decode:gif"], _synth_gif_bytes(4, 3)[:-2], "truncated GIF sub-block chain"),
     ]
-    png = _encode_png(pixels, filters=[0, 1, 2, 3, 4])
-
-    def _chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
+    for fam, payload, msg in cases:
+        with pytest.raises(ValueError, match=msg):
+            fam.stats(payload)
+        media = spark.createDataFrame(
+            [(1, bytearray(payload))], "media_id bigint, payload binary"
         )
-
-    pal = [(10, 20, 30), (40, 50, 60), (200, 210, 220), (5, 6, 7)]
-    idx_rows = [[0, 2, 1], [3, 1, 2]]
-    raw = bytearray([0] + idx_rows[0])
-    raw.append(1)
-    line = idx_rows[1]
-    raw.extend([(line[i] - (line[i - 1] if i else 0)) & 0xFF for i in range(3)])
-    png_pal = (
-        b"\x89PNG\r\n\x1a\n"
-        + _chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 2, 8, 3, 0, 0, 0))
-        + _chunk(b"PLTE", b"".join(bytes(c) for c in pal))
-        + _chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _chunk(b"IEND", b"")
-    )
-
-    row0 = bytes([10, 20, 30, 40, 50, 60]) + b"\x00\x00"
-    row1 = bytes([70, 80, 90, 100, 110, 120]) + b"\x00\x00"
-    px = row0 + row1
-    bmp = (
-        b"BM" + struct.pack("<IHHI", 54 + len(px), 0, 0, 54)
-        + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, len(px), 0, 0, 0, 0)
-        + px
-    )
-    bgra = b"".join(bytes([b_, g, r, 0]) for r, g, b_ in pal)
-    bmp8_px = bytes([0, 2]) + b"\x00\x00" + bytes([3, 1]) + b"\x00\x00"
-    off8 = 14 + 40 + len(bgra)
-    bmp8 = (
-        b"BM" + struct.pack("<IHHI", off8 + len(bmp8_px), 0, 0, off8)
-        + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 8, 0, len(bmp8_px), 0, 0, 4, 0)
-        + bgra + bmp8_px
-    )
-
-    indices = [0, 1, 2, 3, 3, 2, 1, 0]
-    codes = []
-    for i in indices:
-        codes += [(4, 3), (i, 3)]  # clear, literal
-    codes.append((5, 3))  # end
-    gif = _gif_wrap(4, 2, pal, _gif_bitpack(codes), with_ext=True)
-
-    samples = [(i * 300 - 15000) for i in range(100)]
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(8000)
-        wf.writeframes(b"".join(struct.pack("<h", s) for s in samples))
-    wav = buf.getvalue()
-
-    return spark.createDataFrame(
-        [(1, "image", bytearray(png), "t"),
-         (2, "image", bytearray(png_pal), "t"),
-         (3, "image", bytearray(bmp), "t"),
-         (4, "image", bytearray(bmp8), "t"),
-         (5, "image", bytearray(gif), "t"),
-         (6, "audio", bytearray(wav), "t")],
-        "media_id long, kind string, payload binary, source string",
-    )
-
-
-def test_external_backend_parity_or_clean_skip(spark):
-    """The production-swap seam (round 10, verdict r09 task 4): when
-    PIL or soundfile is importable, `real_decode_media(...,
-    backend='external')` must produce EXACTLY the stdlib rows on the
-    gate fixtures — identical mapInPandas plumbing, schema, and
-    values (float-equal means, not approximately equal).  When neither
-    is importable (this container), the external backend must refuse
-    at plan build and the test skips — no new hard dependency."""
-    import pytest
-
-    from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        external_backends_available,
-        real_decode_media,
-    )
-
-    media = _backend_gate_fixtures(spark)
-    avail = external_backends_available()
-    if not any(avail.values()):
-        with pytest.raises(RuntimeError, match="external decode backend"):
-            real_decode_media(media, backend="external")
-        pytest.skip("neither PIL nor soundfile importable — seam refusal verified")
-
-    base = {r["media_id"]: r.asDict() for r in real_decode_media(media).collect()}
-    ext = {
-        r["media_id"]: r.asDict()
-        for r in real_decode_media(media, backend="external").collect()
-    }
-    assert base.keys() == ext.keys()
-    for mid in base:
-        assert base[mid] == ext[mid], (mid, base[mid], ext[mid])
-
-
-def test_unknown_backend_rejected(spark):
-    """Backend names are validated at plan build, not worker time."""
-    import pytest
-
-    from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        real_decode_media,
-    )
-
-    media = _backend_gate_fixtures(spark)
-    with pytest.raises(ValueError, match="unknown decode backend"):
-        real_decode_media(media, backend="ffmpeg")
+        with pytest.raises(Exception, match=f"ValueError: {msg}"):
+            decode_stats(media, fam.stats, fam.names).collect()

@@ -292,9 +292,9 @@ def test_multimodal_metadata_is_pure_map_rollup(spark):
     branches; its 100 TB shape must stay 'Arrow map + tiny rollup':
     ZERO joins of any kind, zero windows, and every Exchange a
     single-row partial-aggregate fan-in (one per branch — budget 20).
-    The three synthesize_real_containers consumers must share ONE
-    persisted synthesis (InMemoryTableScan), not re-run it (the
-    round-7 1.94x finding)."""
+    The three real-container consumers (probe, decode:png, decode:wav)
+    must share ONE persisted synthesis (InMemoryTableScan), not re-run
+    it (the round-7 1.94x finding)."""
     plan = _plan(spark, "multimodal_metadata")
     for op in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
                "BroadcastNestedLoopJoin", "Window"):
