@@ -99,22 +99,15 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_media(media: DataFrame, real_decode: bool = False) -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """mapInPandas decode: binary in → typed metadata out.
 
-    Fake decode (default): width/height/channels derived
-    deterministically from payload bytes.  ``real_decode=True`` marks
-    where PIL/soundfile/ffmpeg would run."""
+    Fake decode: width/height/channels derived deterministically from
+    payload bytes, so the oracle can recompute them in SQL.  Real
+    decoding of the stdlib-decodable formats is ``real_decode_media``."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if real_decode:
-                raise NotImplementedError(
-                    "use real_decode_media for the stdlib-decodable formats "
-                    "(PNG/BMP/WAV); other formats need PIL/soundfile/ffmpeg, "
-                    "not present in this environment — fake-decode path is "
-                    "the oracle-gated default"
-                )
             payloads = pdf["payload"]
             n_bytes = payloads.map(len)
             first = payloads.map(lambda b: b[0] if len(b) else 0)

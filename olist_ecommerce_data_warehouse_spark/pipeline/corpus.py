@@ -62,13 +62,20 @@ DOC_SCHEMA = T.StructType(
 CONTAM_N = 5  # decontamination n-gram order (GPT-3-style)
 
 
-def _split_col(id_col: str = "doc_id") -> F.Column:
-    """Deterministic 90/5/5 split (same salt scheme as the
-    ``sequence_packing`` plan: md5(doc_id || ':split') mod 100 — a
-    rebuilt corpus lands every doc in the same split forever)."""
+def _split_col() -> F.Column:
+    """Deterministic 90/5/5 train/val/test assignment by content-stable
+    hash: bucket = md5(doc_id || ':split') mod 100.  The salt string
+    keeps this split independent of any other hash use of doc_id;
+    determinism (vs ``rand(seed)``) means retries, backfills and
+    incremental runs land every document in the same split forever —
+    the property that prevents train/test leakage when the corpus is
+    rebuilt.  Pure map-side expression: no shuffle, no state, scales
+    with input splits.  The one definition engine-wide: the gold
+    split here, the ``sequence_packing`` plan (which oracle-gates it)
+    and the ``corpus_splits`` SQL view all use it."""
     bucket = hex_to_long(
         F.substring(
-            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":split"))), 1, 8
+            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split"))), 1, 8
         )
     ) % 100
     return (
@@ -306,8 +313,7 @@ class CorpusPipeline:
         only for candidate partners instead of storing a corpus-sized
         shingle table.  Appends survivors to silver/deduped and updates
         both indexes; returns per-fate counts."""
-        run_id, started = self.audit.start_run("increment", "silver", "deduped")
-        try:
+        def stage() -> tuple[int, dict[str, int]]:
             # localCheckpoint at stage boundaries: each stage is read
             # several times downstream (counts + two join consumers),
             # and the combined gates→LSH→CC→append lineage otherwise
@@ -408,16 +414,14 @@ class CorpusPipeline:
             n_added = added.count()
             new_sh.unpersist()
             new_sigs.unpersist()
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=n_added)
-        return {
-            "rejected": n_rejected,
-            "dropped_exact": n_exact_dropped,
-            "dropped_neardup": n_neardup_dropped,
-            "added": n_added,
-        }
+            return n_added, {
+                "rejected": n_rejected,
+                "dropped_exact": n_exact_dropped,
+                "dropped_neardup": n_neardup_dropped,
+                "added": n_added,
+            }
+
+        return self.audit.audited(stage, "silver", "deduped", source_object="increment")
 
     # ---------------------------------------------------------------- gold
 
@@ -481,8 +485,8 @@ class CorpusPipeline:
         packed = self.read("gold", "packed").withColumn(
             "seq_id", F.concat_ws(":", "lang", F.col("seq_no").cast("string"))
         )
-        run_id, started = self.audit.start_run("gold/packed", "gold", "shards")
-        try:
+
+        def stage() -> tuple[int, dict]:
             manifest = export_training_shards(
                 packed,
                 self.path("gold", "shards"),
@@ -491,11 +495,9 @@ class CorpusPipeline:
                 epoch=epoch,
                 order_cols=["seq_offset", "doc_id"],
             )
-        except BaseException as e:
-            self.audit.finish_run(run_id, started, error=e)
-            raise
-        self.audit.finish_run(run_id, started, rows_inserted=manifest["n_rows"])
-        return manifest
+            return manifest["n_rows"], manifest
+
+        return self.audit.audited(stage, "gold", "shards", source_object="gold/packed")
 
     def streaming_ingest(self, doc_stream: DataFrame, checkpoint: str):
         """Continuous corpus growth: every micro-batch of documents

@@ -8,12 +8,13 @@ cumulative sum), portable to the ANSI-SQL oracle bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from olist_ecommerce_data_warehouse_spark.catalog import spread, table
 from olist_ecommerce_data_warehouse_spark.functions.text import token_count, toks_sql
-from olist_ecommerce_data_warehouse_spark.operators.textdedup import hex2int_sql, hex_to_long
+from olist_ecommerce_data_warehouse_spark.operators.textdedup import hex2int_sql
+from olist_ecommerce_data_warehouse_spark.pipeline.corpus import _split_col
 from olist_ecommerce_data_warehouse_spark.plans.registry import query, track_persist
 
 # DuckDB equivalent of hex_to_long(substr(md5(x),1,8)) — delegates to
@@ -40,29 +41,6 @@ from olist_ecommerce_data_warehouse_spark.plans.text import (  # noqa: E402
 )
 
 GRAMK_SQL = _gramk_sql("th", 5)  # CONTAM_N-window rolling hashes
-
-
-def _split_col() -> Column:
-    """Deterministic 90/5/5 train/val/test assignment by content-stable
-    hash: bucket = md5(doc_id || ':split') mod 100.  The salt string
-    keeps this split independent of any other hash use of doc_id;
-    determinism (vs ``rand(seed)``) means retries, backfills and
-    incremental runs land every document in the same split forever —
-    the property that prevents train/test leakage when the corpus is
-    rebuilt.  Pure map-side expression: no shuffle, no state, scales
-    with input splits.  (Formerly its own registry slot
-    ``train_eval_split``; merged into ``sequence_packing`` — same
-    table, same grain, both pure map — to free a slot while keeping
-    the split oracle-gated.)"""
-    bucket = (
-        hex_to_long(
-            F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split"))), 1, 8)
-        )
-        % 100
-    )
-    return (
-        F.when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
-    )
 
 
 _SPLIT_SQL = f"""CASE WHEN {_split_bucket_sql("CAST(doc_id AS VARCHAR)")} < 90 THEN 'train'

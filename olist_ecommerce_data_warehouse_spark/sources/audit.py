@@ -16,13 +16,15 @@ from __future__ import annotations
 import datetime as dt
 import traceback
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from olist_ecommerce_data_warehouse_spark.sources.csv import write_table
+
+R = TypeVar("R")
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -83,6 +85,29 @@ class AuditLog:
              started, ended, status, rows_inserted, msg)
         )
 
+    def audited(
+        self,
+        stage: Callable[[], tuple[int, R]],
+        target_schema: str,
+        target_table: str,
+        *,
+        source_object: str = "",
+        source_path: str = "",
+    ) -> R:
+        """C4, the one lifecycle of every audited stage: STARTED →
+        ``stage()`` → SUCCESS(rows) / FAILED(error) + re-raise.  ``stage``
+        returns ``(rows_inserted, result)``; the result is returned."""
+        run_id, started = self.start_run(
+            source_object or target_table, target_schema, target_table, source_path
+        )
+        try:
+            n, result = stage()
+        except BaseException as e:
+            self.finish_run(run_id, started, error=e)
+            raise
+        self.finish_run(run_id, started, rows_inserted=n)
+        return result
+
     def write_table(
         self,
         df: DataFrame | Callable[[], DataFrame],
@@ -94,22 +119,20 @@ class AuditLog:
         source_path: str = "",
         partition_by: list[str] | None = None,
     ) -> int:
-        """C4, the one audited write of every stage: STARTED → write →
-        SUCCESS(rows) / FAILED(error) + re-raise.  The table lands at
+        """The audited write of one table: the table lands at
         ``{base}/{target_schema}/{target_table}``; ``rows_inserted`` is the
         write's own observed count.  ``df`` may be a zero-argument callable
         so a source read runs inside the audit scope."""
-        run_id, started = self.start_run(
-            source_object or target_table, target_schema, target_table, source_path
-        )
-        try:
+
+        def stage() -> tuple[int, int]:
             path = f"{base}/{target_schema}/{target_table}"
             n = write_table(df() if callable(df) else df, path, partition_by)
-        except BaseException as e:
-            self.finish_run(run_id, started, error=e)
-            raise
-        self.finish_run(run_id, started, rows_inserted=n)
-        return n
+            return n, n
+
+        return self.audited(
+            stage, target_schema, target_table,
+            source_object=source_object, source_path=source_path,
+        )
 
     def to_df(self) -> DataFrame:
         return self.spark.createDataFrame(self.rows, AUDIT_SCHEMA)

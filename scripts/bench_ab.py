@@ -1,32 +1,35 @@
-"""Worktree A/B re-timing — the adjudication protocol for bench flags.
+"""Paired A/B re-timing — the adjudication protocol for bench flags and
+the only way to claim a speed-up.
 
 When a query trips the regression gate, the question is always "did
-the CODE get slower, or the RIG?".  This tool answers it reproducibly
-and leaves an auditable record (ADVICE r04: raw A/B measurements must
-be checked into the repo, not summarized in prose):
+the CODE get slower, or the RIG?".  This tool answers it by timing the
+same queries on two checkouts in alternating fresh-process sessions:
 
-- checks out the anchoring commit into a detached git worktree;
-- runs the flagged queries in ALTERNATING fresh-process sessions
-  (A, B, A, B — decorrelates the box's slow epochs from the side), N
-  repeats per session, with the SAME synthetic calibration plan as
-  bench.py timed in every session (so each sample carries rig
-  context even for commits that predate the calibration machinery);
-- appends one JSON line per invocation to ``bench_ab/bench_ab.jsonl``
-  with both shas, every raw sample, and every calibration reading.
-
-Verdict rule of thumb: if min-over-sessions(ref) ≈ min(HEAD), the rig
-drifted and the anchor is stale; if min(HEAD) ≫ min(ref) across
-alternating sessions, the regression is real code.
+- the reference side is a plain checkout directory (``git clone`` the
+  commit to compare against); the other side is this working tree;
+- each side's session imports ``get_spark`` and ``run_plan`` from that
+  side's own ``bench.py``, so both sides pay exactly the hygiene and
+  clock boundaries their bench pays;
+- ``--pairs`` pairs of sessions run, alternating which side goes first
+  (decorrelates the box's slow epochs from the side); each session
+  times every query once;
+- per query it prints each side's median and quartiles, the number of
+  pairs the working tree won, and the verdict of the paired rule: a
+  gain (or loss) needs ≥ 9/10 of the pairs AND a median gap larger than
+  the reference side's interquartile range;
+- ``--out FILE`` appends the full record (every sample) as one JSON
+  line; without it nothing is written.
 
 Usage:
-    python scripts/bench_ab.py --ref <sha> --queries q1,q2 \
-        [--repeats 3] [--sessions 2] [--sf-dir /root/testdata/sf0.1]
+    python scripts/bench_ab.py --ref-dir <clone> --queries q1,q2 \
+        [--pairs 10] [--sf-dir DIR] [--out FILE]
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import statistics
 import subprocess
 import sys
 import time
@@ -34,89 +37,28 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 
-# Runner executed with cwd = one side's checkout.  Only REGISTRY and
-# get_spark come from that side's code; the calibration plan is
-# inlined here (identical literals to bench.py::calibration_sec) so
-# commits that predate it still emit rig context.
+# Runner executed with cwd = one side's checkout: everything it times
+# comes from that side's bench.py.  The two warmups mirror bench.py's
+# main (JVM/codegen, then the session's first Arrow worker fork).
 _RUNNER = r"""
-import json, sys, time
+import json, sys
 sys.path.insert(0, ".")
-from pyspark.sql import functions as F
-from olist_ecommerce_data_warehouse_spark.plans import REGISTRY
-from olist_ecommerce_data_warehouse_spark.session import get_spark
+from bench import get_spark, run_plan
 
-queries = sys.argv[1].split(",")
-sf_dir = sys.argv[2]
-repeats = int(sys.argv[3])
-
-try:
-    from olist_ecommerce_data_warehouse_spark.plans.registry import (
-        release_stale_checkpoints,
-    )
-except ImportError:  # older commits
-    def release_stale_checkpoints(spark):
-        pass
-
-def sweep_ivf_indexes():
-    # bench.py's first-build hygiene (round 11), mirrored here so BOTH
-    # A/B sides pay the IVF index build in every sample; older commits
-    # without clear_centroid_cache just get the dir sweep
-    import os, shutil
-    scratch = os.path.join(os.getcwd(), ".scratch")
-    if os.path.isdir(scratch):
-        for n in os.listdir(scratch):
-            if n.startswith("ivf_index_"):
-                shutil.rmtree(os.path.join(scratch, n), ignore_errors=True)
-    try:
-        from olist_ecommerce_data_warehouse_spark.operators.ann_index import (
-            _CENTROID_CACHE,
-        )
-        _CENTROID_CACHE.clear()
-    except ImportError:
-        pass
-
+queries, sf_dir = sys.argv[1].split(","), sys.argv[2]
 spark = get_spark("bench_ab")
-
-def run_plan(name):
-    release_stale_checkpoints(spark)
-    sweep_ivf_indexes()
-    spark.sparkContext._jvm.System.gc()
-    t0 = time.perf_counter()
-    df = REGISTRY[name].fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    return round(time.perf_counter() - t0, 4)
-
-def cal():
-    def one():
-        t0 = time.perf_counter()
-        df = (
-            spark.range(0, 8000000)
-            .select((F.col("id") % 1000003).alias("k"),
-                    (F.xxhash64(F.col("id").cast("string")) % 1000000).alias("h"))
-            .groupBy("k").agg(F.sum("h").alias("s"), F.count("*").alias("c"))
-            .agg(F.sum(F.col("s") + F.col("c")).alias("t"))
-        )
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-    one()
-    return round(min(one() for _ in range(3)), 4)
-
-run_plan("flagship_revenue_by_brand")  # warmup
-out = {"cal_start": cal(),
-       "runs": {q: [run_plan(q) for _ in range(repeats)] for q in queries}}
-out["cal_end"] = cal()
-print("AB_RESULT " + json.dumps(out))
+run_plan(spark, "flagship_revenue_by_brand", sf_dir)
+spark.range(32).mapInPandas(lambda it: it, "id long").write.format("noop").mode(
+    "overwrite"
+).save()
+print("AB_RESULT " + json.dumps({q: round(run_plan(spark, q, sf_dir), 4) for q in queries}))
 spark.stop()
 """
 
 
-def _sh(*args: str, cwd: Path | None = None) -> str:
-    return subprocess.check_output(args, cwd=cwd or REPO, text=True).strip()
-
-
-def run_session(side_dir: Path, queries: list[str], sf_dir: str, repeats: int) -> dict:
+def run_session(side_dir: Path, queries: list[str], sf_dir: str) -> dict[str, float]:
     proc = subprocess.run(
-        [sys.executable, "-c", _RUNNER, ",".join(queries), sf_dir, str(repeats)],
+        [sys.executable, "-c", _RUNNER, ",".join(queries), sf_dir],
         cwd=side_dir,
         capture_output=True,
         text=True,
@@ -128,59 +70,78 @@ def run_session(side_dir: Path, queries: list[str], sf_dir: str, repeats: int) -
     raise RuntimeError(f"runner produced no result; stderr tail:\n{proc.stderr[-2000:]}")
 
 
+def summarize(ref: list[float], head: list[float]) -> dict:
+    """Each side's median and quartiles, head's win count over the
+    pairs (ties count for neither side) and the paired-rule verdict."""
+
+    def stats(xs: list[float]) -> dict:
+        q25, q50, q75 = statistics.quantiles(xs, n=4, method="inclusive")
+        return {"median": round(q50, 4), "q25": round(q25, 4), "q75": round(q75, 4)}
+
+    r, h = stats(ref), stats(head)
+    n = len(ref)
+    head_wins = sum(b < a for a, b in zip(ref, head))
+    ref_wins = sum(a < b for a, b in zip(ref, head))
+    iqr = r["q75"] - r["q25"]
+    gap = r["median"] - h["median"]
+    if head_wins >= 0.9 * n and gap > iqr:
+        verdict = "gain"
+    elif ref_wins >= 0.9 * n and -gap > iqr:
+        verdict = "loss"
+    else:
+        verdict = "no claim"
+    return {
+        "ref": r,
+        "head": h,
+        "head_wins": f"{head_wins}/{n}",
+        "head_over_ref": round(h["median"] / r["median"], 3),
+        "ref_iqr": round(iqr, 4),
+        "verdict": verdict,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--ref", required=True, help="anchoring commit to A/B against")
+    ap.add_argument("--ref-dir", required=True, type=Path, help="checkout to compare against")
     ap.add_argument("--queries", required=True, help="comma-separated query names")
-    ap.add_argument("--repeats", type=int, default=3)
-    ap.add_argument("--sessions", type=int, default=2, help="sessions PER side")
+    ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default=str(REPO / "bench_ab" / "bench_ab.jsonl"))
+    ap.add_argument("--out", type=Path, help="append the full record to this JSONL file")
     args = ap.parse_args()
 
+    def sha(d: Path) -> str:
+        return subprocess.check_output(
+            ["git", "rev-parse", "HEAD"], cwd=d, text=True
+        ).strip()
+
     queries = args.queries.split(",")
-    head_sha = _sh("git", "rev-parse", "HEAD")
-    ref_sha = _sh("git", "rev-parse", args.ref)
-    wt = Path(f"/tmp/bench_ab_{ref_sha[:12]}")
-    if not wt.exists():
-        _sh("git", "worktree", "add", "--detach", str(wt), ref_sha)
+    sides = {"ref": args.ref_dir.resolve(), "head": REPO}
+    pairs = []
+    for i in range(args.pairs):
+        order = ("ref", "head") if i % 2 == 0 else ("head", "ref")
+        pair = {"first": order[0]}
+        for side in order:
+            pair[side] = run_session(sides[side], queries, args.sf_dir)
+        print(json.dumps(pair), flush=True)
+        pairs.append(pair)
 
-    record = {
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "head": head_sha,
-        "ref": ref_sha,
-        "sf_dir": args.sf_dir,
-        "repeats": args.repeats,
-        "queries": queries,
-        "sessions": [],
-    }
-    try:
-        for i in range(args.sessions):
-            for side, path in (("ref", wt), ("head", REPO)):
-                res = run_session(path, queries, args.sf_dir, args.repeats)
-                record["sessions"].append({"side": side, **res})
-                print(json.dumps({"side": side, **res}))
-    finally:
-        _sh("git", "worktree", "remove", "--force", str(wt))
-
-    def best(side: str, q: str) -> float:
-        return min(
-            min(s["runs"][q]) for s in record["sessions"] if s["side"] == side
-        )
-
-    record["verdict"] = {
-        q: {
-            "ref_best": best("ref", q),
-            "head_best": best("head", q),
-            "head_over_ref": round(best("head", q) / best("ref", q), 3),
-        }
+    summary = {
+        q: summarize([p["ref"][q] for p in pairs], [p["head"][q] for p in pairs])
         for q in queries
     }
-    out_path = Path(args.out)
-    out_path.parent.mkdir(exist_ok=True)
-    with out_path.open("a") as f:
-        f.write(json.dumps(record) + "\n")
-    print(json.dumps(record["verdict"], indent=2))
+    print(json.dumps(summary, indent=2))
+    if args.out:
+        record = {
+            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "head": sha(REPO),
+            "ref": sha(sides["ref"]),
+            "sf_dir": args.sf_dir,
+            "queries": queries,
+            "pairs": pairs,
+            "summary": summary,
+        }
+        with args.out.open("a") as f:
+            f.write(json.dumps(record) + "\n")
 
 
 if __name__ == "__main__":

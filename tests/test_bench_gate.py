@@ -1,4 +1,4 @@
-"""Unit tests for bench.py's calibration-normalized regression gate.
+"""Unit tests for bench.py's rig-normalized regression gate.
 
 The gate is the repo's only defense against silent performance decay,
 so its logic is tested like an operator: a genuine per-plan slowdown
@@ -17,43 +17,51 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import bench  # noqa: E402
 
 
+def _at(scale: dict[str, float] | float = 1.0) -> dict[str, list[float]]:
+    """Two samples per anchored plan at ``scale`` × its anchor (one
+    factor for every plan, or a per-plan map defaulting to 1.0)."""
+    out = {}
+    for name, anchor in bench.BASELINE.items():
+        k = scale if isinstance(scale, float) else scale.get(name, 1.0)
+        out[name] = [k * anchor, k * anchor]
+    return out
+
+
 def test_injected_2x_sleep_still_flags():
-    """The verdict-r04 acceptance test: a deliberately-injected 2×
-    slowdown in ONE plan must flag even after normalization, because
-    the calibration plan is untouched and the rig factor stays 1.0."""
+    """A deliberately-injected 2× slowdown in ONE plan must flag even
+    after normalization: one plan cannot move the median ratio, so the
+    rig factor stays 1.0."""
     name = "gold_fact_lineitem"
-    anchor = bench.BASELINE_R06[name]
-    cals = [bench.CAL_REF] * 7  # quiet rig, factor 1.0
-    rf = bench.rig_factor_of(cals)
-    assert rf == 1.0
-    assert bench.gate_normalized(name, (2.0 * anchor) / rf)
+    samples = _at({name: 2.0})
+    assert bench.rig_factor_of(samples) == 1.0
+    assert set(bench.regressions_of(samples)) == {name}
+
+
+def test_twenty_of_fifty_plans_2x_slow_flag_exactly():
+    """The 20 heaviest of the 50 plans 2× slow, the other 30 at their
+    anchor: the median ratio over plans is still 1.0, so the slow
+    plans do not feed the rig factor — all 20 flag and none of the 30
+    do."""
+    names = sorted(bench.BASELINE, key=lambda n: -bench.BASELINE[n])
+    slow = names[:20]
+    assert all(bench.BASELINE[n] > 0.5 for n in slow)  # all clear the floor
+    samples = _at({n: 2.0 for n in slow})
+    assert bench.rig_factor_of(samples) == 1.0
+    assert set(bench.regressions_of(samples)) == set(slow)
 
 
 def test_uniform_rig_slowdown_cancels():
-    """The r04 drift scenario: EVERYTHING (queries and calibration)
-    runs 1.8× slow.  Raw numbers would flood the raw diffs; the
-    normalized gate must stay quiet for every plan."""
-    cals = [bench.CAL_REF * 1.8] * 7
-    rf = bench.rig_factor_of(cals)
-    assert abs(rf - 1.8) < 0.01
-    for name, anchor in bench.BASELINE_R06.items():
-        assert not bench.gate_normalized(name, (1.8 * anchor) / rf), name
-
-
-def test_cal_spike_does_not_shift_median():
-    """One window's calibration spiking 2× (measured: 1.77 s in an
-    otherwise-0.8-0.95 s session) must not move the session factor —
-    the median absorbs it where a mean would over-correct the whole
-    session by ~15%."""
-    quiet = [0.91, 0.80, 0.85, 0.64, 0.95, 0.81]
-    assert bench.rig_factor_of(quiet + [1.77]) == bench.rig_factor_of(quiet + [0.9])
+    """The drift scenario: EVERY plan runs 1.8× slow.  The factor reads
+    the slowdown and the normalized gate stays quiet for every plan."""
+    samples = _at(1.8)
+    assert abs(bench.rig_factor_of(samples) - 1.8) < 0.01
+    assert bench.regressions_of(samples) == {}
 
 
 def test_factor_floor_at_one():
-    """A lucky-cal session (median below the frozen quiet-rig CAL_REF)
-    must not INFLATE normalized times — that would manufacture fake
-    regressions out of calibration luck."""
-    assert bench.rig_factor_of([bench.CAL_REF * 0.7] * 5) == 1.0
+    """A session faster than the anchors must not INFLATE normalized
+    times — that would manufacture fake regressions out of luck."""
+    assert bench.rig_factor_of(_at(0.7)) == 1.0
 
 
 def test_absolute_floor_suppresses_subsecond_ratio_noise():
@@ -65,13 +73,11 @@ def test_absolute_floor_suppresses_subsecond_ratio_noise():
 
 
 def test_every_registered_plan_is_anchored():
-    """The binding anchor set (BASELINE_R06) must cover the whole
-    registry — an unanchored plan is invisible to the gate (the
-    round-2 lesson); R05 stays complete for the historical diff."""
+    """The anchor set must cover exactly the registry — an unanchored
+    plan is invisible to the gate and to the rig factor."""
     from olist_ecommerce_data_warehouse_spark.plans import REGISTRY
 
-    assert set(bench.BASELINE_R06) == set(REGISTRY)
-    assert set(bench.BASELINE_R05) == set(REGISTRY)
+    assert set(bench.BASELINE) == set(REGISTRY)
 
 
 def test_compact_line_survives_tail_capture():
@@ -86,14 +92,12 @@ def test_compact_line_survives_tail_capture():
         "metric": "total_wall_sec_all_queries",
         "value": 123.4567,
         "unit": "sec",
-        "queries": {n: 12.3456 for n in bench.BASELINE_R06},
-        "queries_median": {n: 13.5456 for n in bench.BASELINE_R06},
+        "queries": {n: 12.3456 for n in bench.BASELINE},
+        "queries_median": {n: 13.5456 for n in bench.BASELINE},
         "sf": 0.1,
-        "calibration": {"rig_factor": 1.2345},
-        "regressions_vs_r01": {},
-        "regressions_normalized_vs_r06": {
-            n: {"r06": 1.0, "now": 9.9999, "ratio": 9.99}
-            for n in bench.BASELINE_R06
+        "rig_factor": 1.2345,
+        "regressions": {
+            n: {"anchor": 1.0, "now": 9.9999, "ratio": 9.99} for n in bench.BASELINE
         },
         "full_record": "bench_ab/bench_full_20260101T000000Z.json",
     }
@@ -103,19 +107,22 @@ def test_compact_line_survives_tail_capture():
     for key in ("metric", "value", "unit", "queries", "sf"):
         assert key in parsed  # the driver contract
     assert parsed["rig_factor"] == 1.2345
-    # since round 8 the map carries the GATE statistic (median), labeled,
-    # so the number a flag reports is the number in the map (VERDICT r07)
+    # the map carries the GATE statistic (median), labeled, so the
+    # number a flag reports is the number in the map
     assert parsed["stat"] == "median"
     assert all(v == 13.546 for v in parsed["queries"].values())
-    assert parsed["value_median"] == round(13.5456 * len(bench.BASELINE_R06), 3)
-    flags = parsed["regressions_normalized_vs_r06"]
-    assert flags["n_flagged"] == len(bench.BASELINE_R06)  # true count kept
+    assert parsed["value_median"] == round(13.5456 * len(bench.BASELINE), 3)
+    flags = parsed["regressions"]
+    assert flags["n_flagged"] == len(bench.BASELINE)  # true count kept
     assert len(flags) == 11  # 10 worst ratios + the count
 
 
 def test_diff_vs_reports_ratio():
-    reg = bench.diff_vs({"a": 1.0, "b": 1.0}, "r05", {"a": 2.2, "b": 1.1})
-    assert reg == {"a": {"r05": 1.0, "now": 2.2, "ratio": 2.2}}
+    anchors = dict.fromkeys("abcde", 1.0)
+    samples = {"a": [2.2], "b": [1.4], "c": [1.0], "d": [1.0], "e": [0.9]}
+    assert bench.rig_factor_of(samples, anchors) == 1.0
+    reg = bench.regressions_of(samples, anchors)
+    assert reg == {"a": {"anchor": 1.0, "now": 2.2, "ratio": 2.2}}
 
 
 def test_median_gate_resists_one_lucky_sample():
@@ -220,82 +227,6 @@ def test_three_sample_epoch_resolves_within_five_confirmations():
     assert bench.gate_normalized("x", bench.median_of(genuine), {"x": anchor})
 
 
-# ---------------------------------------------------- round 10: two-mode rig
-
-
-def test_py_mode_slow_session_does_not_inflate_python_plans():
-    """The round-10 acceptance test (verdict task 1): a session whose
-    PYTHON kernels run 1.8× slow (interpreter/Arrow drift — the
-    multimodal bimodality) while the JVM kernels stay quiet must NOT
-    flag a Python-mode plan timed at 1.8× its anchor: the plan's own
-    mode factor normalizes it away.  Under the old single-factor model
-    the JVM factor stayed 1.0 and the plan spuriously flagged."""
-    rf_jvm = bench.rig_factor_of([bench.CAL_REF] * 7)
-    rf_py = bench.rig_factor_of([bench.CAL_REF_PY * 1.8] * 7, bench.CAL_REF_PY)
-    assert rf_jvm == 1.0 and abs(rf_py - 1.8) < 0.01
-    name = "multimodal_metadata"
-    assert name in bench.PY_MODE_PLANS
-    anchor = bench.BASELINE_R06[name]
-    raw = 1.8 * anchor
-    factor = bench.plan_rig_factor(name, rf_jvm, rf_py)
-    assert factor == rf_py
-    assert not bench.gate_normalized(name, raw / factor)
-    # ... while the single JVM factor would have flagged it
-    assert bench.gate_normalized(name, raw / rf_jvm)
-
-
-def test_py_mode_slow_session_leaves_jvm_plans_untouched():
-    """The complement: the slow-Python session must not RELAX the gate
-    for JVM plans — a genuine 2× regression in a JVM plan still flags
-    because it normalizes by the (quiet) JVM factor, not the inflated
-    Python one."""
-    rf_jvm = bench.rig_factor_of([bench.CAL_REF] * 7)
-    rf_py = bench.rig_factor_of([bench.CAL_REF_PY * 1.8] * 7, bench.CAL_REF_PY)
-    name = "gold_fact_lineitem"
-    assert name not in bench.PY_MODE_PLANS
-    factor = bench.plan_rig_factor(name, rf_jvm, rf_py)
-    assert factor == rf_jvm == 1.0
-    assert bench.gate_normalized(name, 2.0 * bench.BASELINE_R06[name] / factor)
-
-
-def test_injected_sleep_python_plan_still_flags_on_quiet_rig():
-    """Per-mode injected-sleep (the round-5 device, Python edition): a
-    genuine 2× slowdown in a Python-mode plan on a QUIET rig (both
-    cal kernels at reference) must flag — per-mode normalization must
-    not open a hole for real Python-plan regressions."""
-    rf_jvm = bench.rig_factor_of([bench.CAL_REF] * 7)
-    rf_py = bench.rig_factor_of([bench.CAL_REF_PY] * 7, bench.CAL_REF_PY)
-    assert rf_jvm == rf_py == 1.0
-    name = "ann_ivf_topk"
-    assert name in bench.PY_MODE_PLANS
-    factor = bench.plan_rig_factor(name, rf_jvm, rf_py)
-    assert bench.gate_normalized(name, 2.0 * bench.BASELINE_R06[name] / factor)
-
-
-def test_uniform_py_rig_slowdown_cancels_for_python_plans():
-    """The symmetric cancel: every Python plan AND the Python cal
-    kernel 1.8× slow (a pure interpreter epoch) → no Python plan
-    flags."""
-    rf_py = bench.rig_factor_of([bench.CAL_REF_PY * 1.8] * 7, bench.CAL_REF_PY)
-    for name in bench.PY_MODE_PLANS:
-        anchor = bench.BASELINE_R06[name]
-        assert not bench.gate_normalized(name, 1.8 * anchor / rf_py), name
-
-
-def test_py_mode_plans_are_registered():
-    """Every labeled Python-mode plan must exist in the registry (a
-    renamed slot would silently fall back to the JVM factor)."""
-    from olist_ecommerce_data_warehouse_spark.plans import REGISTRY
-
-    assert bench.PY_MODE_PLANS <= set(REGISTRY)
-
-
-def test_py_rig_factor_floor_at_one():
-    """A lucky Python-cal session must not inflate Python-plan
-    normalized times — same floor contract as the JVM factor."""
-    assert bench.rig_factor_of([bench.CAL_REF_PY * 0.7] * 5, bench.CAL_REF_PY) == 1.0
-
-
 def test_r9_subsecond_jitter_stays_under_gate():
     """Round-10 verdict task 6, pinned with the real round-9 numbers:
     the worst raw drifts of r9 (volumetrics 1.42×, cleanse_accent_fold
@@ -305,15 +236,15 @@ def test_r9_subsecond_jitter_stays_under_gate():
     the 1.5× ratio since round 5.  Documented in BASELINE.md
     §"Gate arithmetic"."""
     assert not bench.gate_normalized(
-        "volumetrics", 1.42 * bench.BASELINE_R06["volumetrics"]
+        "volumetrics", 1.42 * bench.BASELINE["volumetrics"]
     )
     assert not bench.gate_normalized(
         "cleanse_accent_fold_dedup",
-        1.41 * bench.BASELINE_R06["cleanse_accent_fold_dedup"],
+        1.41 * bench.BASELINE["cleanse_accent_fold_dedup"],
     )
     # the floor does NOT shelter a real regression on a heavy plan
     assert bench.gate_normalized(
-        "corpus_mixing", 1.6 * bench.BASELINE_R06["corpus_mixing"]
+        "corpus_mixing", 1.6 * bench.BASELINE["corpus_mixing"]
     )
 
 

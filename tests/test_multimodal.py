@@ -32,14 +32,6 @@ def test_decode_metadata_deterministic(spark, media):
         assert row["n_channels"] in (1, 3)
 
 
-def test_decode_real_path_is_marked_stub(spark, media):
-    with pytest.raises(Exception) as ei:
-        decode_media(media, real_decode=True).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
-
-
 def test_frame_sampling_reassembles_prefix(spark, media):
     frames = sample_frames(media, n_frames=4)
     got = frames.groupBy("media_id").agg(

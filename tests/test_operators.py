@@ -1447,7 +1447,8 @@ def test_pegasos_beats_batch_perceptron_on_hard_labels(spark):
     assert e_pegasos <= 4, e_pegasos  # ≤5% of 80
     # never worse than batch mode here; the full-batch COLLAPSE this
     # fixes is corpus-scale (measured at 500k docs: 22% = majority
-    # class) and re-measured in scripts/stress_lm_train.py
+    # class) and re-measured by stress_lm_train.py
+    # (git show e45d88a:scripts/stress_lm_train.py)
     assert e_pegasos <= e_batch, (e_pegasos, e_batch)
 
     # held-out generalization on the separable concept

@@ -294,6 +294,39 @@ def test_write_time_failure_records_failed_audit_row(spark, tmp_path, monkeypatc
         assert "injected write failure" in mine[1][10] and mine[1][9] is None
 
 
+@pytest.mark.parametrize("stage", ["export_shards", "apply_increment"])
+def test_corpus_stage_failure_records_failed_audit_row(spark, tmp_path, monkeypatch, stage):
+    """A Spark failure injected into export_shards (while the shards are
+    written) or apply_increment (at its first checkpoint) leaves a FAILED
+    row carrying the error, re-raises, and writes no SUCCESS row for
+    that run id."""
+    from olist_ecommerce_data_warehouse_spark.pipeline.corpus import CorpusPipeline
+
+    pipe = CorpusPipeline(spark, str(tmp_path / "wh"))
+    poison = F.raise_error(F.lit("injected stage failure"))
+    if stage == "export_shards":
+        packed = spark.createDataFrame(
+            [("en", 0, 0, 1), ("en", 0, 1, 2)],
+            "lang string, seq_no int, seq_offset int, doc_id long",
+        ).withColumn("poison", poison)
+        monkeypatch.setattr(CorpusPipeline, "read", lambda self, layer, name: packed)
+        run, target = (lambda: pipe.export_shards(n_shards=2)), ("gold", "shards")
+    else:
+        docs = spark.createDataFrame(
+            [(1, "a b c d", "en", "drop")],
+            "doc_id long, text string, lang string, source string",
+        ).withColumn("poison", poison)
+        run, target = (lambda: pipe.apply_increment(docs)), ("silver", "deduped")
+
+    with pytest.raises(Exception, match="injected stage failure"):
+        run()
+    run_id = pipe.audit.rows[-1][0]
+    mine = [r for r in pipe.audit.rows if r[0] == run_id]
+    assert (mine[0][3], mine[0][4]) == target
+    assert [r[8] for r in mine] == ["STARTED", "FAILED"]
+    assert "injected stage failure" in mine[1][10] and mine[1][9] is None
+
+
 def test_sql_entry_surface(spark):
     """SQL users can switch without the DataFrame API: registered views
     answer the reference's own QA queries (08_validacionsql.sql shapes)

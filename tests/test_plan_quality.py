@@ -371,38 +371,6 @@ def test_ivf_index_reconstruction_runs_no_write_jobs(spark):
     assert n_second < n_first, (n_first, n_second)
 
 
-def test_py_mode_labels_match_executed_plans(spark):
-    """bench.py's two-mode rig model (round 10) normalizes each plan
-    by its execution mode's calibration factor — so the PY_MODE_PLANS
-    label set must EQUAL reality across the whole registry: the set
-    of plans whose optimized plan contains a Python/Arrow eval node,
-    derived here for all 50 plans, must be exactly the labeled set (a
-    plan that gains or loses a Python kernel must move between modes,
-    or its normalization silently uses the wrong drift axis — and an
-    over-labeled plan would normalize JVM drift by the Python
-    factor)."""
-    import bench
-
-    py_nodes = (
-        "MapInPandas",
-        "FlatMapGroupsInPandas",
-        "ArrowEvalPython",
-        "BatchEvalPython",
-        "FlatMapCoGroupsInPandas",
-        "PythonMapInArrow",
-    )
-    derived = set()
-    for name in sorted(REGISTRY):
-        df = REGISTRY[name].fn(spark, SF_DIR)
-        s = df._jdf.queryExecution().optimizedPlan().toString()
-        if any(n in s for n in py_nodes):
-            derived.add(name)
-    assert derived == bench.PY_MODE_PLANS, (
-        f"labels drifted: unlabeled-but-Python {sorted(derived - bench.PY_MODE_PLANS)}, "
-        f"labeled-but-JVM {sorted(bench.PY_MODE_PLANS - derived)}"
-    )
-
-
 def test_session_factory_cluster_topology_support():
     """Round-10 local-cluster smoke support (verdict r09 task 2): the
     session factory must resolve a ``SPARK_GRAFT_MASTER`` local-cluster
