@@ -36,23 +36,23 @@ both analytically: λ = 0 EXACTLY when target and raw rates match
 (any T/R), and every target-unseen feature costs the same constant
 ln(μ/(T+μ)) instead of a raw-frequency-dependent bonus.
 
-Dataflow at 100 TB: the two bucket-count tables and the λ table are
-MODEL-sized (≤ B rows) — one aggregation over each corpus builds
-them, λ broadcasts, per-doc scoring is a map-side join + one integer
-aggregate, and the top-n is a TakeOrdered (per-partition heads, no
-global sort).  Nothing corpus-sized ever sits on the driver.
+Dataflow at 100 TB: the combined (bucket, t_b, r_b) model table and
+the λ table are MODEL-sized (≤ B rows) — one aggregation over the
+per-document feature counts builds them, λ broadcasts, per-doc
+scoring is a map-side join + one integer aggregate, and the top-n is
+a TakeOrdered (per-partition heads, no global sort).  Nothing corpus-sized ever sits on the driver.
 
 Determinism (the ngram_lm policy): float ``ln`` appears exactly ONCE
 per bucket — λ[b] quantizes to fixed-point ``lam_fp = round(λ·2^20)``
 as a pure function of the integer tuple (t_b, T, r_b, R, B, μ) — and
 ONCE per document for the Gumbel noise, whose uniform input is
-``(pmod(xxhash64(id, seed), 2^31) + 0.5) / 2^31`` (a pure function of
-id and seed — replayable, partitioning-independent).  Per-doc weights
-are INTEGER sums of cnt·lam_fp, so scores are bit-stable under any
-repartitioning.  ``ln`` itself is libm (1-ulp across engines), so the
-operator is pytest-gated like the LM: integer machinery exact,
-per-bucket log-ratios within quantization tolerance of a driver-side
-reference.
+``(md5-prefix(id, seed) + 0.5) / 2^32`` (a pure function of id and
+seed — replayable, partitioning-independent; see :func:`gumbel_key`).
+Per-doc weights are INTEGER sums of cnt·lam_fp, so scores are
+bit-stable under any repartitioning.  ``ln`` itself is libm (1-ulp
+across engines), so the operator is pytest-gated like the LM: integer
+machinery exact, per-bucket log-ratios within quantization tolerance
+of a driver-side reference.
 """
 
 from __future__ import annotations
@@ -62,13 +62,9 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from olist_ecommerce_data_warehouse_spark.operators.quality import quality_features
-from olist_ecommerce_data_warehouse_spark.operators.textdedup import mix32
-
 DSIR_BUCKETS = 10_000  # the paper's order of magnitude
 FP_BITS = 20
 _FP = 1 << FP_BITS
-_UM = 1 << 31  # uniform grid for the Gumbel input
 
 
 def round_half_away(x: float) -> int:
@@ -81,166 +77,29 @@ def round_half_away(x: float) -> int:
     return math.floor(x + 0.5) if x >= 0 else -math.floor(-x + 0.5)
 
 
-def dsir_feature_counts(
-    docs: DataFrame,
-    buckets: int = DSIR_BUCKETS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id_col, bucket, cnt) — hashed uni+bigram counts folded into
-    ``buckets`` (same feature stream as the quality classifier, DSIR's
-    smaller bucket space).  One explode + one aggregation."""
-    h = F.explode(quality_features(text_col)).alias("h")
-    return (
-        docs.select(F.col(id_col), h)
-        .select(id_col, (mix32(F.col("h")) % F.lit(buckets)).alias("bucket"))
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def dsir_feature_counts_from_tokens(
-    tok: DataFrame,
-    buckets: int = DSIR_BUCKETS,
-    id_col: str = "doc_id",
-    toks_col: str = "toks",
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """:func:`dsir_feature_counts` over a PRE-TOKENIZED (id, …, toks)
-    table — the shared-scan shape (round 9): the corpus_mixing plan
-    tokenizes documents ONCE into a persisted token table and both the
-    DSIR feature stream and the CCNet bigram stream derive from it,
-    instead of each re-running the tokenizer regex over the raw text.
-    Identical (id, bucket, cnt) output by construction.
-
-    ``carry_cols``: per-document columns (functionally dependent on
-    ``id_col``, e.g. a target-membership flag) threaded through the
-    groupBy so downstream model aggregates can FILTER the count table
-    instead of joining a separate id list — the shape that lets one
-    single-subtree aggregate materialize the cache and return both λ
-    totals in the same job."""
-    from olist_ecommerce_data_warehouse_spark.operators.quality import (
-        quality_features_from_tokens,
-    )
-
-    h = F.explode(quality_features_from_tokens(toks_col)).alias("h")
-    return (
-        tok.select(F.col(id_col), *carry_cols, h)
-        .select(
-            id_col, *carry_cols, (mix32(F.col("h")) % F.lit(buckets)).alias("bucket")
-        )
-        .groupBy(id_col, *carry_cols, "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def _bucket_totals(
-    docs: DataFrame, buckets: int, text_col: str
-) -> DataFrame:
-    """(bucket, c) corpus-wide — the bag-of-hashed-ngrams model, one
-    aggregation, ≤ ``buckets`` output rows."""
-    h = F.explode(quality_features(text_col)).alias("h")
-    return (
-        docs.select(h)
-        .select((mix32(F.col("h")) % F.lit(buckets)).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
 def dsir_log_ratio(
-    target: DataFrame,
-    raw: DataFrame,
-    buckets: int = DSIR_BUCKETS,
-    mu: int = 2000,
-    text_col: str = "text",
+    spark, rows, buckets: int = DSIR_BUCKETS, mu: int = 2000
 ) -> tuple[DataFrame, int]:
-    """Fixed-point log-ratio table under Dirichlet-prior smoothing
-    (see module doc): returns ``(lam, lam0_fp)`` where ``lam`` is
-    (bucket, lam_fp) for every bucket with target evidence and
-    ``lam0_fp = round(ln(μ/(T+μ))·2^20)`` is the constant weight of
-    EVERY target-unseen bucket (seen-only-in-raw and seen-in-neither
-    alike — under this smoothing absence from the target prices the
-    same regardless of raw frequency).  λ[b] = ln((t_b/p̂_r[b] + μ) /
-    (T + μ)) with t_b/p̂_r[b] = t_b·(R+B)/(r_b+1) — one float ln per
-    bucket, quantized once.  ``mu`` is the Dirichlet mass (≈ a typical
-    document's token count; 2000 is the IR-standard default).
-    Model-sized everywhere: two corpus aggregates, one ≤B-row join,
-    two scalar totals."""
-    tc = _bucket_totals(target, buckets, text_col)
-    rc = _bucket_totals(raw, buckets, text_col)
-    return dsir_log_ratio_from_counts(tc, rc, buckets, mu)
+    """Fixed-point log-ratio table under Dirichlet-prior smoothing (see
+    module doc) from the COLLECTED combined model table: ``rows`` is
+    the driver-side list of ``(bucket, t_b, r_b)`` target and raw
+    counts over every bucket either corpus hits — ≤ ``buckets`` rows,
+    the same model-sized tier as the broadcast λ itself ("nothing
+    corpus-sized ever sits on the driver" still holds).  Returns
+    ``(lam, lam0_fp)`` where ``lam`` is (bucket, lam_fp) for every
+    bucket with target evidence and ``lam0_fp = round(ln(μ/(T+μ))·2^20)``
+    is the constant weight of EVERY target-unseen bucket (seen only in
+    raw and seen in neither alike — under this smoothing absence from
+    the target prices the same regardless of raw frequency).
 
-
-def dsir_log_ratio_from_counts(
-    tc: DataFrame,
-    rc: DataFrame,
-    buckets: int = DSIR_BUCKETS,
-    mu: int = 2000,
-    totals: tuple[int, int] | None = None,
-) -> tuple[DataFrame, int]:
-    """:func:`dsir_log_ratio` over PRE-AGGREGATED (bucket, c) model
-    tables — the shared-scan shape: when target ⊆ raw (the usual
-    case), derive BOTH tables from one persisted per-doc feature-count
-    table instead of exploding the corpus three times (feature
-    extraction is the dominant cost; the gated plan and the oracle
-    both use this single-pass dataflow).
-
-    ``totals``: pre-computed ``(t_total, r_total)`` — pass it when the
-    caller already ran one combined totals job (the round-9 job-fusion
-    shape: a single left-join aggregate over the feature-count table
-    returns both totals AND materializes the cache, replacing the two
-    separate collect jobs this function otherwise runs)."""
-    if totals is not None:
-        t_total, r_total = totals
-    else:
-        t_total = tc.agg(F.sum("c")).collect()[0][0] or 0
-        r_total = rc.agg(F.sum("c")).collect()[0][0] or 0
-    log_denom = math.log(t_total + mu)
-    lam0_fp = round_half_away((math.log(mu) - log_denom) * _FP)
-    lam = (
-        tc.withColumnRenamed("c", "t_b")
-        .join(rc.withColumnRenamed("c", "r_b"), "bucket", "left")
-        .select(
-            "bucket",
-            F.round(
-                (
-                    F.log(
-                        F.col("t_b").cast("double")
-                        * F.lit(float(r_total + buckets))
-                        / (F.coalesce("r_b", F.lit(0)) + F.lit(1)).cast("double")
-                        + F.lit(float(mu))
-                    )
-                    - F.lit(log_denom)
-                )
-                * F.lit(float(_FP))
-            )
-            .cast("bigint")
-            .alias("lam_fp"),
-        )
-    )
-    return lam, lam0_fp
-
-
-def dsir_log_ratio_from_combined_rows(
-    spark,
-    rows,
-    buckets: int = DSIR_BUCKETS,
-    mu: int = 2000,
-) -> tuple[DataFrame, int]:
-    """:func:`dsir_log_ratio_from_counts` over the COLLECTED combined
-    model table (round 11): ``rows`` is the driver-side list of
-    ``(bucket, t_b, r_b)`` — ≤ ``buckets`` rows, the same model-sized
-    tier as the broadcast λ itself ("nothing corpus-sized ever sits on
-    the driver" still holds).  Both totals fold driver-side from the
-    same rows, and λ becomes a projection over a LOCAL one-row-group
-    relation — a LocalTableScan the broadcast build evaluates with NO
-    cluster stage, where the two-relation shape paid two model-sized
-    aggregate exchanges plus a join inside the consuming query (guide
-    §2.4).  The λ EXPRESSION is character-identical to
-    :func:`dsir_log_ratio_from_counts` (same JVM ``ln``, same cast
-    placement, same operand order), so every lam_fp is bit-identical
-    to the two-relation formulation."""
+    λ[b] = ln((t_b/p̂_r[b] + μ) / (T + μ)) with t_b/p̂_r[b] =
+    t_b·(R+B)/(r_b+1) — one JVM ``ln`` per bucket, quantized once.
+    ``mu`` is the Dirichlet mass (≈ a typical document's token count;
+    2000 is the IR-standard default).  Both totals fold driver-side
+    from the same rows, and λ is a projection over a LOCAL relation —
+    a LocalTableScan the broadcast build evaluates with NO cluster
+    stage.  ``buckets`` must be the bucket count the
+    feature counts were folded into (``quality.hashed_feature_counts``)."""
     t_total = sum(int(r[1]) for r in rows)
     r_total = sum(int(r[2]) for r in rows)
     log_denom = math.log(t_total + mu)
@@ -271,38 +130,25 @@ def dsir_log_ratio_from_combined_rows(
 
 def dsir_score(
     docs: DataFrame,
-    lam: DataFrame,
-    lam0_fp: int,
-    buckets: int = DSIR_BUCKETS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id_col, n_features, weight_fp) — integer fixed-point log
-    importance weight per document (bit-stable under partitioning).
-    Featureless docs score (0, 0): no evidence either way."""
-    fc = dsir_feature_counts(docs, buckets, id_col, text_col)
-    return dsir_score_from_counts(docs, fc, lam, lam0_fp, id_col)
-
-
-def dsir_score_from_counts(
-    docs: DataFrame,
     fc: DataFrame,
     lam: DataFrame,
     lam0_fp: int,
-    id_col: str = "doc_id",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """:func:`dsir_score` over a PRE-COMPUTED (id, bucket, cnt) table
-    — pair with :func:`dsir_log_ratio_from_counts` to score from the
-    same single feature pass that built the models.
+    """(doc_id, *keep_cols, n_features, weight_fp) — integer fixed-point
+    log importance weight per document (bit-stable under partitioning)
+    from the (doc_id, bucket, cnt) table ``fc``
+    (``quality.hashed_feature_counts`` with DSIR's bucket count), so one
+    feature pass builds the models AND scores.  Featureless docs score
+    (0, 0): no evidence either way.
 
     ``keep_cols`` names doc columns carried through the left join
     (e.g. the grouping language) so callers don't pay a second
     corpus-grain shuffle join to reunite scores with doc attributes —
-    the same contract as ``ngram_lm_score_from_pairs`` (round 11)."""
+    the same contract as ``ngram_lm_score`` (round 11)."""
     scored = (
         fc.join(F.broadcast(lam), "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("cnt").alias("n_features"),
             F.sum(
@@ -310,8 +156,8 @@ def dsir_score_from_counts(
             ).alias("weight_fp"),
         )
     )
-    return docs.select(id_col, *keep_cols).join(scored, id_col, "left").select(
-        id_col,
+    return docs.select("doc_id", *keep_cols).join(scored, "doc_id", "left").select(
+        "doc_id",
         *keep_cols,
         F.coalesce("n_features", F.lit(0)).alias("n_features"),
         F.coalesce("weight_fp", F.lit(0)).alias("weight_fp"),

@@ -38,40 +38,26 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.text import tokens
 
 BOS = "<s>"
 FP_BITS = 20  # fixed-point scale for log-probs: lp_fp = round(ln(p) * 2^20)
 _FP = 1 << FP_BITS
 
 
-def _bigram_pairs(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id_col, prev, w) — one row per BOS-padded adjacent token pair.
-    Shares the engine tokenizer (`functions.text.tokens`) and the
-    zip_with-over-shifted-slices shape of `operators.textdedup`."""
-    return _bigram_pairs_from_expr(docs, tokens(text_col), id_col)
-
-
-def _bigram_pairs_from_tokens(
-    tok: DataFrame, toks_col: str = "toks", id_col: str = "doc_id"
-) -> DataFrame:
-    """:func:`_bigram_pairs` over a PRE-TOKENIZED table — the
-    shared-scan shape (round 9, see dsir_feature_counts_from_tokens):
-    corpus_mixing tokenizes once and both feature streams derive from
-    the persisted token table."""
-    return _bigram_pairs_from_expr(tok, F.col(toks_col), id_col)
-
-
-def _bigram_pairs_from_expr(docs: DataFrame, toks_expr, id_col: str) -> DataFrame:
-    toks = F.concat(F.array(F.lit(BOS)), toks_expr)
+def bigram_pairs(df: DataFrame, toks: Column) -> DataFrame:
+    """(doc_id, prev, w) — one row per BOS-padded adjacent pair of the
+    token array ``toks`` (``tokens("text")`` or a persisted ``toks``
+    column): the zip_with-over-shifted-slices shape of
+    `operators.textdedup`.  Train and score read the same pairs, so a
+    caller that trains on the documents it scores explodes them once."""
+    t = F.concat(F.array(F.lit(BOS)), toks)
     n = F.size("t")
     return (
-        docs.select(F.col(id_col), toks.alias("t"))
+        df.select("doc_id", t.alias("t"))
         .select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.zip_with(
                     F.slice("t", 1, F.greatest(n - 1, F.lit(0))),
@@ -80,130 +66,66 @@ def _bigram_pairs_from_expr(docs: DataFrame, toks_expr, id_col: str) -> DataFram
                 )
             ).alias("p"),
         )
-        .select(id_col, "p.prev", "p.w")
+        .select("doc_id", "p.prev", "p.w")
     )
 
 
 def ngram_lm_train(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    persist_fn=None,
-) -> tuple[DataFrame, DataFrame, int]:
-    """Train the bigram model: returns ``(bigram, context, V)`` where
-    ``bigram`` is (prev, w, c_bw), ``context`` is (prev, c_u) with
-    c_u = Σ_w c_bw, and ``V`` is the predicted-vocabulary size
-    (distinct w, BOS excluded — BOS is never predicted).
-
-    One explode + one groupBy for the bigram table; the context table
-    and V are model-sized rollups of it (no second corpus pass).
-    ``persist_fn`` overrides how the model table is cached (registry
-    plans pass ``track_persist`` so the session releases it between
-    plans; the default plain persist suits one-shot callers)."""
-    return ngram_lm_train_from_pairs(
-        _bigram_pairs(docs, text_col, id_col), persist_fn
-    )
-
-
-def ngram_lm_train_from_pairs(
-    pairs: DataFrame, persist_fn=None
-) -> tuple[DataFrame, DataFrame, int]:
-    """:func:`ngram_lm_train` over a PRE-COMPUTED (id, prev, w) pair
-    table — the shared-scan shape (the DSIR single-pass device): when
-    the same documents are both trained on and scored (CCNet trains on
-    the clean split, scores everything), explode the corpus into pairs
-    ONCE, persist, and derive the training aggregate from a filtered
-    view of it instead of tokenizing the corpus a second time."""
-    bigram = pairs.groupBy("prev", "w").agg(F.count("*").alias("c_bw"))
-    bigram = (persist_fn or (lambda df: df.persist()))(bigram)
-    context = bigram.groupBy("prev").agg(F.sum("c_bw").alias("c_u"))
-    v = bigram.select("w").distinct().count()
-    return bigram, context, v
-
-
-def ngram_lm_train_from_pairs_lazy(
     pairs: DataFrame, persist_fn
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Collect-free trainer (round 9): V comes back as a one-row
-    broadcastable DataFrame ``(__v: double)`` instead of a collected
-    scalar — :func:`ngram_lm_score_from_pairs` accepts it directly,
-    folding the vocabulary count into the scoring query's own
-    broadcast stages, so no ``collect()`` ever blocks construction.
+    """Train the bigram model on a (doc_id, prev, w) pair table:
+    returns ``(bigram, context, v)`` where ``bigram`` is (prev, w,
+    c_bw), ``context`` is (prev, c_u) with c_u = Σ_w c_bw, and ``v`` is
+    the predicted-vocabulary size V (distinct w, BOS excluded — BOS is
+    never predicted) as a one-row broadcastable DataFrame
+    ``(__v: double)``.  One groupBy over the pairs; the context table
+    and V are model-sized rollups of it (no second corpus pass), and
+    construction runs no job of its own — V folds into the scoring
+    query's broadcast stages (read it with ``v.first()["__v"]``).
 
-    ``persist_fn`` caveat: the three broadcast subtrees the scoring
-    query derives from ``bigram`` (bigram itself, context, V) are
-    prepared CONCURRENTLY by Spark's broadcast-exchange thread pool.
-    Pass an EAGER persist (one count job fills the pairs and bigram
+    ``persist_fn`` caches the bigram table.  The three broadcast
+    subtrees the scoring query derives from ``bigram`` (bigram itself,
+    context, V) are prepared CONCURRENTLY by Spark's broadcast-exchange
+    thread pool, so pass an EAGER persist (one count job fills the
     caches sequentially before any broadcast build) unless the caller
     accepts the cold-cache race — per-block write locks serialize
-    most of it, but duplicated-compute windows and run-to-run
-    variance remain (observed as "Block ... already exists" warns)."""
+    most of it, but duplicated-compute windows and run-to-run variance
+    remain (observed as "Block ... already exists" warns)."""
     bigram = persist_fn(pairs.groupBy("prev", "w").agg(F.count("*").alias("c_bw")))
-    vdf = bigram.agg(F.countDistinct("w").cast("double").alias("__v"))
+    v = bigram.agg(F.countDistinct("w").cast("double").alias("__v"))
     context = bigram.groupBy("prev").agg(F.sum("c_bw").alias("c_u"))
-    return bigram, context, vdf
+    return bigram, context, v
 
 
 def ngram_lm_score(
     docs: DataFrame,
-    bigram: DataFrame,
-    context: DataFrame,
-    vocab_size: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """(id_col, *keep_cols, n_bigrams, oov_bigrams, logprob_fp,
-    avg_logprob, ppl) under add-one smoothing.  ``logprob_fp`` is the
-    integer fixed-point sum (deterministic under any partitioning);
-    ``avg_logprob`` / ``ppl`` are presentation doubles derived from it.
-    Empty docs (no tokens) score n_bigrams=0, ppl=NULL.  ``keep_cols``
-    names doc columns carried through (e.g. the CCNet grouping
-    language) so callers don't pay a second corpus join to reunite
-    scores with grouping keys."""
-    return ngram_lm_score_from_pairs(
-        docs,
-        _bigram_pairs(docs, text_col, id_col),
-        bigram,
-        context,
-        vocab_size,
-        id_col=id_col,
-        keep_cols=keep_cols,
-    )
-
-
-def ngram_lm_score_from_pairs(
-    docs: DataFrame,
     pairs: DataFrame,
     bigram: DataFrame,
     context: DataFrame,
-    vocab_size: int | DataFrame,
-    id_col: str = "doc_id",
+    v: DataFrame,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """:func:`ngram_lm_score` over a PRE-COMPUTED (id, prev, w) pair
-    table — pair with :func:`ngram_lm_train_from_pairs` so train and
-    score share ONE corpus explode.
+    """(doc_id, *keep_cols, n_bigrams, oov_bigrams, logprob_fp,
+    avg_logprob, ppl) for every row of ``docs`` from its (doc_id, prev,
+    w) ``pairs`` under add-one smoothing, against the model of
+    :func:`ngram_lm_train`.  ``logprob_fp`` is the integer fixed-point
+    sum (deterministic under any partitioning); ``avg_logprob`` /
+    ``ppl`` are presentation doubles derived from it.  Empty docs (no
+    tokens) score n_bigrams=0, ppl=NULL.  ``keep_cols`` names doc
+    columns carried through (e.g. the CCNet grouping language) so
+    callers don't pay a second corpus join to reunite scores with
+    grouping keys.
 
-    ``vocab_size`` may be the collected int, or the one-row
-    ``(__v: double)`` DataFrame from
-    :func:`ngram_lm_train_from_pairs_lazy` — then V joins in as a
-    broadcast instead of a driver scalar and construction runs no job.
-    The smoothing denominator is identical either way: c_u and V are
-    exact integers far below 2^53, so the double-typed sum is the same
-    value the int expression produced."""
-    joined = pairs.join(F.broadcast(bigram), ["prev", "w"], "left").join(
-        F.broadcast(context), "prev", "left"
-    )
-    if isinstance(vocab_size, DataFrame):
-        joined = joined.crossJoin(F.broadcast(vocab_size))
-        denom = F.coalesce("c_u", F.lit(0)).cast("double") + F.col("__v")
-    else:
-        denom = (F.coalesce("c_u", F.lit(0)) + F.lit(vocab_size)).cast("double")
+    V joins in as a one-row broadcast, not a driver scalar; c_u and V
+    are exact integers far below 2^53, so the double-typed smoothing
+    denominator is exact."""
+    denom = F.coalesce("c_u", F.lit(0)).cast("double") + F.col("__v")
     scored = (
-        joined
+        pairs.join(F.broadcast(bigram), ["prev", "w"], "left")
+        .join(F.broadcast(context), "prev", "left")
+        .crossJoin(F.broadcast(v))
         .select(
-            id_col,
+            "doc_id",
             F.col("c_bw").isNull().cast("bigint").alias("oov"),
             F.round(
                 F.log(
@@ -216,7 +138,7 @@ def ngram_lm_score_from_pairs(
             .alias("lp_fp"),
         )
     )
-    agg = scored.groupBy(id_col).agg(
+    agg = scored.groupBy("doc_id").agg(
         F.count("*").alias("n_bigrams"),
         F.sum("oov").alias("oov_bigrams"),
         F.sum("lp_fp").alias("logprob_fp"),
@@ -224,10 +146,10 @@ def ngram_lm_score_from_pairs(
     # a filter must rule on EVERY doc — empty docs have no bigram rows,
     # so join the aggregate back onto the doc list (zero-evidence rows:
     # n_bigrams=0, ppl NULL)
-    base = docs.select(id_col, *keep_cols).join(agg, id_col, "left")
+    base = docs.select("doc_id", *keep_cols).join(agg, "doc_id", "left")
     avg = F.col("logprob_fp") / F.lit(float(_FP)) / F.col("n_bigrams")
     return base.select(
-        id_col,
+        "doc_id",
         *keep_cols,
         F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
         F.coalesce("oov_bigrams", F.lit(0)).alias("oov_bigrams"),
@@ -289,9 +211,7 @@ def ppl_buckets(
     )
 
 
-def ppl_tertiles_fp(
-    scored: DataFrame, by_col: str = "lang", id_col: str = "doc_id"
-) -> DataFrame:
+def ppl_tertiles_fp(scored: DataFrame, by_col: str = "lang") -> DataFrame:
     """CCNet head/middle/tail, EXACTLY and driver-gateably — the
     integer twin of the :func:`ppl_buckets` sketch (round 7, closing
     the round-6 verdict's #3 via the DSIR λ device: the only float op

@@ -46,17 +46,18 @@ from olist_ecommerce_data_warehouse_spark.operators.similarity import quantized
 
 def pq_train(
     vectors: DataFrame,
+    dim: int,
     m: int = 4,
     k: int = 16,
     n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> list[list[list[int]]]:
     """Train ``m`` subspace codebooks (each k × d/m int64-quantized
-    centroids).  d must divide by m.  Each subspace is a full
-    ``kmeans_train`` over the sliced, pre-quantized vectors — m small
-    trainings, each the documented small-model/big-data loop.
+    centroids) over ``dim``-wide vectors.  ``dim`` must divide by m.
+    Each subspace is a full ``kmeans_train`` over the sliced,
+    pre-quantized vectors — m small trainings, each the documented
+    small-model/big-data loop.
 
     The m trainings are INDEPENDENT chains of driver-blocking jobs
     (seed collect + one aggregation collect per Lloyd round), so they
@@ -68,33 +69,31 @@ def pq_train(
     driver-blocking collects, so an uncapped ``max_workers=m`` would
     spawn m concurrent collect chains for a large-m codebook — 4 in
     flight keeps executors back-filled without flooding the driver.
-    ``dim`` skips the dimension-probe ``first()`` job when the caller
-    already knows the vector width (every registry corpus is fixed-dim
-    by contract); the claim is still CHECKED, not trusted — a per-row
-    ``assert_true`` guard fails the training job on the first vector
-    whose real width differs, because ``F.slice`` would otherwise
-    silently train codebooks on a prefix of each vector (ADVICE r10)."""
-    d = dim if dim is not None else len(vectors.select(vec_col).first()[0])
-    if d % m:
-        raise ValueError(f"pq_train: dim {d} not divisible by m={m}")
-    sub = d // m
-    q = vectors.select(F.col(id_col), quantized(vec_col).alias("__qv"))
-    if dim is not None:
-        # zero-job width guard: assert_true returns NULL when the
-        # predicate holds (the filter keeps every row) and raises with
-        # the message on the first mismatch — evaluated inside the
-        # existing training scans, no extra probe job
-        q = q.where(
-            F.isnull(
-                F.assert_true(
-                    F.size("__qv") == F.lit(d),
-                    F.concat(
-                        F.lit(f"pq_train: dim={d} but vector width "),
-                        F.size("__qv").cast("string"),
-                    ),
-                )
+
+    ``dim`` is the caller's claim about the vector width (every
+    registry corpus is fixed-dim by contract), and it is CHECKED, not
+    trusted: a per-row ``assert_true`` guard fails the training job on
+    the first vector whose width differs — because ``F.slice`` would
+    otherwise silently train codebooks on a prefix of each vector — and
+    on the first NULL vector, which has no width to train on."""
+    if dim % m:
+        raise ValueError(f"pq_train: dim {dim} not divisible by m={m}")
+    sub = dim // m
+    # zero-job width guard: assert_true returns NULL when the predicate
+    # holds (the filter keeps every row) and raises with the message on
+    # the first mismatch — evaluated inside the existing training scans.
+    # A NULL vector makes the predicate NULL, which raises too.
+    q = vectors.select(F.col(id_col), quantized(vec_col).alias("__qv")).where(
+        F.isnull(
+            F.assert_true(
+                F.size("__qv") == F.lit(dim),
+                F.concat(
+                    F.lit(f"pq_train: dim={dim} but vector width "),
+                    F.coalesce(F.size("__qv").cast("string"), F.lit("NULL")),
+                ),
             )
         )
+    )
 
     def one(j: int) -> list[list[int]]:
         sliced = q.select(

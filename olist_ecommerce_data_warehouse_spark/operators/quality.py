@@ -20,7 +20,7 @@ thresholding — the parts that carry the scale risk — are the real
 production shape and are oracle-gated.
 
 Exact cross-engine parity by construction: feature extraction is the
-shared rolling-hash machinery (``token_hashes_expr``/``gram2_expr``
+shared rolling-hash machinery (``token_hashes_from_tokens``/``gram2_expr``
 and their SQL twins), the weight sum is exact int64, and the score is
 ONE IEEE division of that sum — no exp/log in the gated output (a
 sigmoid is monotone, so thresholding the mean-pooled logit is
@@ -41,7 +41,6 @@ from olist_ecommerce_data_warehouse_spark.operators.textdedup import (
     hex2int_sql,
     mix32,
     mix32_sql_expr,
-    token_hashes_expr,
     token_hashes_from_tokens,
 )
 
@@ -65,9 +64,11 @@ def _weight_sql(h: str) -> str:
     return f"(({mix32_sql_expr(f'({bucket})')}) % {2 * QC_W_HALF + 1}) - {QC_W_HALF}"
 
 
-def _features_from_th(th: Column) -> Column:
-    """Classifier feature stream from a token-hash array: unigram
-    hashes ++ 2-gram rolling hashes folded into [0, 2^32)."""
+def quality_features(toks: Column) -> Column:
+    """array<bigint> of hashed classifier features over a token array
+    (``tokens("text")`` or a persisted ``toks`` column): token unigram
+    hashes ++ 2-gram rolling hashes, all folded into [0, 2^32)."""
+    th = token_hashes_from_tokens(toks)
     n = F.size(th)
     bi = F.transform(
         F.zip_with(
@@ -80,21 +81,29 @@ def _features_from_th(th: Column) -> Column:
     return F.concat(th, bi)
 
 
-def quality_features(text_col: Column | str = "text") -> Column:
-    """array<bigint> of hashed classifier features: token unigram
-    hashes ++ 2-gram rolling hashes, all folded into [0, 2^32)."""
-    return _features_from_th(token_hashes_expr(text_col))
+def hashed_feature_counts(
+    df, toks: Column, buckets: int, carry_cols: tuple[str, ...] = ()
+):
+    """(doc_id, *carry_cols, bucket, cnt) — the :func:`quality_features`
+    stream folded into ``buckets`` (the hashing trick) and counted per
+    document: one explode + one aggregation, shuffle rows are small
+    integer tuples.  The classifier uses 2^20 buckets (:data:`QC_BUCKETS`,
+    the space of :func:`_weight_expr`), DSIR 10^4.  Featureless docs
+    vanish here (they carry no evidence to train or score on).
 
-
-def quality_features_from_tokens(toks_col: Column | str = "toks") -> Column:
-    """:func:`quality_features` over a PRE-TOKENIZED array<string>
-    column — the shared-scan shape: when several operators in one plan
-    all derive from ``tokens(text)`` (DSIR features, CCNet bigrams,
-    the doc list), the plan tokenizes the corpus ONCE into a persisted
-    (id, lang, toks) table and every consumer reads that instead of
-    re-running the regex over the raw text.  Identical stream to
-    :func:`quality_features` by construction (same hash, same fold)."""
-    return _features_from_th(token_hashes_from_tokens(toks_col))
+    ``carry_cols``: per-document columns (functionally dependent on
+    doc_id, e.g. a target-membership flag) threaded through the groupBy
+    so a downstream model aggregate can FILTER the count table instead
+    of joining a separate id list."""
+    h = F.explode(quality_features(toks)).alias("h")
+    return (
+        df.select("doc_id", *carry_cols, h)
+        .select(
+            "doc_id", *carry_cols, (mix32(F.col("h")) % F.lit(buckets)).alias("bucket")
+        )
+        .groupBy("doc_id", *carry_cols, "bucket")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
 
 
 def quality_features_sql(text_col: str = "text") -> str:
@@ -104,11 +113,10 @@ def quality_features_sql(text_col: str = "text") -> str:
     return f"list_concat({th}, {bi})"
 
 
-def quality_scored(
-    df, id_col: str = "doc_id", text_col: str = "text"
-):
-    """Per-document classifier head as a DataFrame
-    ``(id_col, qc_n_features, qc_logit_sum, qc_score, qc_pass)``:
+def quality_scored(df, toks: Column):
+    """Per-document classifier head over the token array ``toks`` as a
+    DataFrame ``(doc_id, qc_n_features, qc_logit_sum, qc_score,
+    qc_pass)``:
 
     - ``qc_n_features``: feature count (unigrams + bigrams)
     - ``qc_logit_sum``: exact int64 Σ w(feature)
@@ -126,13 +134,13 @@ def quality_scored(
     for this shape at sf0.1; same trap embedding_quantize documents).
     Shuffle = one row per document.  ``explode_outer`` keeps
     featureless docs (wsum 0, n 0)."""
-    h = F.explode_outer(quality_features(text_col)).alias("__h")
-    rows = df.select(F.col(id_col), h)
+    h = F.explode_outer(quality_features(toks)).alias("__h")
+    rows = df.select("doc_id", h)
     w = F.when(
         F.col("__h").isNotNull(), _weight_expr(F.col("__h"))
     ).otherwise(F.lit(0))
-    agg = rows.select(id_col, w.alias("__w"), F.col("__h").isNotNull().cast("bigint").alias("__one")).groupBy(
-        id_col
+    agg = rows.select("doc_id", w.alias("__w"), F.col("__h").isNotNull().cast("bigint").alias("__one")).groupBy(
+        "doc_id"
     ).agg(
         F.sum("__w").cast("bigint").alias("qc_logit_sum"),
         F.sum("__one").alias("qc_n_features"),
@@ -140,7 +148,7 @@ def quality_scored(
     n = F.col("qc_n_features")
     wsum = F.col("qc_logit_sum")
     return agg.select(
-        id_col,
+        "doc_id",
         "qc_n_features",
         "qc_logit_sum",
         F.when(n > 0, wsum / (F.lit(QC_W_HALF) * n)).otherwise(F.lit(0.0)).alias("qc_score"),
@@ -155,34 +163,13 @@ def quality_scored(
 # fasttext training story — hash → bucket → linear model — with every
 # quantity an integer, so the trained weights are exactly reproducible
 # on any partitioning (and, via perceptron_oracle_ctes, in ANSI SQL).
+# The perceptron-ready sparse training matrix is
+# ``hashed_feature_counts(df, toks, QC_BUCKETS)``.
 
 
-def quality_feature_counts(df, id_col: str = "doc_id", text_col: str = "text"):
-    """(id_col, bucket, cnt) — the perceptron-ready sparse training
-    matrix: hashed uni+bigram features folded into the SAME 2^20
-    bucket space as :func:`_weight_expr`, counted per document.  One
-    explode + one aggregation; shuffle rows are (id, int, int)
-    triples.  Featureless docs vanish here (they carry no evidence to
-    train or score on — score them 0 via a left join if needed)."""
-    h = F.explode(quality_features(text_col)).alias("h")
-    return (
-        df.select(F.col(id_col), h)
-        .select(id_col, (mix32(F.col("h")) % F.lit(QC_BUCKETS)).alias("bucket"))
-        .groupBy(id_col, "bucket")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def quality_train(
-    df,
-    labels,
-    rounds: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    method: str = "max_violator",
-):
+def quality_train(df, toks: Column, labels, rounds: int = 50, method: str = "max_violator"):
     """Train (bucket, w) quality weights on labeled docs — labels is
-    (id_col, y) with y ∈ {−1 junk, +1 clean}.  The model is
+    (doc_id, y) with y ∈ {−1 junk, +1 clean}.  The model is
     bucket-space-bounded (≤ 2^20 rows), broadcastable at any corpus
     size.  ``method``:
 
@@ -195,25 +182,18 @@ def quality_train(
       each round touching 1/10 of the feature matrix."""
     from .perceptron import pegasos_train, perceptron_train
 
-    feats = quality_feature_counts(df, id_col, text_col)
+    feats = hashed_feature_counts(df, toks, QC_BUCKETS)
     if method == "pegasos":
-        return pegasos_train(feats, labels, rounds=rounds, c=100, batches=10,
-                             id_col=id_col)
-    return perceptron_train(
-        feats,
-        labels,
-        rounds=rounds,
-        id_col=id_col,
-        max_violator=True,
-    )
+        return pegasos_train(feats, labels, rounds=rounds, c=100, batches=10)
+    return perceptron_train(feats, labels, rounds=rounds, max_violator=True)
 
 
-def quality_dual_head(feats, weights, id_col: str = "doc_id"):
+def quality_dual_head(feats, weights):
     """BOTH classifier heads from ONE pass over a pre-aggregated
-    (id, bucket, cnt) feature table: the deterministic stand-in head
+    (doc_id, bucket, cnt) feature table: the deterministic stand-in head
     (qc_n_features / qc_logit_sum) and the TRAINED head (qt_logit_sum
     under ``weights``) as a single broadcast join + single aggregation
-    — ``(id_col, qc_n_features, qc_logit_sum, qt_logit_sum)``.
+    — ``(doc_id, qc_n_features, qc_logit_sum, qt_logit_sum)``.
 
     The stand-in weight is a pure function of the BUCKET
     (w[b] = mix32(b) % 1001 − 500, see :func:`_weight_expr` — the
@@ -222,16 +202,15 @@ def quality_dual_head(feats, weights, id_col: str = "doc_id"):
     EXACTLY to Σ_b cnt·w(b) over its bucket counts: same int64 sum,
     no second explode.  Round 7 exists because the round-6 plan paid
     for that equivalence the hard way — ``quality_scored`` exploded
-    the corpus once for qc, ``quality_feature_counts`` exploded it
-    again for training/qt, and three doc_id joins reunited the
-    branches (the round-6 verdict's fan-in finding); this head is the
-    single-explode, single-join replacement.  Docs absent from
-    ``feats`` (featureless) are absent here too — left-join + coalesce
-    at the caller, zero evidence scores (0, 0, 0)."""
+    the corpus once for qc, the bucket counts exploded it again for
+    training/qt, and three doc_id joins reunited the branches; this
+    head is the single-explode, single-join replacement.  Docs absent from ``feats`` (featureless)
+    are absent here too — left-join + coalesce at the caller, zero
+    evidence scores (0, 0, 0)."""
     standin_w = mix32(F.col("bucket")) % F.lit(2 * QC_W_HALF + 1) - F.lit(QC_W_HALF)
     return (
         feats.join(F.broadcast(weights), "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("cnt").cast("bigint").alias("qc_n_features"),
             F.sum(F.col("cnt") * standin_w).cast("bigint").alias("qc_logit_sum"),
@@ -242,19 +221,17 @@ def quality_dual_head(feats, weights, id_col: str = "doc_id"):
     )
 
 
-def quality_scored_trained(
-    df, weights, id_col: str = "doc_id", text_col: str = "text"
-):
+def quality_scored_trained(df, toks: Column, weights):
     """Score docs under TRAINED weights: same output contract as
     :func:`quality_scored` (qc_n_features / qc_logit_sum / qc_score /
     qc_pass) so the two heads are drop-in interchangeable; mean pool
     divides by total feature count, missing buckets weigh 0, and
     featureless docs score (0, 0, 0.0, pass) — no evidence against
     them, matching the stand-in head's convention."""
-    counts = quality_feature_counts(df, id_col, text_col)
+    counts = hashed_feature_counts(df, toks, QC_BUCKETS)
     agg = (
         counts.join(F.broadcast(weights), "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("cnt").alias("qc_n_features"),
             F.sum(F.col("cnt") * F.coalesce("w", F.lit(0)))
@@ -262,11 +239,11 @@ def quality_scored_trained(
             .alias("qc_logit_sum"),
         )
     )
-    base = df.select(id_col).join(agg, id_col, "left")
+    base = df.select("doc_id").join(agg, "doc_id", "left")
     n = F.coalesce("qc_n_features", F.lit(0))
     wsum = F.coalesce("qc_logit_sum", F.lit(0))
     return base.select(
-        id_col,
+        "doc_id",
         n.alias("qc_n_features"),
         wsum.alias("qc_logit_sum"),
         F.when(n > 0, wsum / n.cast("double")).otherwise(F.lit(0.0)).alias(

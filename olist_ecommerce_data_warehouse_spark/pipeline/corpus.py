@@ -17,7 +17,7 @@ Every stage writes a parquet table under its layer, records a
 STARTED → SUCCESS(rows)/FAILED(error) audit pair, and re-raises on
 failure so downstream stages never run on partial data.  Stage order
 is dependency order (C2); each stage reads the PREVIOUS stage's table
-from disk, so a crashed run resumes from the last good layer.
+from disk.
 
 Scale posture is inherited from the operators: the only corpus-sized
 shuffles are the dedup signature aggregate, the LSH band join, the CC
@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from olist_ecommerce_data_warehouse_spark.functions.text import tokens
 from olist_ecommerce_data_warehouse_spark.operators.graph import connected_components
 from olist_ecommerce_data_warehouse_spark.operators.quality import quality_scored
 from olist_ecommerce_data_warehouse_spark.operators.sampling import sample_by_weight
@@ -166,7 +167,7 @@ class CorpusPipeline:
         toks = docs.select(
             "*", F.size(token_hashes_expr("text")).alias("n_tokens")
         )
-        scored = toks.join(quality_scored(docs), "doc_id")
+        scored = toks.join(quality_scored(docs, tokens("text")), "doc_id")
         reason = (
             F.when(F.col("n_tokens") < self.min_tokens, "too_short")
             .when(F.col("n_tokens") > self.max_tokens, "too_long")
@@ -251,19 +252,24 @@ class CorpusPipeline:
         full score row + ppl_bucket; downstream mixing can weight
         buckets (CCNet keeps head+middle) without re-scoring."""
         from olist_ecommerce_data_warehouse_spark.operators.ngram_lm import (
+            bigram_pairs,
             ngram_lm_score,
             ngram_lm_train,
             ppl_buckets,
         )
 
         docs = self.read("silver", "deduped")
-        bigram, context, v = ngram_lm_train(docs)
-        scored = ngram_lm_score(docs, bigram, context, v).join(
-            docs.select("doc_id", "lang"), "doc_id"
-        )
+        pairs = bigram_pairs(docs, tokens("text"))
+        bigram, context, v = ngram_lm_train(pairs, persist_fn=lambda df: df.persist())
+        # eager: this count is the one job that fills the bigram cache
+        # before the scoring query's three broadcast subtrees (bigram /
+        # context / V) read it concurrently
+        bigram.count()
+        scored = ngram_lm_score(docs, pairs, bigram, context, v, keep_cols=("lang",))
         n = self.audit.write_table(ppl_buckets(scored), self.base, "silver", "lm_scored")
+        vocab = int(v.first()["__v"])
         bigram.unpersist()
-        return {"lm_scored": n, "lm_vocab": v}
+        return {"lm_scored": n, "lm_vocab": vocab}
 
     def corpus_report(self) -> DataFrame:
         """Data card (the Dolma/Pile release-doc table): one small

@@ -333,20 +333,23 @@ def corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagreements of the exact tertiles)."""
     from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.dsir import (
-        dsir_feature_counts_from_tokens,
-        dsir_log_ratio_from_combined_rows,
-        dsir_score_from_counts,
+        DSIR_BUCKETS,
+        dsir_log_ratio,
+        dsir_score,
         gumbel_key,
     )
     from olist_ecommerce_data_warehouse_spark.operators.ngram_lm import (
-        _bigram_pairs_from_tokens,
-        ngram_lm_score_from_pairs,
-        ngram_lm_train_from_pairs_lazy,
+        bigram_pairs,
+        ngram_lm_score,
+        ngram_lm_train,
         ppl_avg_fp_col,
         ppl_sketch_bounds,
         ppl_sketch_bucket_col,
         ppl_tertile_bounds_fp,
         ppl_tertile_bucket_col,
+    )
+    from olist_ecommerce_data_warehouse_spark.operators.quality import (
+        hashed_feature_counts,
     )
     from olist_ecommerce_data_warehouse_spark.operators.sampling import sample_by_weight
 
@@ -368,8 +371,8 @@ def corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs, the DSIR target filter and every doc-grain join all
     # derive from this persisted (doc_id, lang, toks, __tgt) table —
     # the raw text is scanned and regex-tokenized exactly once, where
-    # previously dsir_feature_counts and _bigram_pairs each ran the
-    # tokenizer over the full corpus.  At 100 TB this is the standard
+    # previously the DSIR feature counts and the bigram pairs each ran
+    # the tokenizer over the full corpus.  At 100 TB this is the standard
     # materialize-the-token-table posture: one pass over the wide text
     # column, downstream consumers read the compact columnar cache.
     # EAGER persist (round 11, guide §2.6): one count job materializes
@@ -420,7 +423,8 @@ def corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager-persist + two-collect shape ran three jobs for the same
     # answer (round 9 job fusion, round 11 λ-local fold).
     fc = track_persist(
-        dsir_feature_counts_from_tokens(tok, carry_cols=("__tgt",)), eager=False
+        hashed_feature_counts(tok, F.col("toks"), DSIR_BUCKETS, carry_cols=("__tgt",)),
+        eager=False,
     )
     # ONE model-sized aggregate replaces the r9 scalar-totals collect
     # AND the two in-query model aggregates + their join (round 11,
@@ -431,9 +435,7 @@ def corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and turns λ into a projection over a LOCAL relation whose
     # broadcast build runs NO cluster stage.  The old shape re-ran two
     # fc-wide aggregates (rc, tc) plus their join as three extra AQE
-    # stage waves inside the final query.  λ values are bit-identical
-    # (same JVM expression over the same integers — see
-    # dsir_log_ratio_from_combined_rows).
+    # stage waves inside the final query (see dsir_log_ratio).
     def _dsir_combined_rows():
         return (
             fc.groupBy("bucket")
@@ -452,8 +454,8 @@ def corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         # before the scoring query's three broadcast subtrees
         # (bigram / context / V) consume them concurrently (leaving
         # bigram cold would race three futures into the cold caches).
-        p = track_persist(_bigram_pairs_from_tokens(tok), eager=False)
-        return (p, *ngram_lm_train_from_pairs_lazy(
+        p = track_persist(bigram_pairs(tok, F.col("toks")), eager=False)
+        return (p, *ngram_lm_train(
             p.filter(_split_col() == "train"),
             persist_fn=track_persist,
         ))
@@ -470,7 +472,7 @@ def corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         _f_ccnet = _pool.submit(_ccnet_train)
         combined_rows = _f_dsir.result()
         pairs, bigram, context, v = _f_ccnet.result()
-    lam, lam0 = dsir_log_ratio_from_combined_rows(
+    lam, lam0 = dsir_log_ratio(
         spark,
         [(r["bucket"], r["t_b"], r["r_b"]) for r in combined_rows],
         mu=DSIR_MU,
@@ -480,7 +482,7 @@ def corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the old `.join(d, "doc_id")` re-attached the one column the
     # scoring join had just dropped, costing an extra sort-merge
     # exchange pair on the doc-grain table (guide §2.4)
-    scored = dsir_score_from_counts(d, fc, lam, lam0, keep_cols=("lang",))
+    scored = dsir_score(d, fc, lam, lam0, keep_cols=("lang",))
     keyed = scored.select(
         "doc_id", "lang", "n_features", "weight_fp",
         gumbel_key("weight_fp", "doc_id", seed=DSIR_SEED),
@@ -519,9 +521,7 @@ def corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # means the tertile operator's two consumers (value counts + final
     # assignment) cost one scoring pass total, not two
     scored = track_persist(
-        ngram_lm_score_from_pairs(
-            d, pairs, bigram, context, v, keep_cols=("lang",)
-        )
+        ngram_lm_score(d, pairs, bigram, context, v, keep_cols=("lang",))
     )
     # sketch gate (round 8, verdict task 5): the PRODUCTION bucketing
     # path (ppl_buckets — mergeable percentile_approx, the one that

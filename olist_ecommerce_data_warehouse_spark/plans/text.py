@@ -367,9 +367,10 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         pegasos_train,
     )
     from olist_ecommerce_data_warehouse_spark.operators.quality import (
+        QC_BUCKETS,
         QC_W_HALF,
+        hashed_feature_counts,
         quality_dual_head,
-        quality_feature_counts,
     )
     from olist_ecommerce_data_warehouse_spark.plans.registry import track_persist
 
@@ -403,7 +404,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("y"),
     )
     labels = base.select("doc_id", "y")
-    feats = track_persist(quality_feature_counts(d))
+    feats = track_persist(hashed_feature_counts(d, tokens("text"), QC_BUCKETS))
     w = pegasos_train(feats, labels, rounds=QT_ROUNDS, c=QT_C, batches=QT_BATCHES)
     head = quality_dual_head(feats, w)
     n = F.coalesce("qc_n_features", F.lit(0))

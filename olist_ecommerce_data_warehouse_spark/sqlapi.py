@@ -80,13 +80,14 @@ def create_corpus_views(spark: SparkSession, sf_dir: str) -> list[str]:
     """
     from pyspark.sql import functions as F
 
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.quality import quality_scored
     from olist_ecommerce_data_warehouse_spark.pipeline.corpus import _split_col
 
     register_views(spark, sf_dir)
     docs = table(spark, sf_dir, "documents")
     created = []
-    quality_scored(docs).join(
+    quality_scored(docs, tokens("text")).join(
         docs.select("doc_id", "lang", "source", "n_chars"), "doc_id"
     ).createOrReplaceTempView("corpus_quality")
     created.append("corpus_quality")

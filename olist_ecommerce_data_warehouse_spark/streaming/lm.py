@@ -24,7 +24,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from olist_ecommerce_data_warehouse_spark.functions.text import tokens
 from olist_ecommerce_data_warehouse_spark.operators.ngram_lm import (
+    bigram_pairs,
     ngram_lm_score,
     perplexity_gate,
 )
@@ -34,17 +36,17 @@ def streaming_ppl_score(
     doc_stream: DataFrame,
     bigram: DataFrame,
     context: DataFrame,
-    vocab_size: int,
+    v: DataFrame,
     sink: Callable[[DataFrame, int], None],
     checkpoint: str,
     max_ppl: float | None = None,
     query_name: str = "streaming_ppl_score",
 ):
     """Continuously score ``doc_stream`` ((doc_id, text, ...)) under
-    the static trained model (``bigram``/``context``/``vocab_size``
-    from :func:`operators.ngram_lm.ngram_lm_train`).  ``sink(df,
-    batch_id)`` receives each batch's score rows (plus ``ppl_pass``
-    when ``max_ppl`` is set).  Returns the started StreamingQuery
+    the static trained model (``bigram``/``context`` and the one-row V
+    frame ``v`` from :func:`operators.ngram_lm.ngram_lm_train`).
+    ``sink(df, batch_id)`` receives each batch's score rows (plus
+    ``ppl_pass`` when ``max_ppl`` is set).  Returns the started StreamingQuery
     (availableNow trigger — drain then stop; production swaps a
     processingTime trigger)."""
     if not doc_stream.isStreaming:
@@ -55,7 +57,8 @@ def streaming_ppl_score(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):  # empty trigger — nothing to score
             return
-        scored = ngram_lm_score(batch_df, bigram, context, vocab_size)
+        pairs = bigram_pairs(batch_df, tokens("text"))
+        scored = ngram_lm_score(batch_df, pairs, bigram, context, v)
         if max_ppl is not None:
             scored = perplexity_gate(scored, max_ppl)
         sink(scored, batch_id)

@@ -949,6 +949,7 @@ def test_quality_classifier_head(spark):
     arithmetic contract (score = logit/(500·n), pass = logit ≥ 0,
     n = tokens + bigrams = 2·tokens − 1 for ≥1-token docs), and (c) be
     deterministic across runs."""
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.quality import (
         QC_W_HALF,
         quality_scored,
@@ -964,7 +965,7 @@ def test_quality_classifier_head(spark):
         ],
         "doc_id long, text string",
     )
-    rows = {r["doc_id"]: r for r in quality_scored(docs).collect()}
+    rows = {r["doc_id"]: r for r in quality_scored(docs, tokens("text")).collect()}
     assert set(rows) == {1, 2, 3, 4, 5}
     assert rows[1]["qc_n_features"] == 9 + 8
     assert rows[2]["qc_n_features"] == 1
@@ -979,7 +980,7 @@ def test_quality_classifier_head(spark):
         assert abs(r["qc_score"] - s / (QC_W_HALF * n)) < 1e-15
         assert abs(r["qc_score"]) <= 1.0
         assert r["qc_pass"] == int(s >= 0)
-    again = {r["doc_id"]: r for r in quality_scored(docs).collect()}
+    again = {r["doc_id"]: r for r in quality_scored(docs, tokens("text")).collect()}
     assert {d: tuple(r) for d, r in rows.items()} == {
         d: tuple(r) for d, r in again.items()
     }
@@ -998,9 +999,11 @@ def test_quality_dual_head_matches_separate_heads(spark):
         pegasos_train,
         perceptron_score,
     )
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.quality import (
+        QC_BUCKETS,
+        hashed_feature_counts,
         quality_dual_head,
-        quality_feature_counts,
         quality_scored,
     )
 
@@ -1020,10 +1023,10 @@ def test_quality_dual_head_matches_separate_heads(spark):
         .cast("long")
         .alias("y"),
     )
-    feats = quality_feature_counts(docs)
+    feats = hashed_feature_counts(docs, tokens("text"), QC_BUCKETS)
     w = pegasos_train(feats, labels, rounds=4, c=100, batches=2)
     fused = {r["doc_id"]: r for r in quality_dual_head(feats, w).collect()}
-    qc = {r["doc_id"]: r for r in quality_scored(docs).collect()}
+    qc = {r["doc_id"]: r for r in quality_scored(docs, tokens("text")).collect()}
     qt = {r["doc_id"]: r["score"] for r in perceptron_score(feats, w).collect()}
     assert set(fused) == {1, 2, 3, 4}
     for d, r in fused.items():
@@ -1465,7 +1468,9 @@ def test_ngram_lm_perplexity_filter(spark):
     (drawn from the training distribution) gets LOWER perplexity than
     out-of-domain/shuffled junk, and the fixed-point doc score is
     bit-identical under different partitionings."""
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.ngram_lm import (
+        bigram_pairs,
         ngram_lm_score,
         ngram_lm_train,
         perplexity_gate,
@@ -1476,7 +1481,9 @@ def test_ngram_lm_perplexity_filter(spark):
         for i in range(20)
     ] + [(100 + i, "pack my box with five dozen liquor jugs " * 3) for i in range(20)]
     docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    bigram, context, v = ngram_lm_train(docs, "text")
+    bigram, context, v = ngram_lm_train(
+        bigram_pairs(docs, tokens("text")), persist_fn=lambda t: t.persist()
+    )
 
     probe = spark.createDataFrame(
         [
@@ -1487,7 +1494,7 @@ def test_ngram_lm_perplexity_filter(spark):
         ],
         "doc_id long, text string",
     )
-    scored = ngram_lm_score(probe, bigram, context, v)
+    scored = ngram_lm_score(probe, bigram_pairs(probe, tokens("text")), bigram, context, v)
     rows = {r["doc_id"]: r for r in perplexity_gate(scored, max_ppl=10.0).collect()}
     # in-domain text must be FAR below any junk; note the add-one
     # smoothing quirk (worth pinning): all-OOV text with UNSEEN
@@ -1501,9 +1508,12 @@ def test_ngram_lm_perplexity_filter(spark):
     assert rows[3]["n_bigrams"] == 0 and rows[3]["ppl"] is None and rows[3]["ppl_pass"]
 
     # partitioning invariance of the integer score
+    p7 = probe.repartition(7)
     again = {
         r["doc_id"]: r["logprob_fp"]
-        for r in ngram_lm_score(probe.repartition(7), bigram, context, v).collect()
+        for r in ngram_lm_score(
+            p7, bigram_pairs(p7, tokens("text")), bigram, context, v
+        ).collect()
     }
     assert again == {d: r["logprob_fp"] for d, r in rows.items()}
     bigram.unpersist()
@@ -1515,6 +1525,7 @@ def test_quality_classifier_trained_on_corpus(spark):
     separable clean-vs-junk corpus the trained gate must reach zero
     training errors and classify held-out docs correctly; the trained
     head's output contract matches the stand-in head's."""
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.quality import (
         quality_scored_trained,
         quality_train,
@@ -1537,8 +1548,8 @@ def test_quality_classifier_trained_on_corpus(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     lab = spark.createDataFrame(labels, "doc_id long, y long")
 
-    w = quality_train(docs, lab, rounds=100)
-    scored = quality_scored_trained(docs, w).join(lab, "doc_id")
+    w = quality_train(docs, tokens("text"), lab, rounds=100)
+    scored = quality_scored_trained(docs, tokens("text"), w).join(lab, "doc_id")
     assert scored.filter(F.col("y") * F.col("qc_logit_sum") <= 0).count() == 0
 
     held = spark.createDataFrame(
@@ -1549,17 +1560,17 @@ def test_quality_classifier_trained_on_corpus(spark):
         ],
         "doc_id long, text string",
     )
-    got = {r["doc_id"]: r for r in quality_scored_trained(held, w).collect()}
+    got = {r["doc_id"]: r for r in quality_scored_trained(held, tokens("text"), w).collect()}
     assert got[50]["qc_pass"] == 1 and got[50]["qc_score"] > 0
     assert got[51]["qc_pass"] == 0 and got[51]["qc_score"] < 0
     assert got[52] == (52, 0, 0, 0.0, 1)
 
     # the corpus-scale head (round 5): PEGASOS trains the same feature
     # space to the same separation, drop-in through the same scorer
-    wp = quality_train(docs, lab, rounds=40, method="pegasos")
-    scored_p = quality_scored_trained(docs, wp).join(lab, "doc_id")
+    wp = quality_train(docs, tokens("text"), lab, rounds=40, method="pegasos")
+    scored_p = quality_scored_trained(docs, tokens("text"), wp).join(lab, "doc_id")
     assert scored_p.filter(F.col("y") * F.col("qc_logit_sum") <= 0).count() == 0
-    got_p = {r["doc_id"]: r for r in quality_scored_trained(held, wp).collect()}
+    got_p = {r["doc_id"]: r for r in quality_scored_trained(held, tokens("text"), wp).collect()}
     assert got_p[50]["qc_pass"] == 1 and got_p[51]["qc_pass"] == 0
 
 
@@ -1710,12 +1721,15 @@ def test_dsir_importance_resampling(spark):
     λ table sits within the documented ±1 fp libm tolerance of the
     driver reference, (4) be deterministic: same seed ⇒ identical
     selection under different partitionings."""
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.dsir import (
-        dsir_feature_counts,
         dsir_log_ratio,
         dsir_reference,
         dsir_resample,
         dsir_score,
+    )
+    from olist_ecommerce_data_warehouse_spark.operators.quality import (
+        hashed_feature_counts,
     )
 
     wiki = "the capital of france is paris and the river seine flows through it"
@@ -1729,8 +1743,25 @@ def test_dsir_importance_resampling(spark):
     ]
     raw = spark.createDataFrame(raw_rows, "doc_id long, text string")
 
-    lam_df, lam0 = dsir_log_ratio(target, raw, buckets=2048)
-    scored = dsir_score(raw, lam_df, lam0, buckets=2048)
+    fc = hashed_feature_counts(raw, tokens("text"), 2048)
+    feats: dict[int, dict[int, int]] = {}
+    for r in fc.collect():
+        feats.setdefault(r["doc_id"], {})[r["bucket"]] = r["cnt"]
+    tgt_counts: dict[int, int] = {}
+    for r in hashed_feature_counts(target, tokens("text"), 2048).collect():
+        tgt_counts[r["bucket"]] = tgt_counts.get(r["bucket"], 0) + r["cnt"]
+    raw_counts: dict[int, int] = {}
+    for d, fs in feats.items():
+        for b, c in fs.items():
+            raw_counts[b] = raw_counts.get(b, 0) + c
+    # the combined (bucket, t_b, r_b) model table over every bucket
+    # either corpus hits
+    rows = [
+        (b, tgt_counts.get(b, 0), raw_counts.get(b, 0))
+        for b in sorted(set(tgt_counts) | set(raw_counts))
+    ]
+    lam_df, lam0 = dsir_log_ratio(spark, rows, buckets=2048)
+    scored = dsir_score(raw, fc, lam_df, lam0)
 
     w = {r["doc_id"]: r["weight_fp"] for r in scored.collect()}
     wiki_ids = {i for i in range(30)}
@@ -1742,21 +1773,11 @@ def test_dsir_importance_resampling(spark):
 
     # integer exactness downstream of the λ quantization
     lam = {r["bucket"]: r["lam_fp"] for r in lam_df.collect()}
-    feats: dict[int, dict[int, int]] = {}
-    for r in dsir_feature_counts(raw, buckets=2048).collect():
-        feats.setdefault(r["doc_id"], {})[r["bucket"]] = r["cnt"]
     for d, fs in feats.items():
         assert w[d] == sum(c * lam.get(b, lam0) for b, c in fs.items()), d
 
     # λ table vs driver reference: libm ln is 1-ulp specified, so each
     # quantized entry may differ by at most 1 fp unit
-    tgt_counts: dict[int, int] = {}
-    for r in dsir_feature_counts(target, buckets=2048).collect():
-        tgt_counts[r["bucket"]] = tgt_counts.get(r["bucket"], 0) + r["cnt"]
-    raw_counts: dict[int, int] = {}
-    for d, fs in feats.items():
-        for b, c in fs.items():
-            raw_counts[b] = raw_counts.get(b, 0) + c
     ref_lam, ref_lam0, ref_w = dsir_reference(
         feats, tgt_counts, raw_counts, buckets=2048
     )
@@ -1843,7 +1864,9 @@ def test_ppl_tertiles_fp_exact_and_oov(spark):
     this branch, so it is pinned here with real held-out text)."""
     from pyspark.sql import functions as F
 
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.ngram_lm import (
+        bigram_pairs,
         ngram_lm_score,
         ngram_lm_train,
         ppl_tertiles_fp,
@@ -1863,9 +1886,13 @@ def test_ppl_tertiles_fp_exact_and_oov(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
     train = docs.filter(F.col("doc_id") <= 9)  # doc 10 fully held out
-    bigram, context, v = ngram_lm_train(train)
+    bigram, context, v = ngram_lm_train(
+        bigram_pairs(train, tokens("text")), persist_fn=lambda t: t.persist()
+    )
     scored = ppl_tertiles_fp(
-        ngram_lm_score(docs, bigram, context, v, keep_cols=("lang",)),
+        ngram_lm_score(
+            docs, bigram_pairs(docs, tokens("text")), bigram, context, v, keep_cols=("lang",)
+        ),
         by_col="lang",
     )
     got = {r["doc_id"]: r for r in scored.collect()}
@@ -1905,7 +1932,9 @@ def test_ppl_sketch_agrees_with_exact_tertiles(spark):
     from pyspark.sql import functions as F
 
     from olist_ecommerce_data_warehouse_spark.catalog import table
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.ngram_lm import (
+        bigram_pairs,
         ngram_lm_score,
         ngram_lm_train,
         ppl_buckets,
@@ -1913,9 +1942,10 @@ def test_ppl_sketch_agrees_with_exact_tertiles(spark):
     )
 
     docs = table(spark, SF_DIR, "documents")
-    bigram, context, v = ngram_lm_train(docs)
+    pairs = bigram_pairs(docs, tokens("text"))
+    bigram, context, v = ngram_lm_train(pairs, persist_fn=lambda t: t.persist())
     scored = ngram_lm_score(
-        docs, bigram, context, v, keep_cols=("lang",)
+        docs, pairs, bigram, context, v, keep_cols=("lang",)
     ).persist()
     ex = ppl_tertiles_fp(scored, by_col="lang").select(
         "doc_id", "lang", F.col("ppl_bucket").alias("exb")
@@ -2052,7 +2082,7 @@ def test_product_quantization_end_to_end(spark):
         rows.append((i, [round(x + rng.uniform(-0.02, 0.02), 6) for x in c]))
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    books = pq_train(vecs, m=2, k=8, n_iter=3)
+    books = pq_train(vecs, dim=d, m=2, k=8, n_iter=3)
     assert len(books) == 2 and len(books[0]) == 8 and len(books[0][0]) == 8
 
     enc = pq_encode(vecs, books)
@@ -2112,7 +2142,7 @@ def test_pq_adc_topk_tie_determinism(spark):
     base = [round(0.1 * ((j % 7) - 3), 6) for j in range(16)]
     rows = [(i, base) for i in range(60)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    books = pq_train(vecs, m=2, k=4, n_iter=2)
+    books = pq_train(vecs, dim=16, m=2, k=4, n_iter=2)
     enc = pq_encode(vecs, books)
     queries = vecs.filter(F.col("vec_id") == 59)
     for parts in (1, 7, 32):
@@ -2154,11 +2184,11 @@ def test_adc_partial_prune_matches_lexsort_membership():
 
 
 def test_pq_train_dim_contract(spark):
-    """Round 11 (ADVICE r10): the ``dim=`` fast path must be a pure
-    job-count optimization — byte-identical codebooks to the probing
-    path — and a WRONG dim must fail loudly (the per-row assert_true
+    """Round 11: ``dim`` is required and CHECKED, not
+    trusted — a WRONG dim must fail loudly (the per-row assert_true
     guard) instead of silently training codebooks on a prefix/short
-    slice of each vector."""
+    slice of each vector, and a NULL vector, which has no width to
+    train on, fails the same guard."""
     import random
 
     import pytest
@@ -2170,28 +2200,27 @@ def test_pq_train_dim_contract(spark):
         (i, [round(rng.uniform(-1, 1), 6) for _ in range(16)]) for i in range(60)
     ]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    books = pq_train(vecs, dim=16, m=2, k=4, n_iter=2)
+    assert len(books) == 2 and len(books[0][0]) == 8
 
-    probed = pq_train(vecs, m=2, k=4, n_iter=2)
-    given = pq_train(vecs, m=2, k=4, n_iter=2, dim=16)
-    assert given == probed  # byte-equal models, one fewer job
-
-    for wrong in (8, 32):  # too small (prefix) and too large (short slice)
+    with_null = vecs.unionByName(
+        spark.createDataFrame([(60, None)], "vec_id long, embedding array<double>")
+    )
+    # too small (prefix), too large (short slice), and a NULL vector
+    for frame, dim in ((vecs, 8), (vecs, 32), (with_null, 16)):
         with pytest.raises(Exception, match="pq_train: dim"):
-            pq_train(vecs, m=2, k=4, n_iter=2, dim=wrong)
+            pq_train(frame, dim=dim, m=2, k=4, n_iter=2)
 
 
-def test_dsir_log_ratio_combined_rows_bit_equal(spark):
-    """Round 11: the driver-local λ construction
-    (``dsir_log_ratio_from_combined_rows`` — one collected model table,
-    LocalTableScan broadcast, no in-query aggregates) must produce
-    BIT-IDENTICAL (bucket, lam_fp) rows and the same lam0 as the
-    two-relation ``dsir_log_ratio_from_counts`` formulation it
-    replaced in corpus_mixing."""
-    from pyspark.sql import functions as F
-
+def test_dsir_log_ratio_is_local_and_matches_reference(spark):
+    """Round 11: the λ table is built from one COLLECTED combined model
+    table (``dsir_log_ratio`` — LocalTableScan broadcast, no in-query
+    aggregates): it plans NO shuffle, and its (bucket, lam_fp) rows and
+    lam0 sit within the documented ±1 fp libm tolerance of the driver
+    reference (lam0 exactly: both sides fold it driver-side)."""
     from olist_ecommerce_data_warehouse_spark.operators.dsir import (
-        dsir_log_ratio_from_combined_rows,
-        dsir_log_ratio_from_counts,
+        dsir_log_ratio,
+        dsir_reference,
     )
 
     rows = [
@@ -2200,24 +2229,20 @@ def test_dsir_log_ratio_combined_rows_bit_equal(spark):
             [(0, 5), (3, 9), (1, 1), (17, 40), (0, 2), (7, 7), (2, 30)]
         )
     ]
-    tc = spark.createDataFrame(
-        [(b, t) for b, t, _ in rows if t > 0], "bucket bigint, c bigint"
+    lam_df, lam0 = dsir_log_ratio(spark, rows, buckets=64, mu=50)
+    ref_lam, ref_lam0, _ = dsir_reference(
+        {},
+        {b: t for b, t, _ in rows if t > 0},
+        {b: r for b, _, r in rows},
+        buckets=64,
+        mu=50,
     )
-    rc = spark.createDataFrame([(b, r) for b, _, r in rows], "bucket bigint, c bigint")
-    t_total = sum(t for _, t, _ in rows)
-    r_total = sum(r for _, _, r in rows)
-    lam_old, lam0_old = dsir_log_ratio_from_counts(
-        tc, rc, buckets=64, mu=50, totals=(t_total, r_total)
-    )
-    lam_new, lam0_new = dsir_log_ratio_from_combined_rows(
-        spark, rows, buckets=64, mu=50
-    )
-    assert lam0_new == lam0_old
-    old = {r["bucket"]: r["lam_fp"] for r in lam_old.collect()}
-    new = {r["bucket"]: r["lam_fp"] for r in lam_new.collect()}
-    assert new == old
-    # and the local formulation plans NO shuffle at all
-    assert "Exchange" not in lam_new._jdf.queryExecution().executedPlan().toString()
+    assert lam0 == ref_lam0
+    lam = {r["bucket"]: r["lam_fp"] for r in lam_df.collect()}
+    assert set(lam) == set(ref_lam)
+    assert all(abs(lam[b] - ref_lam[b]) <= 1 for b in lam)
+    # the local formulation plans NO shuffle at all
+    assert "Exchange" not in lam_df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_spread_triggers_only_on_pathologically_narrow_input(spark):
@@ -2230,7 +2255,10 @@ def test_spread_triggers_only_on_pathologically_narrow_input(spark):
     target = spark.sparkContext.defaultParallelism
     narrow = spark.range(100).coalesce(1)
     assert spread(narrow).rdd.getNumPartitions() == target
-    mid = spark.range(100).repartition(max(1, target // 2))
-    assert spread(mid).rdd.getNumPartitions() == max(1, target // 2)
+    # ceil(target / 2): exactly half at even widths, just above half at
+    # odd ones — either way not narrower than half, so no rebalance
+    half = target - target // 2
+    mid = spark.range(100).repartition(half)
+    assert spread(mid).rdd.getNumPartitions() == half
     wide = spark.range(100).repartition(target)
     assert spread(wide).rdd.getNumPartitions() == target

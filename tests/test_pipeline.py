@@ -530,6 +530,7 @@ def test_corpus_pipeline_incremental_drop(spark, tmp_path_factory):
     against history and within the drop, fresh docs append, and a
     replayed identical drop adds nothing."""
     from olist_ecommerce_data_warehouse_spark.catalog import table
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.quality import quality_scored
     from olist_ecommerce_data_warehouse_spark.pipeline.corpus import CorpusPipeline
     from tests.conftest import SF_DIR
@@ -549,7 +550,7 @@ def test_corpus_pipeline_incremental_drop(spark, tmp_path_factory):
     for r in kept:
         cand = " ".join(reversed(r["text"].split()))
         qdf = spark.createDataFrame([(0, cand)], "doc_id long, text string")
-        if quality_scored(qdf).first()["qc_pass"] == 1 and len(cand.split()) >= 2:
+        if quality_scored(qdf, tokens("text")).first()["qc_pass"] == 1 and len(cand.split()) >= 2:
             fresh_text = cand
             break
     assert fresh_text is not None
@@ -603,6 +604,7 @@ def test_corpus_sql_views(spark):
     """create_corpus_views: the corpus tier is queryable in plain SQL,
     lazily (no jobs at CREATE), with the same answers as the operators."""
     from olist_ecommerce_data_warehouse_spark.catalog import table
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.quality import quality_scored
     from olist_ecommerce_data_warehouse_spark.sqlapi import create_corpus_views
     from tests.conftest import SF_DIR
@@ -613,7 +615,7 @@ def test_corpus_sql_views(spark):
     n_pass_sql = spark.sql(
         "SELECT count(*) AS n FROM corpus_quality WHERE qc_pass = 1"
     ).first()["n"]
-    n_pass_op = quality_scored(docs).filter("qc_pass = 1").count()
+    n_pass_op = quality_scored(docs, tokens("text")).filter("qc_pass = 1").count()
     assert n_pass_sql == n_pass_op
     splits = {
         r["split"]: r["n"]

@@ -746,6 +746,7 @@ def test_quality_classifier_cross_engine_parity(spark, ddb, texts):
     tokenizer/feature/weight composition at the edges (empty text,
     punctuation-only, non-Latin scripts, İ) over the version-stable
     alphabet above."""
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.quality import (
         QC_W_HALF,
         _weight_sql,
@@ -763,7 +764,7 @@ def test_quality_classifier_cross_engine_parity(spark, ddb, texts):
             r["qc_score"],
             r["qc_pass"],
         )
-        for r in quality_scored(docs).collect()
+        for r in quality_scored(docs, tokens("text")).collect()
     }
     ddb.execute("CREATE OR REPLACE TABLE _qc_docs (doc_id BIGINT, text VARCHAR)")
     for i, t in enumerate(texts):
@@ -1039,7 +1040,9 @@ def test_ngram_lm_reference_parity(spark, docs):
     scoring must match the reference within ±1 fixed-point unit per
     bigram (libm ulp allowance — rounding mode itself is pinned
     HALF_UP both sides)."""
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.ngram_lm import (
+        bigram_pairs,
         ngram_lm_score,
         ngram_lm_score_reference,
         ngram_lm_train,
@@ -1050,17 +1053,18 @@ def test_ngram_lm_reference_parity(spark, docs):
     df = spark.createDataFrame(
         [(i, " ".join(t)) for i, t in texts.items()], "doc_id long, text string"
     )
-    bigram, context, v = ngram_lm_train(df, "text")
+    pairs = bigram_pairs(df, tokens("text"))
+    bigram, context, v = ngram_lm_train(pairs, persist_fn=lambda t: t.persist())
     ref_b, ref_c, ref_v = ngram_lm_train_reference(texts)
     assert {
         (r["prev"], r["w"]): r["c_bw"] for r in bigram.collect()
     } == ref_b
     assert {r["prev"]: r["c_u"] for r in context.collect()} == ref_c
-    assert v == ref_v
+    assert v.first()["__v"] == ref_v
 
     got = {
         r["doc_id"]: (r["n_bigrams"], r["oov_bigrams"], r["logprob_fp"])
-        for r in ngram_lm_score(df, bigram, context, v).collect()
+        for r in ngram_lm_score(df, pairs, bigram, context, v).collect()
     }
     want = ngram_lm_score_reference(texts, ref_b, ref_c, ref_v)
     for d, (n, oov, lp) in want.items():

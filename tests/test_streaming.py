@@ -550,7 +550,9 @@ def test_streaming_ppl_score_equals_batch(spark, tmp_path_factory):
     from pyspark.sql import functions as F  # noqa: F811
 
     from olist_ecommerce_data_warehouse_spark.catalog import table
+    from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.ngram_lm import (
+        bigram_pairs,
         ngram_lm_score,
         ngram_lm_train,
         perplexity_gate,
@@ -559,7 +561,10 @@ def test_streaming_ppl_score_equals_batch(spark, tmp_path_factory):
 
     base = tmp_path_factory.mktemp("stream_lm")
     docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
-    bigram, context, v = ngram_lm_train(docs.filter(F.col("doc_id") % 3 == 0))
+    train = docs.filter(F.col("doc_id") % 3 == 0)
+    bigram, context, v = ngram_lm_train(
+        bigram_pairs(train, tokens("text")), persist_fn=lambda t: t.persist()
+    )
 
     probe = docs.filter(F.col("doc_id") % 3 != 0).limit(200)
     src = f"{base}/src"
@@ -585,7 +590,10 @@ def test_streaming_ppl_score_equals_batch(spark, tmp_path_factory):
         map(
             tuple,
             perplexity_gate(
-                ngram_lm_score(probe, bigram, context, v), 25.0
+                ngram_lm_score(
+                    probe, bigram_pairs(probe, tokens("text")), bigram, context, v
+                ),
+                25.0,
             ).collect(),
         )
     )
