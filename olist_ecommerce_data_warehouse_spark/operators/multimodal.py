@@ -46,6 +46,7 @@ sane when payloads are large.
 
 from __future__ import annotations
 
+import functools
 import struct
 from collections.abc import Callable, Iterator
 
@@ -456,7 +457,7 @@ def _stdlib_decode_row(b: bytes) -> tuple:
         w, h, total, count = _parse_gif(b)
         return ("gif", w, h, 3, 0, 8, total / count if count else 0.0)
     if b[:2] == b"\xff\xd8":
-        w, h, planes = _decode_jpeg_baseline(b)
+        w, h, planes = _decode_jpeg(b)
         mean = float(sum(float(p.mean()) for p in planes) / len(planes))
         # true SOF precision (8 or 12), not the storage dtype width —
         # a 12-bit file reports 12, not 16
@@ -487,8 +488,8 @@ def real_decode_media(media: DataFrame) -> DataFrame:
     FLAC, both round 8), sniffing the container by magic bytes.
     Anything else — MP4, arithmetic-coded JPEG, … — raises
     ``NotImplementedError`` where the PIL/ffmpeg call would go (for
-    JPEG the boundary now sits INSIDE ``_decode_jpeg_baseline`` at the
-    exact unsupported-process branch).  Same Arrow-batched shape as
+    JPEG the boundary sits INSIDE ``_decode_jpeg`` at the exact
+    unsupported-process branch).  Same Arrow-batched shape as
     ``decode_media``; per-row Python cost is the honest price of a
     pure-stdlib codec."""
 
@@ -1128,14 +1129,14 @@ def _synth_png_bytes(w: int, h: int, filter_type: int = 0) -> bytes:
 def _synth_jpeg_bytes(w: int, h: int, ncomp: int, progressive: int) -> bytes:
     import struct
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    app0 = seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
+    app0 = _jpeg_seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
     comps = b"".join(bytes([i + 1, 0x11, 0]) for i in range(ncomp))
-    sof = seg(0xC2 if progressive else 0xC0, struct.pack(">BHHB", 8, h, w, ncomp) + comps)
-    sos = seg(0xDA, b"\x01\x01\x00\x00\x3f\x00")
-    return b"\xff\xd8" + app0 + seg(0xDB, b"\x00" + bytes(64)) + sof + sos + b"\xff\xd9"
+    sof = _jpeg_seg(
+        0xC2 if progressive else 0xC0, struct.pack(">BHHB", 8, h, w, ncomp) + comps
+    )
+    sos = _jpeg_seg(0xDA, b"\x01\x01\x00\x00\x3f\x00")
+    dqt = _jpeg_seg(0xDB, b"\x00" + bytes(64))
+    return b"\xff\xd8" + app0 + dqt + sof + sos + b"\xff\xd9"
 
 
 def _synth_wav_bytes(ch: int, rate: int, bits: int, n_samples: int = 0) -> bytes:
@@ -1558,19 +1559,16 @@ def _synth_bmp_bytes(w: int, h: int) -> bytes:
 
 # ------------------------------------------------------ JPEG (round 6)
 #
-# Baseline-DCT JPEG decode with the stdlib + numpy alone — the last
-# real-user multimodal gap the round-5 verdict ranked #1.  Honest-codec
-# posture matches PNG/GIF/BMP/WAV: the DECODER is generic (any
-# baseline/extended-sequential Huffman JPEG, since round 7 including
-# chroma subsampling up to 2×2 and DRI/RSTn restart intervals:
-# segment walk, DQT/DHT table parse, canonical-Huffman entropy decode
-# with byte-unstuffing, run/size AC coding, dequantize, de-zigzag,
-# float IDCT, level shift + clamp; since round 7 PROGRESSIVE SOF2
-# streams decode too, via _decode_jpeg_progressive's coefficient
-# accumulation); arithmetic coding, 12-bit precision and sampling
-# factors > 2 raise NotImplementedError at the exact branch point.
-# The GATE uses
-# the known-content closed-form device: the paired encoder writes
+# Huffman JPEG decode with the stdlib + numpy alone.  Honest-codec
+# posture matches PNG/GIF/BMP/WAV: ONE generic decoder, _decode_jpeg,
+# serves baseline, extended-sequential (incl. 12-bit) and progressive
+# streams — segment walk, DQT/DHT/DRI/SOF parse, canonical-Huffman
+# entropy decode with byte-unstuffing, scans accumulating coefficients
+# per component (chroma subsampling factors 1..4, DRI/RSTn restart
+# intervals), then dequantize, de-zigzag, float IDCT, level shift +
+# clamp and upsample; arithmetic coding, lossless and hierarchical
+# processes raise NotImplementedError at the exact branch point.
+# The GATE uses the known-content closed-form device: the paired encoder writes
 # block-constant grayscale images (each 8×8 block one known value), a
 # unit quant table and its own minimal Huffman tables — for such
 # blocks the quantized DCT is EXACTLY the integer 8·(v−128) in the DC
@@ -1605,36 +1603,52 @@ def _huff_canonical(bits: list[int], vals: list[int]) -> dict[int, tuple[int, in
 
 
 class _BitWriter:
-    """MSB-first bit accumulator with JPEG 0xFF byte stuffing."""
+    """MSB-first bit accumulator.  A ``stuffed`` writer builds a JPEG
+    entropy segment: a 0x00 follows every 0xFF byte and padding is
+    1-bits.  An unstuffed writer (FLAC) pads with 0-bits."""
 
-    def __init__(self) -> None:
+    def __init__(self, stuffed: bool = True) -> None:
         self.out = bytearray()
+        self.stuffed = stuffed
         self.acc = 0
         self.nbits = 0
 
-    def write(self, value: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)
-                self.acc, self.nbits = 0, 0
+    def write(self, value: int, n: int) -> None:
+        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
+        self.nbits += n
+        while self.nbits >= 8:
+            self.nbits -= 8
+            byte = (self.acc >> self.nbits) & 0xFF
+            self.out.append(byte)
+            if byte == 0xFF and self.stuffed:
+                self.out.append(0x00)
+        self.acc &= (1 << self.nbits) - 1
 
-    def flush(self) -> bytes:
+    def unary(self, q: int) -> None:
+        while q >= 32:
+            self.write(0, 32)
+            q -= 32
+        self.write(1, q + 1)  # q zero bits then a one bit
+
+    def align(self) -> None:
         if self.nbits:
             pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # 1-fill per spec
+            self.write((1 << pad) - 1 if self.stuffed else 0, pad)
+
+    def flush(self) -> bytes:
+        self.align()
         return bytes(self.out)
 
     def marker(self, byte2: int) -> None:
-        """Byte-align (1-fill, stuffed if the pad byte lands on 0xFF)
-        and emit an UNSTUFFED marker — the restart-marker device."""
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)
+        """Byte-align (a 1-fill pad byte of 0xFF is stuffed) and emit an
+        UNSTUFFED marker — the restart-marker device."""
+        self.align()
         self.out += bytes([0xFF, byte2])
+
+
+def _jpeg_seg(marker: int, payload: bytes) -> bytes:
+    """One JPEG marker segment: 0xFF, marker, 2-byte length, payload."""
+    return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
 
 
 # Encoder-side Huffman tables (minimal, written into DHT — the decoder
@@ -1674,14 +1688,11 @@ def _synth_jpeg_gray_bytes(w: int, h: int, mid: int) -> bytes:
     dc_tab = _huff_canonical(_ENC_DC_BITS, _ENC_DC_VALS)
     ac_tab = _huff_canonical(_ENC_AC_BITS, _ENC_AC_VALS)
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    dqt = seg(0xDB, b"\x00" + bytes([1] * 64))  # table 0, all-ones
-    sof = seg(0xC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    dht_dc = seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    dht_ac = seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    sos = seg(0xDA, bytes([1, 1, 0x00]) + bytes([0, 63, 0]))
+    dqt = _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))  # table 0, all-ones
+    sof = _jpeg_seg(0xC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
+    dht_dc = _jpeg_seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
+    dht_ac = _jpeg_seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
+    sos = _jpeg_seg(0xDA, bytes([1, 1, 0x00]) + bytes([0, 63, 0]))
 
     bw = _BitWriter()
     prev_dc = 0
@@ -1705,39 +1716,90 @@ def _synth_jpeg_gray_bytes(w: int, h: int, mid: int) -> bytes:
 
 
 class _BitReader:
-    """MSB-first entropy-segment reader with 0xFF00 unstuffing; stops
-    at any non-stuffing marker."""
+    """MSB-first bit reader from byte ``pos`` of ``b``.  A ``stuffed``
+    reader walks a JPEG entropy segment: it drops the 0x00 that follows
+    each 0xFF data byte and raises at any other marker.  An unstuffed
+    reader walks a plain bit stream (FLAC frames)."""
 
-    def __init__(self, b: bytes, pos: int) -> None:
+    def __init__(self, b: bytes, pos: int, stuffed: bool = True) -> None:
         self.b = b
         self.pos = pos
+        self.stuffed = stuffed
         self.acc = 0
         self.nbits = 0
 
-    def bit(self) -> int:
-        if self.nbits == 0:
-            if self.pos >= len(self.b):
+    def _byte(self) -> int:
+        b, pos = self.b, self.pos
+        if pos >= len(b):
+            raise ValueError(
+                "truncated JPEG entropy segment" if self.stuffed
+                else "truncated FLAC stream"
+            )
+        byte = b[pos]
+        self.pos = pos + 1
+        if byte == 0xFF and self.stuffed:
+            if pos + 1 >= len(b):
                 raise ValueError("truncated JPEG entropy segment")
-            byte = self.b[self.pos]
-            self.pos += 1
-            if byte == 0xFF:
-                if self.pos >= len(self.b):
-                    raise ValueError("truncated JPEG entropy segment")
-                nxt = self.b[self.pos]
-                if nxt == 0x00:
-                    self.pos += 1
-                else:
-                    raise ValueError("marker inside entropy segment")
-            self.acc = byte
+            if b[pos + 1]:
+                raise ValueError("marker inside entropy segment")
+            self.pos = pos + 2
+        return byte
+
+    def bit(self) -> int:
+        if not self.nbits:
+            self.acc = self._byte()
             self.nbits = 8
         self.nbits -= 1
         return (self.acc >> self.nbits) & 1
 
     def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
+        # acc holds nbits unread bits below any already-read ones
+        acc, nbits = self.acc & ((1 << self.nbits) - 1), self.nbits
+        while nbits < n:
+            acc = (acc << 8) | self._byte()
+            nbits += 8
+        self.acc, self.nbits = acc, nbits - n
+        return acc >> self.nbits
+
+    def signed(self, n: int) -> int:
+        """n-bit two's-complement value."""
+        v = self.bits(n)
+        return v - (1 << n) if v >= (1 << (n - 1)) else v
+
+    def unary(self) -> int:
+        """Count of 0-bits before the next 1-bit (a FLAC Rice quotient)."""
+        q = 0
+        while not self.bit():
+            q += 1
+            if q > 1 << 20:
+                raise ValueError("runaway FLAC unary code")
+        return q
+
+    def align(self) -> None:
+        """Drop the rest of the current byte."""
+        self.nbits = 0
+
+    def bytepos(self) -> int:
+        """Offset of the byte holding the next unread bit."""
+        return self.pos - 1 if self.nbits else self.pos
+
+    def resync(self, rst: int) -> None:
+        """JPEG restart boundary (§B.2.1.2): byte-align, then consume
+        marker RST(rst mod 8), skipping a stuffed 1-fill pad byte and
+        0xFF fill bytes before it."""
+        self.nbits = 0
+        b, p = self.b, self.pos
+        while p + 1 < len(b) and b[p] == 0xFF and b[p + 1] == 0x00:
+            p += 2  # stuffed 1-fill pad byte (B.1.1.5)
+        while p + 1 < len(b) and b[p] == 0xFF and b[p + 1] == 0xFF:
+            p += 1  # fill bytes before the marker
+        if p + 1 >= len(b):
+            # truncation is malformed input (ValueError), not an index bug
+            raise ValueError("truncated at restart boundary")
+        expect = 0xD0 + rst % 8
+        if b[p] != 0xFF or b[p + 1] != expect:
+            raise ValueError(f"expected RST{expect & 7} at restart boundary")
+        self.pos = p + 2
 
 
 def _huff_decode(reader: "_BitReader", table: dict[tuple[int, int], int]) -> int:
@@ -1756,30 +1818,50 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def _decode_jpeg_baseline(b: bytes):
-    """(width, height, planes) — full baseline/extended-sequential
-    Huffman decode including CHROMA-SUBSAMPLED files (round 7 for
-    factors ≤ 2; round 8 widens to the full spec-legal 1..4 range
-    under the divisor constraint — 4:4:4, 4:2:2, 4:2:0 and 4:1:1 all
-    decode; the interleaved scan walks real MCUs).  planes is a list
-    of numpy uint8 arrays, one per component, each upsampled to the
-    FULL h × w by nearest-neighbor replication (the documented
-    contract — libjpeg's default fancy upsampler interpolates instead,
-    so byte parity with libjpeg is not claimed; the closed-form gates
-    use block-constant fixtures where both upsamplers agree exactly).
-    DRI/RSTn restart intervals decode for real (round 7): byte-align
-    at each boundary, verify the mod-8 marker cycle, reset DC
-    prediction.  12-BIT PRECISION decodes for real (round 8) through
-    the extended-sequential process — SOF1 with P=12, Pq=1 16-bit
-    quant tables, level shift 2048, clip to 0..4095, uint16 planes
-    (12-bit under SOF0 is malformed per Table B.2 and raises
-    ValueError).  NON-DIVISOR sampling factors (e.g. 3:2) upsample
-    through the generic nearest-neighbor index map src = x·Hi // Hmax
-    (round 8; identical to replication when the ratio is integral).
-    Progressive (SOF2) dispatches to the real progressive decoder;
-    arithmetic coding (SOF9+) and hierarchical raise
-    NotImplementedError — the PIL/libjpeg boundary, honestly
-    gated."""
+@functools.cache
+def _idct_basis():
+    """The 8-point IDCT basis A[u, x] = C(u)/2 · cos((2x+1)uπ/16)."""
+    import numpy as np
+
+    A = np.zeros((8, 8))
+    for u in range(8):
+        cu = (1.0 / np.sqrt(2.0)) if u == 0 else 1.0
+        for x in range(8):
+            A[u, x] = cu / 2.0 * np.cos((2 * x + 1) * u * np.pi / 16.0)
+    return A
+
+
+def _decode_jpeg(b: bytes):
+    """(width, height, planes) — Huffman JPEG decode of the baseline
+    (SOF0), extended-sequential (SOF1) and progressive (SOF2)
+    processes through one path.  Every scan accumulates quantized
+    coefficients into per-component zigzag buffers (ITU T.81 §G): DC
+    first/refine scans, AC first scans with EOB runs, AC refinement
+    scans with zero-history skips and correction bits (two's-complement
+    ``coef & p1`` bit tests are exact for the magnitudes refinement can
+    produce).  A sequential stream is its one full-band scan — Ss=0,
+    Se=63, Ah=Al=0, every component interleaved — and returns after
+    it; a progressive stream runs scans until EOI.  A scan covering
+    several components walks the interleaved MCU grid (§A.2.3, padded
+    to whole MCUs), a single-component scan that component's own block
+    grid.  Restart intervals (DRI/RSTn) byte-align, verify the mod-8
+    marker cycle and reset DC prediction and the EOB run.
+
+    One reconstruction pass then dequantizes, de-zigzags and inverse
+    DCTs every block (level shift 2^(P-1), clip to [0, 2^P - 1]),
+    crops each component to its true dims (§A.1.1) and upsamples it to
+    the FULL h × w by nearest neighbour.  planes is one numpy array per
+    component, uint8 for 8-bit and uint16 for 12-bit precision (SOF1
+    with Pq=1 16-bit quant tables; 12-bit under SOF0 is malformed per
+    Table B.2 and raises ValueError).  Sampling factors 1..4 decode,
+    non-divisor ratios (e.g. 3:2) through the index map
+    src = x·Hi // Hmax, which equals replication for integral ratios.
+    libjpeg's default fancy upsampler interpolates instead, so byte
+    parity with libjpeg is not claimed; the closed-form gates use
+    block-constant fixtures where both upsamplers agree exactly.
+    Progressive 12-bit, a sequential scan covering a subset of the
+    components, arithmetic coding (SOF9+), lossless and hierarchical
+    processes raise NotImplementedError — the PIL/libjpeg boundary."""
     import struct
 
     import numpy as np
@@ -1789,16 +1871,15 @@ def _decode_jpeg_baseline(b: bytes):
     qt: dict[int, list[int]] = {}
     huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
     comps = None
+    coefs: list = []
+    pred: list[int] = []
+    progressive = False
+    scans = 0
     w = h = 0
     prec = 8
+    hmax = vmax = mx_n = my_n = 0
     restart_interval = 0
     i = 2
-    # IDCT basis: A[u, x] = C(u)/2 · cos((2x+1)uπ/16)
-    A = np.zeros((8, 8))
-    for u in range(8):
-        cu = (1.0 / np.sqrt(2.0)) if u == 0 else 1.0
-        for x in range(8):
-            A[u, x] = cu / 2.0 * np.cos((2 * x + 1) * u * np.pi / 16.0)
     while i + 1 < len(b):
         if b[i] != 0xFF:
             raise ValueError("expected marker")
@@ -1810,47 +1891,36 @@ def _decode_jpeg_baseline(b: bytes):
         marker = b[i + 1]
         i += 2
         if marker == 0xD9:
-            break  # standalone EOI before any SOS → clean "no SOS" error
+            break  # EOI; before any SOS → clean "no SOS" error
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             continue
         if i + 2 > len(b):
             raise ValueError("truncated JPEG segment header")
         (seglen,) = struct.unpack(">H", b[i : i + 2])
         payload = b[i + 2 : i + seglen]
-        if marker == 0xC2:
-            # round 7: progressive decodes for real — restart the walk
-            # in the coefficient-accumulating decoder
-            return _decode_jpeg_progressive(b)
-        if marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError("non-baseline JPEG process")
+        i += seglen
         if marker == 0xDD:
             if len(payload) < 2:
                 raise ValueError("truncated JPEG DRI payload")
             (restart_interval,) = struct.unpack(">H", payload[:2])
-            i += seglen
-            continue
-        if marker == 0xDB:
+        elif marker == 0xDB:
             p = 0
             while p < len(payload):
                 pq, tq = payload[p] >> 4, payload[p] & 0xF
                 if pq:
-                    # round 8: Pq=1 — 16-bit big-endian quant entries
-                    # (§B.2.4.1; required whenever any value exceeds
-                    # 255, mandatory territory for 12-bit precision)
+                    # Pq=1 — 16-bit big-endian quant entries (§B.2.4.1;
+                    # required whenever any value exceeds 255, mandatory
+                    # territory for 12-bit precision)
                     if p + 129 > len(payload):
                         raise ValueError("DQT truncated for 16-bit table")
-                    qt[tq] = list(
-                        struct.unpack(">64H", payload[p + 1 : p + 129])
-                    )
+                    qt[tq] = list(struct.unpack(">64H", payload[p + 1 : p + 129]))
                     p += 129
                 else:
                     if p + 65 > len(payload):
                         raise ValueError("DQT truncated for 8-bit table")
                     qt[tq] = list(payload[p + 1 : p + 65])
                     p += 65
-            i += seglen
-            continue
-        if marker == 0xC4:
+        elif marker == 0xC4:
             p = 0
             while p < len(payload):
                 tc, th = payload[p] >> 4, payload[p] & 0xF
@@ -1864,16 +1934,22 @@ def _decode_jpeg_baseline(b: bytes):
                 fwd = _huff_canonical(bits, vals)
                 huff[(tc, th)] = {(l, c): s for s, (c, l) in fwd.items()}
                 p += 17 + n
-            i += seglen
-            continue
-        if marker in (0xC0, 0xC1):
+        elif marker in _JPEG_SOF:
+            # one frame per stream: a later SOF2 may restate the
+            # progressive frame, but no SOF0-7 may follow a SOF2 nor a
+            # SOF2 follow a sequential SOF
+            if comps is not None and marker < 0xC8 and progressive != (marker == 0xC2):
+                raise ValueError("second SOF in a progressive stream")
+            if marker > 0xC2:
+                raise NotImplementedError("non-baseline JPEG process")
             if len(payload) < 6:
                 raise ValueError("truncated JPEG SOF payload")
             prec, h, w, nc = struct.unpack(">BHHB", payload[:6])
-            # round 8: 12-bit precision decodes for real through the
-            # extended-sequential process (SOF1, §B.2.2 — baseline
-            # SOF0 is 8-bit-only by Table B.2, so 12-bit under 0xC0 is
-            # malformed input, not a capability gap)
+            if marker == 0xC2 and prec != 8:
+                raise NotImplementedError("12-bit precision")
+            # 12-bit precision decodes through the extended-sequential
+            # process (SOF1, §B.2.2) — baseline SOF0 is 8-bit-only by
+            # Table B.2, so 12-bit under 0xC0 is malformed input
             if prec == 12 and marker == 0xC0:
                 raise ValueError("12-bit precision is illegal in baseline SOF0")
             if prec not in (8, 12):
@@ -1882,10 +1958,7 @@ def _decode_jpeg_baseline(b: bytes):
             for ci in range(nc):
                 cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
                 sh, sv = samp >> 4, samp & 0xF
-                # round 8: the full spec-legal factor range (§A.1.1
-                # allows 1..4); the MCU walk and np.repeat upsample
-                # below are generic in the factors, so the old ≤2
-                # raise was stricter than the code required
+                # the spec-legal factor range (§A.1.1 allows 1..4)
                 if not (1 <= sh <= 4 and 1 <= sv <= 4):
                     raise ValueError("JPEG sampling factor outside 1..4")
                 comps.append({"id": cid, "h": sh, "v": sv, "tq": tq})
@@ -1893,492 +1966,234 @@ def _decode_jpeg_baseline(b: bytes):
                 # single-component scans are non-interleaved by spec:
                 # the MCU is one data unit whatever the factors say
                 comps[0]["h"] = comps[0]["v"] = 1
-            i += seglen
-            continue
-        if marker == 0xDA:
-            if not payload:
-                raise ValueError("truncated JPEG SOS payload")
-            ns = payload[0]
-            if comps is None:
-                raise ValueError("SOS before SOF")
-            if ns != len(comps):
-                # spec-legal non-interleaved layout: a sequential file
-                # MAY split components across several SOS segments
-                # (§B.2.3 allows ns < nf).  The MCU walk below assumes
-                # one interleaved scan covering every SOF component —
-                # raise the documented honest-gate boundary instead of
-                # KeyError-ing on the missing selectors (ADVICE r07)
-                raise NotImplementedError(
-                    "multi-scan sequential JPEG (SOS covers a subset "
-                    "of SOF components) — libjpeg territory"
-                )
-            if len(payload) < 1 + 2 * ns:
-                raise ValueError("truncated JPEG SOS payload")
-            sel = {}
-            for ci in range(ns):
-                cid, tabs = payload[1 + 2 * ci], payload[2 + 2 * ci]
-                sel[cid] = (tabs >> 4, tabs & 0xF)
-            if any(c["id"] not in sel for c in comps):
-                raise ValueError("JPEG SOS component ids differ from SOF")
-            reader = _BitReader(b, i + seglen)
-            # interleaved MCU scan (§A.2.3): the MCU is Hmax×Vmax
-            # blocks of the max-sampled component; component ci
-            # contributes v×h blocks per MCU in row-major block order
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            mx_n = (w + 8 * hmax - 1) // (8 * hmax)
-            my_n = (h + 8 * vmax - 1) // (8 * vmax)
-            dtype = np.uint8 if prec == 8 else np.uint16
-            planes = [
-                np.zeros((my_n * 8 * c["v"], mx_n * 8 * c["h"]), dtype=dtype)
-                for c in comps
-            ]
-            pred = [0] * len(comps)
-
-            def decode_block(comp, ci):
-                dct, act = sel[comp["id"]]
-                try:
-                    dc_tab = huff[(0, dct)]
-                    ac_tab = huff[(1, act)]
-                    q = qt[comp["tq"]]
-                except KeyError as exc:
-                    raise ValueError(
-                        f"JPEG scan references a missing DHT/DQT table {exc}"
-                    ) from exc
-                coef = [0] * 64
-                s = _huff_decode(reader, dc_tab)
-                diff = _extend(reader.bits(s), s) if s else 0
-                pred[ci] += diff
-                coef[0] = pred[ci] * q[0]
-                k = 1
-                while k < 64:
-                    rs = _huff_decode(reader, ac_tab)
-                    r, size = rs >> 4, rs & 0xF
-                    if rs == 0x00:
-                        break  # EOB
-                    if rs == 0xF0:
-                        k += 16  # ZRL
-                        continue
-                    k += r
-                    if k > 63:
-                        raise ValueError("AC run past block end")
-                    coef[k] = _extend(reader.bits(size), size) * q[k]
-                    k += 1
-                F8 = np.zeros((8, 8))
-                for k in range(64):
-                    F8[_ZIGZAG[k] // 8, _ZIGZAG[k] % 8] = coef[k]
-                # level shift 2^(P-1) and clip to [0, 2^P - 1] (§A.3.1)
-                block = A.T @ F8 @ A + float(1 << (prec - 1))
-                px = np.floor(np.abs(block) + 0.5) * np.sign(block)
-                return np.clip(px, 0, (1 << prec) - 1).astype(dtype)
-
-            mcu_done = 0
-            for myi in range(my_n):
-                for mxi in range(mx_n):
-                    # restart boundary (§B.2.1.2): every ri MCUs the
-                    # entropy stream byte-aligns (padding bits
-                    # dropped), an RSTn marker with n cycling mod 8
-                    # follows, and DC prediction resets — the device
-                    # that makes 100 TB-scale JPEG streams seekable
-                    if (
-                        restart_interval
-                        and mcu_done
-                        and mcu_done % restart_interval == 0
-                    ):
-                        reader.nbits = 0
-                        p = reader.pos
-                        while p + 1 < len(b) and b[p] == 0xFF and b[p + 1] == 0x00:
-                            p += 2  # stuffed 1-fill pad byte (B.1.1.5)
-                        while p + 1 < len(b) and b[p] == 0xFF and b[p + 1] == 0xFF:
-                            p += 1  # fill bytes before the marker
-                        if p + 1 >= len(b):
-                            # loud AND typed: truncation is malformed
-                            # input (ValueError), not an index bug
-                            # (ADVICE r07: these scans walked past the
-                            # buffer on streams cut at a boundary)
-                            raise ValueError("truncated at restart boundary")
-                        expect = 0xD0 + ((mcu_done // restart_interval - 1) % 8)
-                        if b[p] != 0xFF or b[p + 1] != expect:
-                            raise ValueError(
-                                f"expected RST{expect & 7} at restart boundary"
-                            )
-                        reader.pos = p + 2
-                        pred = [0] * len(comps)
-                    for ci, comp in enumerate(comps):
-                        for bv in range(comp["v"]):
-                            for bh_ in range(comp["h"]):
-                                py = (myi * comp["v"] + bv) * 8
-                                px_ = (mxi * comp["h"] + bh_) * 8
-                                planes[ci][py : py + 8, px_ : px_ + 8] = (
-                                    decode_block(comp, ci)
-                                )
-                    mcu_done += 1
-            out = []
-            for ci, comp in enumerate(comps):
-                # crop to the component's true dims (§A.1.1), then
-                # nearest-neighbor upsample to full resolution
-                cw = -(-w * comp["h"] // hmax)
-                chh = -(-h * comp["v"] // vmax)
-                p = planes[ci][:chh, :cw]
-                if hmax % comp["h"] == 0 and vmax % comp["v"] == 0:
-                    p = np.repeat(
-                        np.repeat(p, vmax // comp["v"], axis=0),
-                        hmax // comp["h"],
-                        axis=1,
-                    )
-                    out.append(p[:h, :w])
-                else:
-                    # round 8: NON-DIVISOR factors (e.g. 3:2) — the
-                    # generic nearest-neighbor index map src = x·Hi
-                    # // Hmax (identical to replication whenever the
-                    # ratio IS integral, so the divisor path keeps
-                    # its bit-pinned np.repeat contract)
-                    ys = (np.arange(h) * comp["v"]) // vmax
-                    xs = (np.arange(w) * comp["h"]) // hmax
-                    out.append(p[ys][:, xs])
-            return w, h, out
-        i += seglen
-    raise ValueError("no SOS segment")
-
-
-def _decode_jpeg_progressive(b: bytes):
-    """(width, height, planes) — full PROGRESSIVE (SOF2) Huffman
-    decode, round 7: spectral selection + successive approximation per
-    ITU T.81 §G.  Coefficients accumulate across scans in
-    per-component zigzag buffers — DC first/refine scans (interleaved
-    MCU walk or a single component's own block grid), AC first scans
-    with EOB-run coding, AC refinement scans with zero-history skips
-    and correction bits (two's-complement ``coef & p1`` bit tests are
-    exact for the magnitudes refinement can produce) — then ONE
-    dequantize + de-zigzag + IDCT pass reconstructs pixels.  Restart
-    intervals byte-align, verify the mod-8 RSTn cycle and reset DC
-    prediction AND the EOB run.  Output contract (planes upsampled
-    nearest-neighbor to h × w) matches _decode_jpeg_baseline, so the
-    cross-codec test can demand bit-identical planes for the same
-    coefficient field.  Factors 1..4 decode including non-divisor
-    combinations (the baseline decoder's generic index-map upsample);
-    12-bit precision and arithmetic coding raise exactly like the
-    baseline path."""
-    import struct
-
-    import numpy as np
-
-    if b[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    qt: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    comps = None
-    coefs: list = []
-    w = h = 0
-    mx_n = my_n = 0
-    restart_interval = 0
-    pred = []
-    i = 2
-    while i + 1 < len(b):
-        if b[i] != 0xFF:
-            raise ValueError("expected marker")
-        while i + 1 < len(b) and b[i + 1] == 0xFF:
-            i += 1
-        marker = b[i + 1]
-        i += 2
-        if marker == 0xD9:
-            break
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if i + 2 > len(b):
-            raise ValueError("truncated JPEG segment header")
-        (seglen,) = struct.unpack(">H", b[i : i + 2])
-        payload = b[i + 2 : i + seglen]
-        if marker == 0xDD:
-            if len(payload) < 2:
-                raise ValueError("truncated JPEG DRI payload")
-            (restart_interval,) = struct.unpack(">H", payload[:2])
-            i += seglen
-            continue
-        if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0xF
-                if pq:
-                    # round 8: Pq=1 — 16-bit big-endian quant entries
-                    # (§B.2.4.1; required whenever any value exceeds
-                    # 255, mandatory territory for 12-bit precision)
-                    if p + 129 > len(payload):
-                        raise ValueError("DQT truncated for 16-bit table")
-                    qt[tq] = list(
-                        struct.unpack(">64H", payload[p + 1 : p + 129])
-                    )
-                    p += 129
-                else:
-                    if p + 65 > len(payload):
-                        raise ValueError("DQT truncated for 8-bit table")
-                    qt[tq] = list(payload[p + 1 : p + 65])
-                    p += 65
-            i += seglen
-            continue
-        if marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0xF
-                bits = list(payload[p + 1 : p + 17])
-                if len(bits) < 16:
-                    raise ValueError("DHT truncated")
-                n = sum(bits)
-                vals = list(payload[p + 17 : p + 17 + n])
-                if len(vals) < n:
-                    raise ValueError("DHT symbol list truncated")
-                fwd = _huff_canonical(bits, vals)
-                huff[(tc, th)] = {(l, c): s for s, (c, l) in fwd.items()}
-                p += 17 + n
-            i += seglen
-            continue
-        if marker == 0xC2:
-            if len(payload) < 6:
-                raise ValueError("truncated JPEG SOF payload")
-            prec, h, w, nc = struct.unpack(">BHHB", payload[:6])
-            if prec != 8:
-                raise NotImplementedError("12-bit precision")
-            comps = []
-            for ci in range(nc):
-                cid, samp, tq = payload[6 + 3 * ci : 9 + 3 * ci]
-                sh, sv = samp >> 4, samp & 0xF
-                # round 8: full spec-legal 1..4 factor range, with the
-                # same divisor constraint as the baseline decoder
-                if not (1 <= sh <= 4 and 1 <= sv <= 4):
-                    raise ValueError("JPEG sampling factor outside 1..4")
-                comps.append({"id": cid, "h": sh, "v": sv, "tq": tq})
-            if nc == 1:
-                comps[0]["h"] = comps[0]["v"] = 1
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
+            hmax = max((c["h"] for c in comps), default=1)
+            vmax = max((c["v"] for c in comps), default=1)
             mx_n = (w + 8 * hmax - 1) // (8 * hmax)
             my_n = (h + 8 * vmax - 1) // (8 * vmax)
             for c in comps:
-                # true component dims (§A.1.1) and the NON-interleaved
-                # block grid AC scans walk; the coef buffers are padded
-                # to the interleaved grid DC scans cover
+                # true component dims (§A.1.1) and the block grid its
+                # single-component scans walk; the coefficient buffer
+                # is padded to the interleaved MCU grid
                 c["cw"] = -(-w * c["h"] // hmax)
                 c["ch"] = -(-h * c["v"] // vmax)
                 c["bw"] = -(-c["cw"] // 8)
                 c["bh"] = -(-c["ch"] // 8)
             coefs = [
-                np.zeros((my_n * c["v"], mx_n * c["h"], 64), dtype=np.int32)
+                np.zeros((my_n * c["v"], mx_n * c["h"], 64), dtype=np.int64)
                 for c in comps
             ]
             pred = [0] * nc
-            i += seglen
-            continue
-        if marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7):
-            raise ValueError("second SOF in a progressive stream")
-        if marker in (0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError("non-baseline JPEG process")
-        if marker != 0xDA:
-            i += seglen
-            continue
-
-        # ---- one scan ----
-        if comps is None:
-            raise ValueError("SOS before SOF")
-        if len(payload) < 1:
-            raise ValueError("truncated JPEG SOS payload")
-        ns = payload[0]
-        if len(payload) < 4 + 2 * ns:
-            raise ValueError("truncated JPEG SOS payload")
-        scomps = []
-        for k in range(ns):
-            cid, tabs = payload[1 + 2 * k], payload[2 + 2 * k]
-            ci = next((j for j, c in enumerate(comps) if c["id"] == cid), None)
-            if ci is None:
+            progressive = marker == 0xC2
+        elif marker == 0xDA:
+            if not payload:
+                raise ValueError("truncated JPEG SOS payload")
+            if comps is None:
+                raise ValueError("SOS before SOF")
+            ns = payload[0]
+            if progressive:
+                if len(payload) < 4 + 2 * ns:
+                    raise ValueError("truncated JPEG SOS payload")
+                ss, se, a = payload[1 + 2 * ns : 4 + 2 * ns]
+                ah, al = a >> 4, a & 0xF
+            else:
+                if ns != len(comps):
+                    # spec-legal non-interleaved layout: a sequential
+                    # file MAY split components across several SOS
+                    # segments (§B.2.3 allows ns < nf) — the documented
+                    # boundary, not a KeyError on missing selectors
+                    raise NotImplementedError(
+                        "multi-scan sequential JPEG (SOS covers a subset "
+                        "of SOF components) — libjpeg territory"
+                    )
+                if len(payload) < 1 + 2 * ns:
+                    raise ValueError("truncated JPEG SOS payload")
+                ss, se, ah, al = 0, 63, 0, 0  # the one full-band scan
+            sel = {payload[1 + 2 * k]: payload[2 + 2 * k] for k in range(ns)}
+            if progressive and not sel.keys() <= {c["id"] for c in comps}:
                 raise ValueError("JPEG scan references an unknown component id")
-            scomps.append((ci, tabs >> 4, tabs & 0xF))
-        ss, se, a = payload[1 + 2 * ns : 4 + 2 * ns]
-        if not ss <= se <= 63:
-            raise ValueError("JPEG spectral selection outside 0..63")
-        ah, al = a >> 4, a & 0xF
-        reader = _BitReader(b, i + seglen)
-        eobrun = 0
-
-        def restart_check(unit: int) -> None:
-            nonlocal eobrun
-            if not (restart_interval and unit and unit % restart_interval == 0):
-                return
-            reader.nbits = 0
-            p = reader.pos
-            while p + 1 < len(b) and b[p] == 0xFF and b[p + 1] == 0x00:
-                p += 2
-            while p + 1 < len(b) and b[p] == 0xFF and b[p + 1] == 0xFF:
-                p += 1
-            if p + 1 >= len(b):
-                raise ValueError("truncated at restart boundary")
-            expect = 0xD0 + ((unit // restart_interval - 1) % 8)
-            if b[p] != 0xFF or b[p + 1] != expect:
-                raise ValueError(f"expected RST{expect & 7} at restart boundary")
-            reader.pos = p + 2
-            for ci, _, _ in scomps:
-                pred[ci] = 0
+            # (component index, DC table id, AC table id), frame order
+            scomps = [
+                (ci, sel[c["id"]] >> 4, sel[c["id"]] & 0xF)
+                for ci, c in enumerate(comps)
+                if c["id"] in sel
+            ]
+            if not progressive and len(scomps) != ns:
+                raise ValueError("JPEG SOS component ids differ from SOF")
+            if len(sel) != ns:
+                raise ValueError("JPEG SOS names a component twice")
+            if not ss <= se <= 63:
+                raise ValueError("JPEG spectral selection outside 0..63")
+            if progressive and ss == 0 and se != 0:
+                raise ValueError("DC scan with Se != 0")
+            if ss and len(scomps) != 1:
+                raise ValueError("progressive AC scan must be single-component")
+            if not scomps:
+                raise ValueError("JPEG SOS selects no component")
+            # every table the scan reads exists before its first bit
+            for ci, dct, act in scomps:
+                if progressive:
+                    if ss == 0 and ah == 0 and (0, dct) not in huff:
+                        raise ValueError("JPEG scan references a missing DC table")
+                    if se and (1, act) not in huff:
+                        raise ValueError("JPEG scan references a missing AC table")
+                    continue
+                tq = comps[ci]["tq"]
+                for key, table in (((0, dct), huff), ((1, act), huff), (tq, qt)):
+                    if key not in table:
+                        raise ValueError(
+                            f"JPEG scan references a missing DHT/DQT table {key!r}"
+                        )
+            reader = _BitReader(b, i)
             eobrun = 0
+            lo = ss or 1  # first AC position of the band
+            run_err = f"AC run past {'band' if progressive else 'block'} end"
 
-        def dc_unit(blk, ci: int, dct: int) -> None:
-            if ah == 0:
-                if (0, dct) not in huff:
-                    raise ValueError("JPEG scan references a missing DC table")
-                s = _huff_decode(reader, huff[(0, dct)])
-                diff = _extend(reader.bits(s), s) if s else 0
-                pred[ci] += diff
+            def dc_unit(blk, ci: int, tab) -> None:
+                if ah:
+                    if reader.bit():
+                        blk[0] = int(blk[0]) | (1 << al)
+                    return
+                s = _huff_decode(reader, tab)
+                if s:
+                    pred[ci] += _extend(reader.bits(s), s)
                 blk[0] = pred[ci] << al
-            elif reader.bit():
-                blk[0] = int(blk[0]) | (1 << al)
 
-        def ac_first(blk) -> None:
-            nonlocal eobrun
-            if eobrun > 0:
-                eobrun -= 1
-                return
-            k = ss
-            while k <= se:
-                rs = _huff_decode(reader, huff.get((1, scomps[0][2])) or _missing_table())
-                r, s = rs >> 4, rs & 0xF
-                if s == 0:
-                    if r == 15:
-                        k += 16
-                        continue
-                    eobrun = (1 << r) - 1
-                    if r:
-                        eobrun += reader.bits(r)
-                    break
-                k += r
-                if k > se:
-                    raise ValueError("AC run past band end")
-                blk[k] = _extend(reader.bits(s), s) << al
-                k += 1
-
-        def ac_refine(blk) -> None:
-            nonlocal eobrun
-            p1 = 1 << al
-            m1 = -p1
-            k = ss
-            if eobrun == 0:
+            def ac_first(blk, tab) -> None:
+                nonlocal eobrun
+                if eobrun > 0:
+                    eobrun -= 1
+                    return
+                k = lo
                 while k <= se:
-                    rs = _huff_decode(reader, huff.get((1, scomps[0][2])) or _missing_table())
+                    rs = _huff_decode(reader, tab)
                     r, s = rs >> 4, rs & 0xF
                     if s == 0:
-                        if r < 15:
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += reader.bits(r)
-                            break
-                        val = 0  # ZRL: skip 16 zero-history positions
-                    else:
-                        if s != 1:
-                            raise ValueError("refinement size must be 1")
-                        val = p1 if reader.bit() else m1
+                        if r == 15:
+                            k += 16  # ZRL
+                            continue
+                        if r and not progressive:
+                            raise ValueError("EOB run in a sequential JPEG scan")
+                        eobrun = (1 << r) - 1
+                        if r:
+                            eobrun += reader.bits(r)
+                        break
+                    k += r
+                    if k > se:
+                        raise ValueError(run_err)
+                    blk[k] = _extend(reader.bits(s), s) << al
+                    k += 1
+
+            def ac_refine(blk, tab) -> None:
+                nonlocal eobrun
+                p1 = 1 << al
+                m1 = -p1
+                k = lo
+                if eobrun == 0:
+                    while k <= se:
+                        rs = _huff_decode(reader, tab)
+                        r, s = rs >> 4, rs & 0xF
+                        if s == 0:
+                            if r < 15:
+                                eobrun = 1 << r
+                                if r:
+                                    eobrun += reader.bits(r)
+                                break
+                            val = 0  # ZRL: skip 16 zero-history positions
+                        else:
+                            if s != 1:
+                                raise ValueError("refinement size must be 1")
+                            val = p1 if reader.bit() else m1
+                        while k <= se:
+                            c = int(blk[k])
+                            if c != 0:
+                                if reader.bit() and (c & p1) == 0:
+                                    blk[k] = c + (p1 if c > 0 else m1)
+                            else:
+                                if r == 0:
+                                    break
+                                r -= 1
+                            k += 1
+                        if s and k <= se:
+                            blk[k] = val
+                        k += 1
+                if eobrun > 0:
                     while k <= se:
                         c = int(blk[k])
-                        if c != 0:
-                            if reader.bit() and (c & p1) == 0:
-                                blk[k] = c + (p1 if c > 0 else m1)
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
+                        if c != 0 and reader.bit() and (c & p1) == 0:
+                            blk[k] = c + (p1 if c > 0 else m1)
                         k += 1
-                    if s and k <= se:
-                        blk[k] = val
-                    k += 1
-            if eobrun > 0:
-                while k <= se:
-                    c = int(blk[k])
-                    if c != 0 and reader.bit() and (c & p1) == 0:
-                        blk[k] = c + (p1 if c > 0 else m1)
-                    k += 1
-                eobrun -= 1
+                    eobrun -= 1
 
-        if ss == 0:
-            if se != 0:
-                raise ValueError("DC scan with Se != 0")
-            if ns > 1:
-                unit = 0
+            ac_unit = ac_refine if ah else ac_first
+            tabs = [
+                (ci, huff.get((0, dct)), huff.get((1, act))) for ci, dct, act in scomps
+            ]
+
+            def units():
+                """The scan's data units (§A.2), each a list of
+                (block, component, DC table, AC table)."""
+                if len(tabs) == 1:
+                    ci, dtab, atab = tabs[0]
+                    c = comps[ci]
+                    for row in coefs[ci][: c["bh"], : c["bw"]]:
+                        for blk in row:
+                            yield ((blk, ci, dtab, atab),)
+                    return
                 for myi in range(my_n):
                     for mxi in range(mx_n):
-                        restart_check(unit)
-                        for ci, dct, _ in scomps:
-                            c = comps[ci]
-                            for bv in range(c["v"]):
-                                for bh_ in range(c["h"]):
-                                    dc_unit(
-                                        coefs[ci][
-                                            myi * c["v"] + bv, mxi * c["h"] + bh_
-                                        ],
-                                        ci,
-                                        dct,
-                                    )
-                        unit += 1
-            else:
-                ci, dct, _ = scomps[0]
-                c = comps[ci]
-                unit = 0
-                for byi in range(c["bh"]):
-                    for bxi in range(c["bw"]):
-                        restart_check(unit)
-                        dc_unit(coefs[ci][byi, bxi], ci, dct)
-                        unit += 1
-        else:
-            if ns != 1:
-                raise ValueError("progressive AC scan must be single-component")
-            ci = scomps[0][0]
-            c = comps[ci]
-            unit = 0
-            for byi in range(c["bh"]):
-                for bxi in range(c["bw"]):
-                    restart_check(unit)
-                    if ah == 0:
-                        ac_first(coefs[ci][byi, bxi])
-                    else:
-                        ac_refine(coefs[ci][byi, bxi])
-                    unit += 1
-        i = reader.pos  # resume the marker walk after the entropy data
+                        yield [
+                            (coefs[ci][myi * comps[ci]["v"] + bv,
+                                       mxi * comps[ci]["h"] + bh_], ci, dtab, atab)
+                            for ci, dtab, atab in tabs
+                            for bv in range(comps[ci]["v"])
+                            for bh_ in range(comps[ci]["h"])
+                        ]
 
-    if comps is None:
-        raise ValueError("no SOF2 segment")
+            try:
+                for unit, blocks in enumerate(units()):
+                    if restart_interval and unit and unit % restart_interval == 0:
+                        reader.resync(unit // restart_interval - 1)
+                        for ci, _, _ in scomps:
+                            pred[ci] = 0
+                        eobrun = 0
+                    for blk, ci, dtab, atab in blocks:
+                        if ss == 0:
+                            dc_unit(blk, ci, dtab)
+                        if se:
+                            ac_unit(blk, atab)
+            except OverflowError as exc:
+                raise ValueError("JPEG coefficient outside the int64 range") from exc
+            scans += 1
+            if not progressive:
+                break  # a sequential stream is its one scan
+            i = reader.pos  # resume the marker walk after the entropy data
+    if not (progressive or scans):
+        raise ValueError("no SOS segment")
 
     # one reconstruction pass: dequantize + de-zigzag + IDCT per block
-    A = np.zeros((8, 8))
-    for u in range(8):
-        cu = (1.0 / np.sqrt(2.0)) if u == 0 else 1.0
-        for x in range(8):
-            A[u, x] = cu / 2.0 * np.cos((2 * x + 1) * u * np.pi / 16.0)
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
+    A = _idct_basis()
+    dtype = np.uint8 if prec == 8 else np.uint16
     out = []
-    for ci, comp in enumerate(comps):
-        if comp["tq"] not in qt:
+    for ci, c in enumerate(comps):
+        if c["tq"] not in qt:
             raise ValueError("JPEG component references a missing DQT table")
-        q = np.asarray(qt[comp["tq"]], dtype=np.float64)
         nby, nbx = coefs[ci].shape[:2]
-        plane = np.zeros((nby * 8, nbx * 8), dtype=np.uint8)
-        for byi in range(nby):
-            for bxi in range(nbx):
-                cvec = coefs[ci][byi, bxi].astype(np.float64) * q
-                F8 = np.zeros((8, 8))
-                for k in range(64):
-                    F8[_ZIGZAG[k] // 8, _ZIGZAG[k] % 8] = cvec[k]
-                block = A.T @ F8 @ A + 128.0
-                px = np.floor(np.abs(block) + 0.5) * np.sign(block)
-                plane[byi * 8 : byi * 8 + 8, bxi * 8 : bxi * 8 + 8] = np.clip(
-                    px, 0, 255
-                ).astype(np.uint8)
-        p = plane[: comp["ch"], : comp["cw"]]
-        if hmax % comp["h"] == 0 and vmax % comp["v"] == 0:
-            p = np.repeat(
-                np.repeat(p, vmax // comp["v"], axis=0), hmax // comp["h"], axis=1
-            )
+        F = np.zeros((nby, nbx, 64))
+        F[:, :, _ZIGZAG] = coefs[ci] * np.asarray(qt[c["tq"]], dtype=np.float64)
+        # level shift 2^(P-1) and clip to [0, 2^P - 1] (§A.3.1)
+        block = A.T @ F.reshape(nby, nbx, 8, 8) @ A + float(1 << (prec - 1))
+        px = np.floor(np.abs(block) + 0.5) * np.sign(block)
+        plane = (
+            np.clip(px, 0, (1 << prec) - 1).astype(dtype)
+            .transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
+        )
+        p = plane[: c["ch"], : c["cw"]]
+        if hmax % c["h"] == 0 and vmax % c["v"] == 0:
+            p = np.repeat(np.repeat(p, vmax // c["v"], axis=0), hmax // c["h"], axis=1)
             out.append(p[:h, :w])
         else:
-            # round 8: non-divisor factors — same generic index map as
-            # the baseline decoder, so the cross-codec bit-identity
-            # contract holds for every legal factor combination
-            ys = (np.arange(h) * comp["v"]) // vmax
-            xs = (np.arange(w) * comp["h"]) // hmax
+            ys = (np.arange(h) * c["v"]) // vmax
+            xs = (np.arange(w) * c["h"]) // hmax
             out.append(p[ys][:, xs])
     return w, h, out
 
@@ -2389,7 +2204,7 @@ def _jpeg_luma_stats(b: bytes) -> tuple[int, int]:
     (int64 accumulation holds 12-bit planes) — closed-form-checkable
     for the block-constant known-content containers
     (``_synth_jpeg_gray_bytes``, ``_synth_jpeg12_gray_bytes``)."""
-    w, h, planes = _decode_jpeg_baseline(b)
+    w, h, planes = _decode_jpeg(b)
     return int(planes[0].astype("int64").sum()), w * h
 
 
@@ -2419,14 +2234,11 @@ def _synth_jpeg12_gray_bytes(w: int, h: int, mid: int) -> bytes:
     dc_tab = _huff_canonical(_ENC_DC12_BITS, _ENC_DC12_VALS)
     ac_tab = _huff_canonical(_ENC_AC_BITS, _ENC_AC_VALS)
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    dqt = seg(0xDB, b"\x10" + struct.pack(">64H", q0, *([1] * 63)))
-    sof = seg(0xC1, struct.pack(">BHHB", 12, h, w, 1) + bytes([1, 0x11, 0]))
-    dht_dc = seg(0xC4, b"\x00" + bytes(_ENC_DC12_BITS) + bytes(_ENC_DC12_VALS))
-    dht_ac = seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    sos = seg(0xDA, bytes([1, 1, 0x00]) + bytes([0, 63, 0]))
+    dqt = _jpeg_seg(0xDB, b"\x10" + struct.pack(">64H", q0, *([1] * 63)))
+    sof = _jpeg_seg(0xC1, struct.pack(">BHHB", 12, h, w, 1) + bytes([1, 0x11, 0]))
+    dht_dc = _jpeg_seg(0xC4, b"\x00" + bytes(_ENC_DC12_BITS) + bytes(_ENC_DC12_VALS))
+    dht_ac = _jpeg_seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
+    sos = _jpeg_seg(0xDA, bytes([1, 1, 0x00]) + bytes([0, 63, 0]))
 
     bw = _BitWriter()
     prev_dc = 0
@@ -2473,23 +2285,20 @@ def _synth_jpeg_420_bytes(
     dc_tab = _huff_canonical(_ENC_DC_BITS, _ENC_DC_VALS)
     ac_tab = _huff_canonical(_ENC_AC_BITS, _ENC_AC_VALS)
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    dqt = seg(0xDB, b"\x00" + bytes([1] * 64))
-    sof = seg(
+    dqt = _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))
+    sof = _jpeg_seg(
         0xC0,
         struct.pack(">BHHB", 8, h, w, 3)
         + bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]),
     )
-    dht_dc = seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    dht_ac = seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
+    dht_dc = _jpeg_seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
+    dht_ac = _jpeg_seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
     dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
+        _jpeg_seg(0xDD, struct.pack(">H", restart_interval))
         if restart_interval
         else b""
     )
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00]) + bytes([0, 63, 0]))
+    sos = _jpeg_seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00]) + bytes([0, 63, 0]))
 
     bw = _BitWriter()
     pred = [0, 0, 0]
@@ -2551,11 +2360,8 @@ def _synth_jpeg_sampled_bytes(w: int, h: int, mid: int, factors) -> bytes:
     dc_tab = _huff_canonical(_ENC_DC_BITS, _ENC_DC_VALS)
     ac_tab = _huff_canonical(_ENC_AC_BITS, _ENC_AC_VALS)
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    dqt = seg(0xDB, b"\x00" + bytes([1] * 64))
-    sof = seg(
+    dqt = _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))
+    sof = _jpeg_seg(
         0xC0,
         struct.pack(">BHHB", 8, h, w, 3)
         + bytes(
@@ -2564,9 +2370,9 @@ def _synth_jpeg_sampled_bytes(w: int, h: int, mid: int, factors) -> bytes:
             for byte in (ci + 1, (fh << 4) | fv, 0)
         ),
     )
-    dht_dc = seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    dht_ac = seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00]) + bytes([0, 63, 0]))
+    dht_dc = _jpeg_seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
+    dht_ac = _jpeg_seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
+    sos = _jpeg_seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00]) + bytes([0, 63, 0]))
 
     bw = _BitWriter()
     pred = [0, 0, 0]
@@ -2650,25 +2456,24 @@ def _synth_coef_field(w: int, h: int, mid: int, color: bool):
 def _jpeg_headers_from_field(w, h, spec, sof_marker, restart_interval):
     import struct
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    dqt = seg(0xDB, b"\x00" + bytes([1] * 64))
-    sof = seg(
+    dqt = _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))
+    sof = _jpeg_seg(
         sof_marker,
         struct.pack(">BHHB", 8, h, w, len(spec))
         + b"".join(
             bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]]) for c in spec
         ),
     )
-    dht_dc = seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    dht_ac = seg(
+    dht_dc = _jpeg_seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
+    dht_ac = _jpeg_seg(
         0xC4, b"\x10" + bytes(_ENC_AC_FULL_BITS) + bytes(_ENC_AC_FULL_VALS)
     )
     dri = (
-        seg(0xDD, struct.pack(">H", restart_interval)) if restart_interval else b""
+        _jpeg_seg(0xDD, struct.pack(">H", restart_interval))
+        if restart_interval
+        else b""
     )
-    return seg, dqt, sof, dht_dc, dht_ac, dri
+    return dqt, sof, dht_dc, dht_ac, dri
 
 
 def _synth_jpeg_baseline_from_field(
@@ -2680,12 +2485,12 @@ def _synth_jpeg_baseline_from_field(
     raster block walk for grayscale; arbitrary run/size AC coding with
     ZRL via the full 256-symbol table."""
     spec, fields = _synth_coef_field(w, h, mid, color)
-    seg, dqt, sof, dht_dc, dht_ac, dri = _jpeg_headers_from_field(
+    dqt, sof, dht_dc, dht_ac, dri = _jpeg_headers_from_field(
         w, h, spec, 0xC0, restart_interval
     )
     dc_tab = _huff_canonical(_ENC_DC_BITS, _ENC_DC_VALS)
     ac_tab = _huff_canonical(_ENC_AC_FULL_BITS, _ENC_AC_FULL_VALS)
-    sos = seg(
+    sos = _jpeg_seg(
         0xDA,
         bytes([len(spec)])
         + b"".join(bytes([c["id"], 0x00]) for c in spec)
@@ -2779,14 +2584,14 @@ def _synth_jpeg_progressive_bytes(
     if dc_only:
         for f in fields:
             f[:, :, 1:] = 0
-    seg, dqt, sof, dht_dc, dht_ac, dri = _jpeg_headers_from_field(
+    dqt, sof, dht_dc, dht_ac, dri = _jpeg_headers_from_field(
         w, h, spec, 0xC2, restart_interval
     )
     dc_tab = _huff_canonical(_ENC_DC_BITS, _ENC_DC_VALS)
     ac_tab = _huff_canonical(_ENC_AC_FULL_BITS, _ENC_AC_FULL_VALS)
 
     def sos_hdr(comp_ids, ss, se, ah, al):
-        return seg(
+        return _jpeg_seg(
             0xDA,
             bytes([len(comp_ids)])
             + b"".join(bytes([cid, 0x00]) for cid in comp_ids)
@@ -3022,7 +2827,7 @@ def _jpeg_ycc_stats(b: bytes) -> tuple[int, int, int]:
     upsample.  The two sums gate separately: a correct Y path with a
     broken upsampler fails on chroma; a correct upsampler over
     misplaced MCU blocks fails on both."""
-    w, h, planes = _decode_jpeg_baseline(b)
+    w, h, planes = _decode_jpeg(b)
     y, cb, cr = (int(p.astype("int64").sum()) for p in planes[:3])
     return y, cb + cr, w * h
 
@@ -3611,74 +3416,6 @@ def _flac_utf8_code(n: int) -> bytes:
     return bytes(out)
 
 
-class _FlacBitWriter:
-    """MSB-first bit accumulator (no byte stuffing — FLAC is not
-    marker-framed)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def w(self, value: int, bits: int) -> None:
-        value &= (1 << bits) - 1
-        self.acc = (self.acc << bits) | value
-        self.nbits += bits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def unary(self, q: int) -> None:
-        while q >= 32:
-            self.w(0, 32)
-            q -= 32
-        self.w(1, q + 1)  # q zero bits then a one bit
-
-    def align(self) -> None:
-        if self.nbits:
-            self.w(0, 8 - self.nbits)
-
-
-class _FlacBitReader:
-    """MSB-first bit reader over the frame region."""
-
-    def __init__(self, b: bytes, pos: int) -> None:
-        self.b = b
-        self.bit = pos * 8
-
-    def r(self, bits: int) -> int:
-        if self.bit + bits > 8 * len(self.b):
-            raise ValueError("truncated FLAC stream")
-        v = 0
-        for _ in range(bits):
-            v = (v << 1) | ((self.b[self.bit >> 3] >> (7 - (self.bit & 7))) & 1)
-            self.bit += 1
-        return v
-
-    def rs(self, bits: int) -> int:
-        v = self.r(bits)
-        return v - (1 << bits) if v >= (1 << (bits - 1)) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.r(1) == 0:
-            q += 1
-            if q > 1 << 20:
-                raise ValueError("runaway FLAC unary code")
-        return q
-
-    def align(self) -> None:
-        self.bit = (self.bit + 7) & ~7
-
-    def bytepos(self) -> int:
-        return self.bit >> 3
-
-
-def _missing_table():
-    raise ValueError("JPEG scan references a missing AC table")
-
-
 def _fixed_residual(s: list[int], order: int) -> list[int]:
     e = list(s)
     for _ in range(order):
@@ -3694,12 +3431,12 @@ def _rice_unfold(u: int) -> int:
     return (u >> 1) if (u & 1) == 0 else -((u + 1) >> 1)
 
 
-def _write_residual(bw: "_FlacBitWriter", resid: list[int], n: int,
+def _write_residual(bw: "_BitWriter", resid: list[int], n: int,
                     order: int, part_order: int) -> None:
     """Rice-method-0 residual block: 4-bit params per partition,
     param 15 escapes to raw 5-bit-sized samples."""
-    bw.w(0, 2)  # coding method 0: 4-bit rice
-    bw.w(part_order, 4)
+    bw.write(0, 2)  # coding method 0: 4-bit rice
+    bw.write(part_order, 4)
     nparts = 1 << part_order
     base = n >> part_order
     idx = 0
@@ -3712,25 +3449,25 @@ def _write_residual(bw: "_FlacBitWriter", resid: list[int], n: int,
         if param >= 15:
             # raw escape: 5-bit size then fixed-width two's complement
             sz = max((max(abs(r) for r in part).bit_length() + 1), 2) if part else 2
-            bw.w(15, 4)
-            bw.w(sz, 5)
+            bw.write(15, 4)
+            bw.write(sz, 5)
             for r in part:
-                bw.w(r, sz)
+                bw.write(r, sz)
             continue
-        bw.w(param, 4)
+        bw.write(param, 4)
         for r in part:
             u = _rice_fold(r)
             bw.unary(u >> param)
-            bw.w(u & ((1 << param) - 1), param)
+            bw.write(u & ((1 << param) - 1), param)
 
 
-def _read_residual(br: "_FlacBitReader", n: int, order: int) -> list[int]:
-    method = br.r(2)
+def _read_residual(br: "_BitReader", n: int, order: int) -> list[int]:
+    method = br.bits(2)
     if method > 1:
         raise ValueError("reserved FLAC residual coding method")
     pbits = 4 if method == 0 else 5
     esc = (1 << pbits) - 1
-    part_order = br.r(4)
+    part_order = br.bits(4)
     nparts = 1 << part_order
     if n % nparts:
         raise ValueError("FLAC partition order does not divide block size")
@@ -3740,38 +3477,38 @@ def _read_residual(br: "_FlacBitReader", n: int, order: int) -> list[int]:
         cnt = (base - order) if p == 0 else base
         if cnt < 0:
             raise ValueError("FLAC first partition smaller than predictor order")
-        param = br.r(pbits)
+        param = br.bits(pbits)
         if param == esc:
-            sz = br.r(5)
-            out += [br.rs(sz) if sz else 0 for _ in range(cnt)]
+            sz = br.bits(5)
+            out += [br.signed(sz) if sz else 0 for _ in range(cnt)]
             continue
         for _ in range(cnt):
             q = br.unary()
-            u = (q << param) | (br.r(param) if param else 0)
+            u = (q << param) | (br.bits(param) if param else 0)
             out.append(_rice_unfold(u))
     return out
 
 
-def _write_subframe(bw: "_FlacBitWriter", s: list[int], bps: int,
+def _write_subframe(bw: "_BitWriter", s: list[int], bps: int,
                     kind: str, part_order: int = 0) -> None:
-    bw.w(0, 1)  # mandatory zero pad bit
+    bw.write(0, 1)  # mandatory zero pad bit
     if kind == "constant":
-        bw.w(0b000000, 6)
-        bw.w(0, 1)  # no wasted bits
-        bw.w(s[0], bps)
+        bw.write(0b000000, 6)
+        bw.write(0, 1)  # no wasted bits
+        bw.write(s[0], bps)
         return
     if kind == "verbatim":
-        bw.w(0b000001, 6)
-        bw.w(0, 1)
+        bw.write(0b000001, 6)
+        bw.write(0, 1)
         for v in s:
-            bw.w(v, bps)
+            bw.write(v, bps)
         return
     if kind.startswith("fixed"):
         order = int(kind[-1])
-        bw.w(0b001000 | order, 6)
-        bw.w(0, 1)
+        bw.write(0b001000 | order, 6)
+        bw.write(0, 1)
         for v in s[:order]:
-            bw.w(v, bps)
+            bw.write(v, bps)
         _write_residual(bw, _fixed_residual(s, order), len(s), order, part_order)
         return
     if kind == "lpc2":
@@ -3779,14 +3516,14 @@ def _write_subframe(bw: "_FlacBitWriter", s: list[int], bps: int,
         # coefficient set is a VALID lpc subframe — the encoder need
         # not be optimal for the decode to be exact)
         order, shift, prec, coefs = 2, 1, 4, [3, -1]
-        bw.w(0b100000 | (order - 1), 6)
-        bw.w(0, 1)
+        bw.write(0b100000 | (order - 1), 6)
+        bw.write(0, 1)
         for v in s[:order]:
-            bw.w(v, bps)
-        bw.w(prec - 1, 4)
-        bw.w(shift, 5)
+            bw.write(v, bps)
+        bw.write(prec - 1, 4)
+        bw.write(shift, 5)
         for c in coefs:
-            bw.w(c, prec)
+            bw.write(c, prec)
         resid = [
             s[i] - ((coefs[0] * s[i - 1] + coefs[1] * s[i - 2]) >> shift)
             for i in range(order, len(s))
@@ -3824,15 +3561,15 @@ def _synth_flac_bytes(mid: int) -> bytes:
 
     # STREAMINFO: 16+16 block sizes, 24+24 frame sizes, 20-bit rate,
     # 3-bit channels-1, 5-bit bps-1, 36-bit total samples, 16-byte md5
-    si = _FlacBitWriter()
-    si.w(block, 16)
-    si.w(block, 16)
-    si.w(0, 24)
-    si.w(0, 24)
-    si.w(8000, 20)
-    si.w(ch - 1, 3)
-    si.w(bps - 1, 5)
-    si.w(n, 36)
+    si = _BitWriter(stuffed=False)
+    si.write(block, 16)
+    si.write(block, 16)
+    si.write(0, 24)
+    si.write(0, 24)
+    si.write(8000, 20)
+    si.write(ch - 1, 3)
+    si.write(bps - 1, 5)
+    si.write(n, 36)
     info = bytes(si.out) + bytes(16)
     out = bytearray(b"fLaC")
     out += bytes([0x80, 0, 0, len(info)]) + info  # last-block STREAMINFO
@@ -3841,27 +3578,27 @@ def _synth_flac_bytes(mid: int) -> bytes:
     pos = 0
     while pos < n:
         bs = min(block, n - pos)
-        bw = _FlacBitWriter()
-        bw.w(0b11111111111110, 14)
-        bw.w(0, 1)   # reserved
-        bw.w(0, 1)   # fixed blocksize strategy
-        bw.w(0b0110, 4)  # 8-bit blocksize-1 follows the header
-        bw.w(0b0000, 4)  # sample rate: from STREAMINFO
+        bw = _BitWriter(stuffed=False)
+        bw.write(0b11111111111110, 14)
+        bw.write(0, 1)   # reserved
+        bw.write(0, 1)   # fixed blocksize strategy
+        bw.write(0b0110, 4)  # 8-bit blocksize-1 follows the header
+        bw.write(0b0000, 4)  # sample rate: from STREAMINFO
         if ch == 1:
-            bw.w(0b0000, 4)
+            bw.write(0b0000, 4)
         elif decor == 0:
-            bw.w(0b0001, 4)  # independent stereo
+            bw.write(0b0001, 4)  # independent stereo
         elif decor == 1:
-            bw.w(0b1000, 4)  # left/side
+            bw.write(0b1000, 4)  # left/side
         else:
-            bw.w(0b1010, 4)  # mid/side
-        bw.w(0b100, 3)  # 16-bit samples
-        bw.w(0, 1)      # reserved
+            bw.write(0b1010, 4)  # mid/side
+        bw.write(0b100, 3)  # 16-bit samples
+        bw.write(0, 1)      # reserved
         for byte in _flac_utf8_code(frame_idx):
-            bw.w(byte, 8)
-        bw.w(bs - 1, 8)
+            bw.write(byte, 8)
+        bw.write(bs - 1, 8)
         hdr = bytes(bw.out)
-        bw.w(_crc8_flac(hdr), 8)
+        bw.write(_crc8_flac(hdr), 8)
 
         sub = [c[pos : pos + bs] for c in chans]
         # an order-2 predictor needs at least its warmup in the block;
@@ -3883,7 +3620,7 @@ def _synth_flac_bytes(mid: int) -> bytes:
             _write_subframe(bw, s, pbps, fkind, part_order)
         bw.align()
         frame = bytes(bw.out)
-        bw.w(_crc16_flac(frame), 16)
+        bw.write(_crc16_flac(frame), 16)
         out += bytes(bw.out)
         pos += bs
         frame_idx += 1
@@ -3913,16 +3650,16 @@ def _parse_flac(b: bytes):
         blen = int.from_bytes(b[pos + 1 : pos + 4], "big")
         body = b[pos + 4 : pos + 4 + blen]
         if btype == 0:
-            br = _FlacBitReader(body, 0)
-            block = br.r(16)
-            if br.r(16) != block:
+            br = _BitReader(body, 0, stuffed=False)
+            block = br.bits(16)
+            if br.bits(16) != block:
                 raise NotImplementedError("variable-blocksize FLAC")
-            br.r(24)
-            br.r(24)
-            sr = br.r(20)
-            ch = br.r(3) + 1
-            bps = br.r(5) + 1
-            total = br.r(36)
+            br.bits(24)
+            br.bits(24)
+            sr = br.bits(20)
+            ch = br.bits(3) + 1
+            bps = br.bits(5) + 1
+            total = br.bits(36)
         pos += 4 + blen
         if last:
             break
@@ -3932,19 +3669,19 @@ def _parse_flac(b: bytes):
     frame_idx = 0
     while pos < len(b):
         frame_start = pos
-        br = _FlacBitReader(b, pos)
-        if br.r(14) != 0b11111111111110:
+        br = _BitReader(b, pos, stuffed=False)
+        if br.bits(14) != 0b11111111111110:
             raise ValueError("bad FLAC frame sync")
-        br.r(1)
-        if br.r(1):
+        br.bits(1)
+        if br.bits(1):
             raise NotImplementedError("variable-blocksize FLAC frame")
-        bs_code = br.r(4)
-        sr_code = br.r(4)
-        ca = br.r(4)
-        ss_code = br.r(3)
-        br.r(1)
+        bs_code = br.bits(4)
+        sr_code = br.bits(4)
+        ca = br.bits(4)
+        ss_code = br.bits(3)
+        br.bits(1)
         # UTF-8 frame number
-        lead = br.r(8)
+        lead = br.bits(8)
         if lead < 0x80:
             fnum = lead
         else:
@@ -3955,16 +3692,16 @@ def _parse_flac(b: bytes):
                 m <<= 1
             fnum = lead & (0x7F >> nb)
             for _ in range(nb - 1):
-                cont = br.r(8)
+                cont = br.bits(8)
                 if cont >> 6 != 0b10:
                     raise ValueError("bad FLAC UTF-8 frame number")
                 fnum = (fnum << 6) | (cont & 0x3F)
         if fnum != frame_idx:
             raise ValueError("FLAC frame number out of sequence")
         if bs_code == 0b0110:
-            bs = br.r(8) + 1
+            bs = br.bits(8) + 1
         elif bs_code == 0b0111:
-            bs = br.r(16) + 1
+            bs = br.bits(16) + 1
         elif bs_code == 0b0001:
             bs = 192
         elif 0b0010 <= bs_code <= 0b0101:
@@ -3976,11 +3713,11 @@ def _parse_flac(b: bytes):
         if sr_code == 0b0000:
             pass  # from STREAMINFO
         elif sr_code in (0b1100, 0b1101, 0b1110):
-            br.r(8 if sr_code == 0b1100 else 16)
+            br.bits(8 if sr_code == 0b1100 else 16)
         elif sr_code == 0b1111:
             raise ValueError("invalid FLAC sample rate code")
         hdr_bytes = b[frame_start : br.bytepos()]
-        if br.r(8) != _crc8_flac(hdr_bytes):
+        if br.bits(8) != _crc8_flac(hdr_bytes):
             raise ValueError("FLAC frame header CRC-8 mismatch")
         _SS = {0b000: None, 0b001: 8, 0b010: 12, 0b100: 16, 0b101: 20, 0b110: 24}
         if ss_code not in _SS:
@@ -4003,22 +3740,22 @@ def _parse_flac(b: bytes):
         planes = []
         for sc in range(nsub):
             pbps = fbps + (1 if modes[sc] == "side" else 0)
-            if br.r(1):
+            if br.bits(1):
                 raise ValueError("FLAC subframe pad bit set")
-            st = br.r(6)
+            st = br.bits(6)
             wasted = 0
-            if br.r(1):
+            if br.bits(1):
                 wasted = 1
-                while br.r(1) == 0:
+                while br.bits(1) == 0:
                     wasted += 1
             ebps = pbps - wasted
             if st == 0b000000:
-                s = [br.rs(ebps)] * bs
+                s = [br.signed(ebps)] * bs
             elif st == 0b000001:
-                s = [br.rs(ebps) for _ in range(bs)]
+                s = [br.signed(ebps) for _ in range(bs)]
             elif 0b001000 <= st <= 0b001100:
                 order = st & 0b111
-                warm = [br.rs(ebps) for _ in range(order)]
+                warm = [br.signed(ebps) for _ in range(order)]
                 resid = _read_residual(br, bs, order)
                 s = list(warm)
                 for e in resid:
@@ -4034,14 +3771,14 @@ def _parse_flac(b: bytes):
                         s.append(e + 4 * s[-1] - 6 * s[-2] + 4 * s[-3] - s[-4])
             elif st >= 0b100000:
                 order = (st & 0b011111) + 1
-                warm = [br.rs(ebps) for _ in range(order)]
-                prec = br.r(4) + 1
+                warm = [br.signed(ebps) for _ in range(order)]
+                prec = br.bits(4) + 1
                 if prec == 16:
                     raise ValueError("invalid FLAC LPC precision code")
-                shift = br.rs(5)
+                shift = br.signed(5)
                 if shift < 0:
                     raise ValueError("negative FLAC LPC shift")
-                coefs = [br.rs(prec) for _ in range(order)]
+                coefs = [br.signed(prec) for _ in range(order)]
                 resid = _read_residual(br, bs, order)
                 s = list(warm)
                 for e in resid:
@@ -4052,7 +3789,7 @@ def _parse_flac(b: bytes):
             planes.append([v << wasted for v in s])
         br.align()
         body_bytes = b[frame_start : br.bytepos()]
-        if br.r(16) != _crc16_flac(body_bytes):
+        if br.bits(16) != _crc16_flac(body_bytes):
             raise ValueError("FLAC frame CRC-16 mismatch")
         pos = br.bytepos()
         if modes == ["left", "side"]:

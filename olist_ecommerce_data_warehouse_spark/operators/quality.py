@@ -20,7 +20,7 @@ thresholding — the parts that carry the scale risk — are the real
 production shape and are oracle-gated.
 
 Exact cross-engine parity by construction: feature extraction is the
-shared rolling-hash machinery (``token_hashes_from_tokens``/``gram2_expr``
+shared rolling-hash machinery (``token_hashes_from_tokens``/``gramk_expr``
 and their SQL twins), the weight sum is exact int64, and the score is
 ONE IEEE division of that sum — no exp/log in the gated output (a
 sigmoid is monotone, so thresholding the mean-pooled logit is
@@ -36,8 +36,8 @@ from pyspark.sql import functions as F
 from olist_ecommerce_data_warehouse_spark.functions.text import toks_sql
 from olist_ecommerce_data_warehouse_spark.operators.textdedup import (
     GRAM_M,
-    _combine,
-    _gram2_sql,
+    _gramk_sql,
+    gramk_expr,
     hex2int_sql,
     mix32,
     mix32_sql_expr,
@@ -69,15 +69,7 @@ def quality_features(toks: Column) -> Column:
     (``tokens("text")`` or a persisted ``toks`` column): token unigram
     hashes ++ 2-gram rolling hashes, all folded into [0, 2^32)."""
     th = token_hashes_from_tokens(toks)
-    n = F.size(th)
-    bi = F.transform(
-        F.zip_with(
-            F.slice(th, 1, F.greatest(n - 1, F.lit(0))),
-            F.slice(th, 2, F.greatest(n - 1, F.lit(0))),
-            _combine,
-        ),
-        lambda g: g % F.lit(GRAM_M),
-    )
+    bi = F.transform(gramk_expr(th, 2), lambda g: g % F.lit(GRAM_M))
     return F.concat(th, bi)
 
 
@@ -109,7 +101,7 @@ def hashed_feature_counts(
 def quality_features_sql(text_col: str = "text") -> str:
     """SQL twin of :func:`quality_features` (expression form)."""
     th = f"list_transform({toks_sql(text_col)}, t -> {hex2int_sql('md5(t)')})"
-    bi = f"list_transform({_gram2_sql(th)}, g -> g % {GRAM_M})"
+    bi = f"list_transform({_gramk_sql(th, 2)}, g -> g % {GRAM_M})"
     return f"list_concat({th}, {bi})"
 
 

@@ -105,30 +105,10 @@ SPAN_BOILER = (
 _TH_SQL = f"list_transform({TOKS_SQL}, t -> {hex2int_sql('md5(t)')})"
 
 
-def _gram2_sql(th: str) -> str:
-    """2-gram rolling hashes from a token-hash list (SQL twin of the
-    Spark zip_with below).  Slice bounds use greatest() so short lists
-    yield EMPTY (DuckDB negative slice ends would otherwise wrap)."""
-    return (
-        f"list_transform(list_zip({th}[1:greatest(len({th})-1, 0)], {th}[2:len({th})]), "
-        f"p -> ((p[1] * {GRAM_P}) % {GRAM_M} + p[2]))"
-    )
-
-
-def _gram3_sql(th: str) -> str:
-    return (
-        f"list_transform(list_zip("
-        f"list_transform(list_zip({th}[1:greatest(len({th})-2, 0)], "
-        f"{th}[2:greatest(len({th})-1, 0)]), "
-        f"p -> ((p[1] * {GRAM_P}) % {GRAM_M} + p[2]) % {GRAM_M}), "
-        f"{th}[3:len({th})]), "
-        f"p -> ((p[1] * {GRAM_P}) % {GRAM_M} + p[2]))"
-    )
-
-
-# ---- Spark twins of the gram-hash expressions above.  These are the
-# PRODUCTION expressions (text_repetition builds on them) AND what the
-# cross-engine fuzz test imports — one definition per side, so neither
+# ---- Rolling k-gram hashes, one function per engine: ``gramk_expr``
+# is the PRODUCTION Spark expression (text_repetition and the quality
+# features build on it), ``_gramk_sql`` its DuckDB twin the oracles and
+# the cross-engine fuzz test use — one definition per side, so neither
 # twin can drift against the other unobserved.
 
 def token_hashes_expr(col: Column | str = "text"):
@@ -148,37 +128,12 @@ def _combine(a, b):
     return (a * GRAM_P) % GRAM_M + b
 
 
-def gram2_expr(th_col: str = "th"):
-    """2-gram rolling hashes from a token-hash array column (Spark twin
-    of ``_gram2_sql``)."""
-    n_th = F.size(th_col)
-    return F.zip_with(
-        F.slice(th_col, 1, F.greatest(n_th - 1, F.lit(0))),
-        F.slice(th_col, 2, F.greatest(n_th - 1, F.lit(0))),
-        _combine,
-    )
-
-
-def gram3_expr(th_col: str = "th"):
-    """3-gram rolling hashes (Spark twin of ``_gram3_sql``)."""
-    n_th = F.size(th_col)
-    return F.zip_with(
-        F.zip_with(
-            F.slice(th_col, 1, F.greatest(n_th - 2, F.lit(0))),
-            F.slice(th_col, 2, F.greatest(n_th - 2, F.lit(0))),
-            lambda a, b: _combine(a, b) % GRAM_M,
-        ),
-        F.slice(th_col, 3, F.greatest(n_th - 2, F.lit(0))),
-        _combine,
-    )
-
-
 def gramk_expr(th_col, k: int):
-    """k-window rolling hashes for ANY k ≥ 2 — the generalization of
-    ``gram2_expr``/``gram3_expr`` (identical arithmetic at k=2,3):
+    """k-window rolling hashes (k ≥ 2) of a token-hash array column:
     k−1 chained ``zip_with`` folds over shifted slices, intermediate
     steps mod-folded to stay in int64, all codegen'd JVM expressions
-    (no interpreted per-window lambdas, no gram strings)."""
+    (no interpreted per-window lambdas, no gram strings).  Slice
+    bounds use greatest() so short arrays yield EMPTY."""
     if k < 2:
         raise ValueError("gramk_expr: k must be >= 2")
     n_th = F.size(th_col)
@@ -553,11 +508,12 @@ def simhash_table(
 ) -> DataFrame:
     """(doc_id, simhash): SimHash signatures via explode + hash-agg.
 
-    Same math as ``simhash64`` but shaped for throughput: tokens
+    Per-token 32-bit hash (portable md5-derived), signed bit votes,
+    sign → bit, assembled into a BIGINT — shaped for throughput: tokens
     explode to rows, the per-bit signed votes are ``bits`` conditional
     SUM aggregates (all whole-stage-codegen'd, map-side partial agg),
-    and the signature assembles in one final projection.  The
-    column-expression variant walks Catalyst higher-order lambdas,
+    and the signature assembles in one final projection.  A
+    column-expression formulation walks Catalyst higher-order lambdas,
     which are evaluated *interpreted* per element — ~10× slower on
     wide corpora."""
     tok = docs.select(F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("token"))
@@ -573,38 +529,3 @@ def simhash_table(
         start=F.lit(0).cast("bigint"),
     )
     return tok.groupBy("doc_id").agg(*votes).select("doc_id", sig.alias("simhash"))
-
-
-def simhash64(col: Column | str, bits: int = 32) -> Column:
-    """SimHash over the token multiset: per-token 32-bit hash
-    (portable md5-derived), signed bit votes, sign → bit, assembled
-    into a BIGINT.  Pure array expressions — per-doc, no shuffle.
-
-    Single-pass formulation: the token-hash array is evaluated once
-    per row and ALL bit counters accumulate together in one
-    ``aggregate`` with an array<bigint> accumulator (a per-bit
-    aggregate would re-evaluate the hash array ``bits`` times — at
-    32 bits that is a ~30× blowup of the row expression)."""
-    toks = tokens(col)
-    hashes = F.transform(toks, lambda t: hex_to_long(F.substring(F.md5(t), 1, 8)))
-    pows = F.array(*[F.lit(2**j).cast("bigint") for j in range(bits)])
-    zeros = F.array_repeat(F.lit(0).cast("bigint"), bits)
-    # votes[j] = sum over tokens of (bit_j(hash) ? +1 : -1)
-    votes = F.aggregate(
-        hashes,
-        zeros,
-        lambda acc, h: F.zip_with(
-            acc,
-            pows,
-            lambda a, p: a
-            + F.when(h.bitwiseAND(p) != 0, F.lit(1)).otherwise(F.lit(-1)).cast("bigint"),
-        ),
-    )
-    # signature = sum over j of (votes[j] > 0 ? 2^j : 0)
-    return F.aggregate(
-        F.zip_with(
-            votes, pows, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("bigint"))
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from olist_ecommerce_data_warehouse_spark.functions.text import tokens
+from olist_ecommerce_data_warehouse_spark.functions.text import token_count, tokens
 from olist_ecommerce_data_warehouse_spark.operators.graph import connected_components
 from olist_ecommerce_data_warehouse_spark.operators.quality import quality_scored
 from olist_ecommerce_data_warehouse_spark.operators.sampling import sample_by_weight
@@ -165,7 +165,7 @@ class CorpusPipeline:
         """Token bounds + classifier, with a reject_reason column (NULL
         = keep) — shared by the full load and incremental drops."""
         toks = docs.select(
-            "*", F.size(token_hashes_expr("text")).alias("n_tokens")
+            "*", token_count("text").alias("n_tokens")
         )
         scored = toks.join(quality_scored(docs, tokens("text")), "doc_id")
         reason = (
@@ -288,7 +288,7 @@ class CorpusPipeline:
                 self.read("bronze", "documents").select(
                     "source",
                     "lang",
-                    F.size(token_hashes_expr("text")).alias("n_tokens"),
+                    token_count("text").alias("n_tokens"),
                 ),
             ),
             ("silver/filtered", self.read("silver", "filtered")),
@@ -472,7 +472,7 @@ class CorpusPipeline:
             # replica-unique packing id (epoch in the high bits)
             (F.col("doc_id") + F.col("epoch") * 10_000_000).alias("doc_id"),
             "lang",
-            F.size(token_hashes_expr("text")).alias("n_tokens"),
+            token_count("text").alias("n_tokens"),
         )
         packed = greedy_pack_batch(sized, budget=self.seq_budget)
         n_packed = self.audit.write_table(packed, self.base, "gold", "packed")

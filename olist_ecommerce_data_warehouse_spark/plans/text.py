@@ -440,11 +440,7 @@ from olist_ecommerce_data_warehouse_spark.operators.textdedup import (  # noqa: 
     SPAN_BOILER,
     SPAN_K,
     _TH_SQL,
-    _gram2_sql,
-    _gram3_sql,
     _gramk_sql,
-    gram2_expr,
-    gram3_expr,
     gramk_expr,
     token_hashes_expr,
 )
@@ -454,9 +450,9 @@ from olist_ecommerce_data_warehouse_spark.operators.textdedup import (  # noqa: 
     oracle=f"""
     WITH th AS (SELECT doc_id, {_TH_SQL} AS th FROM documents),
     g AS (
-        SELECT doc_id, 2 AS n, unnest({_gram2_sql("th")}) AS gh FROM th
+        SELECT doc_id, 2 AS n, unnest({_gramk_sql("th", 2)}) AS gh FROM th
         UNION ALL
-        SELECT doc_id, 3 AS n, unnest({_gram3_sql("th")}) AS gh FROM th
+        SELECT doc_id, 3 AS n, unnest({_gramk_sql("th", 3)}) AS gh FROM th
     ),
     counts AS (
         SELECT doc_id, n, gh, COUNT(*) AS c
@@ -555,9 +551,9 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
     dt = d.select("doc_id", token_hashes_expr().alias("th"))
     g = dt.select(
-        "doc_id", F.lit(2).alias("n"), F.explode(gram2_expr("th")).alias("gh")
+        "doc_id", F.lit(2).alias("n"), F.explode(gramk_expr("th", 2)).alias("gh")
     ).unionByName(
-        dt.select("doc_id", F.lit(3).alias("n"), F.explode(gram3_expr("th")).alias("gh"))
+        dt.select("doc_id", F.lit(3).alias("n"), F.explode(gramk_expr("th", 3)).alias("gh"))
     )
     counts = g.groupBy("doc_id", "n", "gh").agg(F.count(F.lit(1)).alias("c"))
     per_doc = counts.groupBy("doc_id", "n").agg(

@@ -32,7 +32,8 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("olist_spark_tests", cpus=8)
+    # width from $SPARK_GRAFT_CPUS (else all local cores), as the bench runs
+    s = get_spark("olist_spark_tests")
     yield s
 
 

@@ -602,14 +602,14 @@ def test_jpeg_baseline_decode_roundtrip():
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
         _ZIGZAG,
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _synth_jpeg_gray_bytes,
     )
 
     for mid in (0, 1, 5, 11, 254, 255):
         w, h = 8 * (1 + mid % 3), 8 * (1 + mid % 2)
         b = _synth_jpeg_gray_bytes(w, h, mid)
-        dw, dh, planes = _decode_jpeg_baseline(b)
+        dw, dh, planes = _decode_jpeg(b)
         assert (dw, dh) == (w, h)
         got = planes[0].astype(np.int64)
         for by in range(h // 8):
@@ -654,7 +654,7 @@ def test_jpeg_baseline_decode_roundtrip():
         + bw.flush()
         + b"\xff\xd9"
     )
-    _, _, planes = _decode_jpeg_baseline(jpg)
+    _, _, planes = _decode_jpeg(jpg)
     # independent dense IDCT of coef[zigzag 2] = 2 (natural (0,2))
     A = np.zeros((8, 8))
     for u in range(8):
@@ -679,28 +679,28 @@ def test_jpeg_baseline_decode_roundtrip():
     prog = bytearray(base)
     prog[prog.find(b"\xff\xc0") + 1] = 0xC2
     with pytest.raises(ValueError, match="DC scan"):
-        _decode_jpeg_baseline(bytes(prog))
+        _decode_jpeg(bytes(prog))
     sub = bytearray(base)
     i = sub.find(b"\xff\xc0")
     # round 7: factors ≤ 2 DECODE (single-component scans are
     # non-interleaved per spec, so a 0x22 factor on a grayscale file
     # decodes to the same pixels); the honest raise moved to factors > 2
     sub[i + 2 + 2 + 6 + 1] = 0x22  # sampling factor 2x2
-    dw_s, dh_s, planes_s = _decode_jpeg_baseline(bytes(sub))
-    dw_b, dh_b, planes_b = _decode_jpeg_baseline(bytes(base))
+    dw_s, dh_s, planes_s = _decode_jpeg(bytes(sub))
+    dw_b, dh_b, planes_b = _decode_jpeg(bytes(base))
     assert (dw_s, dh_s) == (dw_b, dh_b)
     assert (planes_s[0] == planes_b[0]).all()
     # round 8: factors up to 4 decode (and single-component scans
     # ignore them per spec), so 0x33 grayscale decodes identically too
     sub3 = bytearray(base)
     sub3[i + 2 + 2 + 6 + 1] = 0x33
-    _, _, planes_3 = _decode_jpeg_baseline(bytes(sub3))
+    _, _, planes_3 = _decode_jpeg(bytes(sub3))
     assert (planes_3[0] == planes_b[0]).all()
     # beyond the spec range (factor 5) is malformed input — typed loud
     sub5 = bytearray(base)
     sub5[i + 2 + 2 + 6 + 1] = 0x55
     with pytest.raises(ValueError, match="sampling factor"):
-        _decode_jpeg_baseline(bytes(sub5))
+        _decode_jpeg(bytes(sub5))
     # round 8: Pq=1 16-bit quant tables DECODE for real (pinned in
     # test_jpeg12_extended_sequential_decode_exact) — but flipping the
     # Pq flag on an 8-bit-sized table leaves a 65-byte payload where
@@ -708,7 +708,7 @@ def test_jpeg_baseline_decode_roundtrip():
     qt16 = bytearray(base)
     qt16[qt16.find(b"\xff\xdb") + 4] = 0x10  # Pq=1 on an 8-bit table
     with pytest.raises(ValueError, match="DQT truncated"):
-        _decode_jpeg_baseline(bytes(qt16))
+        _decode_jpeg(bytes(qt16))
     # round 7: DRI no longer raises — an interval longer than the scan
     # (4 > this file's 2 MCUs) decodes identically to the plain file,
     # while an interval the stream does not honor (DRI=1 injected into
@@ -722,7 +722,7 @@ def test_jpeg_baseline_decode_roundtrip():
             + bytes(base[base.find(b"\xff\xdb") :])
         )
 
-    dw_d, dh_d, planes_d = _decode_jpeg_baseline(with_dri(4))
+    dw_d, dh_d, planes_d = _decode_jpeg(with_dri(4))
     assert (dw_d, dh_d) == (dw_b, dh_b)
     assert (planes_d[0] == planes_b[0]).all()
     two_mcu = bytearray(_synth_jpeg_gray_bytes(16, 8, 3))  # 2 one-block MCUs
@@ -732,7 +732,7 @@ def test_jpeg_baseline_decode_roundtrip():
         + bytes(two_mcu[two_mcu.find(b"\xff\xdb") :])
     )
     with pytest.raises(ValueError, match="restart boundary"):
-        _decode_jpeg_baseline(missing_rst)
+        _decode_jpeg(missing_rst)
 
 
 def test_jpeg_420_subsampled_decode_exact():
@@ -745,13 +745,13 @@ def test_jpeg_420_subsampled_decode_exact():
     import numpy as np
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _synth_jpeg_420_bytes,
     )
 
     for mid in (0, 1, 2, 3, 7, 254):
         w, h = 16 * (1 + mid % 2), 16 * (1 + mid % 3)
-        dw, dh, planes = _decode_jpeg_baseline(_synth_jpeg_420_bytes(w, h, mid))
+        dw, dh, planes = _decode_jpeg(_synth_jpeg_420_bytes(w, h, mid))
         assert (dw, dh) == (w, h) and len(planes) == 3
         assert all(p.shape == (h, w) for p in planes)
         y, cb, cr = (p.astype(np.int64) for p in planes)
@@ -938,20 +938,20 @@ def test_jpeg_marker_walk_fill_bytes_and_bare_eoi():
     import pytest
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _synth_jpeg_gray_bytes,
     )
 
     jb = _synth_jpeg_gray_bytes(16, 8, 7)
-    w0, h0, planes0 = _decode_jpeg_baseline(jb)
+    w0, h0, planes0 = _decode_jpeg(jb)
     # inject fill bytes before the first post-SOI marker
     padded = jb[:2] + b"\xff\xff\xff" + jb[2:]
-    w1, h1, planes1 = _decode_jpeg_baseline(padded)
+    w1, h1, planes1 = _decode_jpeg(padded)
     assert (w0, h0) == (w1, h1)
     assert all((a == b).all() for a, b in zip(planes0, planes1))
 
     with pytest.raises(ValueError, match="no SOS"):
-        _decode_jpeg_baseline(b"\xff\xd8\xff\xd9")
+        _decode_jpeg(b"\xff\xd8\xff\xd9")
 
 
 def test_jpeg_restart_intervals_decode_exact():
@@ -964,7 +964,7 @@ def test_jpeg_restart_intervals_decode_exact():
     every MCU), coprime-to-row counts, and longer-than-the-image are
     all exercised."""
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _synth_jpeg_420_bytes,
     )
 
@@ -996,7 +996,7 @@ def test_jpeg_restart_intervals_decode_exact():
             if b[i] == 0xFF and 0xD0 <= b[i + 1] <= 0xD7
         )
         assert n_rst == max(0, (n_mcu - 1) // ri), (w, h, ri, n_rst)
-        ww, hh, planes = _decode_jpeg_baseline(b)
+        ww, hh, planes = _decode_jpeg(b)
         ey, ec = closed_form(w, h, mid)
         assert (ww, hh) == (w, h)
         assert int(planes[0].astype("int64").sum()) == ey, (w, h, mid, ri)
@@ -1015,7 +1015,7 @@ def test_jpeg_restart_intervals_decode_exact():
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="restart boundary"):
-        _decode_jpeg_baseline(bytes(b))
+        _decode_jpeg(bytes(b))
 
 
 def test_jpeg_progressive_decode_matches_baseline():
@@ -1038,7 +1038,7 @@ def test_jpeg_progressive_decode_matches_baseline():
     import numpy as np
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _synth_jpeg_baseline_from_field,
         _synth_jpeg_progressive_bytes,
     )
@@ -1057,8 +1057,8 @@ def test_jpeg_progressive_decode_matches_baseline():
                         w, h, mid, color=color, restart_interval=ri
                     )
                     assert b"\xff\xc0" in bb and b"\xff\xc2" in pb  # SOF0 vs SOF2
-                    w0, h0, p0 = _decode_jpeg_baseline(bb)
-                    w1, h1, p1 = _decode_jpeg_baseline(pb)  # dispatches
+                    w0, h0, p0 = _decode_jpeg(bb)
+                    w1, h1, p1 = _decode_jpeg(pb)  # dispatches
                     assert (w0, h0) == (w1, h1) == (w, h)
                     assert len(p0) == len(p1) == (3 if color else 1)
                     for a, b in zip(p0, p1):
@@ -1071,7 +1071,7 @@ def test_jpeg_progressive_decode_matches_baseline():
 
     pb = _synth_jpeg_progressive_bytes(24, 16, 3)
     with pytest.raises((ValueError, IndexError)):
-        _decode_jpeg_baseline(pb[: len(pb) // 2])
+        _decode_jpeg(pb[: len(pb) // 2])
 
 
 def test_png_sub8_decode_exact():
@@ -1270,7 +1270,7 @@ def test_jpeg_multiscan_sequential_raises():
     import struct
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _synth_jpeg_420_bytes,
     )
 
@@ -1289,7 +1289,7 @@ def test_jpeg_multiscan_sequential_raises():
         + b[sos + 2 + seglen :]
     )
     with pytest.raises(NotImplementedError, match="multi-scan"):
-        _decode_jpeg_baseline(rewritten)
+        _decode_jpeg(rewritten)
 
 
 def test_jpeg_truncated_at_restart_boundary_raises():
@@ -1297,7 +1297,7 @@ def test_jpeg_truncated_at_restart_boundary_raises():
     ValueError, not IndexError from scanning past the buffer
     (ADVICE r07)."""
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _synth_jpeg_420_bytes,
     )
 
@@ -1306,7 +1306,35 @@ def test_jpeg_truncated_at_restart_boundary_raises():
         i for i in range(len(b) - 1) if b[i] == 0xFF and 0xD0 <= b[i + 1] <= 0xD7
     )
     with pytest.raises(ValueError, match="truncated at restart boundary"):
-        _decode_jpeg_baseline(b[:first_rst])
+        _decode_jpeg(b[:first_rst])
+
+
+def test_jpeg_malformed_progressive_scan_is_typed():
+    """A progressive scan header naming no component, and a DC
+    difference too wide for the coefficient buffer (category 70), are
+    malformed input: ValueError, not IndexError / OverflowError."""
+    import struct
+
+    from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
+        _BitWriter,
+        _decode_jpeg,
+        _jpeg_seg,
+    )
+
+    head = (
+        b"\xff\xd8"
+        + _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))
+        + _jpeg_seg(0xC2, struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]))
+        + _jpeg_seg(0xC4, b"\x00" + bytes([1] + [0] * 15) + bytes([70]))
+    )
+    bw = _BitWriter()
+    bw.write(0, 1)  # the table's one code: DC category 70
+    bw.write((1 << 70) - 1, 70)
+    wide = head + _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0])) + bw.flush()
+    with pytest.raises(ValueError, match="int64"):
+        _decode_jpeg(wide + b"\xff\xd9")
+    with pytest.raises(ValueError, match="no component"):
+        _decode_jpeg(head + _jpeg_seg(0xDA, bytes([0, 0, 0, 0])) + b"\xff\xd9")
 
 
 def test_jpeg_zigzag_and_huffman_spec_fixture():
@@ -1329,7 +1357,7 @@ def test_jpeg_zigzag_and_huffman_spec_fixture():
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
         _ZIGZAG,
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _huff_canonical,
     )
 
@@ -1371,7 +1399,7 @@ def test_jpeg_zigzag_and_huffman_spec_fixture():
         + [0xD0, 0x7F]  # '110' (DC cat 5) + '10000' (diff 16) + '0' (EOB) + 1-pad
         + [0xFF, 0xD9]  # EOI
     )
-    w, h, planes = _decode_jpeg_baseline(jpeg)
+    w, h, planes = _decode_jpeg(jpeg)
     assert (w, h) == (8, 8)
     assert planes[0].shape == (8, 8)
     assert (planes[0] == np.full((8, 8), 130, dtype=np.uint8)).all()
@@ -1386,7 +1414,7 @@ def test_jpeg_sampling_factors_up_to_4_decode_exact():
     import struct
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _synth_jpeg_sampled_bytes,
     )
 
@@ -1398,7 +1426,7 @@ def test_jpeg_sampling_factors_up_to_4_decode_exact():
     ]
     for factors, w, h, mid in cases:
         b = _synth_jpeg_sampled_bytes(w, h, mid, factors)
-        ww, hh, planes = _decode_jpeg_baseline(b)
+        ww, hh, planes = _decode_jpeg(b)
         assert (ww, hh) == (w, h)
         hmax = max(f[0] for f in factors)
         vmax = max(f[1] for f in factors)
@@ -1424,7 +1452,7 @@ def test_jpeg_sampling_factors_up_to_4_decode_exact():
         ([(4, 3), (3, 2), (1, 1)], 96, 48, 7),
     ]:
         b = _synth_jpeg_sampled_bytes(w, h, mid, factors)
-        ww, hh, planes = _decode_jpeg_baseline(b)
+        ww, hh, planes = _decode_jpeg(b)
         assert (ww, hh) == (w, h)
         hmax = max(f[0] for f in factors)
         vmax = max(f[1] for f in factors)
@@ -1453,7 +1481,7 @@ def test_jpeg12_extended_sequential_decode_exact():
     import numpy as np
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _synth_jpeg12_gray_bytes,
     )
 
@@ -1462,7 +1490,7 @@ def test_jpeg12_extended_sequential_decode_exact():
     for mid in (3, 11, 19, 27, 83, 91, 0, 1, 2, 4, 5, 13):
         w, h = 8 * (1 + mid % 3), 8 * (1 + mid % 2)
         b = _synth_jpeg12_gray_bytes(w, h, mid)
-        dw, dh, planes = _decode_jpeg_baseline(b)
+        dw, dh, planes = _decode_jpeg(b)
         assert (dw, dh) == (w, h)
         p = planes[0]
         assert p.dtype == np.uint16
@@ -1484,19 +1512,19 @@ def test_jpeg12_extended_sequential_decode_exact():
     i = bytes(b).find(b"\xff\xc1")
     b[i + 1] = 0xC0
     with pytest.raises(ValueError, match="SOF0"):
-        _decode_jpeg_baseline(bytes(b))
+        _decode_jpeg(bytes(b))
 
     # precision outside {8, 12} is malformed, not a capability gap
     b = bytearray(_synth_jpeg12_gray_bytes(8, 8, 3))
     i = bytes(b).find(b"\xff\xc1")
     b[i + 4] = 10
     with pytest.raises(ValueError, match="8 or 12"):
-        _decode_jpeg_baseline(bytes(b))
+        _decode_jpeg(bytes(b))
 
     # the 16-bit quant values are genuinely load-bearing: halve q0 in
     # the serialized table and the decoded pixels must change
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _decode_jpeg_baseline as dec,
+        _decode_jpeg as dec,
     )
 
     b = bytearray(_synth_jpeg12_gray_bytes(16, 8, 4))  # q0=256 regime
@@ -1606,7 +1634,7 @@ def test_flac_decode_exact_and_boundaries():
     and wasted-bits shifts — are exercised by hand-built frames; CRC
     tampering and structural violations are typed ValueError."""
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _FlacBitWriter,
+        _BitWriter,
         _crc8_flac,
         _crc16_flac,
         _flac_utf8_code,
@@ -1634,33 +1662,33 @@ def test_flac_decode_exact_and_boundaries():
     left = [4 * j - 30 for j in range(8)]
     right = [2 * j - 10 for j in range(8)]
     side = [left[j] - right[j] for j in range(8)]
-    si = _FlacBitWriter()
-    si.w(8, 16); si.w(8, 16); si.w(0, 24); si.w(0, 24)
-    si.w(8000, 20); si.w(1, 3); si.w(15, 5); si.w(8, 36)
+    si = _BitWriter(stuffed=False)
+    si.write(8, 16); si.write(8, 16); si.write(0, 24); si.write(0, 24)
+    si.write(8000, 20); si.write(1, 3); si.write(15, 5); si.write(8, 36)
     stream = bytearray(b"fLaC")
     info = bytes(si.out) + bytes(16)
     stream += bytes([0x80, 0, 0, len(info)]) + info
-    bw = _FlacBitWriter()
-    bw.w(0b11111111111110, 14); bw.w(0, 1); bw.w(0, 1)
-    bw.w(0b0110, 4); bw.w(0b0000, 4)
-    bw.w(0b1001, 4)  # right/side
-    bw.w(0b100, 3); bw.w(0, 1)
-    bw.w(_flac_utf8_code(0)[0], 8)
-    bw.w(7, 8)  # blocksize-1
-    bw.w(_crc8_flac(bytes(bw.out)), 8)
+    bw = _BitWriter(stuffed=False)
+    bw.write(0b11111111111110, 14); bw.write(0, 1); bw.write(0, 1)
+    bw.write(0b0110, 4); bw.write(0b0000, 4)
+    bw.write(0b1001, 4)  # right/side
+    bw.write(0b100, 3); bw.write(0, 1)
+    bw.write(_flac_utf8_code(0)[0], 8)
+    bw.write(7, 8)  # blocksize-1
+    bw.write(_crc8_flac(bytes(bw.out)), 8)
     # subframe 1: side at bps+1, all values EVEN -> encode with one
     # wasted bit (type verbatim, wasted flag set, unary count 1,
     # samples pre-shifted right by 1)
     assert all(v % 2 == 0 for v in side)
-    bw.w(0, 1); bw.w(0b000001, 6)
-    bw.w(1, 1)          # wasted-bits flag
-    bw.w(1, 1)          # unary 0 -> wasted = 1 (a single 1-bit)
+    bw.write(0, 1); bw.write(0b000001, 6)
+    bw.write(1, 1)          # wasted-bits flag
+    bw.write(1, 1)          # unary 0 -> wasted = 1 (a single 1-bit)
     for v in side:
-        bw.w(v >> 1, 17 - 1)
+        bw.write(v >> 1, 17 - 1)
     # subframe 2: right, plain verbatim
     _write_subframe(bw, right, 16, "verbatim")
     bw.align()
-    bw.w(_crc16_flac(bytes(bw.out)), 16)
+    bw.write(_crc16_flac(bytes(bw.out)), 16)
     stream += bytes(bw.out)
     sr, ch, bps, chans = _parse_flac(bytes(stream))
     assert (ch, bps) == (2, 16)
@@ -1780,16 +1808,16 @@ def test_codec_corruption_is_typed():
         "gif": (M._synth_gif_bytes(4, 3), M._parse_gif),
         "bmp": (M._synth_bmp_bytes(4, 3), M._parse_bmp),
         "bmp8": (M._synth_bmp8_bytes(4, 3), M._parse_bmp),
-        "jpeg": (M._synth_jpeg_gray_bytes(16, 8, 7), M._decode_jpeg_baseline),
-        "jpeg420": (M._synth_jpeg_420_bytes(16, 16, 3), M._decode_jpeg_baseline),
+        "jpeg": (M._synth_jpeg_gray_bytes(16, 8, 7), M._decode_jpeg),
+        "jpeg420": (M._synth_jpeg_420_bytes(16, 16, 3), M._decode_jpeg),
         "jpegprog": (
             M._synth_jpeg_progressive_bytes(16, 16, 3, True),
-            M._decode_jpeg_baseline,
+            M._decode_jpeg,
         ),
-        "jpeg12": (M._synth_jpeg12_gray_bytes(16, 8, 3), M._decode_jpeg_baseline),
+        "jpeg12": (M._synth_jpeg12_gray_bytes(16, 8, 3), M._decode_jpeg),
         "jpegrst": (
             M._synth_jpeg_420_bytes(32, 16, 5, restart_interval=1),
-            M._decode_jpeg_baseline,
+            M._decode_jpeg,
         ),
         "tiff": (M._synth_tiff_bytes(6, 4, 22), M._parse_tiff),
         "tiffpb": (M._synth_tiff_bytes(6, 4, 30), M._parse_tiff),

@@ -495,18 +495,16 @@ def test_rolling_gram_hash_cross_engine_parity(spark, ddb, texts):
     # BOTH twins come from production (plans/text.py) — a drift on
     # either side fails here instead of surviving behind a stale copy
     from olist_ecommerce_data_warehouse_spark.plans.text import (
-        _gram2_sql,
-        _gram3_sql,
+        _gramk_sql,
         _TH_SQL,
-        gram2_expr,
-        gram3_expr,
+        gramk_expr,
         token_hashes_expr,
     )
 
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     dt_df = df.select("doc_id", token_hashes_expr().alias("th"))
-    g2 = gram2_expr("th")
-    g3 = gram3_expr("th")
+    g2 = gramk_expr("th", 2)
+    g3 = gramk_expr("th", 3)
     got = {
         (r["doc_id"], 2): sorted(r["g2"]) for r in dt_df.select("doc_id", g2.alias("g2")).collect()
     } | {
@@ -518,30 +516,17 @@ def test_rolling_gram_hash_cross_engine_parity(spark, ddb, texts):
     for i, t in enumerate(texts):
         con.execute("INSERT INTO documents VALUES (?, ?)", [i, t])
     rows = con.execute(
-        f"SELECT doc_id, {_gram2_sql(f'({_TH_SQL})')} AS g2, "
-        f"{_gram3_sql(f'({_TH_SQL})')} AS g3 FROM documents"
+        f"SELECT doc_id, {_gramk_sql(f'({_TH_SQL})', 2)} AS g2, "
+        f"{_gramk_sql(f'({_TH_SQL})', 3)} AS g3 FROM documents"
     ).fetchall()
     for doc_id, g2d, g3d in rows:
         assert sorted(g2d) == got[(doc_id, 2)], (texts[doc_id], g2d, got[(doc_id, 2)])
         assert sorted(g3d) == got[(doc_id, 3)], (texts[doc_id], g3d, got[(doc_id, 3)])
 
-    # the generalized k-window fold: gramk(2)/gramk(3) must equal the
-    # dedicated 2/3-gram expressions exactly, and gramk(5) (the
-    # contamination gram) must agree cross-engine — incl. docs shorter
-    # than k
-    from olist_ecommerce_data_warehouse_spark.plans.text import _gramk_sql, gramk_expr
-
-    gk = dt_df.select(
-        "doc_id",
-        gramk_expr("th", 2).alias("k2"),
-        gramk_expr("th", 3).alias("k3"),
-        gramk_expr("th", 5).alias("k5"),
-    )
-    got5 = {}
-    for r in gk.collect():
-        assert sorted(r["k2"]) == got[(r["doc_id"], 2)], texts[r["doc_id"]]
-        assert sorted(r["k3"]) == got[(r["doc_id"], 3)], texts[r["doc_id"]]
-        got5[r["doc_id"]] = sorted(r["k5"])
+    # gramk(5) (the contamination gram) must agree cross-engine too —
+    # incl. docs shorter than k
+    gk = dt_df.select("doc_id", gramk_expr("th", 5).alias("k5"))
+    got5 = {r["doc_id"]: sorted(r["k5"]) for r in gk.collect()}
     for doc_id, g5d in con.execute(
         f"SELECT doc_id, {_gramk_sql(f'({_TH_SQL})', 5)} FROM documents"
     ).fetchall():
@@ -1269,12 +1254,12 @@ def test_jpeg12_roundtrip_any_dims(bw, bh, mid):
     import numpy as np
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
-        _decode_jpeg_baseline,
+        _decode_jpeg,
         _synth_jpeg12_gray_bytes,
     )
 
     w, h = 8 * bw, 8 * bh
-    dw, dh, planes = _decode_jpeg_baseline(_synth_jpeg12_gray_bytes(w, h, mid))
+    dw, dh, planes = _decode_jpeg(_synth_jpeg12_gray_bytes(w, h, mid))
     assert (dw, dh) == (w, h)
     p = planes[0]
     assert p.dtype == np.uint16
