@@ -213,15 +213,13 @@ def gumbel_key_sql(id_expr: str, seed: int = 0) -> str:
     return f"CAST(round(-ln(-ln({u})) * {float(_FP)!r}) AS BIGINT)"
 
 
-def dsir_resample(
-    scored: DataFrame, n: int, seed: int = 0, id_col: str = "doc_id"
-) -> DataFrame:
-    """Top-``n`` Gumbel keys = an importance-resampled selection
-    (without replacement, P ∝ exp(weight)).  TakeOrdered shape:
-    per-partition heads merge on the driver, no global sort; ties
-    break to the lower id for determinism."""
-    keyed = scored.select(id_col, "weight_fp", gumbel_key("weight_fp", id_col, seed))
-    return keyed.orderBy(F.desc("key_fp"), F.col(id_col)).limit(n)
+def dsir_resample(scored: DataFrame, n: int, seed: int = 0) -> DataFrame:
+    """Top-``n`` Gumbel keys over ``doc_id`` = an importance-resampled
+    selection (without replacement, P ∝ exp(weight)).  TakeOrdered
+    shape: per-partition heads merge on the driver, no global sort;
+    ties break to the lower id for determinism."""
+    keyed = scored.select("doc_id", "weight_fp", gumbel_key("weight_fp", "doc_id", seed))
+    return keyed.orderBy(F.desc("key_fp"), F.col("doc_id")).limit(n)
 
 
 # --------------------------------------------------------- reference twin

@@ -412,20 +412,25 @@ def _parse_wav(b: bytes):
     return n, 0, ch, rate, width * 8, mean
 
 
+def _riff_chunks(b: bytes):
+    """(chunk id, payload start, payload size) of each RIFF chunk
+    after the 12-byte RIFF/WAVE header — id(4) + little-endian
+    size(4) + payload, padded to an even length."""
+    i = 12
+    while i + 8 <= len(b):
+        (csize,) = struct.unpack("<I", b[i + 4 : i + 8])
+        yield b[i : i + 4], i + 8, csize
+        i += 8 + csize + (csize & 1)
+
+
 def _wav_fmt_code(b: bytes):
     """Format code from the RIFF fmt chunk (1 = PCM, 6 = A-law,
     7 = µ-law, …), or ``None`` when no intact fmt chunk is found —
     callers then fall through to the stdlib path whose exception
     re-typing owns the malformed-framing contract."""
-    import struct
-
-    i = 12
-    while i + 8 <= len(b):
-        cid = b[i : i + 4]
-        (csize,) = struct.unpack("<I", b[i + 4 : i + 8])
-        if cid == b"fmt " and csize >= 2 and i + 10 <= len(b):
-            return struct.unpack("<H", b[i + 8 : i + 10])[0]
-        i += 8 + csize + (csize & 1)
+    for cid, p, csize in _riff_chunks(b):
+        if cid == b"fmt " and csize >= 2 and p + 2 <= len(b):
+            return struct.unpack("<H", b[p : p + 2])[0]
     return None
 
 
@@ -526,6 +531,17 @@ _ADAM7 = [
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
     (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
 ]
+
+
+def _png_passes(w: int, h: int, interlace: int):
+    """(x0, y0, dx, dy, pass width, pass height) of each non-empty
+    sub-image: the seven Adam7 passes, or the whole image when
+    ``interlace`` is 0."""
+    for x0, y0, dx, dy in _ADAM7 if interlace else [(0, 0, 1, 1)]:
+        wp = (w - x0 + dx - 1) // dx
+        hp = (h - y0 + dy - 1) // dy
+        if wp > 0 and hp > 0:
+            yield x0, y0, dx, dy, wp, hp
 
 
 def _defilter_image(raw: bytes, off: int, w: int, h: int, bpp: int):
@@ -659,54 +675,33 @@ def _png_pixels(b: bytes):
         mask = (1 << bit_depth) - 1
         scale = 255 // mask
         out = bytearray(w * h)
-        if interlace == 1:
-            # round 8 (late): sub-8-bit ADAM7 — the last legal PNG
-            # variant combination.  Each pass's rows pack to their OWN
-            # ceil(wp·d/8) byte width (filter unit still 1 byte);
-            # unpack per pass row, scatter samples to the lattice.
-            off = 0
-            for x0, y0, dx, dy in _ADAM7:
-                wp = (w - x0 + dx - 1) // dx
-                hp = (h - y0 + dy - 1) // dy
-                if wp <= 0 or hp <= 0:
-                    continue
-                rb = (wp * bit_depth + 7) // 8
-                sub, used = _defilter_image(raw, off, rb, hp, 1)
-                off += used
-                for j in range(hp):
-                    base = j * rb
-                    for i in range(wp):
-                        bitpos = i * bit_depth
-                        v = (
-                            sub[base + (bitpos >> 3)]
-                            >> (8 - bit_depth - (bitpos & 7))
-                        ) & mask
-                        out[(y0 + j * dy) * w + (x0 + i * dx)] = (
-                            v if color_type == 3 else v * scale
-                        )
-        else:
-            row_bytes = (w * bit_depth + 7) // 8
-            packed, _ = _defilter_image(raw, 0, row_bytes, h, 1)
-            for y in range(h):
-                base = y * row_bytes
-                for x in range(w):
-                    bitpos = x * bit_depth
+        # each pass's rows pack to their OWN ceil(wp·d/8) byte width
+        # (filter unit still 1 byte); unpack per row and scatter the
+        # samples to the pass lattice (the whole image when not
+        # interlaced)
+        off = 0
+        for x0, y0, dx, dy, wp, hp in _png_passes(w, h, interlace):
+            rb = (wp * bit_depth + 7) // 8
+            sub, used = _defilter_image(raw, off, rb, hp, 1)
+            off += used
+            for j in range(hp):
+                base = j * rb
+                for i in range(wp):
+                    bitpos = i * bit_depth
                     v = (
-                        packed[base + (bitpos >> 3)]
+                        sub[base + (bitpos >> 3)]
                         >> (8 - bit_depth - (bitpos & 7))
                     ) & mask
-                    out[y * w + x] = v if color_type == 3 else v * scale
+                    out[(y0 + j * dy) * w + (x0 + i * dx)] = (
+                        v if color_type == 3 else v * scale
+                    )
     elif interlace == 1:
         # Adam7: seven sub-images in sequence, each filtered
         # independently; scatter each pass's pixels to its lattice
         bpp = ch * (bit_depth // 8)
         out = bytearray(w * h * bpp)
         off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            wp = (w - x0 + dx - 1) // dx
-            hp = (h - y0 + dy - 1) // dy
-            if wp <= 0 or hp <= 0:
-                continue
+        for x0, y0, dx, dy, wp, hp in _png_passes(w, h, interlace):
             sub, used = _defilter_image(raw, off, wp, hp, bpp)
             off += used
             for j in range(hp):
@@ -826,6 +821,29 @@ PROBE_SCHEMA = T.StructType(
 _JPEG_SOF = {0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF}
 
 
+def _jpeg_segment(b: bytes, i: int) -> tuple[int, bytes, int]:
+    """The marker segment at ``b[i]``: (marker, payload, offset past
+    it) — the one segment step of both JPEG marker walks.  Spec-legal
+    0xFF FILL bytes may pad before any marker (ITU T.81 §B.1.1.2);
+    they are skipped, so a padded file hits the intended clean
+    boundary, not a garbage segment-length read.  The standalone
+    markers (SOI, EOI, TEM, RSTn) carry no payload."""
+    if b[i] != 0xFF:
+        raise ValueError("expected marker")
+    while i + 1 < len(b) and b[i + 1] == 0xFF:
+        i += 1
+    if i + 1 >= len(b):
+        raise ValueError("truncated JPEG marker")
+    marker = b[i + 1]
+    i += 2
+    if marker in (0xD8, 0xD9, 0x01) or 0xD0 <= marker <= 0xD7:
+        return marker, b"", i
+    if i + 2 > len(b):
+        raise ValueError("truncated JPEG segment header")
+    (seglen,) = struct.unpack(">H", b[i : i + 2])
+    return marker, b[i + 2 : i + seglen], i + seglen
+
+
 def _jpeg_header(b: bytes):
     """(width, height, n_components, precision, progressive) from a
     REAL JPEG segment walk: SOI, then length-prefixed segments to the
@@ -835,25 +853,13 @@ def _jpeg_header(b: bytes):
     if b[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (no SOI)")
     i = 2
-    while i + 4 <= len(b):
-        if b[i] != 0xFF:
-            raise ValueError("JPEG segment desync")
-        marker = b[i + 1]
-        if marker == 0xD9:  # EOI
+    while i + 1 < len(b):
+        marker, payload, i = _jpeg_segment(b, i)
+        if marker in (0xD9, 0xDA):  # EOI, or SOS with no SOF seen
             break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # standalone
-            i += 2
-            continue
-        seg_len = int.from_bytes(b[i + 2 : i + 4], "big")
         if marker in _JPEG_SOF:
-            precision = b[i + 4]
-            h = int.from_bytes(b[i + 5 : i + 7], "big")
-            w = int.from_bytes(b[i + 7 : i + 9], "big")
-            ncomp = b[i + 9]
+            precision, h, w, ncomp = struct.unpack(">BHHB", payload[:6])
             return w, h, ncomp, precision, 1 if marker == 0xC2 else 0
-        if marker == 0xDA:  # SOS: compressed scan follows, no SOF seen
-            break
-        i += 2 + seg_len
     raise ValueError("JPEG has no SOF before scan data")
 
 
@@ -863,42 +869,22 @@ def _mp4_dims(b: bytes):
     dimensions live as 16.16 fixed-point.  Only the box structure is
     read — sample decode is ffmpeg territory."""
 
-    def boxes(buf: bytes, start: int, end: int):
-        i = start
-        while i + 8 <= end:
-            size = int.from_bytes(buf[i : i + 4], "big")
-            btype = buf[i + 4 : i + 8]
-            if size == 1:  # 64-bit largesize
-                size = int.from_bytes(buf[i + 8 : i + 16], "big")
-                body = i + 16
-            else:
-                body = i + 8
-            if size < 8 or i + size > end:
-                break
-            yield btype, body, i + size
-            i += size
-
     brand = ""
     w = h = 0
-    for btype, body, bend in boxes(b, 0, len(b)):
+    for btype, body, bend in _mp4_boxes(b, 0, len(b)):
         if btype == b"ftyp":
             brand = b[body : body + 4].decode("ascii", "replace")
         elif btype == b"moov":
-            for t2, b2, e2 in boxes(b, body, bend):
-                if t2 != b"trak":
-                    continue
-                for t3, b3, e3 in boxes(b, b2, e2):
-                    if t3 != b"tkhd":
-                        continue
-                    # tkhd: version(1)+flags(3); v0 fixed fields end
-                    # 80 bytes into the body, v1 92 — width/height are
-                    # the LAST 8 bytes of the box either way (16.16)
-                    tw = int.from_bytes(b[e3 - 8 : e3 - 4], "big") >> 16
-                    th = int.from_bytes(b[e3 - 4 : e3], "big") >> 16
-                    # first VIDEO track wins (audio tracks carry 0×0)
-                    if tw and th:
-                        return tw, th, brand
-                    w, h = tw, th
+            for _, e3 in _mp4_descend(b, body, bend, [b"trak", b"tkhd"]):
+                # tkhd: version(1)+flags(3); v0 fixed fields end 80
+                # bytes into the body, v1 92 — width/height are the
+                # LAST 8 bytes of the box either way (16.16)
+                tw = int.from_bytes(b[e3 - 8 : e3 - 4], "big") >> 16
+                th = int.from_bytes(b[e3 - 4 : e3], "big") >> 16
+                # first VIDEO track wins (audio tracks carry 0×0)
+                if tw and th:
+                    return tw, th, brand
+                w, h = tw, th
     if not brand:
         raise ValueError("not an ISO-BMFF container (no ftyp)")
     return w, h, brand
@@ -912,18 +898,13 @@ def _wav_fmt(b: bytes):
     both.  The walk mirrors the JPEG SOF and MP4 box traversals: chunk
     id(4) + little-endian size(4) + payload (padded to even), scanned
     until ``fmt `` with a validated size ≥ 16."""
-    i = 12  # past RIFF<size>WAVE
-    end = len(b)
-    while i + 8 <= end:
-        cid = b[i : i + 4]
-        (csize,) = struct.unpack("<I", b[i + 4 : i + 8])
+    for cid, p, csize in _riff_chunks(b):
         if cid == b"fmt ":
-            if csize < 16 or i + 8 + 16 > end:
+            if csize < 16 or p + 16 > len(b):
                 raise ValueError("WAV fmt chunk truncated")
-            ch, rate = struct.unpack("<HI", b[i + 10 : i + 16])
-            (bits,) = struct.unpack("<H", b[i + 22 : i + 24])
+            ch, rate = struct.unpack("<HI", b[p + 2 : p + 8])
+            (bits,) = struct.unpack("<H", b[p + 14 : p + 16])
             return ch, rate, bits
-        i += 8 + csize + (csize & 1)  # chunks are word-aligned
     raise ValueError("WAV has no fmt chunk")
 
 
@@ -1077,6 +1058,83 @@ SYNTH_FIELDS_SQL = """
 """
 
 
+def _png_chunk(ctype: bytes, data: bytes) -> bytes:
+    """One PNG chunk: length, type, data, CRC-32 over type + data."""
+    import zlib
+
+    return (
+        struct.pack(">I", len(data)) + ctype + data
+        + struct.pack(">I", zlib.crc32(ctype + data))
+    )
+
+
+def _png_filter(f: int, line: bytes, prev: bytes, bpp: int) -> bytes:
+    """Filter-type byte plus ``line`` under PNG filter ``f`` (0 None,
+    1 Sub, 2 Up, 3 Average, 4 Paeth) at a filter unit of ``bpp`` bytes,
+    ``prev`` being the previous raw row of the same (sub)image."""
+    out = bytearray([f])
+    for i, x in enumerate(line):
+        a = line[i - bpp] if i >= bpp else 0
+        b = prev[i]
+        if f == 0:
+            pred = 0
+        elif f == 1:
+            pred = a
+        elif f == 2:
+            pred = b
+        elif f == 3:
+            pred = (a + b) // 2
+        else:
+            pred = _paeth(a, b, prev[i - bpp] if i >= bpp else 0)
+        out.append((x - pred) & 0xFF)
+    return bytes(out)
+
+
+def _png_encode(
+    w: int,
+    h: int,
+    pixel: Callable[[int, int], tuple[int, ...]],
+    *,
+    color_type: int = 0,
+    depth: int = 8,
+    interlace: int = 0,
+    row_filter: Callable[[int], int] = lambda j: 0,
+    plte: bytes = b"",
+) -> bytes:
+    """PNG whose pixel (x, y) holds the samples ``pixel(x, y)`` — the
+    one encoder behind every ``_synth_png_*``.  Samples pack MSB-first
+    at ``depth`` bits (1/2/4 share a byte, 16 is big-endian) into
+    byte-aligned rows; each sub-image (``_png_passes``) is filtered
+    row by row, row j of a pass with filter ``row_filter(j)`` at the
+    filter unit bpp = max(1, channels·depth/8) (§9.2), then the rows
+    are deflated into one IDAT.  ``plte`` non-empty writes a PLTE."""
+    import zlib
+
+    ch = _PNG_CHANNELS[color_type]
+    bpp = max(1, ch * depth // 8)
+    raw = bytearray()
+    for x0, y0, dx, dy, wp, hp in _png_passes(w, h, interlace):
+        nbits = wp * ch * depth
+        nbytes = (nbits + 7) // 8  # rows end on a byte boundary
+        prev = bytes(nbytes)
+        for j in range(hp):
+            acc = 0
+            for i in range(wp):
+                for v in pixel(x0 + i * dx, y0 + j * dy):
+                    acc = (acc << depth) | v
+            line = (acc << (8 * nbytes - nbits)).to_bytes(nbytes, "big")
+            raw += _png_filter(row_filter(j), line, prev, bpp)
+            prev = line
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, interlace)
+    return (
+        _PNG_SIG
+        + _png_chunk(b"IHDR", ihdr)
+        + (_png_chunk(b"PLTE", plte) if plte else b"")
+        + _png_chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
 def _synth_png_bytes(w: int, h: int, filter_type: int = 0) -> bytes:
     """RGB8 PNG whose RAW pixel bytes are the known function
     ``(i + y) % 251`` (i = byte index in row, y = row), encoded with
@@ -1084,45 +1142,9 @@ def _synth_png_bytes(w: int, h: int, filter_type: int = 0) -> bytes:
     the real defilter to recover the known content, which is what
     makes the closed-form pixel-sum oracle a true gate on the
     all-5-filter defilter implementation."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    raw = bytearray()
-    prev = bytes(w * 3)
-    for y in range(h):
-        line = bytes(((x + y) % 251) for x in range(w * 3))
-        enc = bytearray(line)
-        if filter_type:
-            for i in range(len(line)):
-                a = line[i - 3] if i >= 3 else 0
-                b = prev[i]
-                c = prev[i - 3] if i >= 3 else 0
-                if filter_type == 1:
-                    pred = a
-                elif filter_type == 2:
-                    pred = b
-                elif filter_type == 3:
-                    pred = (a + b) // 2
-                else:
-                    pred = _paeth(a, b, c)
-                enc[i] = (line[i] - pred) & 0xFF
-        raw.append(filter_type)
-        raw.extend(enc)
-        prev = line
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
+    return _png_encode(
+        w, h, lambda x, y: [(3 * x + c + y) % 251 for c in range(3)],
+        color_type=2, row_filter=lambda j: filter_type,
     )
 
 
@@ -1139,38 +1161,46 @@ def _synth_jpeg_bytes(w: int, h: int, ncomp: int, progressive: int) -> bytes:
     return b"\xff\xd8" + app0 + dqt + sof + sos + b"\xff\xd9"
 
 
+def _wav_bytes(code: int, ch: int, rate: int, bits: int, data: bytes) -> bytes:
+    """RIFF/WAVE file: a 16-byte fmt chunk (format ``code``, channels,
+    rate, byte rate, block align, bits per sample), then ``data`` as
+    the data chunk."""
+    block = ch * bits // 8
+    return (
+        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+        + b"fmt " + struct.pack("<IHHIIHH", 16, code, ch, rate, rate * block, block, bits)
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+
+
 def _synth_wav_bytes(ch: int, rate: int, bits: int, n_samples: int = 0) -> bytes:
     """PCM WAV with ``n_samples`` frames whose int16 sample values are
     the known function ``((j * 37) % 2048) - 1024`` over the flattened
     interleaved stream (j = frame * ch + channel) — the decoder must
     run the real PCM decode to recover them, which is what makes the
     closed-form sample-sum oracle a true gate on the WAV decode path."""
-    import struct
-
-    block = ch * bits // 8
-    fmt = struct.pack("<IHHIIHH", 16, 1, ch, rate, rate * block, block, bits)
     data = b"".join(
         struct.pack("<h", ((j * 37) % 2048) - 1024) for j in range(n_samples * ch)
     )
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + fmt + b"data" + struct.pack("<I", len(data)) + data
+    return _wav_bytes(1, ch, rate, bits, data)
+
+
+def _mp4_box(btype: bytes, payload: bytes) -> bytes:
+    """One ISO-BMFF box: 32-bit size, type, payload."""
+    return struct.pack(">I", len(payload) + 8) + btype + payload
+
+
+def _mp4_movie(w: int, h: int, trak_tail: bytes) -> bytes:
+    """ftyp, then moov → trak holding a version-0 tkhd (flags 7) of a
+    w × h track followed by ``trak_tail``."""
+    tkhd = b"\x00\x00\x00\x07" + bytes(72) + struct.pack(">II", w << 16, h << 16)
+    return _mp4_box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2") + _mp4_box(
+        b"moov", _mp4_box(b"trak", _mp4_box(b"tkhd", tkhd) + trak_tail)
     )
 
 
 def _synth_mp4_bytes(w: int, h: int) -> bytes:
-    import struct
-
-    def box(btype: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", len(payload) + 8) + btype + payload
-
-    tkhd = (
-        b"\x00\x00\x00\x07" + bytes(16) + bytes(4) + bytes(8)
-        + bytes(8) + bytes(36) + struct.pack(">II", w << 16, h << 16)
-    )
-    return box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2") + box(
-        b"moov", box(b"trak", box(b"tkhd", tkhd))
-    )
+    return _mp4_movie(w, h, b"")
 
 
 def _mp4_stbl_fields(mid: int):
@@ -1197,14 +1227,9 @@ def _synth_mp4_stbl_bytes(mid: int) -> bytes:
     entries whenever the last chunk is partial (the spec's run-length
     encoding — first_chunk anchors each run), so the sample-to-chunk
     resolution is exercised, not just entry counting."""
-    import struct
-
-    def box(btype: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", len(payload) + 8) + btype + payload
-
     n, sizes, spc, n_chunks, n1, d1, d2, offsets = _mp4_stbl_fields(mid)
     full = b"\x00\x00\x00\x00"  # version 0, flags 0
-    stsd = full + struct.pack(">I", 1) + box(b"mp4v", bytes(8))
+    stsd = full + struct.pack(">I", 1) + _mp4_box(b"mp4v", bytes(8))
     stts = full + struct.pack(">IIIII", 2, n1, d1, n - n1, d2)
     if n % spc:
         stsc = full + struct.pack(
@@ -1223,23 +1248,16 @@ def _synth_mp4_stbl_bytes(mid: int) -> bytes:
         + b"".join(struct.pack(">I", o) for o in offsets)
     )
     stbl = (
-        box(b"stsd", stsd) + box(b"stts", stts) + box(b"stsc", stsc)
-        + box(b"stsz", stsz) + box(b"stco", stco)
+        _mp4_box(b"stsd", stsd) + _mp4_box(b"stts", stts) + _mp4_box(b"stsc", stsc)
+        + _mp4_box(b"stsz", stsz) + _mp4_box(b"stco", stco)
     )
     mdhd = full + struct.pack(">IIIIHH", 0, 0, 1000, n1 * d1 + (n - n1) * d2, 0x55C4, 0)
-    w, h = 320 + (mid % 8) * 40, 240 + (mid % 6) * 40
-    tkhd = (
-        b"\x00\x00\x00\x07" + bytes(16) + bytes(4) + bytes(8)
-        + bytes(8) + bytes(36) + struct.pack(">II", w << 16, h << 16)
+    mdia = _mp4_box(
+        b"mdia", _mp4_box(b"mdhd", mdhd) + _mp4_box(b"minf", _mp4_box(b"stbl", stbl))
     )
-    trak = box(b"tkhd", tkhd) + box(
-        b"mdia", box(b"mdhd", mdhd) + box(b"minf", box(b"stbl", stbl))
-    )
-    return (
-        box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
-        + box(b"moov", box(b"trak", trak))
-        + box(b"mdat", bytes(8))
-    )
+    return _mp4_movie(
+        320 + (mid % 8) * 40, 240 + (mid % 6) * 40, mdia
+    ) + _mp4_box(b"mdat", bytes(8))
 
 
 def _mp4_boxes(buf: bytes, start: int, end: int):
@@ -1466,47 +1484,10 @@ def _synth_png_pal_bytes(w: int, h: int, filter_type: int = 0) -> bytes:
     resolve every index through PLTE to recover the closed-form RGB
     sum, so the gate covers exactly the two things a palette decode
     can get wrong (filter offset at bpp=1, palette resolution)."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    raw = bytearray()
-    prev = bytes(w)
-    for y in range(h):
-        line = bytes((x + y) % 16 for x in range(w))
-        enc = bytearray(line)
-        if filter_type:
-            for i in range(len(line)):
-                a = line[i - 1] if i >= 1 else 0
-                up = prev[i]
-                c = prev[i - 1] if i >= 1 else 0
-                if filter_type == 1:
-                    pred = a
-                elif filter_type == 2:
-                    pred = up
-                elif filter_type == 3:
-                    pred = (a + up) // 2
-                else:
-                    pred = _paeth(a, up, c)
-                enc[i] = (line[i] - pred) & 0xFF
-        raw.append(filter_type)
-        raw.extend(enc)
-        prev = line
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
-    plte = b"".join(bytes(rgb) for rgb in _PAL16)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"PLTE", plte)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
+    return _png_encode(
+        w, h, lambda x, y: ((x + y) % 16,),
+        color_type=3, row_filter=lambda j: filter_type,
+        plte=b"".join(bytes(rgb) for rgb in _PAL16),
     )
 
 
@@ -1651,68 +1632,261 @@ def _jpeg_seg(marker: int, payload: bytes) -> bytes:
     return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
 
 
-# Encoder-side Huffman tables (minimal, written into DHT — the decoder
-# reads whatever tables the file carries, so these being non-standard
-# exercises the generic table parse): DC categories 0-11 as 4-bit
-# codes; AC only needs EOB for block-constant content.
-_ENC_DC_BITS = [0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_ENC_DC_VALS = list(range(12))
-_ENC_AC_BITS = [1] + [0] * 15
-_ENC_AC_VALS = [0x00]  # EOB
+# Encoder-side Huffman tables as (BITS, HUFFVAL) pairs, written into
+# DHT — the decoder reads whatever tables the file carries, so these
+# being non-standard exercises the generic table parse.  _ENC_DC: DC
+# categories 0-11 as 4-bit codes.  _ENC_AC: EOB only, enough for
+# block-constant content.
+_ENC_DC = ([0, 0, 0, 12] + [0] * 12, list(range(12)))
+_ENC_AC = ([1] + [0] * 15, [0x00])
 
 # Complete AC table for the coefficient-field encoders (progressive
 # scans emit arbitrary run/size, ZRL and EOBn symbols): canonical
 # codes for all 256 symbols — 0x00-0xFE at 8 bits, 0xFF at 9 bits
 # (the 8-bit all-ones word stays unused and the 9-bit code is
 # 111111110, so no all-1s codeword exists, per T.81 C.2).
-_ENC_AC_FULL_BITS = [0, 0, 0, 0, 0, 0, 0, 255, 1, 0, 0, 0, 0, 0, 0, 0]
-_ENC_AC_FULL_VALS = list(range(256))
+_ENC_AC_FULL = ([0] * 7 + [255, 1] + [0] * 7, list(range(256)))
 
 # 12-bit DC table: differences span ±32767 → SSSS categories 0..15
 # (T.81 Table F.1 note for P=12).  15 codes at 4 bits (0..14) and one
 # at 5 bits (11110) — the 5-bit code is not all-ones, per C.2.
-_ENC_DC12_BITS = [0, 0, 0, 15, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_ENC_DC12_VALS = list(range(16))
+_ENC_DC12 = ([0, 0, 0, 15, 1] + [0] * 11, list(range(16)))
+
+# The progressive scan script (component index, or None for a DC scan
+# over every component; Ss, Se, Ah, Al): DC first at Al=1 then
+# refined; per-component AC bands first-coded at Al=2 (Y) / Al=1
+# (chroma) then refined tier by tier.  A grayscale file runs the
+# component-0 scans.
+_PROGRESSIVE_SCANS = (
+    (None, 0, 0, 0, 1),
+    (0, 1, 5, 0, 2),
+    (1, 1, 63, 0, 1),
+    (2, 1, 63, 0, 1),
+    (0, 6, 63, 0, 2),
+    (None, 0, 0, 1, 0),
+    (0, 1, 5, 2, 1),
+    (0, 6, 63, 2, 1),
+    (0, 1, 5, 1, 0),
+    (0, 6, 63, 1, 0),
+    (1, 1, 63, 1, 0),
+    (2, 1, 63, 1, 0),
+)
+
+
+def _jpeg_encode(
+    w: int,
+    h: int,
+    factors,
+    fields,
+    *,
+    sof: int = 0xC0,
+    prec: int = 8,
+    q0: int = 1,
+    dc=_ENC_DC,
+    ac=_ENC_AC,
+    restart_interval: int = 0,
+    scans=((None, 0, 63, 0, 0),),
+) -> bytes:
+    """Serialize quantized coefficients as a JFIF stream — the one
+    encoder behind every entropy-coded ``_synth_jpeg_*``, mirroring
+    ``_decode_jpeg``.  Component ci (id ci + 1, sampling ``factors[ci]``
+    = (h, v), quant table 0) has ``fields[ci]``, an int array
+    (block rows, block cols, 64) of zigzag coefficients padded to the
+    interleaved MCU grid.  The quant table is ``q0`` at DC and 1
+    elsewhere, 16-bit entries when ``prec`` > 8.
+
+    Each entry of ``scans`` is (component or None for all, Ss, Se, Ah,
+    Al).  The default is the sequential stream: one full-band scan,
+    Ss=0..63, Ah=Al=0, each block ending with its own EOB.  A scan
+    covering several components walks the interleaved MCU grid, a
+    single-component scan that component's own block grid.  DC first
+    scans code the prediction difference of ``coef >> Al`` (arithmetic
+    shift, G.1.2.1), DC refinements bit Al.  AC first scans code
+    run/size symbols with ZRL and defer all-zero block tails into EOB
+    runs; AC refinements code newly-nonzero coefficients as size-1
+    symbols and append the correction bits of history coefficients
+    passed (in a ZRL, between symbols, or inside an EOB run) after the
+    symbol that passes them.  Every ``restart_interval`` units a
+    restart flushes the EOB run, byte-aligns, emits RST(n mod 8) and
+    resets DC prediction."""
+    nc = len(factors)
+    hmax = max(fh for fh, _ in factors)
+    vmax = max(fv for _, fv in factors)
+    mx_n = -(-w // (8 * hmax))
+    my_n = -(-h // (8 * vmax))
+    blocks = [f.tolist() for f in fields]
+    dc_tab = _huff_canonical(*dc)
+    ac_tab = _huff_canonical(*ac)
+    qt = [q0] + [1] * 63
+    out = bytearray(
+        b"\xff\xd8"
+        + _jpeg_seg(
+            0xDB,
+            b"\x10" + struct.pack(">64H", *qt) if prec > 8 else b"\x00" + bytes(qt),
+        )
+        + _jpeg_seg(
+            sof,
+            struct.pack(">BHHB", prec, h, w, nc)
+            + b"".join(
+                bytes([ci + 1, (fh << 4) | fv, 0]) for ci, (fh, fv) in enumerate(factors)
+            ),
+        )
+        + _jpeg_seg(0xC4, b"\x00" + bytes(dc[0]) + bytes(dc[1]))
+        + _jpeg_seg(0xC4, b"\x10" + bytes(ac[0]) + bytes(ac[1]))
+    )
+    if restart_interval:
+        out += _jpeg_seg(0xDD, struct.pack(">H", restart_interval))
+
+    def units(cis):
+        """The scan's data units (§A.2), each a list of (component, block)."""
+        if len(cis) == 1:
+            (ci,) = cis
+            fh, fv = factors[ci]
+            cw, ch = -(-w * fh // hmax), -(-h * fv // vmax)
+            for row in blocks[ci][: -(-ch // 8)]:
+                for blk in row[: -(-cw // 8)]:
+                    yield ((ci, blk),)
+            return
+        for my in range(my_n):
+            for mx in range(mx_n):
+                yield [
+                    (ci, blocks[ci][my * fv + bv][mx * fh + bh])
+                    for ci in cis
+                    for fh, fv in (factors[ci],)
+                    for bv in range(fv)
+                    for bh in range(fh)
+                ]
+
+    for comp, ss, se, ah, al in scans:
+        cis = range(nc) if comp is None else (comp,)
+        out += _jpeg_seg(
+            0xDA,
+            bytes([len(cis)])
+            + b"".join(bytes([ci + 1, 0x00]) for ci in cis)
+            + bytes([ss, se, (ah << 4) | al]),
+        )
+        bw = _BitWriter()
+        pred = [0] * nc
+        eobrun = 0
+        pending: list[int] = []  # correction bits owed by the EOB run
+
+        def put(tab, run: int, v: int) -> None:
+            """Symbol (run << 4 | size of v), then v in size bits (F.1.2)."""
+            s = abs(v).bit_length()
+            bw.write(*tab[(run << 4) | s])
+            if s:
+                bw.write(v if v >= 0 else v + (1 << s) - 1, s)
+
+        def end_run() -> None:
+            nonlocal eobrun
+            while eobrun > 0:
+                r = min(eobrun.bit_length() - 1, 14)
+                take = min(eobrun, (1 << (r + 1)) - 1)
+                bw.write(*ac_tab[r << 4])
+                if r:
+                    bw.write(take - (1 << r), r)
+                eobrun -= take
+            for bit in pending:
+                bw.write(bit, 1)
+            pending.clear()
+
+        def code_ac(blk) -> None:
+            nonlocal eobrun
+            coefs = blk[ss or 1 : se + 1]
+            if not any(coefs):  # nothing to code or correct: EOB
+                eobrun += 1
+                return
+            # band positions: (0, 0) zero history, (1, correction bit)
+            # history coefficient, (2, value) newly nonzero
+            band = []
+            for c in coefs:
+                a = abs(c)
+                if ah and a >> ah:
+                    band.append((1, (a >> al) & 1))
+                elif a >> al:
+                    band.append((2, a >> al if c >= 0 else -(a >> al)))
+                else:
+                    band.append((0, 0))
+            new = [k for k, (t, _) in enumerate(band) if t == 2]
+            if new:
+                end_run()
+            j = 0
+            for nj in new:
+                zeros = sum(1 for t, _ in band[j:nj] if t == 0)
+                while zeros > 15:
+                    # ZRL passes 16 zero-history positions plus the
+                    # history coefficients among them
+                    bw.write(*ac_tab[0xF0])
+                    passed = 0
+                    while passed < 16:
+                        t, bit = band[j]
+                        if t:
+                            bw.write(bit, 1)
+                        else:
+                            passed += 1
+                        j += 1
+                    zeros -= 16
+                put(ac_tab, zeros, band[nj][1])
+                for t, bit in band[j:nj]:
+                    if t:
+                        bw.write(bit, 1)
+                j = nj + 1
+            if j < len(band):
+                eobrun += 1
+                pending.extend(bit for t, bit in band[j:] if t)
+
+        for unit, blks in enumerate(units(cis)):
+            if restart_interval and unit and unit % restart_interval == 0:
+                end_run()
+                bw.marker(0xD0 + (unit // restart_interval - 1) % 8)
+                pred = [0] * nc
+            for ci, blk in blks:
+                if ss == 0 and ah:
+                    bw.write((blk[0] >> al) & 1, 1)
+                elif ss == 0:
+                    put(dc_tab, 0, (blk[0] >> al) - pred[ci])
+                    pred[ci] = blk[0] >> al
+                if se:
+                    code_ac(blk)
+                if ss == 0:
+                    end_run()  # a full-band scan ends each block at once
+        end_run()
+        out += bw.flush()
+    return bytes(out + b"\xff\xd9")
+
+
+def _dc_fields(w: int, h: int, factors, dc):
+    """Coefficient fields of block-constant content: block (bx, by) of
+    component ci carries the DC ``dc(ci, bx, by)`` (evaluated over
+    integer block-index grids) and zero AC.  Every component grid must
+    be whole blocks."""
+    import numpy as np
+
+    hmax = max(fh for fh, _ in factors)
+    vmax = max(fv for _, fv in factors)
+    fields = []
+    for ci, (fh, fv) in enumerate(factors):
+        by = np.arange(h * fv // vmax // 8)[:, None]
+        bx = np.arange(w * fh // hmax // 8)[None, :]
+        f = np.zeros((len(by), bx.shape[1], 64), dtype=np.int64)
+        f[..., 0] = dc(ci, bx, by)
+        fields.append(f)
+    return fields
 
 
 def _synth_jpeg_gray_bytes(w: int, h: int, mid: int) -> bytes:
     """Real baseline grayscale JFIF whose 8×8 blocks are each CONSTANT
     with the known value ``(bx*7 + by*13 + mid) % 256`` — encoded with
-    a real DCT-domain representation (exact integer DC, zero AC), unit
-    quantization, canonical Huffman DC-diff coding and byte stuffing.
-    ``w``/``h`` must be multiples of 8 (no partial blocks → the
-    closed-form oracle needs no edge-replication model)."""
-    import struct
-
+    a real DCT-domain representation (exact integer DC 8·(v − 128) of
+    a constant block, zero AC), unit quantization, canonical Huffman
+    DC-diff coding and byte stuffing.  ``w``/``h`` must be multiples
+    of 8 (no partial blocks → the closed-form oracle needs no
+    edge-replication model)."""
     assert w % 8 == 0 and h % 8 == 0
-    dc_tab = _huff_canonical(_ENC_DC_BITS, _ENC_DC_VALS)
-    ac_tab = _huff_canonical(_ENC_AC_BITS, _ENC_AC_VALS)
-
-    dqt = _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))  # table 0, all-ones
-    sof = _jpeg_seg(0xC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    dht_dc = _jpeg_seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    dht_ac = _jpeg_seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    sos = _jpeg_seg(0xDA, bytes([1, 1, 0x00]) + bytes([0, 63, 0]))
-
-    bw = _BitWriter()
-    prev_dc = 0
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            v = (bx * 7 + by * 13 + mid) % 256
-            dc = 8 * (v - 128)  # exact DCT DC of a constant block, q=1
-            diff = dc - prev_dc
-            prev_dc = dc
-            mag = abs(diff)
-            s = mag.bit_length()
-            code, length = dc_tab[s]
-            bw.write(code, length)
-            if s:
-                bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-            code, length = ac_tab[0x00]  # EOB: all 63 AC are zero
-            bw.write(code, length)
-    return (
-        b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos + bw.flush() + b"\xff\xd9"
+    fields = _dc_fields(
+        w, h, [(1, 1)], lambda ci, bx, by: 8 * ((bx * 7 + by * 13 + mid) % 256 - 128)
     )
+    return _jpeg_encode(w, h, [(1, 1)], fields)
 
 
 class _BitReader:
@@ -1862,8 +2036,6 @@ def _decode_jpeg(b: bytes):
     Progressive 12-bit, a sequential scan covering a subset of the
     components, arithmetic coding (SOF9+), lossless and hierarchical
     processes raise NotImplementedError — the PIL/libjpeg boundary."""
-    import struct
-
     import numpy as np
 
     if b[:2] != b"\xff\xd8":
@@ -1881,24 +2053,9 @@ def _decode_jpeg(b: bytes):
     restart_interval = 0
     i = 2
     while i + 1 < len(b):
-        if b[i] != 0xFF:
-            raise ValueError("expected marker")
-        # spec-legal 0xFF FILL bytes may pad before any marker
-        # (ITU T.81 §B.1.1.2) — skip them so a padded file hits the
-        # intended clean boundary, not a garbage segment-length read
-        while i + 1 < len(b) and b[i + 1] == 0xFF:
-            i += 1
-        marker = b[i + 1]
-        i += 2
+        marker, payload, i = _jpeg_segment(b, i)
         if marker == 0xD9:
             break  # EOI; before any SOS → clean "no SOS" error
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if i + 2 > len(b):
-            raise ValueError("truncated JPEG segment header")
-        (seglen,) = struct.unpack(">H", b[i : i + 2])
-        payload = b[i + 2 : i + seglen]
-        i += seglen
         if marker == 0xDD:
             if len(payload) < 2:
                 raise ValueError("truncated JPEG DRI payload")
@@ -2227,39 +2384,19 @@ def _synth_jpeg12_gray_bytes(w: int, h: int, mid: int) -> bytes:
     v = (709·bx + 1301·by + 37·mid) % 4096: DC magnitudes reach
     ±16376 and successive diffs span the DEEP SSSS categories (up to
     15) that only exist at 12-bit precision."""
-    import struct
-
     assert w % 8 == 0 and h % 8 == 0
     q0 = 256 if (mid // 8) % 2 == 0 else 1
-    dc_tab = _huff_canonical(_ENC_DC12_BITS, _ENC_DC12_VALS)
-    ac_tab = _huff_canonical(_ENC_AC_BITS, _ENC_AC_VALS)
 
-    dqt = _jpeg_seg(0xDB, b"\x10" + struct.pack(">64H", q0, *([1] * 63)))
-    sof = _jpeg_seg(0xC1, struct.pack(">BHHB", 12, h, w, 1) + bytes([1, 0x11, 0]))
-    dht_dc = _jpeg_seg(0xC4, b"\x00" + bytes(_ENC_DC12_BITS) + bytes(_ENC_DC12_VALS))
-    dht_ac = _jpeg_seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    sos = _jpeg_seg(0xDA, bytes([1, 1, 0x00]) + bytes([0, 63, 0]))
+    def dc(ci, bx, by):
+        if q0 == 256:
+            v = 2048 + 32 * (((bx * 7 + by * 13 + mid) % 64) - 32)
+        else:
+            v = (709 * bx + 1301 * by + 37 * mid) % 4096
+        return 8 * (v - 2048) // q0  # exact: v−2048 ≡ 0 (mod 32) when q0=256
 
-    bw = _BitWriter()
-    prev_dc = 0
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            if (mid // 8) % 2 == 0:
-                v = 2048 + 32 * (((bx * 7 + by * 13 + mid) % 64) - 32)
-            else:
-                v = (709 * bx + 1301 * by + 37 * mid) % 4096
-            dc = 8 * (v - 2048) // q0  # exact: v−2048 ≡ 0 (mod 32) when q0=256
-            diff = dc - prev_dc
-            prev_dc = dc
-            s = abs(diff).bit_length()
-            code, length = dc_tab[s]
-            bw.write(code, length)
-            if s:
-                bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-            code, length = ac_tab[0x00]
-            bw.write(code, length)
-    return (
-        b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos + bw.flush() + b"\xff\xd9"
+    return _jpeg_encode(
+        w, h, [(1, 1)], _dc_fields(w, h, [(1, 1)], dc),
+        sof=0xC1, prec=12, q0=q0, dc=_ENC_DC12,
     )
 
 
@@ -2279,66 +2416,16 @@ def _synth_jpeg_420_bytes(
     (byte-aligned 1-fill, n cycling mod 8, DC prediction reset) every
     that many MCUs — the seekability device of large-scale JPEG
     streams."""
-    import struct
-
     assert w % 16 == 0 and h % 16 == 0
-    dc_tab = _huff_canonical(_ENC_DC_BITS, _ENC_DC_VALS)
-    ac_tab = _huff_canonical(_ENC_AC_BITS, _ENC_AC_VALS)
+    factors = [(2, 2), (1, 1), (1, 1)]
+    mul = [(7, 13, 1), (11, 3, 1), (5, 17, 2)]  # per component: bx, by, mid
 
-    dqt = _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))
-    sof = _jpeg_seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]),
-    )
-    dht_dc = _jpeg_seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    dht_ac = _jpeg_seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    dri = (
-        _jpeg_seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    sos = _jpeg_seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00]) + bytes([0, 63, 0]))
+    def dc(ci, bx, by):
+        kx, ky, km = mul[ci]
+        return 8 * ((bx * kx + by * ky + km * mid) % 256 - 128)
 
-    bw = _BitWriter()
-    pred = [0, 0, 0]
-
-    def put_block(ci: int, v: int) -> None:
-        dc = 8 * (v - 128)
-        diff = dc - pred[ci]
-        pred[ci] = dc
-        mag = abs(diff)
-        s = mag.bit_length()
-        code, length = dc_tab[s]
-        bw.write(code, length)
-        if s:
-            bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        code, length = ac_tab[0x00]
-        bw.write(code, length)
-
-    mcu_idx = 0
-    for myi in range(h // 16):
-        for mxi in range(w // 16):
-            if restart_interval and mcu_idx and mcu_idx % restart_interval == 0:
-                bw.marker(0xD0 + ((mcu_idx // restart_interval - 1) % 8))
-                pred = [0, 0, 0]
-            for bv in range(2):
-                for bh_ in range(2):
-                    bx, by = 2 * mxi + bh_, 2 * myi + bv
-                    put_block(0, (bx * 7 + by * 13 + mid) % 256)
-            put_block(1, (mxi * 11 + myi * 3 + mid) % 256)
-            put_block(2, (mxi * 5 + myi * 17 + 2 * mid) % 256)
-            mcu_idx += 1
-    return (
-        b"\xff\xd8"
-        + dqt
-        + sof
-        + dht_dc
-        + dht_ac
-        + dri
-        + sos
-        + bw.flush()
-        + b"\xff\xd9"
+    return _jpeg_encode(
+        w, h, factors, _dc_fields(w, h, factors, dc), restart_interval=restart_interval
     )
 
 
@@ -2352,51 +2439,14 @@ def _synth_jpeg_sampled_bytes(w: int, h: int, mid: int, factors) -> bytes:
     pinned against closed-form plane sums.  ``w``/``h`` must be
     multiples of 8·hmax / 8·vmax so every component grid is whole
     blocks and the closed form needs no edge model."""
-    import struct
-
     hmax = max(f[0] for f in factors)
     vmax = max(f[1] for f in factors)
     assert w % (8 * hmax) == 0 and h % (8 * vmax) == 0
-    dc_tab = _huff_canonical(_ENC_DC_BITS, _ENC_DC_VALS)
-    ac_tab = _huff_canonical(_ENC_AC_BITS, _ENC_AC_VALS)
-
-    dqt = _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))
-    sof = _jpeg_seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes(
-            byte
-            for ci, (fh, fv) in enumerate(factors)
-            for byte in (ci + 1, (fh << 4) | fv, 0)
-        ),
+    fields = _dc_fields(
+        w, h, factors,
+        lambda ci, bx, by: 8 * ((bx * 7 + by * 13 + mid + 37 * ci) % 256 - 128),
     )
-    dht_dc = _jpeg_seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    dht_ac = _jpeg_seg(0xC4, b"\x10" + bytes(_ENC_AC_BITS) + bytes(_ENC_AC_VALS))
-    sos = _jpeg_seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00]) + bytes([0, 63, 0]))
-
-    bw = _BitWriter()
-    pred = [0, 0, 0]
-
-    def put_block(ci: int, v: int) -> None:
-        dc = 8 * (v - 128)
-        diff = dc - pred[ci]
-        pred[ci] = dc
-        s = abs(diff).bit_length()
-        code, length = dc_tab[s]
-        bw.write(code, length)
-        if s:
-            bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        code, length = ac_tab[0x00]
-        bw.write(code, length)
-
-    for myi in range(h // (8 * vmax)):
-        for mxi in range(w // (8 * hmax)):
-            for ci, (fh, fv) in enumerate(factors):
-                for bv in range(fv):
-                    for bh_ in range(fh):
-                        bx, by = fh * mxi + bh_, fv * myi + bv
-                        put_block(ci, (bx * 7 + by * 13 + mid + 37 * ci) % 256)
-    return b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos + bw.flush() + b"\xff\xd9"
+    return _jpeg_encode(w, h, factors, fields)
 
 
 def _synth_coef_field(w: int, h: int, mid: int, color: bool):
@@ -2407,33 +2457,24 @@ def _synth_coef_field(w: int, h: int, mid: int, color: bool):
     2 (|v| ≤ 7 — refined across all successive-approximation tiers)
     and zigzag 40 (|v| ≤ 3 — dead until the refinement scans, forcing
     newly-nonzero insertions after long zero-history skips/ZRL);
-    chroma carries DC plus one low AC each.  Returns (comps_spec,
-    fields) where fields[ci] is an int array (padded_bh, padded_bw,
-    64); padding blocks beyond the component's true block grid are
+    chroma carries DC plus one low AC each.  Returns (factors, fields)
+    where fields[ci] is an int array (padded_bh, padded_bw, 64);
+    padding blocks beyond the component's true block grid are
     all-zero."""
     import numpy as np
 
-    if color:
-        spec = [
-            {"id": 1, "h": 2, "v": 2, "tq": 0},
-            {"id": 2, "h": 1, "v": 1, "tq": 0},
-            {"id": 3, "h": 1, "v": 1, "tq": 0},
-        ]
-    else:
-        spec = [{"id": 1, "h": 1, "v": 1, "tq": 0}]
-    hmax = max(c["h"] for c in spec)
-    vmax = max(c["v"] for c in spec)
+    factors = [(2, 2), (1, 1), (1, 1)] if color else [(1, 1)]
+    hmax = max(fh for fh, _ in factors)
+    vmax = max(fv for _, fv in factors)
     mx_n = (w + 8 * hmax - 1) // (8 * hmax)
     my_n = (h + 8 * vmax - 1) // (8 * vmax)
     fields = []
-    for ci, c in enumerate(spec):
-        cw = -(-w * c["h"] // hmax)
-        ch = -(-h * c["v"] // vmax)
-        bw_, bh_ = -(-cw // 8), -(-ch // 8)
-        pbw, pbh = mx_n * c["h"], my_n * c["v"]
-        f = np.zeros((pbh, pbw, 64), dtype=np.int64)
-        for by in range(bh_):
-            for bx in range(bw_):
+    for ci, (fh, fv) in enumerate(factors):
+        cw = -(-w * fh // hmax)
+        ch = -(-h * fv // vmax)
+        f = np.zeros((my_n * fv, mx_n * fh, 64), dtype=np.int64)
+        for by in range(-(-ch // 8)):
+            for bx in range(-(-cw // 8)):
                 if ci == 0:
                     v = (bx * 7 + by * 13 + mid) % 256
                     # +parity makes half the DCs odd, so the DC
@@ -2450,30 +2491,7 @@ def _synth_coef_field(w: int, h: int, mid: int, color: bool):
                     f[by, bx, 0] = 8 * (v - 128)
                     f[by, bx, 5] = ((2 * bx + by + mid) % 5) - 2
         fields.append(f)
-    return spec, fields
-
-
-def _jpeg_headers_from_field(w, h, spec, sof_marker, restart_interval):
-    import struct
-
-    dqt = _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))
-    sof = _jpeg_seg(
-        sof_marker,
-        struct.pack(">BHHB", 8, h, w, len(spec))
-        + b"".join(
-            bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]]) for c in spec
-        ),
-    )
-    dht_dc = _jpeg_seg(0xC4, b"\x00" + bytes(_ENC_DC_BITS) + bytes(_ENC_DC_VALS))
-    dht_ac = _jpeg_seg(
-        0xC4, b"\x10" + bytes(_ENC_AC_FULL_BITS) + bytes(_ENC_AC_FULL_VALS)
-    )
-    dri = (
-        _jpeg_seg(0xDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    return dqt, sof, dht_dc, dht_ac, dri
+    return factors, fields
 
 
 def _synth_jpeg_baseline_from_field(
@@ -2484,75 +2502,9 @@ def _synth_jpeg_baseline_from_field(
     closed-form driver-gated).  Interleaved MCU walk for color,
     raster block walk for grayscale; arbitrary run/size AC coding with
     ZRL via the full 256-symbol table."""
-    spec, fields = _synth_coef_field(w, h, mid, color)
-    dqt, sof, dht_dc, dht_ac, dri = _jpeg_headers_from_field(
-        w, h, spec, 0xC0, restart_interval
-    )
-    dc_tab = _huff_canonical(_ENC_DC_BITS, _ENC_DC_VALS)
-    ac_tab = _huff_canonical(_ENC_AC_FULL_BITS, _ENC_AC_FULL_VALS)
-    sos = _jpeg_seg(
-        0xDA,
-        bytes([len(spec)])
-        + b"".join(bytes([c["id"], 0x00]) for c in spec)
-        + bytes([0, 63, 0]),
-    )
-    bw = _BitWriter()
-    pred = [0] * len(spec)
-
-    def put_block(ci: int, blk) -> None:
-        diff = int(blk[0]) - pred[ci]
-        pred[ci] = int(blk[0])
-        s = abs(diff).bit_length()
-        code, length = dc_tab[s]
-        bw.write(code, length)
-        if s:
-            bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        nz = [k for k in range(1, 64) if blk[k]]
-        run = 0
-        for k in range(1, (max(nz) + 1) if nz else 1):
-            v = int(blk[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, length = ac_tab[0xF0]
-                bw.write(code, length)
-                run -= 16
-            s = abs(v).bit_length()
-            code, length = ac_tab[(run << 4) | s]
-            bw.write(code, length)
-            bw.write(v if v >= 0 else v + (1 << s) - 1, s)
-            run = 0
-        if not nz or max(nz) < 63:
-            code, length = ac_tab[0x00]
-            bw.write(code, length)
-
-    if color:
-        mcu = 0
-        for myi in range(fields[1].shape[0]):
-            for mxi in range(fields[1].shape[1]):
-                if restart_interval and mcu and mcu % restart_interval == 0:
-                    bw.marker(0xD0 + ((mcu // restart_interval - 1) % 8))
-                    pred = [0] * len(spec)
-                for ci, c in enumerate(spec):
-                    for bv in range(c["v"]):
-                        for bh_ in range(c["h"]):
-                            put_block(
-                                ci, fields[ci][myi * c["v"] + bv, mxi * c["h"] + bh_]
-                            )
-                mcu += 1
-    else:
-        unit = 0
-        for byi in range(fields[0].shape[0]):
-            for bxi in range(fields[0].shape[1]):
-                if restart_interval and unit and unit % restart_interval == 0:
-                    bw.marker(0xD0 + ((unit // restart_interval - 1) % 8))
-                    pred = [0]
-                put_block(0, fields[0][byi, bxi])
-                unit += 1
-    return (
-        b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + dri + sos + bw.flush()
-        + b"\xff\xd9"
+    factors, fields = _synth_coef_field(w, h, mid, color)
+    return _jpeg_encode(
+        w, h, factors, fields, ac=_ENC_AC_FULL, restart_interval=restart_interval
     )
 
 
@@ -2565,13 +2517,12 @@ def _synth_jpeg_progressive_bytes(
     dc_only: bool = False,
 ) -> bytes:
     """PROGRESSIVE (SOF2) serialization of the same coefficient field
-    — a realistic successive-approximation scan script (DC first at
-    Al=1 then refined; per-component AC bands first-coded at Al=2 (Y)
-    / Al=1 (chroma) then refined tier by tier), exercising EOB runs
-    across blocks, ZRL-in-refinement zero-history skips, correction
-    bits, and newly-nonzero insertions at EVERY precision tier.
-    Restart intervals, when set, apply per scan with the mod-8 RSTn
-    cycle and flush the pending EOB run.  ``dc_only`` zeroes the AC
+    — a realistic successive-approximation scan script
+    (``_PROGRESSIVE_SCANS``), exercising EOB runs across blocks,
+    ZRL-in-refinement zero-history skips, correction bits, and
+    newly-nonzero insertions at EVERY precision tier.  Restart
+    intervals, when set, apply per scan with the mod-8 RSTn cycle and
+    flush the pending EOB run.  ``dc_only`` zeroes the AC
     part of the field — the DRIVER-GATE variant: with block-constant
     content the decoded pixel sums stay closed-form (the DC parity
     offsets round away: v + 1/8 → v), while the scan script still
@@ -2580,244 +2531,15 @@ def _synth_jpeg_progressive_bytes(
     EOB runs through every AC band); AC insertions/corrections are
     pinned by the cross-codec equality pytest instead, where the
     oracle burden is a bit-identical baseline decode rather than SQL."""
-    spec, fields = _synth_coef_field(w, h, mid, color)
+    factors, fields = _synth_coef_field(w, h, mid, color)
     if dc_only:
         for f in fields:
             f[:, :, 1:] = 0
-    dqt, sof, dht_dc, dht_ac, dri = _jpeg_headers_from_field(
-        w, h, spec, 0xC2, restart_interval
+    return _jpeg_encode(
+        w, h, factors, fields, sof=0xC2, ac=_ENC_AC_FULL,
+        restart_interval=restart_interval,
+        scans=[s for s in _PROGRESSIVE_SCANS if s[0] is None or s[0] < len(factors)],
     )
-    dc_tab = _huff_canonical(_ENC_DC_BITS, _ENC_DC_VALS)
-    ac_tab = _huff_canonical(_ENC_AC_FULL_BITS, _ENC_AC_FULL_VALS)
-
-    def sos_hdr(comp_ids, ss, se, ah, al):
-        return _jpeg_seg(
-            0xDA,
-            bytes([len(comp_ids)])
-            + b"".join(bytes([cid, 0x00]) for cid in comp_ids)
-            + bytes([ss, se, (ah << 4) | al]),
-        )
-
-    def comp_blocks(ci):
-        """Blocks of the NON-interleaved grid (what AC scans cover)."""
-        c = spec[ci]
-        hmax = max(x["h"] for x in spec)
-        vmax = max(x["v"] for x in spec)
-        cw = -(-w * c["h"] // hmax)
-        ch = -(-h * c["v"] // vmax)
-        for byi in range(-(-ch // 8)):
-            for bxi in range(-(-cw // 8)):
-                yield fields[ci][byi, bxi]
-
-    out = b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + dri
-
-    def dc_scan(al):
-        bw = _BitWriter()
-        pred = [0] * len(spec)
-        unit = 0
-
-        def one(ci, blk):
-            d = int(blk[0]) >> al  # arithmetic shift per G.1.2.1
-            diff = d - pred[ci]
-            pred[ci] = d
-            s = abs(diff).bit_length()
-            code, length = dc_tab[s]
-            bw.write(code, length)
-            if s:
-                bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-
-        if len(spec) > 1:
-            for myi in range(fields[1].shape[0]):
-                for mxi in range(fields[1].shape[1]):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        bw.marker(0xD0 + ((unit // restart_interval - 1) % 8))
-                        pred = [0] * len(spec)
-                    for ci, c in enumerate(spec):
-                        for bv in range(c["v"]):
-                            for bh_ in range(c["h"]):
-                                one(
-                                    ci,
-                                    fields[ci][
-                                        myi * c["v"] + bv, mxi * c["h"] + bh_
-                                    ],
-                                )
-                    unit += 1
-        else:
-            for byi in range(fields[0].shape[0]):
-                for bxi in range(fields[0].shape[1]):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        bw.marker(0xD0 + ((unit // restart_interval - 1) % 8))
-                        pred = [0]
-                    one(0, fields[0][byi, bxi])
-                    unit += 1
-        return sos_hdr([c["id"] for c in spec], 0, 0, 0, al) + bw.flush()
-
-    def dc_refine_scan(ah, al):
-        bw = _BitWriter()
-        unit = 0
-        if len(spec) > 1:
-            for myi in range(fields[1].shape[0]):
-                for mxi in range(fields[1].shape[1]):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        bw.marker(0xD0 + ((unit // restart_interval - 1) % 8))
-                    for ci, c in enumerate(spec):
-                        for bv in range(c["v"]):
-                            for bh_ in range(c["h"]):
-                                blk = fields[ci][
-                                    myi * c["v"] + bv, mxi * c["h"] + bh_
-                                ]
-                                bw.write((int(blk[0]) >> al) & 1, 1)
-                    unit += 1
-        else:
-            for byi in range(fields[0].shape[0]):
-                for bxi in range(fields[0].shape[1]):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        bw.marker(0xD0 + ((unit // restart_interval - 1) % 8))
-                    bw.write((int(fields[0][byi, bxi][0]) >> al) & 1, 1)
-                    unit += 1
-        return sos_hdr([c["id"] for c in spec], 0, 0, ah, al) + bw.flush()
-
-    def write_eobrun(bw, run):
-        while run > 0:
-            r = run.bit_length() - 1
-            r = min(r, 14)
-            take = min(run, (1 << (r + 1)) - 1)
-            code, length = ac_tab[r << 4]
-            bw.write(code, length)
-            if r:
-                bw.write(take - (1 << r), r)
-            run -= take
-
-    def ac_first_scan(ci, ss, se, al):
-        bw = _BitWriter()
-        eob = 0
-        unit = 0
-        for blk in comp_blocks(ci):
-            if restart_interval and unit and unit % restart_interval == 0:
-                write_eobrun(bw, eob)
-                eob = 0
-                bw.marker(0xD0 + ((unit // restart_interval - 1) % 8))
-            unit += 1
-            vals = [
-                (abs(int(blk[k])) >> al) * (1 if blk[k] >= 0 else -1)
-                for k in range(ss, se + 1)
-            ]
-            nz = [j for j, v in enumerate(vals) if v]
-            if not nz:
-                eob += 1
-                continue
-            write_eobrun(bw, eob)
-            eob = 0
-            run = 0
-            for j in range(max(nz) + 1):
-                v = vals[j]
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    code, length = ac_tab[0xF0]
-                    bw.write(code, length)
-                    run -= 16
-                s = abs(v).bit_length()
-                code, length = ac_tab[(run << 4) | s]
-                bw.write(code, length)
-                bw.write(v if v >= 0 else v + (1 << s) - 1, s)
-                run = 0
-            if max(nz) < se - ss:
-                eob += 1
-        write_eobrun(bw, eob)
-        return sos_hdr([spec[ci]["id"]], ss, se, 0, al) + bw.flush()
-
-    def ac_refine_scan(ci, ss, se, ah, al):
-        bw = _BitWriter()
-        eob = 0
-        eob_bits: list[int] = []
-        unit = 0
-
-        def flush():
-            nonlocal eob, eob_bits
-            write_eobrun(bw, eob)
-            for bit in eob_bits:
-                bw.write(bit, 1)
-            eob = 0
-            eob_bits = []
-
-        for blk in comp_blocks(ci):
-            if restart_interval and unit and unit % restart_interval == 0:
-                flush()
-                bw.marker(0xD0 + ((unit // restart_interval - 1) % 8))
-            unit += 1
-            # classify band positions: history-nonzero (correction
-            # bit), newly-nonzero at this tier (symbol), zero
-            cls = []
-            for k in range(ss, se + 1):
-                a = abs(int(blk[k]))
-                if a >> ah:
-                    cls.append(("hist", (a >> al) & 1))
-                elif a >> al:
-                    cls.append(("new", 1 if blk[k] > 0 else 0))
-                else:
-                    cls.append(("zero", 0))
-            new_idx = [j for j, (t, _) in enumerate(cls) if t == "new"]
-            if not new_idx:
-                eob += 1
-                eob_bits.extend(bit for t, bit in cls if t == "hist")
-                continue
-            flush()
-            j = 0
-            for nj in new_idx:
-                # zero-history zeros strictly before the new coef
-                zeros = sum(1 for t, _ in cls[j:nj] if t == "zero")
-                while zeros > 15:
-                    # ZRL consumes 16 zero-history positions plus the
-                    # corrections of history coeffs passed on the way
-                    code, length = ac_tab[0xF0]
-                    bw.write(code, length)
-                    consumed = 0
-                    while consumed < 16:
-                        t, bit = cls[j]
-                        if t == "hist":
-                            bw.write(bit, 1)
-                        else:
-                            consumed += 1
-                        j += 1
-                    zeros -= 16
-                code, length = ac_tab[(zeros << 4) | 1]
-                bw.write(code, length)
-                bw.write(cls[nj][1], 1)  # sign: 1 = +(1<<al)
-                for t, bit in cls[j:nj]:
-                    if t == "hist":
-                        bw.write(bit, 1)
-                j = nj + 1
-            if j <= se - ss:
-                eob += 1
-                eob_bits.extend(bit for t, bit in cls[j:] if t == "hist")
-        flush()
-        return sos_hdr([spec[ci]["id"]], ss, se, ah, al) + bw.flush()
-
-    if color:
-        out += dc_scan(1)
-        out += ac_first_scan(0, 1, 5, 2)
-        out += ac_first_scan(1, 1, 63, 1)
-        out += ac_first_scan(2, 1, 63, 1)
-        out += ac_first_scan(0, 6, 63, 2)
-        out += dc_refine_scan(1, 0)
-        out += ac_refine_scan(0, 1, 5, 2, 1)
-        out += ac_refine_scan(0, 6, 63, 2, 1)
-        out += ac_refine_scan(0, 1, 5, 1, 0)
-        out += ac_refine_scan(0, 6, 63, 1, 0)
-        out += ac_refine_scan(1, 1, 63, 1, 0)
-        out += ac_refine_scan(2, 1, 63, 1, 0)
-    else:
-        out += dc_scan(1)
-        out += ac_first_scan(0, 1, 5, 2)
-        out += ac_first_scan(0, 6, 63, 2)
-        out += dc_refine_scan(1, 0)
-        out += ac_refine_scan(0, 1, 5, 2, 1)
-        out += ac_refine_scan(0, 6, 63, 2, 1)
-        out += ac_refine_scan(0, 1, 5, 1, 0)
-        out += ac_refine_scan(0, 6, 63, 1, 0)
-    return out + b"\xff\xd9"
 
 
 def _jpeg_ycc_stats(b: bytes) -> tuple[int, int, int]:
@@ -2837,50 +2559,18 @@ def _jpeg_ycc_stats(b: bytes) -> tuple[int, int, int]:
 
 def _synth_png_adam7_bytes(w: int, h: int) -> bytes:
     """ADAM7-interlaced grayscale PNG whose pixel at (x, y) is the
-    known function ``(x*5 + y*7) % 251`` — the encoder builds the
-    seven passes INDEPENDENTLY of the decoder's pass walker (pixels
-    gathered per lattice, each pass stored with filter 2 (Up) rows
-    after a filter-0 first row, so the per-pass defilter state is
-    exercised too).  Because interlacing only permutes STORAGE order,
-    the gate statistic must be position-sensitive: the closed-form
-    oracle pins Σ (1 + x + w·y)·v(x,y), which any pass-mapping error
-    changes."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    raw = bytearray()
-    for x0, y0, dx, dy in _ADAM7:
-        wp = (w - x0 + dx - 1) // dx
-        hp = (h - y0 + dy - 1) // dy
-        if wp <= 0 or hp <= 0:
-            continue
-        prev = [0] * wp
-        for j in range(hp):
-            line = [
-                (((x0 + i * dx) * 5 + (y0 + j * dy) * 7) % 251)
-                for i in range(wp)
-            ]
-            if j == 0:
-                raw.append(0)
-                raw.extend(line)
-            else:
-                raw.append(2)  # Up filter
-                raw.extend((line[i] - prev[i]) & 0xFF for i in range(wp))
-            prev = line
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 1)  # gray, interlace 1
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
+    known function ``(x*5 + y*7) % 251``, each pass stored with
+    filter 2 (Up) rows after a filter-0 first row, so the per-pass
+    defilter state is exercised too.  Encoder and decoder share the
+    pass geometry (``_png_passes``), which
+    ``test_adam7_geometry_matches_spec_fixture`` pins against the
+    spec's literal pass matrix.  Because interlacing only permutes
+    STORAGE order, the gate statistic must be position-sensitive: the
+    closed-form oracle pins Σ (1 + x + w·y)·v(x,y), which any
+    pass-mapping error changes."""
+    return _png_encode(
+        w, h, lambda x, y: ((x * 5 + y * 7) % 251,),
+        interlace=1, row_filter=lambda j: 2 if j else 0,
     )
 
 
@@ -2892,36 +2582,9 @@ def _synth_png16_bytes(w: int, h: int) -> bytes:
     hardcodes bpp=channels).  The decoder folds each sample to its
     high byte, so the closed-form oracle pins
     Σ (1 + x + w·y)·(v16 >> 8)."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    raw = bytearray()
-    prev = bytearray(2 * w)
-    for y in range(h):
-        line = bytearray()
-        for x in range(w):
-            line += struct.pack(">H", (x * 301 + y * 517) % 65536)
-        if y % 2 == 0:
-            raw.append(0)
-            raw.extend(line)
-        else:
-            raw.append(2)
-            raw.extend((line[i] - prev[i]) & 0xFF for i in range(2 * w))
-        prev = line
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
+    return _png_encode(
+        w, h, lambda x, y: ((x * 301 + y * 517) % 65536,),
+        depth=16, row_filter=lambda j: 2 * (j % 2),
     )
 
 
@@ -2948,44 +2611,9 @@ def _synth_png_sub8_bytes(w: int, h: int, depth: int, mid: int) -> bytes:
     granularity).  Dims are chosen by the caller to straddle byte
     boundaries so trailing pad bits exist in most rows; the decoder
     must ignore them or the position-weighted gate sum diverges."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    row_bytes = (w * depth + 7) // 8
-    raw = bytearray()
-    prev = bytearray(row_bytes)
-    for y in range(h):
-        line = bytearray(row_bytes)
-        for x in range(w):
-            v = (x * 3 + y * 5 + mid) % (1 << depth)
-            bitpos = x * depth
-            line[bitpos >> 3] |= v << (8 - depth - (bitpos & 7))
-        f = y % 3
-        raw.append(f)
-        if f == 0:
-            raw.extend(line)
-        elif f == 1:  # Sub at bpp=1: left neighbor is the previous BYTE
-            raw.extend(
-                (line[i] - (line[i - 1] if i else 0)) & 0xFF
-                for i in range(row_bytes)
-            )
-        else:  # Up
-            raw.extend((line[i] - prev[i]) & 0xFF for i in range(row_bytes))
-        prev = line
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
+    return _png_encode(
+        w, h, lambda x, y: ((x * 3 + y * 5 + mid) % (1 << depth),),
+        depth=depth, row_filter=lambda j: j % 3,
     )
 
 
@@ -3979,49 +3607,9 @@ def _synth_png_sub8_adam7_bytes(w: int, h: int, depth: int, mid: int) -> bytes:
     (x, y) = ``(x·3 + y·5 + mid) % 2^depth``; each pass packs its own
     rows MSB-first to ceil(wp·depth/8) bytes with filters 0/1/2
     cycling per row at the 1-byte unit (§9.2 applies per pass)."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    raw = bytearray()
-    for x0, y0, dx, dy in _ADAM7:
-        wp = (w - x0 + dx - 1) // dx
-        hp = (h - y0 + dy - 1) // dy
-        if wp <= 0 or hp <= 0:
-            continue
-        rb = (wp * depth + 7) // 8
-        prev = bytearray(rb)
-        for j in range(hp):
-            line = bytearray(rb)
-            for i in range(wp):
-                v = ((x0 + i * dx) * 3 + (y0 + j * dy) * 5 + mid) % (1 << depth)
-                bitpos = i * depth
-                line[bitpos >> 3] |= v << (8 - depth - (bitpos & 7))
-            f = j % 3
-            raw.append(f)
-            if f == 0:
-                raw.extend(line)
-            elif f == 1:
-                raw.extend(
-                    (line[i] - (line[i - 1] if i else 0)) & 0xFF
-                    for i in range(rb)
-                )
-            else:
-                raw.extend((line[i] - prev[i]) & 0xFF for i in range(rb))
-            prev = line
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 1)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
+    return _png_encode(
+        w, h, lambda x, y: ((x * 3 + y * 5 + mid) % (1 << depth),),
+        depth=depth, interlace=1, row_filter=lambda j: j % 3,
     )
 
 
@@ -4061,14 +3649,8 @@ def _synth_wav_mulaw_bytes(n: int, mid: int, rate: int = 8000,
     ``(j·11 + mid) % 256`` — the decoder must run the real expansion
     to recover the sample sum the oracle computes from the same
     formula."""
-    import struct
-
-    fmt = struct.pack("<IHHIIHH", 16, 6 if alaw else 7, 1, rate, rate, 1, 8)
     data = bytes((j * 11 + mid) % 256 for j in range(n))
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + fmt + b"data" + struct.pack("<I", len(data)) + data
-    )
+    return _wav_bytes(6 if alaw else 7, 1, rate, 8, data)
 
 
 def _parse_wav_mulaw(b: bytes):
@@ -4076,25 +3658,19 @@ def _parse_wav_mulaw(b: bytes):
     WAVE_FORMAT_MULAW stream: RIFF chunk walk to fmt + data, then the
     G.711 expansion per byte.  Non-µ-law formats and malformed
     framing raise ValueError."""
-    import struct
-
     if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError("not a WAV")
-    i = 12
     fmt_code = ch = rate = None
     data = None
-    while i + 8 <= len(b):
-        cid = b[i : i + 4]
-        (csize,) = struct.unpack("<I", b[i + 4 : i + 8])
+    for cid, p, csize in _riff_chunks(b):
         if cid == b"fmt ":
-            if csize < 16 or i + 8 + 16 > len(b):
+            if csize < 16 or p + 16 > len(b):
                 raise ValueError("WAV fmt chunk truncated")
-            fmt_code, ch, rate = struct.unpack("<HHI", b[i + 8 : i + 16])
+            fmt_code, ch, rate = struct.unpack("<HHI", b[p : p + 8])
         elif cid == b"data":
-            if i + 8 + csize > len(b):
+            if p + csize > len(b):
                 raise ValueError("WAV data chunk truncated")
-            data = b[i + 8 : i + 8 + csize]
-        i += 8 + csize + (csize & 1)
+            data = b[p : p + csize]
     if fmt_code is None or data is None:
         raise ValueError("WAV missing fmt/data chunk")
     if ch == 0:

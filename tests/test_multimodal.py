@@ -954,6 +954,29 @@ def test_jpeg_marker_walk_fill_bytes_and_bare_eoi():
         _decode_jpeg(b"\xff\xd8\xff\xd9")
 
 
+def test_jpeg_fill_bytes_reach_decode_row_and_probe(spark):
+    """The depth and probe fields come from the same fill-byte-skipping
+    segment walk as the decode: a padded file yields the unpadded
+    file's ``real_decode_media`` row and probe row."""
+    from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
+        _stdlib_decode_row,
+        _synth_jpeg_gray_bytes,
+        probe_media_headers,
+    )
+
+    jb = _synth_jpeg_gray_bytes(16, 8, 7)
+    padded = jb[:2] + b"\xff\xff\xff" + jb[2:]
+    assert _stdlib_decode_row(padded) == ("jpeg", 16, 8, 1, 0, 8, 10.5)
+    assert _stdlib_decode_row(jb) == _stdlib_decode_row(padded)
+
+    df = spark.createDataFrame(
+        [(1, "image", bytearray(jb), "t"), (2, "image", bytearray(padded), "t")],
+        "media_id long, kind string, payload binary, source string",
+    )
+    got = {r["media_id"]: tuple(r)[1:] for r in probe_media_headers(df).collect()}
+    assert got[1] == got[2] == ("jpeg", 16, 8, 1, 0, 8, 0)
+
+
 def test_jpeg_restart_intervals_decode_exact():
     """Round 7: DRI/RSTn restart intervals decode for real — the scan
     must byte-align at each boundary (consuming a stuffed 0xFF00 pad

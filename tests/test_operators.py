@@ -2253,11 +2253,11 @@ def test_spread_triggers_only_on_pathologically_narrow_input(spark):
     from olist_ecommerce_data_warehouse_spark.catalog import spread
 
     target = spark.sparkContext.defaultParallelism
-    narrow = spark.range(100).coalesce(1)
-    assert spread(narrow).rdd.getNumPartitions() == target
     # ceil(target / 2): exactly half at even widths, just above half at
-    # odd ones — either way not narrower than half, so no rebalance
+    # odd ones — a scan rebalances only if it has fewer partitions
     half = target - target // 2
+    narrow = spark.range(100).coalesce(1)
+    assert spread(narrow).rdd.getNumPartitions() == (target if 1 < half else 1)
     mid = spark.range(100).repartition(half)
     assert spread(mid).rdd.getNumPartitions() == half
     wide = spark.range(100).repartition(target)
