@@ -49,10 +49,10 @@ def accent_fold(col: Column | str) -> Column:
     return F.translate(F.lower(F.trim(_c(col))), ACCENTED.lower() + ACCENTED.upper(), FOLDED)
 
 
-def decimal_comma(col: Column | str, precision: int = 12, scale: int = 2) -> Column:
+def decimal_comma(col: Column | str) -> Column:
     """P6: TRY_CAST(REPLACE(col, ',', '.') AS DECIMAL) — pt-BR decimal
     commas in numeric CSV columns (sp_load_silver_products.sql:42-45)."""
-    return F.replace(_c(col), F.lit(","), F.lit(".")).try_cast(f"decimal({precision},{scale})")
+    return F.replace(_c(col), F.lit(","), F.lit(".")).try_cast("decimal(12,2)")
 
 
 def try_int(col: Column | str) -> Column:
@@ -60,9 +60,9 @@ def try_int(col: Column | str) -> Column:
     return _c(col).try_cast("int")
 
 
-def try_ts(col: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
+def try_ts(col: Column | str) -> Column:
     """P8: TRY_CONVERT(DATETIME2, col) (sp_load_silver_orders.sql:37-41)."""
-    return F.try_to_timestamp(_c(col), F.lit(fmt))
+    return F.try_to_timestamp(_c(col), F.lit("yyyy-MM-dd HH:mm:ss"))
 
 
 def valid_id(col: Column | str) -> Column:

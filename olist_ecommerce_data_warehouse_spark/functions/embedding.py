@@ -38,13 +38,13 @@ def l2_normalize(col: Column | str) -> Column:
     )
 
 
-def quantize_int8(col: Column | str, scale: Column | None = None) -> Column:
+def quantize_int8(col: Column | str) -> Column:
     """Symmetric int8 quantization: round(v / s * 127) clamped to
-    [-127, 127], with s = max|v| per vector by default (the standard
-    per-vector absmax scheme).  Returns array<tinyint>; pair with the
+    [-127, 127], with s = max|v| per vector (the standard per-vector
+    absmax scheme).  Returns array<tinyint>; pair with the
     per-vector scale (``absmax``) to dequantize."""
     c = F.col(col) if isinstance(col, str) else col
-    s = absmax(c) if scale is None else scale
+    s = absmax(c)
     q = F.transform(
         c,
         lambda x: F.greatest(
@@ -71,14 +71,10 @@ def dequantize_int8(codes: Column | str, scale: Column) -> Column:
     return F.transform(c, lambda q: q.cast("double") * scale / 127.0)
 
 
-def quantize_int8_stats(
-    vectors,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pq_codebooks=None,
-):
-    """Normalize + int8-quantize every vector and emit per-vector
-    quantization statistics in ONE Arrow-batched pass: (id, l2_norm,
+def quantize_int8_stats(vectors, pq_codebooks=None):
+    """Normalize + int8-quantize every ``(vec_id, embedding)`` vector
+    and emit per-vector quantization statistics in ONE Arrow-batched
+    pass: (vec_id, l2_norm,
     scale, codes_fp, max_abs_err, in_bounds).
 
     ``pq_codebooks`` (round 5): a trained ``operators.pq`` codebook
@@ -116,7 +112,7 @@ def quantize_int8_stats(
             if not len(pdf):
                 continue
             vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )  # n × d
             d = vm.shape[1]
             # left-fold sum of squares (matches list_reduce order)
@@ -150,7 +146,7 @@ def quantize_int8_stats(
                 for row in codes
             ]
             out = {
-                id_col: pdf[id_col].to_numpy(),
+                "vec_id": pdf["vec_id"].to_numpy(),
                 "l2_norm": nrm,
                 "scale": s,
                 "codes_fp": fp,
@@ -173,7 +169,7 @@ def quantize_int8_stats(
             yield pd.DataFrame(out)
 
     schema = (
-        f"{id_col} bigint, l2_norm double, scale double, codes_fp string, "
+        "vec_id bigint, l2_norm double, scale double, codes_fp string, "
         "max_abs_err double, in_bounds int"
     )
     if pq_codebooks is not None:
@@ -182,4 +178,4 @@ def quantize_int8_stats(
             + ", ".join(f"pq_code_{j} int" for j in range(len(pq_codebooks)))
             + ", pq_recon_err bigint"
         )
-    return vectors.select(id_col, vec_col).mapInPandas(kernel, schema)
+    return vectors.select("vec_id", "embedding").mapInPandas(kernel, schema)

@@ -54,9 +54,9 @@ def dec_dbl_sql(expr: str) -> str:
     return f"CAST(CAST({expr} AS VARCHAR) AS DOUBLE)"
 
 
-def revenue_expr(price_col: str = "l_extendedprice", discount_col: str = "l_discount") -> Column:
+def revenue_expr() -> Column:
     """Discounted line revenue: ``price * (1 - discount)`` in exact
     decimal arithmetic (analog of the reference's
     ``total_item_value = price + freight_value`` computed money column,
     ``04_create_silver_tables.sql:280``)."""
-    return money(price_col) * (F.lit(1).cast("decimal(3,2)") - dec(discount_col, 4, 2))
+    return money("l_extendedprice") * (F.lit(1).cast("decimal(3,2)") - dec("l_discount", 4, 2))

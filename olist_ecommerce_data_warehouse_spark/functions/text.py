@@ -172,14 +172,11 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def redact_pii(col: Column | str, kinds: list[str] | None = None) -> Column:
+def redact_pii(col: Column | str) -> Column:
     """Replace each PII match with ``<KIND>`` (e.g. ``<EMAIL>``).
-    Patterns apply in PII_PATTERNS order; pass ``kinds`` to scrub a
-    subset.  An explicitly EMPTY ``kinds`` list means "redact nothing"
-    (the ``is None`` check matters: a dynamically built empty list must
-    not silently fall back to scrubbing everything)."""
+    Patterns apply in PII_PATTERNS order."""
     out = _c(col)
-    for kind in list(PII_PATTERNS) if kinds is None else kinds:
+    for kind in PII_PATTERNS:
         out = F.regexp_replace(out, PII_PATTERNS[kind], f"<{kind}>")
     return out
 
@@ -222,12 +219,13 @@ def _ws_words(col: Column | str) -> Column:
     return F.filter(F.split(F.trim(_c(col)), r"\s+"), lambda w: w != "")
 
 
-def gopher_flags(col: Column | str = "text") -> dict[str, Column]:
-    """The 7 Gopher gates as named 0/1 columns plus ``gopher_pass``
-    (their AND) and the ``gopher_n_words`` evidence count.  One pass
+def gopher_flags() -> dict[str, Column]:
+    """The 7 Gopher gates over ``text`` as named 0/1 columns plus
+    ``gopher_pass`` (their AND) and the ``gopher_n_words`` evidence
+    count.  One pass
     of array expressions, no shuffle; SQL twin
     :func:`gopher_flags_sql` shares every literal."""
-    t = _c(col)
+    t = F.col("text")
     words = _ws_words(t)
     n_words = F.size(words)
     sum_len = F.aggregate(
@@ -272,20 +270,21 @@ def gopher_flags(col: Column | str = "text") -> dict[str, Column]:
     return flags
 
 
-def gopher_flags_sql(col: str = "text") -> dict[str, str]:
-    """DuckDB twin of :func:`gopher_flags` — same regex and threshold
-    literals, same cross-multiplied integer gates."""
-    words = f"list_filter(regexp_split_to_array(trim({col}), '\\s+'), w -> w <> '')"
+def gopher_flags_sql() -> dict[str, str]:
+    """DuckDB twin of :func:`gopher_flags` over the ``text`` column —
+    same regex and threshold literals, same cross-multiplied integer
+    gates."""
+    words = f"list_filter(regexp_split_to_array(trim(text), '\\s+'), w -> w <> '')"
     n_words = f"len({words})"
     sum_len = f"coalesce(list_sum(list_transform({words}, w -> length(w))), 0)"
-    n_sym = f"len(regexp_extract_all({col}, '{_GOPHER_SYMBOL_RE}'))"
-    lines = f"string_split({col}, chr(10))"
+    n_sym = f"len(regexp_extract_all(text, '{_GOPHER_SYMBOL_RE}'))"
+    lines = "string_split(text, chr(10))"
     n_lines = f"len({lines})"
     n_bullet = f"len(list_filter({lines}, l -> regexp_matches(l, '{_GOPHER_BULLET_RE}')))"
     n_ell = f"len(list_filter({lines}, l -> regexp_matches(l, '{_GOPHER_ELLIPSIS_END_RE}')))"
     stop_set = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
     n_alpha = f"len(list_filter({words}, w -> regexp_matches(w, '\\p{{L}}')))"
-    n_stop = f"len(list_filter({toks_sql(col)}, t -> t IN ({stop_set})))"
+    n_stop = f"len(list_filter({toks_sql()}, t -> t IN ({stop_set})))"
 
     def b(cond: str) -> str:
         return f"CAST(CASE WHEN {cond} THEN 1 ELSE 0 END AS INT)"

@@ -21,9 +21,8 @@ the conventions the corpus pipelines add):
   a functional parameter (git refs, forum post references), so
   stripping it silently collapses distinct pages into one dedup key —
   a false-positive class worse than the tracking noise it removes.
-  Callers that know their crawl's convention pass a wider
-  ``tracking_re`` (both twins take the same literal, so the oracle
-  stays in lockstep).
+  Both twins build from the same ``_TRACKING_RE`` literal, so the
+  oracle stays in lockstep.
 
 Everything is pure codegen string/array expressions (regexp_extract /
 filter / array_sort) — no Python UDFs, so canonicalization runs
@@ -59,12 +58,10 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def canonicalize_url(col: Column | str, tracking_re: str = _TRACKING_RE) -> Column:
+def canonicalize_url(col: Column | str) -> Column:
     """Canonical form of an absolute http(s) URL (see module doc for
     the rule set).  Pure codegen expressions; non-URL inputs fall back
-    to ``lower(input)``.  ``tracking_re`` widens/narrows the stripped
-    parameter set — pass the SAME literal to :func:`canonical_url_sql`
-    so the DuckDB twin stays in lockstep."""
+    to ``lower(input)``."""
     u = _c(col)
     # fragment stripped FIRST: a '?' inside the fragment (#a?b=1) must
     # not be parsed as the query separator
@@ -88,7 +85,7 @@ def canonicalize_url(col: Column | str, tracking_re: str = _TRACKING_RE) -> Colu
 
     params = F.filter(
         F.split(qstring, "&"),
-        lambda x: (x != "") & ~x.rlike(tracking_re),
+        lambda x: (x != "") & ~x.rlike(_TRACKING_RE),
     )
     qnorm = F.array_join(F.array_sort(params), "&")
 
@@ -103,7 +100,7 @@ def canonicalize_url(col: Column | str, tracking_re: str = _TRACKING_RE) -> Colu
     return F.when(scheme == "", F.lower(u)).otherwise(canon)
 
 
-def canonical_url_sql(expr: str, tracking_re: str = _TRACKING_RE) -> str:
+def canonical_url_sql(expr: str) -> str:
     """DuckDB twin of :func:`canonicalize_url` — same regex literals,
     same rule order, so every URL-dedup oracle shares one definition
     with the engine (the toks_sql() discipline applied to URLs)."""
@@ -132,7 +129,7 @@ def canonical_url_sql(expr: str, tracking_re: str = _TRACKING_RE) -> str:
     )
     params = (
         f"list_filter(string_split({qstring}, '&'),"
-        f" x -> x <> '' AND NOT regexp_matches(x, '{tracking_re}'))"
+        f" x -> x <> '' AND NOT regexp_matches(x, '{_TRACKING_RE}'))"
     )
     # array_to_string over an EMPTY list is NULL in DuckDB ('' in
     # Spark's array_join) — coalesce keeps the twins aligned

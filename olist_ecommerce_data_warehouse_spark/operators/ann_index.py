@@ -45,6 +45,10 @@ from olist_ecommerce_data_warehouse_spark.operators.similarity import (
 # newer code.
 LAYOUT_VERSION = 1
 
+BUILD_K = 8  # IVFIndex.build: lists (centroids) and Lloyd iterations
+BUILD_ITERS = 2
+PUBLISHED_MAX_AGE_HOURS = 7 * 24.0  # retention of current-format indexes
+
 # path → centroids, warm across loads within one process.  Published
 # dirs are immutable (publish-if-absent, never overwritten), so the
 # cache can never serve stale centroids; it makes a re-load collect
@@ -114,26 +118,14 @@ class IVFIndex:
         )
 
     @classmethod
-    def build(
-        cls,
-        vectors: DataFrame,
-        k: int = 8,
-        n_iter: int = 2,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        pre_quantized: bool = False,
-    ) -> "IVFIndex":
+    def build(cls, vectors: DataFrame) -> "IVFIndex":
+        """Train ``BUILD_K`` centroids over ``(vec_id, embedding)`` rows
+        with ``BUILD_ITERS`` Lloyd iterations and assign every vector."""
         from olist_ecommerce_data_warehouse_spark.operators.similarity import quantized
 
         spark = vectors.sparkSession
-        cents = kmeans_train(
-            vectors, id_col=id_col, vec_col=vec_col, k=k, n_iter=n_iter,
-            pre_quantized=pre_quantized,
-        )
-        corpus = vectors.select(
-            F.col(id_col).alias("vec_id"),
-            (F.col(vec_col) if pre_quantized else quantized(vec_col)).alias("cvec"),
-        )
+        cents = kmeans_train(vectors, k=BUILD_K, n_iter=BUILD_ITERS)
+        corpus = vectors.select("vec_id", quantized("embedding").alias("cvec"))
         idx = cls(spark, cents, None)  # type: ignore[arg-type]
         idx.assigned = ivf_assign(corpus, idx._cent_df())
         return idx
@@ -257,7 +249,6 @@ class IVFIndex:
 def gc_stale_indexes(
     scratch_dir: str,
     max_age_hours: float = 24.0,
-    published_max_age_hours: float = 7 * 24.0,
     dry_run: bool = False,
 ) -> list[str]:
     """Sweep leftover ``ivf_index_*`` artifacts from ``scratch_dir``
@@ -274,7 +265,7 @@ def gc_stale_indexes(
       dead session);
     - current-format published dirs (``…_v<LAYOUT_VERSION>``) —
       immutable, content-addressed, reused across sessions: kept for
-      ``published_max_age_hours`` (a week) SINCE LAST USE — ``load``
+      ``PUBLISHED_MAX_AGE_HOURS`` (a week) SINCE LAST USE — ``load``
       and every publish-reuse touch the dir mtime, so age-out under a
       live reader is vanishingly unlikely: the mtime is re-read
       immediately before the delete, so a concurrent touch would have
@@ -306,7 +297,7 @@ def gc_stale_indexes(
         if not name.startswith("ivf_index_"):
             continue
         age_limit = (
-            published_max_age_hours if name.endswith(keep_suffix) else max_age_hours
+            PUBLISHED_MAX_AGE_HOURS if name.endswith(keep_suffix) else max_age_hours
         )
         p = os.path.join(scratch_dir, name)
         try:

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 
 _MIX1 = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio splitmix constant
 _MIX2 = np.uint64(0xC2B2AE3D27D4EB4F)  # xxhash prime
+BITS_PER_ITEM = 16
+N_HASHES = 4
 
 
 def _probe_hashes(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -39,16 +41,16 @@ def _probe_hashes(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return h1, h2
 
 
-def build_bloom(vals: np.ndarray, bits_per_item: int = 16, n_hashes: int = 4):
+def build_bloom(vals: np.ndarray):
     """Pack a Bloom filter over int64 ``vals`` into a uint64 word
-    array.  Returns (words, m) with m a power of two ≥ len·bits_per_item
+    array.  Returns (words, m) with m a power of two ≥ len·BITS_PER_ITEM
     (so probe positions reduce with a mask, not a modulo)."""
     n = max(len(vals), 1)
-    m = 1 << max(10, int(np.ceil(np.log2(n * bits_per_item))))
+    m = 1 << max(10, int(np.ceil(np.log2(n * BITS_PER_ITEM))))
     words = np.zeros(m // 64, dtype=np.uint64)
     if len(vals):
         h1, h2 = _probe_hashes(np.asarray(vals, dtype=np.int64))
-        for i in range(n_hashes):
+        for i in range(N_HASHES):
             pos = (h1 + np.uint64(i) * h2) & np.uint64(m - 1)
             np.bitwise_or.at(
                 words,
@@ -58,16 +60,14 @@ def build_bloom(vals: np.ndarray, bits_per_item: int = 16, n_hashes: int = 4):
     return words, m
 
 
-def might_contain(
-    words: np.ndarray, m: int, vals: np.ndarray, n_hashes: int = 4
-) -> np.ndarray:
+def might_contain(words: np.ndarray, m: int, vals: np.ndarray) -> np.ndarray:
     """Vectorized membership mask for int64 ``vals`` (True = possibly
     present; False = definitely absent)."""
     if not len(vals):
         return np.zeros(0, dtype=bool)
     h1, h2 = _probe_hashes(np.asarray(vals, dtype=np.int64))
     mask = np.ones(len(vals), dtype=bool)
-    for i in range(n_hashes):
+    for i in range(N_HASHES):
         pos = (h1 + np.uint64(i) * h2) & np.uint64(m - 1)
         bit = (
             words[(pos >> np.uint64(6)).astype(np.int64)]
@@ -81,8 +81,6 @@ def bloom_prefilter(
     big: DataFrame,
     small_keys: DataFrame,
     key_col: str,
-    bits_per_item: int = 16,
-    n_hashes: int = 4,
 ) -> DataFrame:
     """Drop ``big`` rows whose ``key_col`` (int64) is definitely absent
     from ``small_keys``'s single column.  The small side is collected
@@ -109,7 +107,7 @@ def bloom_prefilter(
         ],
         dtype=np.int64,
     )
-    words, m = build_bloom(vals, bits_per_item, n_hashes)
+    words, m = build_bloom(vals)
     bc = big.sparkSession.sparkContext.broadcast((words, m))
     out_schema = big.schema
 
@@ -124,7 +122,7 @@ def bloom_prefilter(
             keep = null_mask.copy()  # NULL-keyed rows always pass through
             if (~null_mask).any():
                 keys = pdf.loc[~null_mask, key_col].to_numpy(dtype=np.int64)
-                keep[~null_mask] = might_contain(w, mm, keys, n_hashes)
+                keep[~null_mask] = might_contain(w, mm, keys)
             yield pdf[keep]
 
     return big.mapInPandas(kernel, out_schema)

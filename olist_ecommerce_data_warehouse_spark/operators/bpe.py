@@ -68,11 +68,11 @@ def _symbolize(word: str, merges: list[tuple[str, str]]) -> list[str]:
     return syms
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(word, n) — the compressed training input: one aggregation over
     the corpus, map-side partials collapse repeats before the shuffle."""
     return (
-        docs.select(F.explode(tokens(text_col)).alias("word"))
+        docs.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -88,12 +88,12 @@ _PAIR_SCHEMA = T.StructType(
 
 
 def bpe_train(
-    docs: DataFrame, n_merges: int, text_col: str = "text"
+    docs: DataFrame, n_merges: int
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merge rules from the corpus; returns the
     ordered merge list.  Stops early when no pair occurs twice (merging
     singletons would memorize individual words)."""
-    wc = word_counts(docs, text_col)
+    wc = word_counts(docs)
     if n_merges > 0:
         # lineage CUT, not persisted: every merge round's pair-count
         # collect() re-analyzes wc's upstream (tokenize + explode +
@@ -166,10 +166,8 @@ def bpe_train_reference(
 def bpe_encode(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """(id, bpe_tokens array<string>, bpe_token_count) per document —
+    """(doc_id, bpe_tokens array<string>, bpe_token_count) per document —
     tokenize with a trained merge list (broadcast into one Arrow
     kernel; pure map, zero shuffle).  Concatenating a word's tokens
     always reproduces word+EOW (lossless — asserted in tests)."""
@@ -177,12 +175,12 @@ def bpe_encode(
 
     out_schema = T.StructType(
         [
-            T.StructField("__id", T.LongType()),
+            T.StructField("doc_id", T.LongType()),
             T.StructField("bpe_tokens", T.ArrayType(T.StringType())),
             T.StructField("bpe_token_count", T.LongType()),
         ]
     )
-    rows = docs.select(F.col(id_col).alias("__id"), tokens(text_col).alias("__toks"))
+    rows = docs.select("doc_id", tokens("text").alias("__toks"))
 
     def kernel(batches, _merges=list(merges)):
         # memoize per DISTINCT word: corpora repeat words heavily (that
@@ -200,7 +198,7 @@ def bpe_encode(
 
         for pdf in batches:
             ids, toks_out, counts = [], [], []
-            for i, toks in zip(pdf["__id"], pdf["__toks"]):
+            for i, toks in zip(pdf["doc_id"], pdf["__toks"]):
                 doc_syms: list[str] = []
                 for w in toks:
                     doc_syms.extend(syms(w))
@@ -208,15 +206,13 @@ def bpe_encode(
                 toks_out.append(doc_syms)
                 counts.append(len(doc_syms))
             yield pd.DataFrame(
-                {"__id": ids, "bpe_tokens": toks_out, "bpe_token_count": counts}
+                {"doc_id": ids, "bpe_tokens": toks_out, "bpe_token_count": counts}
             )
 
-    return rows.mapInPandas(kernel, out_schema).select(
-        F.col("__id").alias(id_col), "bpe_tokens", "bpe_token_count"
-    )
+    return rows.mapInPandas(kernel, out_schema)
 
 
-def bpe_oracle_ctes(n_merges: int, docs_table: str = "documents") -> str:
+def bpe_oracle_ctes(n_merges: int) -> str:
     """SQL (DuckDB) replay of the WHOLE trainer+encoder as chained
     CTEs — the same unrolled-iteration device as the IVF oracle's
     unrolled Lloyd: round i computes pair counts from syms{i-1}, picks
@@ -230,14 +226,14 @@ def bpe_oracle_ctes(n_merges: int, docs_table: str = "documents") -> str:
     trainer's early stop without branching.
 
     Emits a final CTE ``bpe_doc_counts(doc_id, n_bpe_trained_tokens)``
-    over ``docs_table`` — join it LEFT (token-less docs count 0).
+    over ``documents`` — join it LEFT (token-less docs count 0).
     Returns the CTE text WITHOUT a leading WITH."""
     from olist_ecommerce_data_warehouse_spark.functions.text import toks_sql
 
     parts = [
         f"""bpe_words AS (
         SELECT word, COUNT(*) AS n FROM (
-            SELECT unnest({toks_sql()}) AS word FROM {docs_table}
+            SELECT unnest({toks_sql()}) AS word FROM documents
         ) GROUP BY word
     )""",
         f"""syms0 AS (
@@ -276,7 +272,7 @@ def bpe_oracle_ctes(n_merges: int, docs_table: str = "documents") -> str:
         )
     parts.append(
         f"""bpe_doc_words AS (
-        SELECT doc_id, unnest({toks_sql()}) AS word FROM {docs_table}
+        SELECT doc_id, unnest({toks_sql()}) AS word FROM documents
     )"""
     )
     parts.append(
@@ -303,11 +299,11 @@ def bpe_vocab(merges: list[tuple[str, str]], corpus_chars: list[str]) -> dict[st
     return vocab
 
 
-def corpus_chars(docs: DataFrame, text_col: str = "text") -> list[str]:
+def corpus_chars(docs: DataFrame) -> list[str]:
     """Distinct characters of the tokenized corpus (the base
     alphabet) — one narrow explode + distinct aggregate."""
     rows = (
-        docs.select(F.explode(tokens(text_col)).alias("w"))
+        docs.select(F.explode(tokens("text")).alias("w"))
         .select(F.explode(F.split("w", "")).alias("ch"))
         .filter(F.length("ch") > 0)
         .distinct()
@@ -320,10 +316,8 @@ def bpe_encode_ids(
     docs: DataFrame,
     merges: list[tuple[str, str]],
     vocab: dict[str, int],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """(id, input_ids array<int>, n_ids) — the training-ready integer
+    """(doc_id, input_ids array<int>, n_ids) — the training-ready integer
     form: tokenize with the merge list and map symbols through the
     vocab (broadcast dict in one Arrow kernel).  Symbols outside the
     vocab (characters unseen at vocab-build time) map to -1 — surfaced,
@@ -332,12 +326,12 @@ def bpe_encode_ids(
 
     out_schema = T.StructType(
         [
-            T.StructField("__id", T.LongType()),
+            T.StructField("doc_id", T.LongType()),
             T.StructField("input_ids", T.ArrayType(T.IntegerType())),
             T.StructField("n_ids", T.LongType()),
         ]
     )
-    rows = docs.select(F.col(id_col).alias("__id"), tokens(text_col).alias("__toks"))
+    rows = docs.select("doc_id", tokens("text").alias("__toks"))
 
     def kernel(batches, _merges=list(merges), _vocab=dict(vocab)):
         cache: dict[str, list[int]] = {}
@@ -352,7 +346,7 @@ def bpe_encode_ids(
 
         for pdf in batches:
             out_ids, out_n, out_docs = [], [], []
-            for i, toks in zip(pdf["__id"], pdf["__toks"]):
+            for i, toks in zip(pdf["doc_id"], pdf["__toks"]):
                 doc_ids: list[int] = []
                 for w in toks:
                     doc_ids.extend(ids(w))
@@ -360,9 +354,7 @@ def bpe_encode_ids(
                 out_ids.append(doc_ids)
                 out_n.append(len(doc_ids))
             yield pd.DataFrame(
-                {"__id": out_docs, "input_ids": out_ids, "n_ids": out_n}
+                {"doc_id": out_docs, "input_ids": out_ids, "n_ids": out_n}
             )
 
-    return rows.mapInPandas(kernel, out_schema).select(
-        F.col("__id").alias(id_col), "input_ids", "n_ids"
-    )
+    return rows.mapInPandas(kernel, out_schema)

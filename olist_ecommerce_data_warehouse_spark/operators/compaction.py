@@ -6,27 +6,25 @@ Append-based loads (``pipeline/corpus.py::apply_increment``,
 files are the classic lakehouse tax (per-file open/footer cost at the
 scan, driver memory for file listings, tiny row groups defeating
 column-stat skipping).  ``compact_table`` rewrites a parquet directory
-to ~``target_file_bytes`` files and swaps it in with the same
+to ~``TARGET_FILE_BYTES`` files and swaps it in with the same
 crash-recoverable two-rename protocol (and the same hidden
 ``.compact_tmp/`` staging namespace policy) as the streaming upsert
 sink — a crash at any point leaves either the old or the new table
 readable at the live path, never neither and never a half-rewrite.
 
 The rewrite is content-preserving by construction (one read → one
-write, no row transformations); optional ``sort_cols`` re-sorts while
-rewriting (range partition + in-file sort), which is where compaction
-composes with the Z-order operator: pass a Morton key to restore
-multi-dimensional locality that incremental appends destroyed.
+write, no row transformations).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from olist_ecommerce_data_warehouse_spark.streaming.merge import _hadoop_fs
+
+TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 def table_file_stats(spark: SparkSession, path: str) -> dict:
@@ -45,16 +43,9 @@ def table_file_stats(spark: SparkSession, path: str) -> dict:
     return {"n_files": n, "total_bytes": total, "avg_bytes": total // n if n else 0}
 
 
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_col: Column | str | None = None,
-    min_files: int = 1,
-) -> dict:
-    """Rewrite ``path`` to ``ceil(total_bytes / target_file_bytes)``
-    files (at least ``min_files``), optionally range-sorted by
-    ``sort_col``.  Returns {before, after} stats.  Crash-safe swap:
+def compact_table(spark: SparkSession, path: str) -> dict:
+    """Rewrite ``path`` to ``ceil(total_bytes / TARGET_FILE_BYTES)``
+    files (at least one).  Returns {before, after, n_out} stats.  Crash-safe swap:
     stage under ``.compact_tmp/``, two renames, recovery of a
     live-missing/trash-present state on the next call — byte-for-byte
     the upsert sink's protocol."""
@@ -74,16 +65,10 @@ def compact_table(
             raise IOError(f"compact recovery rename failed: {trash_path} -> {clean}")
 
     stats = table_file_stats(spark, path)
-    n_out = max(min_files, math.ceil(stats["total_bytes"] / target_file_bytes) or 1)
+    n_out = max(1, math.ceil(stats["total_bytes"] / TARGET_FILE_BYTES))
 
-    df: DataFrame = spark.read.parquet(clean)
-    if sort_col is not None:
-        sc = F.col(sort_col) if isinstance(sort_col, str) else sort_col
-        out = df.repartitionByRange(n_out, sc).sortWithinPartitions(sc)
-    else:
-        out = df.repartition(n_out)
     fs.delete(staging, True)
-    out.write.parquet(staging_path)
+    spark.read.parquet(clean).repartition(n_out).write.parquet(staging_path)
 
     fs.delete(trash, True)
     if fs.exists(live) and not fs.rename(live, trash):

@@ -21,9 +21,7 @@ Design (all engine-native, zero Python in the row path):
   ``sortWithinPartitions(shard, key, id)`` → Hive-style
   ``shard=K/part-*.parquet`` dirs, ONE file per shard (each shard's
   rows hash to exactly one partition), rows in key order inside the
-  file.  ``max_records_per_file`` splits oversized shards into
-  key-ordered sub-files (Spark's own writer option — still
-  deterministic).
+  file.
 
 100 TB posture: one full shuffle of the corpus (unavoidable — a global
 permutation IS a shuffle) with integer keys; no driver collection, no
@@ -49,7 +47,6 @@ def export_training_shards(
     n_shards: int,
     id_col: str = "doc_id",
     epoch: int = 0,
-    max_records_per_file: int | None = None,
     order_cols: list[str] | None = None,
 ) -> dict:
     """Write ``df`` as ``n_shards`` Hive-partitioned training shards
@@ -66,16 +63,14 @@ def export_training_shards(
     out = df.withColumn("__shuffle_key", key).withColumn(
         "shard", F.pmod(F.col("__shuffle_key"), F.lit(n_shards)).cast("int")
     )
-    writer = (
+    (
         out.repartition(n_shards, "shard")
         .sortWithinPartitions("shard", "__shuffle_key", id_col, *(order_cols or []))
         .drop("__shuffle_key")
         .write.mode("overwrite")
         .partitionBy("shard")
+        .parquet(path)
     )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    writer.parquet(path)
     counts = {
         r["shard"]: r["n"]
         for r in out.groupBy("shard").agg(F.count("*").alias("n")).collect()

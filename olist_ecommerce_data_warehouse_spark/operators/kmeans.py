@@ -46,16 +46,12 @@ def _qcol(vec_col: str, pre_quantized: bool):
     return F.col(vec_col) if pre_quantized else quantized(vec_col)
 
 
-def _seed_centroids(
-    vectors: DataFrame, id_col: str, vec_col: str, k: int, pre_quantized: bool = False
-):
-    """k deterministic seed vectors (smallest md5(id)) as a list of
-    int64-quantized lists, ordered by seed hash."""
+def _seed_centroids(q: DataFrame, k: int):
+    """k deterministic seed vectors (smallest md5(id)) of an
+    ``(__id, __q)`` frame as a list of int64-quantized lists, ordered
+    by seed hash."""
     rows = (
-        vectors.select(
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            _qcol(vec_col, pre_quantized).alias("__q"),
-        )
+        q.select(F.md5(F.col("__id").cast("string")).alias("__h"), "__q")
         .orderBy("__h")
         .limit(k)
         .collect()
@@ -94,7 +90,6 @@ def _assign_kernel(centroids, vec_col: str):
 
 def kmeans_train(
     vectors: DataFrame,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 8,
     n_iter: int = 3,
@@ -115,7 +110,7 @@ def kmeans_train(
     )
 
     q = vectors.select(
-        F.col(id_col).alias("__id"), _qcol(vec_col, pre_quantized).alias("__q")
+        F.col("vec_id").alias("__id"), _qcol(vec_col, pre_quantized).alias("__q")
     )
     if n_iter > 0:
         # one scan+quantize, reused by every Lloyd iteration — lineage
@@ -130,9 +125,9 @@ def kmeans_train(
     # scan+quantize subtree from ``vectors``; with n_iter=0 there is no
     # materialization to reuse and the raw input is the cheaper source
     seed_src = q if n_iter > 0 else vectors.select(
-        F.col(id_col).alias("__id"), _qcol(vec_col, pre_quantized).alias("__q")
+        F.col("vec_id").alias("__id"), _qcol(vec_col, pre_quantized).alias("__q")
     )
-    centroids = _seed_centroids(seed_src, "__id", "__q", k, pre_quantized=True)
+    centroids = _seed_centroids(seed_src, k)
     train_schema = StructType(
         [StructField("cluster", IntegerType()), StructField("__q", ArrayType(LongType()))]
     )
@@ -184,12 +179,11 @@ def kmeans_train(
 def kmeans_assign(
     vectors: DataFrame,
     centroids: list[list[int]],
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     pre_quantized: bool = False,
     keep_vec: bool = False,
 ) -> DataFrame:
-    """(id, cluster) for every vector — nearest trained centroid
+    """(vec_id, cluster) for every vector — nearest trained centroid
     (exact-int argmin, ties toward lower cluster id).  One narrow
     Arrow pass; the IVF bucketing step at index-build time.
 
@@ -209,14 +203,14 @@ def kmeans_assign(
     )
 
     q = vectors.select(
-        F.col(id_col).alias("__id"), _qcol(vec_col, pre_quantized).alias("__q")
+        F.col("vec_id").alias("__id"), _qcol(vec_col, pre_quantized).alias("__q")
     )
     if not keep_vec:
         schema = StructType(
             [StructField("__id", LongType()), StructField("cluster", IntegerType())]
         )
         return q.mapInPandas(_assign_kernel(centroids, "__q"), schema=schema).select(
-            F.col("__id").alias(id_col), "cluster"
+            F.col("__id").alias("vec_id"), "cluster"
         )
 
     cm = np.asarray(centroids, dtype=np.int64)
@@ -244,16 +238,11 @@ def kmeans_assign(
         ]
     )
     return q.mapInPandas(kernel, schema=schema).select(
-        F.col("__id").alias(id_col), "cluster", F.col("__q").alias(vec_col)
+        F.col("__id").alias("vec_id"), "cluster", F.col("__q").alias(vec_col)
     )
 
 
-def inertia(
-    vectors: DataFrame,
-    centroids: list[list[int]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
+def inertia(vectors: DataFrame, centroids: list[list[int]]) -> float:
     """Sum of squared L2 distances to the assigned centroid, on the
     quantized grid (divide by QUANT² per-term externally if the float
     scale is wanted).  The metric Lloyd monotonically decreases —
@@ -262,7 +251,7 @@ def inertia(
 
     cm = np.asarray(centroids, dtype=np.int64)
 
-    q = vectors.select(F.col(id_col).alias("__id"), quantized(vec_col).alias("__q"))
+    q = vectors.select(quantized("embedding").alias("__q"))
 
     def kernel(batches):
         import pandas as pd

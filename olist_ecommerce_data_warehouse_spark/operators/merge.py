@@ -14,8 +14,8 @@ null-safe full-outer join:
   when a compared column actually differs (null-safely), else
   ``unchanged`` — so downstream writers can skip no-op rows;
 - source-only → ``insert``;
-- target-only → ``keep`` (or dropped when ``delete_missing`` — the
-  full-sync variant).
+- target-only → ``keep`` (incremental-batch semantics: absence from a
+  delta feed means "no change").
 
 Scale shape: one shuffle on the merge key for each side (co-located if
 both are bucketed by key — ``sources/bucketed.py`` — in which case the
@@ -37,34 +37,25 @@ def merge_upsert(
     target: DataFrame,
     source: DataFrame,
     keys: list[str],
-    compare_cols: list[str] | None = None,
-    delete_missing: bool = False,
-    action_col: str = "__merge_action",
-    null_safe_keys: bool = False,
 ) -> DataFrame:
     """Merge ``source`` into ``target`` on ``keys``; returns the merged
-    table with ``action_col`` ∈ insert/update/unchanged/keep.
+    table with ``__merge_action`` ∈ insert/update/unchanged/keep.
 
-    Both sides must share the same schema.  ``compare_cols`` limits
-    change detection (default: all non-key columns).  With
-    ``delete_missing`` target-only rows are dropped instead of kept
-    (full-sync semantics; the default is incremental-batch semantics
-    where absence from a delta feed means "no change").
+    Both sides must share the same schema; every non-key column takes
+    part in change detection.
 
-    ``null_safe_keys``: merge keys are primary keys and plain equality
-    (the SQL MERGE contract — NULL-keyed rows never match) is the
-    default because it keeps the join on RAW key columns, which is what
-    lets co-located bucketed tables plan with zero Exchange
+    Merge keys are primary keys, joined with plain equality (the SQL
+    MERGE contract — NULL-keyed rows never match): that keeps the join
+    on RAW key columns, which is what lets co-located bucketed tables
+    plan with zero Exchange
     (``tests/test_plan_quality.py::test_bucketed_merge_upsert_zero_
-    exchange``); ``eqNullSafe`` wraps the key in an expression and
-    silently disables the bucket join.  Opt in only for nullable keys,
-    accepting the shuffle.  VALUE comparison is always null-safe."""
+    exchange``); ``eqNullSafe`` would wrap the key in an expression and
+    silently disable the bucket join.  VALUE comparison is null-safe."""
     non_key = [c for c in target.columns if c not in keys]
     if source.columns != target.columns:
         raise ValueError(
             f"merge_upsert: schemas differ: {source.columns} vs {target.columns}"
         )
-    compare = non_key if compare_cols is None else compare_cols
 
     t = target.select(
         *[F.col(c).alias(f"__t_{c}") for c in target.columns],
@@ -76,15 +67,14 @@ def merge_upsert(
     )
     cond = None
     for k in keys:
-        tk, sk = F.col(f"__t_{k}"), F.col(f"__s_{k}")
-        c = tk.eqNullSafe(sk) if null_safe_keys else (tk == sk)
+        c = F.col(f"__t_{k}") == F.col(f"__s_{k}")
         cond = c if cond is None else (cond & c)
     joined = t.join(s, cond, "full_outer")
 
     in_t = F.col("__in_t").isNotNull()
     in_s = F.col("__in_s").isNotNull()
     differs = None
-    for c in compare:
+    for c in non_key:
         d = ~F.col(f"__t_{c}").eqNullSafe(F.col(f"__s_{c}"))
         differs = d if differs is None else (differs | d)
     if differs is None:  # key-only table
@@ -102,7 +92,4 @@ def merge_upsert(
         F.when(in_s, F.col(f"__s_{c}")).otherwise(F.col(f"__t_{c}")).alias(c)
         for c in target.columns
     ]
-    merged = joined.select(*out_cols, action.alias(action_col))
-    if delete_missing:
-        merged = merged.filter(F.col(action_col) != "keep")
-    return merged
+    return joined.select(*out_cols, action.alias("__merge_action"))

@@ -75,6 +75,7 @@ DECODED_SCHEMA = T.StructType(
     ]
 )
 
+N_FRAMES = 4  # byte slices sample_frames cuts from each video
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -178,7 +179,6 @@ def _parse_png(b: bytes):
 def _bmp_palette(b: bytes) -> bytes:
     """BGRA palette entries of an indexed BMP (follows the DIB header;
     entry count = biClrUsed or 2^bpp)."""
-    import struct
 
     if len(b) < 30:
         raise ValueError("truncated BMP header")
@@ -204,7 +204,6 @@ def _parse_bmp(b: bytes):
     applies to PLTE), so the total is over pixel intensities for every
     supported bpp.  ``real_decode_media`` divides it into the mean; the
     decode:bmp/bmp8 gates sum it exactly."""
-    import struct
 
     if b[:2] != b"BM":
         raise ValueError("not a BMP")
@@ -298,7 +297,6 @@ def _parse_gif(b: bytes):
     intensities, never palette positions.  Interlaced GIFs
     de-interlace for real (``_gif_deinterlace``, the spec's 4-pass row
     permutation, reference-pinned in tests)."""
-    import struct
 
     if b[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
@@ -388,7 +386,6 @@ def _parse_wav(b: bytes):
     normalized to [0, 1]."""
     import array
     import io
-    import struct
     import wave
 
     try:
@@ -462,11 +459,10 @@ def _stdlib_decode_row(b: bytes) -> tuple:
         w, h, total, count = _parse_gif(b)
         return ("gif", w, h, 3, 0, 8, total / count if count else 0.0)
     if b[:2] == b"\xff\xd8":
-        w, h, planes = _decode_jpeg(b)
+        # depth is the true SOF precision (8 or 12), not the storage
+        # dtype width — a 12-bit file reports 12, not 16
+        w, h, planes, depth = _decode_jpeg(b)
         mean = float(sum(float(p.mean()) for p in planes) / len(planes))
-        # true SOF precision (8 or 12), not the storage dtype width —
-        # a 12-bit file reports 12, not 16
-        depth = _jpeg_header(b)[3]
         return ("jpeg", w, h, len(planes), 0, depth, mean)
     if b[:2] in (b"II", b"MM") and b[2:4] in (b"\x2a\x00", b"\x00\x2a"):
         w, h, spp, px = _parse_tiff(b)
@@ -605,7 +601,6 @@ def _png_pixels(b: bytes):
     MSB-first; grayscale scales by the exact integer 255/(2^d - 1),
     palette indices resolve through PLTE unscaled.  Sub-8 + interlace
     and sub-8 multi-channel color types still raise (PIL territory)."""
-    import struct
     import zlib
 
     if b[:8] != _PNG_SIG:
@@ -767,9 +762,9 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(kernel, RESIZED_SCHEMA)
 
 
-def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling for video payloads: split the blob into
-    ``n_frames`` evenly spaced byte slices (stand-in for keyframe
+    ``N_FRAMES`` evenly spaced byte slices (stand-in for keyframe
     extraction), one output row per frame — mapInPandas so a single
     input row can fan out."""
 
@@ -778,8 +773,8 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
             out_ids, out_nos, out_frames = [], [], []
             for _, row in pdf.iterrows():
                 blob = row["payload"]
-                step = max(len(blob) // n_frames, 1)
-                for i in range(n_frames):
+                step = max(len(blob) // N_FRAMES, 1)
+                for i in range(N_FRAMES):
                     chunk = blob[i * step : (i + 1) * step]
                     if not chunk:
                         break
@@ -927,7 +922,6 @@ def probe_media_headers(media: DataFrame) -> DataFrame:
     uniformly (PIL's lazy open still differs per format in what it
     reads, ffprobe is a process spawn), so swapping one in here would
     trade an exact cheap pass for an approximate one."""
-    import struct
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -939,7 +933,7 @@ def probe_media_headers(media: DataFrame) -> DataFrame:
                     if b[:8] == _PNG_SIG:
                         w, h = struct.unpack(">II", b[16:24])
                         depth, ctype = b[24], b[25]
-                        ch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(ctype, 0)
+                        ch = _PNG_CHANNELS.get(ctype, 0)
                         rows.append((mid, "png", w, h, ch, 0, depth, 0))
                     elif b[:2] == b"BM":
                         w, h = struct.unpack("<ii", b[18:26])
@@ -1149,7 +1143,6 @@ def _synth_png_bytes(w: int, h: int, filter_type: int = 0) -> bytes:
 
 
 def _synth_jpeg_bytes(w: int, h: int, ncomp: int, progressive: int) -> bytes:
-    import struct
 
     app0 = _jpeg_seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
     comps = b"".join(bytes([i + 1, 0x11, 0]) for i in range(ncomp))
@@ -1306,7 +1299,6 @@ def _mp4_sample_table_stats(b: bytes) -> tuple[int, int, int, int, int, int]:
     Returns (samples, sample bytes, chunks, duration, offset sum,
     stsc-resolved samples).  Everything is structural byte walking —
     no sample data is decoded, so the ffmpeg boundary is untouched."""
-    import struct
 
     n_s = sum_sz = n_c = dur = sum_off = stsc_n = 0
     for s0, e0 in _mp4_descend(
@@ -1443,7 +1435,6 @@ def _synth_gif_bytes(w: int, h: int) -> bytes:
     ``color(i) = ((i*37)%256, (i*37+5)%256, (i*37+11)%256)`` — the
     decoder must run the real LZW decode AND the palette resolution to
     recover the closed-form RGB byte sum."""
-    import struct
 
     nc = 4  # palette size (min_code_size 2)
     palette = b"".join(
@@ -1498,7 +1489,6 @@ def _synth_bmp8_bytes(w: int, h: int) -> bytes:
     boundaries — the decoder must apply real stride arithmetic AND
     resolve indices through the table to recover the closed-form
     intensity sum."""
-    import struct
 
     stride = (w + 3) & ~3
     data = bytearray()
@@ -1522,7 +1512,6 @@ def _synth_bmp_bytes(w: int, h: int) -> bytes:
     apply the real stride arithmetic to skip the padding, which is
     what makes the closed-form sum a gate on exactly the bug class
     BMP readers get wrong (padding averaged into pixels)."""
-    import struct
 
     row_bytes = w * 3
     stride = (row_bytes + 3) & ~3
@@ -2006,8 +1995,8 @@ def _idct_basis():
 
 
 def _decode_jpeg(b: bytes):
-    """(width, height, planes) — Huffman JPEG decode of the baseline
-    (SOF0), extended-sequential (SOF1) and progressive (SOF2)
+    """(width, height, planes, precision) — Huffman JPEG decode of the
+    baseline (SOF0), extended-sequential (SOF1) and progressive (SOF2)
     processes through one path.  Every scan accumulates quantized
     coefficients into per-component zigzag buffers (ITU T.81 §G): DC
     first/refine scans, AC first scans with EOB runs, AC refinement
@@ -2027,7 +2016,8 @@ def _decode_jpeg(b: bytes):
     the FULL h × w by nearest neighbour.  planes is one numpy array per
     component, uint8 for 8-bit and uint16 for 12-bit precision (SOF1
     with Pq=1 16-bit quant tables; 12-bit under SOF0 is malformed per
-    Table B.2 and raises ValueError).  Sampling factors 1..4 decode,
+    Table B.2 and raises ValueError); precision is the SOF's sample
+    precision P (8 or 12).  Sampling factors 1..4 decode,
     non-divisor ratios (e.g. 3:2) through the index map
     src = x·Hi // Hmax, which equals replication for integral ratios.
     libjpeg's default fancy upsampler interpolates instead, so byte
@@ -2352,7 +2342,7 @@ def _decode_jpeg(b: bytes):
             ys = (np.arange(h) * c["v"]) // vmax
             xs = (np.arange(w) * c["h"]) // hmax
             out.append(p[ys][:, xs])
-    return w, h, out
+    return w, h, out, prec
 
 
 def _jpeg_luma_stats(b: bytes) -> tuple[int, int]:
@@ -2361,7 +2351,7 @@ def _jpeg_luma_stats(b: bytes) -> tuple[int, int]:
     (int64 accumulation holds 12-bit planes) — closed-form-checkable
     for the block-constant known-content containers
     (``_synth_jpeg_gray_bytes``, ``_synth_jpeg12_gray_bytes``)."""
-    w, h, planes = _decode_jpeg(b)
+    w, h, planes, _ = _decode_jpeg(b)
     return int(planes[0].astype("int64").sum()), w * h
 
 
@@ -2549,7 +2539,7 @@ def _jpeg_ycc_stats(b: bytes) -> tuple[int, int, int]:
     upsample.  The two sums gate separately: a correct Y path with a
     broken upsampler fails on chroma; a correct upsampler over
     misplaced MCU blocks fails on both."""
-    w, h, planes = _decode_jpeg(b)
+    w, h, planes, _ = _decode_jpeg(b)
     y, cb, cr = (int(p.astype("int64").sum()) for p in planes[:3])
     return y, cb + cr, w * h
 
@@ -2811,7 +2801,6 @@ def _synth_tiff_bytes(w: int, h: int, mid: int) -> bytes:
     ceil(h/2) strips with a ragged tail, and StripOffsets/
     StripByteCounts are external LONG arrays — the IFD shapes real
     scanners must resolve."""
-    import struct
 
     little = (mid // 8) % 2 == 0
     comp = [1, 32773, 5][(mid // 16) % 3]
@@ -2895,7 +2884,6 @@ def _parse_tiff(b: bytes):
     early-change width rule).  JPEG-in-TIFF compression raises
     NotImplementedError (the libtiff boundary); structural violations
     raise ValueError."""
-    import struct
 
     if b[:2] == b"II":
         e = "<"
@@ -3185,7 +3173,6 @@ def _synth_flac_bytes(mid: int) -> bytes:
              - (1024 if c == 0 else 512) for j in range(n)]
             for c in range(ch)
         ]
-    import struct
 
     # STREAMINFO: 16+16 block sizes, 24+24 frame sizes, 20-bit rate,
     # 3-bit channels-1, 5-bit bps-1, 36-bit total samples, 16-byte md5
@@ -3483,7 +3470,6 @@ def _ogg_page(header_type: int, granule: int, serial: int, seq: int,
     """One Ogg page.  ``chunks`` is [(bytes, continues)] — a chunk
     with ``continues=True`` must be a multiple of 255 long (its lacing
     run ends in 255, signalling continuation onto the next page)."""
-    import struct
 
     lacing = bytearray()
     body = bytearray()
@@ -3539,7 +3525,6 @@ def _parse_ogg(b: bytes):
     continuation flag).  ``packets`` is a list of reassembled packet
     byte strings.  Malformed framing and CRC mismatches raise
     ValueError."""
-    import struct
 
     pos = 0
     n_pages = 0
@@ -3642,15 +3627,14 @@ def _alaw_expand(byte: int) -> int:
     return mag if a & 0x80 else -mag
 
 
-def _synth_wav_mulaw_bytes(n: int, mid: int, rate: int = 8000,
-                           alaw: bool = False) -> bytes:
+def _synth_wav_mulaw_bytes(n: int, mid: int, alaw: bool = False) -> bytes:
     """Mono G.711 WAV (µ-law format 7, or A-law format 6 when
     ``alaw``) whose n companded bytes are the known function
     ``(j·11 + mid) % 256`` — the decoder must run the real expansion
     to recover the sample sum the oracle computes from the same
     formula."""
     data = bytes((j * 11 + mid) % 256 for j in range(n))
-    return _wav_bytes(6 if alaw else 7, 1, rate, 8, data)
+    return _wav_bytes(6 if alaw else 7, 1, 8000, 8, data)
 
 
 def _parse_wav_mulaw(b: bytes):

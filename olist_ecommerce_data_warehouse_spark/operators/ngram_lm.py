@@ -159,29 +159,24 @@ def ngram_lm_score(
     )
 
 
-def ppl_sketch_bounds(
-    scored: DataFrame,
-    by_col: str = "lang",
-    ppl_col: str = "ppl",
-    accuracy: int = 10000,
-) -> DataFrame:
-    """(by_col, __b) — the approximate per-group tertile boundaries of
+def ppl_sketch_bounds(scored: DataFrame) -> DataFrame:
+    """(lang, __b) — the approximate per-group tertile boundaries of
     :func:`ppl_buckets`, exposed separately (round 11) so a caller
     that also computes the exact tertiles can broadcast BOTH boundary
     tables onto one pass over the scored corpus instead of joining two
     full assignments back together on the document id."""
-    return scored.filter(F.col(ppl_col).isNotNull()).groupBy(by_col).agg(
-        F.percentile_approx(ppl_col, [1.0 / 3.0, 2.0 / 3.0], accuracy).alias(
+    return scored.filter(F.col("ppl").isNotNull()).groupBy("lang").agg(
+        F.percentile_approx("ppl", [1.0 / 3.0, 2.0 / 3.0], 10000).alias(
             "__b"
         )
     )
 
 
-def ppl_sketch_bucket_col(ppl_col: str = "ppl"):
+def ppl_sketch_bucket_col():
     """The sketch bucket expression over a row carrying ``__b`` (from
     a broadcast of :func:`ppl_sketch_bounds`) — the assignment half of
     :func:`ppl_buckets`, one definition for both composition styles."""
-    p = F.col(ppl_col)
+    p = F.col("ppl")
     return (
         F.when(p.isNull(), F.lit("unscored"))
         .when(p <= F.col("__b")[0], F.lit("head"))
@@ -190,13 +185,8 @@ def ppl_sketch_bucket_col(ppl_col: str = "ppl"):
     )
 
 
-def ppl_buckets(
-    scored: DataFrame,
-    by_col: str = "lang",
-    ppl_col: str = "ppl",
-    accuracy: int = 10000,
-) -> DataFrame:
-    """CCNet's head/middle/tail split: per-``by_col`` perplexity
+def ppl_buckets(scored: DataFrame) -> DataFrame:
+    """CCNet's head/middle/tail split: per-``lang`` perplexity
     tertiles (lower ppl = closer to the LM's training distribution =
     ``head``).  Scale shape: ONE aggregation computes approximate
     tertile boundaries per group (`percentile_approx`, a mergeable
@@ -204,14 +194,14 @@ def ppl_buckets(
     boundary table broadcasts, and assignment is a pure map.  Docs
     with NULL ppl (no bigrams) get bucket ``unscored`` — no evidence
     either way, callers decide their fate."""
-    bounds = ppl_sketch_bounds(scored, by_col, ppl_col, accuracy)
-    joined = scored.join(F.broadcast(bounds), by_col, "left")
-    return joined.withColumn("ppl_bucket", ppl_sketch_bucket_col(ppl_col)).drop(
+    bounds = ppl_sketch_bounds(scored)
+    joined = scored.join(F.broadcast(bounds), "lang", "left")
+    return joined.withColumn("ppl_bucket", ppl_sketch_bucket_col()).drop(
         "__b"
     )
 
 
-def ppl_tertiles_fp(scored: DataFrame, by_col: str = "lang") -> DataFrame:
+def ppl_tertiles_fp(scored: DataFrame) -> DataFrame:
     """CCNet head/middle/tail, EXACTLY and driver-gateably — the
     integer twin of the :func:`ppl_buckets` sketch (round 7, closing
     the round-6 verdict's #3 via the DSIR λ device: the only float op
@@ -237,9 +227,9 @@ def ppl_tertiles_fp(scored: DataFrame, by_col: str = "lang") -> DataFrame:
     with no bigrams get bucket ``unscored`` and NULL avg_fp (no
     evidence either way — the :func:`ppl_buckets` convention)."""
     withavg = scored.withColumn("avg_fp", ppl_avg_fp_col())
-    bounds = ppl_tertile_bounds_fp(withavg, by_col)
+    bounds = ppl_tertile_bounds_fp(withavg)
     return (
-        withavg.join(F.broadcast(bounds), by_col, "left")
+        withavg.join(F.broadcast(bounds), "lang", "left")
         .withColumn("ppl_bucket", ppl_tertile_bucket_col())
         .drop("__b1", "__b2")
     )
@@ -266,8 +256,8 @@ def ppl_tertile_bucket_col():
     )
 
 
-def ppl_tertile_bounds_fp(withavg: DataFrame, by_col: str = "lang") -> DataFrame:
-    """(by_col, __b1, __b2) — the exact per-group tertile boundaries
+def ppl_tertile_bounds_fp(withavg: DataFrame) -> DataFrame:
+    """(lang, __b1, __b2) — the exact per-group tertile boundaries
     over a scored table already carrying ``avg_fp``
     (:func:`ppl_avg_fp_col`).  Exposed separately (round 11) for the
     same one-pass composition as :func:`ppl_sketch_bounds`.
@@ -285,24 +275,24 @@ def ppl_tertile_bounds_fp(withavg: DataFrame, by_col: str = "lang") -> DataFrame
     has = F.col("n_bigrams") > 0
     vc = (
         withavg.filter(has)
-        .groupBy(by_col, "avg_fp")
+        .groupBy("lang", "avg_fp")
         .agg(F.count(F.lit(1)).alias("__cnt"))
     )
     win = (
-        Window.partitionBy(by_col)
+        Window.partitionBy("lang")
         .orderBy(F.desc("avg_fp"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     # Σ __cnt per group ≡ the final value of the descending running
     # sum ≡ its unbounded MAX — same partitioning, so both window
     # functions share one WindowExec input ordering
-    tot_win = Window.partitionBy(by_col).rowsBetween(
+    tot_win = Window.partitionBy("lang").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     cum = vc.withColumn("__cum", F.sum("__cnt").over(win)).withColumn(
         "__n", F.max("__cum").over(tot_win)
     )
-    return cum.groupBy(by_col).agg(
+    return cum.groupBy("lang").agg(
         F.max(
             F.when(F.col("__cum") >= F.expr("(__n + 2) div 3"), F.col("avg_fp"))
         ).alias("__b1"),

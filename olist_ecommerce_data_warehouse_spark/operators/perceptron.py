@@ -41,15 +41,6 @@ Two update modes, both integer-exact:
 A fixed round budget (no convergence probe) keeps runs comparable and
 the SQL replay (``perceptron_oracle_ctes``) finite.
 
-``averaged=True`` returns the AVERAGED perceptron (Freund & Schapire
-1999): Σ_t w_t over the round budget instead of the last iterate —
-the standard fix for exactly the lr=1 oscillation measured above
-(SCALING.md's 500k-doc run collapsed to the majority class in batch
-mode).  The 1/T normalization is dropped because it changes neither
-sign nor ranking, so the averaged model stays all-integer and exactly
-SQL-replayable; the accumulator update is one model-sized join per
-round, nothing corpus-sized.
-
 Round 5 adds :func:`pegasos_train` — the mini-batch PEGASOS margin
 trainer that actually CONVERGES on the hard labels where full-batch
 lr=1 collapses (measured: 22.04% → <0.1% training error at 100×).
@@ -89,21 +80,17 @@ def perceptron_train(
     features: DataFrame,
     labels: DataFrame,
     rounds: int = 2,
-    id_col: str = "doc_id",
     max_violator: bool = False,
-    averaged: bool = False,
 ) -> DataFrame:
     """(bucket, w) after ``rounds`` updates from w=0 (see module notes
-    for the two modes); with ``averaged`` the returned w is Σ_t w_t
-    over the round budget (unnormalized averaged perceptron — same
-    sign/ranking, all integers).
+    for the two modes).
 
-    ``features``: (id_col, bucket, cnt) sparse integer counts;
-    ``labels``: (id_col, y) with y ∈ {−1, +1}.  Deterministic on any
+    ``features``: (doc_id, bucket, cnt) sparse integer counts;
+    ``labels``: (doc_id, y) with y ∈ {−1, +1}.  Deterministic on any
     partitioning: every aggregate is an integer SUM, and the
     max-violator pick breaks ties to the lowest id."""
-    feats = features.join(labels, id_col).select(
-        id_col, "bucket", F.col("cnt").cast("bigint").alias("cnt"), "y"
+    feats = features.join(labels, "doc_id").select(
+        "doc_id", "bucket", F.col("cnt").cast("bigint").alias("cnt"), "y"
     )
     if rounds > 0:
         # lineage CUT, not persisted: the per-round scoring join and
@@ -112,18 +99,16 @@ def perceptron_train(
         # round otherwise (operators/lineage.py)
         feats = cut_lineage(feats)
     w = None  # bucket -> weight; None = all zeros
-    acc = None  # averaged mode: running Σ_t w_t
     try:
-        rounds_done = 0
         for _ in range(rounds):
             if w is None:
                 scored = feats.select(
-                    id_col, "y", F.lit(0).cast("bigint").alias("score")
+                    "doc_id", "y", F.lit(0).cast("bigint").alias("score")
                 ).distinct()
             else:
                 scored = (
                     feats.join(F.broadcast(w), "bucket", "left")
-                    .groupBy(id_col, "y")
+                    .groupBy("doc_id", "y")
                     .agg(
                         F.sum(
                             F.col("cnt") * F.coalesce(F.col("w"), F.lit(0))
@@ -133,52 +118,39 @@ def perceptron_train(
             mis = scored.filter(F.col("y") * F.col("score") <= 0)
             if max_violator:
                 worst = (
-                    mis.orderBy((F.col("y") * F.col("score")).asc(), F.col(id_col))
+                    mis.orderBy((F.col("y") * F.col("score")).asc(), F.col("doc_id"))
                     .limit(1)
-                    .select(id_col)
+                    .select("doc_id")
                     .collect()
                 )
                 if not worst:
                     break  # separated: zero training errors
                 mis = feats.sparkSession.createDataFrame(
-                    [(worst[0][0],)], f"{id_col} bigint"
+                    [(worst[0][0],)], "doc_id bigint"
                 )
             else:
-                mis = mis.select(id_col)
+                mis = mis.select("doc_id")
             delta = (
-                feats.join(mis, id_col)
+                feats.join(mis, "doc_id")
                 .groupBy("bucket")
                 .agg(F.sum(F.col("y") * F.col("cnt")).alias("d"))
             ).select("bucket", F.col("d").alias("w"))
             w = _merge_weights(w, delta).localCheckpoint(eager=True)
-            rounds_done += 1
-            if averaged:
-                acc = _merge_weights(acc, w).localCheckpoint(eager=True)
     finally:
         if rounds > 0:
             feats.unpersist()
-    if averaged and w is not None and rounds_done < rounds:
-        # separated early: w is constant for the remaining rounds, and
-        # the average (like the SQL replay's no-op tail rounds) counts
-        # those copies too
-        tail = w.select("bucket", (F.col("w") * F.lit(rounds - rounds_done)).alias("w"))
-        acc = _merge_weights(acc, tail)
-    out = acc if averaged else w
-    if out is None:
-        spark = features.sparkSession
-        return spark.createDataFrame([], "bucket bigint, w bigint")
-    return out
+    if w is None:
+        return features.sparkSession.createDataFrame([], "bucket bigint, w bigint")
+    return w
 
 
-def perceptron_score(
-    features: DataFrame, weights: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id_col, score) — Σ w[bucket]·cnt per document under the
+def perceptron_score(features: DataFrame, weights: DataFrame) -> DataFrame:
+    """(doc_id, score) — Σ w[bucket]·cnt per document under the
     trained weights (missing buckets weigh 0; docs with no features
     score 0 only if they appear in ``features``)."""
     return (
         features.join(F.broadcast(weights), "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum(
                 F.col("cnt").cast("bigint") * F.coalesce(F.col("w"), F.lit(0))
@@ -192,7 +164,6 @@ def perceptron_train_reference(
     label_map: dict[int, int],
     rounds: int,
     max_violator: bool = False,
-    averaged: bool = False,
 ) -> dict[int, int]:
     """Driver-side reference trainer over (doc_id, bucket, cnt) rows —
     the distributed trainer must produce identical weights."""
@@ -201,7 +172,6 @@ def perceptron_train_reference(
         if d in label_map:
             by_doc.setdefault(d, []).append((b, c))
     w: dict[int, int] = {}
-    acc: dict[int, int] = {}
     for _ in range(rounds):
         scores = {
             d: sum(c * w.get(b, 0) for b, c in fs) for d, fs in by_doc.items()
@@ -219,31 +189,19 @@ def perceptron_train_reference(
                 for b, c in by_doc[d]:
                     w[b] = w.get(b, 0) + y * c
             w = {b: v for b, v in w.items() if v != 0}
-        for b, v in w.items():
-            acc[b] = acc.get(b, 0) + v
-    if averaged:
-        return {b: v for b, v in acc.items() if v != 0}
     return w
 
 
-def perceptron_oracle_ctes(
-    rounds: int,
-    feats_cte: str = "pfeats",
-    labels_cte: str = "plabels",
-    max_violator: bool = False,
-) -> str:
+def perceptron_oracle_ctes(rounds: int, max_violator: bool = False) -> str:
     """SQL replay of :func:`perceptron_train` as unrolled-round CTEs
-    (the trained-IVF/BPE oracle device): expects ``feats_cte(doc_id,
-    bucket, cnt)`` and ``labels_cte(doc_id, y)`` to exist; emits
+    (the trained-IVF/BPE oracle device): expects ``pfeats(doc_id,
+    bucket, cnt)`` and ``plabels(doc_id, y)`` to exist; emits
     ``pw{rounds}(bucket, w)`` plus ``pscores(doc_id, score)`` under
-    the final weights, and ``pavg(bucket, w)`` = Σ_t pw_t — the
-    averaged-perceptron replay (separated rounds are no-ops in the
-    unrolled chain, so their constant-w copies are counted exactly as
-    the engine's early-break tail does).  No leading WITH."""
+    the final weights.  No leading WITH."""
     parts = [
-        f"""pf AS (
+        """pf AS (
         SELECT f.doc_id, f.bucket, CAST(f.cnt AS BIGINT) AS cnt, l.y
-        FROM {feats_cte} f JOIN {labels_cte} l USING (doc_id)
+        FROM pfeats f JOIN plabels l USING (doc_id)
     )""",
         """pw0 AS (SELECT CAST(NULL AS BIGINT) AS bucket, CAST(NULL AS BIGINT) AS w WHERE FALSE)""",
     ]
@@ -285,24 +243,10 @@ def perceptron_oracle_ctes(
         f"""pscores AS (
         SELECT f.doc_id,
                CAST(COALESCE(SUM(f.cnt * w.w), 0) AS BIGINT) AS score
-        FROM {feats_cte} f LEFT JOIN pw{rounds} w USING (bucket)
+        FROM pfeats f LEFT JOIN pw{rounds} w USING (bucket)
         GROUP BY f.doc_id
     )"""
     )
-    if rounds > 0:
-        union = " UNION ALL ".join(
-            f"SELECT bucket, w FROM pw{i}" for i in range(1, rounds + 1)
-        )
-        parts.append(
-            f"""pavg AS (
-        SELECT bucket, CAST(SUM(w) AS BIGINT) AS w
-        FROM ({union}) GROUP BY bucket HAVING SUM(w) != 0
-    )"""
-        )
-    else:
-        parts.append(
-            """pavg AS (SELECT CAST(NULL AS BIGINT) AS bucket, CAST(NULL AS BIGINT) AS w WHERE FALSE)"""
-        )
     return ",\n    ".join(parts)
 
 
@@ -329,7 +273,6 @@ def pegasos_train(
     rounds: int = 50,
     c: int = 100,
     batches: int = 10,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """PEGASOS-style margin trainer (Shalev-Shwartz et al., "Pegasos:
     Primal Estimated sub-GrAdient SOlver for SVM", ICML 2007) in its
@@ -368,17 +311,17 @@ def pegasos_train(
 
     Returns (bucket, w) with w at FX scale; score with
     :func:`perceptron_score` and read decisions as sign(score)."""
-    feats = features.join(labels, id_col).select(
-        id_col, "bucket", F.col("cnt").cast("bigint").alias("cnt"), "y"
+    feats = features.join(labels, "doc_id").select(
+        "doc_id", "bucket", F.col("cnt").cast("bigint").alias("cnt"), "y"
     )
     if rounds == 0:
         return features.sparkSession.createDataFrame([], "bucket bigint, w bigint")
     feats = cut_lineage(feats)
     # per-batch doc counts, ONCE (model-sized: K numbers)
-    bt_col = F.pmod(F.col(id_col), F.lit(batches))
+    bt_col = F.pmod(F.col("doc_id"), F.lit(batches))
     sizes = {
         int(r["bt"]): int(r["n"])
-        for r in feats.select(id_col, bt_col.alias("bt"))
+        for r in feats.select("doc_id", bt_col.alias("bt"))
         .distinct()
         .groupBy("bt")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -406,21 +349,21 @@ def pegasos_train(
             batch = feats.filter(bt_col == bt)
             if w is None:
                 scored = batch.select(
-                    id_col, "y", F.lit(0).cast("bigint").alias("score")
+                    "doc_id", "y", F.lit(0).cast("bigint").alias("score")
                 ).distinct()
             else:
                 scored = (
                     batch.join(F.broadcast(w), "bucket", "left")
-                    .groupBy(id_col, "y")
+                    .groupBy("doc_id", "y")
                     .agg(
                         F.sum(
                             F.col("cnt") * F.coalesce(F.col("w"), F.lit(0))
                         ).alias("score")
                     )
                 )
-            viol = scored.filter(F.col("y") * F.col("score") < FX).select(id_col)
+            viol = scored.filter(F.col("y") * F.col("score") < FX).select("doc_id")
             grad = (
-                batch.join(viol, id_col)
+                batch.join(viol, "doc_id")
                 .groupBy("bucket")
                 .agg(F.sum(F.col("y") * F.col("cnt")).alias("g"))
                 .select("bucket", F.expr(f"({c} * {FX} * g) div {t * nb}").alias("w"))
@@ -483,26 +426,20 @@ def pegasos_train_reference(
     return w
 
 
-def pegasos_oracle_ctes(
-    rounds: int,
-    c: int = 100,
-    batches: int = 10,
-    feats_cte: str = "pfeats",
-    labels_cte: str = "plabels",
-) -> str:
+def pegasos_oracle_ctes(rounds: int, c: int = 100, batches: int = 10) -> str:
     """SQL replay of :func:`pegasos_train` as unrolled-round CTEs:
-    expects ``feats_cte(doc_id, bucket, cnt)`` / ``labels_cte(doc_id,
-    y)``; emits ``pgw{rounds}(bucket, w)`` and ``pgscores(doc_id,
-    score)``.  Batch membership is ``((doc_id % K) + K) % K`` — pmod,
-    because DuckDB's ``%`` follows the dividend's sign where Spark's
-    ``pmod`` and Python's ``%`` don't.  DuckDB's ``//`` truncates
-    toward zero exactly like Spark's ``div`` (measured), which is what
-    makes the fixed-point steps replayable.  No leading WITH."""
+    expects ``pfeats(doc_id, bucket, cnt)`` / ``plabels(doc_id, y)``;
+    emits ``pgw{rounds}(bucket, w)`` and ``pgscores(doc_id, score)``.
+    Batch membership is ``((doc_id % K) + K) % K`` — pmod, because
+    DuckDB's ``%`` follows the dividend's sign where Spark's ``pmod``
+    and Python's ``%`` don't.  DuckDB's ``//`` truncates toward zero
+    exactly like Spark's ``div`` (measured), which is what makes the
+    fixed-point steps replayable.  No leading WITH."""
     parts = [
         f"""pgf AS (
         SELECT f.doc_id, f.bucket, CAST(f.cnt AS BIGINT) AS cnt, l.y,
                ((f.doc_id % {batches}) + {batches}) % {batches} AS bt
-        FROM {feats_cte} f JOIN {labels_cte} l USING (doc_id)
+        FROM pfeats f JOIN plabels l USING (doc_id)
     )""",
         """pgw0 AS (SELECT CAST(NULL AS BIGINT) AS bucket, CAST(NULL AS BIGINT) AS w WHERE FALSE)""",
     ]
@@ -543,7 +480,7 @@ def pegasos_oracle_ctes(
         f"""pgscores AS (
         SELECT f.doc_id,
                CAST(COALESCE(SUM(f.cnt * w.w), 0) AS BIGINT) AS score
-        FROM {feats_cte} f LEFT JOIN pgw{rounds} w USING (bucket)
+        FROM pfeats f LEFT JOIN pgw{rounds} w USING (bucket)
         GROUP BY f.doc_id
     )"""
     )

@@ -50,11 +50,9 @@ def pq_train(
     m: int = 4,
     k: int = 16,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[list[int]]]:
     """Train ``m`` subspace codebooks (each k × d/m int64-quantized
-    centroids) over ``dim``-wide vectors.  ``dim`` must divide by m.
+    centroids) over ``dim``-wide ``(vec_id, embedding)`` vectors.  ``dim`` must divide by m.
     Each subspace is a full ``kmeans_train`` over the sliced,
     pre-quantized vectors — m small trainings, each the documented
     small-model/big-data loop.
@@ -83,7 +81,7 @@ def pq_train(
     # holds (the filter keeps every row) and raises with the message on
     # the first mismatch — evaluated inside the existing training scans.
     # A NULL vector makes the predicate NULL, which raises too.
-    q = vectors.select(F.col(id_col), quantized(vec_col).alias("__qv")).where(
+    q = vectors.select("vec_id", quantized("embedding").alias("__qv")).where(
         F.isnull(
             F.assert_true(
                 F.size("__qv") == F.lit(dim),
@@ -96,12 +94,9 @@ def pq_train(
     )
 
     def one(j: int) -> list[list[int]]:
-        sliced = q.select(
-            id_col, F.slice("__qv", j * sub + 1, sub).alias("__sub")
-        )
+        sliced = q.select("vec_id", F.slice("__qv", j * sub + 1, sub).alias("__sub"))
         return kmeans_train(
             sliced,
-            id_col=id_col,
             vec_col="__sub",
             k=k,
             n_iter=n_iter,
@@ -151,13 +146,12 @@ PQ_CODE_SCHEMA = T.StructType(
 def pq_encode(
     vectors: DataFrame,
     codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vec_id, codes, recon_err): per-subspace nearest-centroid codes
-    (exact int64 L2², ties → lower code) + the integer reconstruction
-    error.  One Arrow map, no shuffle; the codebooks ride the closure
-    (model-sized: m·k·(d/m) ints)."""
+    """(vec_id, codes, recon_err) of ``(vec_id, embedding)`` vectors:
+    per-subspace nearest-centroid codes (exact int64 L2², ties → lower
+    code) + the integer reconstruction error.  One Arrow map, no
+    shuffle; the codebooks ride the closure (model-sized: m·k·(d/m)
+    ints)."""
     import numpy as np
     import pandas as pd
 
@@ -171,15 +165,15 @@ def pq_encode(
             codes, err = pq_encode_block(vm, codebooks)
             yield pd.DataFrame(
                 {
-                    "vec_id": pdf[id_col].astype("int64"),
+                    "vec_id": pdf["vec_id"].astype("int64"),
                     "codes": list(codes),
                     "recon_err": err,
                 }
             )
 
-    return vectors.select(
-        F.col(id_col), quantized(vec_col).alias("__qv")
-    ).mapInPandas(kernel, PQ_CODE_SCHEMA)
+    return vectors.select("vec_id", quantized("embedding").alias("__qv")).mapInPandas(
+        kernel, PQ_CODE_SCHEMA
+    )
 
 
 ADC_SCHEMA = T.StructType(
@@ -196,15 +190,13 @@ def pq_adc_topk(
     codebooks: list[list[list[int]]],
     queries: DataFrame,
     top_k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: (query_id, vec_id,
-    adc_dist, rank).  Each query's m×k LUT of exact int64 partial
-    distances is built once from the collected query matrix
-    (model-sized — the broadcast contract of ``brute_force_topk``);
-    the kernel scores each batch by m gathers + adds and keeps a
-    per-partition top-k, so the global window sees
+    """Asymmetric-distance top-k over PQ codes for ``(vec_id,
+    embedding)`` queries: (query_id, vec_id, adc_dist, rank).  Each
+    query's m×k LUT of exact int64 partial distances is built once from
+    the collected query matrix (model-sized — the broadcast contract of
+    ``brute_force_topk``); the kernel scores each batch by m gathers +
+    adds and keeps a per-partition top-k, so the global window sees
     n_queries × partitions × k rows, never the corpus."""
     import numpy as np
     import pandas as pd
@@ -212,7 +204,7 @@ def pq_adc_topk(
     m = len(codebooks)
     sub = len(codebooks[0][0])
     qrows = queries.select(
-        F.col(id_col).alias("__qid"), quantized(vec_col).alias("__qv")
+        F.col("vec_id").alias("__qid"), quantized("embedding").alias("__qv")
     ).collect()
     qids = np.array([r["__qid"] for r in qrows], dtype=np.int64)
     qm = np.stack([np.asarray(r["__qv"], dtype=np.int64) for r in qrows])

@@ -98,9 +98,10 @@ def hashed_feature_counts(
     )
 
 
-def quality_features_sql(text_col: str = "text") -> str:
-    """SQL twin of :func:`quality_features` (expression form)."""
-    th = f"list_transform({toks_sql(text_col)}, t -> {hex2int_sql('md5(t)')})"
+def quality_features_sql() -> str:
+    """SQL twin of :func:`quality_features` over ``text`` (expression
+    form)."""
+    th = f"list_transform({toks_sql()}, t -> {hex2int_sql('md5(t)')})"
     bi = f"list_transform({_gramk_sql(th, 2)}, g -> g % {GRAM_M})"
     return f"list_concat({th}, {bi})"
 
@@ -159,24 +160,18 @@ def quality_scored(df, toks: Column):
 # ``hashed_feature_counts(df, toks, QC_BUCKETS)``.
 
 
-def quality_train(df, toks: Column, labels, rounds: int = 50, method: str = "max_violator"):
+def quality_train(df, toks: Column, labels, rounds: int = 50):
     """Train (bucket, w) quality weights on labeled docs — labels is
     (doc_id, y) with y ∈ {−1 junk, +1 clean}.  The model is
     bucket-space-bounded (≤ 2^20 rows), broadcastable at any corpus
-    size.  ``method``:
-
-    - ``'max_violator'`` (default): sequential perceptron driven by the
-      worst violator — Novikoff convergence on separable corpora, but
-      one update per round makes it the wrong tool past ~10^5 docs.
-    - ``'pegasos'``: mini-batch PEGASOS margin trainer (round 5) — the
-      corpus-scale choice: converges on hard/imbalanced labels where
-      batch perceptron collapses (measured <0.1% vs 22% at 100×),
-      each round touching 1/10 of the feature matrix."""
-    from .perceptron import pegasos_train, perceptron_train
+    size.  The trainer is the sequential perceptron driven by the
+    worst violator — Novikoff convergence on separable corpora, but
+    one update per round makes it the wrong tool past ~10^5 docs; the
+    corpus-scale trainer is :func:`pegasos_train` over the same
+    ``hashed_feature_counts`` matrix (``plans/text.py``)."""
+    from .perceptron import perceptron_train
 
     feats = hashed_feature_counts(df, toks, QC_BUCKETS)
-    if method == "pegasos":
-        return pegasos_train(feats, labels, rounds=rounds, c=100, batches=10)
     return perceptron_train(feats, labels, rounds=rounds, max_violator=True)
 
 

@@ -52,18 +52,14 @@ def sample_by_weight(
     df: DataFrame,
     weights: dict[str, float],
     source_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = ":mix",
-    epoch_col: str = "epoch",
-    default_weight: float = 1.0,
 ) -> DataFrame:
     """Weighted domain mixing: every input row yields ``weight(source)``
     expected copies, deterministically.
 
     weight 0.25 → keep 25% of the source's docs (one copy each);
     weight 2.5  → every doc twice, plus a deterministic 50% third copy.
-    Copies carry ``epoch_col`` ∈ 0..ceil(w)-1.  Unlisted sources get
-    ``default_weight``.
+    Copies carry ``epoch`` ∈ 0..ceil(w)-1, and the extra copy is picked
+    by a salted hash of ``doc_id``.  Unlisted sources get weight 1.
 
     The weight lookup auto-selects by config size: up to
     ``_EXPR_LOOKUP_MAX`` domains it stays a codegen'd conditional
@@ -86,41 +82,39 @@ def sample_by_weight(
             f"{source_col} string, __w double",
         )
         df = df.join(F.broadcast(wdf), source_col, "left")
-        weight = F.coalesce(F.col("__w"), F.lit(float(default_weight)))
+        weight = F.coalesce(F.col("__w"), F.lit(1.0))
     elif weights:
         src = F.col(source_col)
-        weight = F.lit(float(default_weight))
+        weight = F.lit(1.0)
         for s, w in weights.items():
             weight = F.when(src == s, F.lit(float(w))).otherwise(weight)
     else:
-        weight = F.lit(float(default_weight))
+        weight = F.lit(1.0)
     n_full = F.floor(weight).cast("int")
     # round() before the cast: 0.3 in binary is 0.29999…, and a bare
     # bigint cast truncates 299999.999… to 299999 — a persistent
     # one-in-a-million under-bias vs the documented exact multiplicity.
     frac_scaled = F.round((weight - F.floor(weight)) * _M).cast("bigint")
-    takes_extra = _hash_frac(F.col(id_col), salt) < frac_scaled
+    takes_extra = _hash_frac(F.col("doc_id"), ":mix") < frac_scaled
     n_copies = (n_full + takes_extra.cast("int")).alias("__n")
     return (
         df.withColumn("__n", n_copies)
         .filter(F.col("__n") > 0)
-        .withColumn(epoch_col, F.explode(F.sequence(F.lit(0), F.col("__n") - 1)))
+        .withColumn("epoch", F.explode(F.sequence(F.lit(0), F.col("__n") - 1)))
         .drop("__n", "__w")
     )
 
 
-def mixing_report(
-    df: DataFrame, mixed: DataFrame, source_col: str = "source"
-) -> DataFrame:
+def mixing_report(df: DataFrame, mixed: DataFrame) -> DataFrame:
     """(source, n_input, n_mixed, realized_weight) — the sanity report
     a mixing run ships with: realized multiplicity per source for
     comparison against the requested weights."""
-    inp = df.groupBy(source_col).agg(F.count(F.lit(1)).alias("n_input"))
-    out = mixed.groupBy(source_col).agg(F.count(F.lit(1)).alias("n_mixed"))
+    inp = df.groupBy("source").agg(F.count(F.lit(1)).alias("n_input"))
+    out = mixed.groupBy("source").agg(F.count(F.lit(1)).alias("n_mixed"))
     return (
-        inp.join(out, source_col, "left")
+        inp.join(out, "source", "left")
         .select(
-            source_col,
+            "source",
             "n_input",
             F.coalesce("n_mixed", F.lit(0)).alias("n_mixed"),
             (F.coalesce("n_mixed", F.lit(0)).cast("double") / F.col("n_input")).alias(

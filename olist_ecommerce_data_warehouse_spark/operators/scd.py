@@ -26,27 +26,25 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+_SCD_COLS = ("effective_start", "effective_end", "is_current")
+
 
 def scd2_from_history(
     history: DataFrame,
     key_cols: Sequence[str],
     ts_col: str,
-    *,
-    start_col: str = "effective_start",
-    end_col: str = "effective_end",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """history(key..., attrs..., ts) → SCD-2 rows.
 
-    ``end_col`` is the NEXT version's start (half-open intervals,
-    standard Kimball); NULL end ⇔ ``current_col`` = 1."""
+    ``effective_end`` is the NEXT version's start (half-open intervals,
+    standard Kimball); NULL end ⇔ ``is_current`` = 1."""
     w = Window.partitionBy(*key_cols).orderBy(ts_col)
     nxt = F.lead(ts_col).over(w)
     return (
-        history.withColumn(start_col, F.col(ts_col))
-        .withColumn(end_col, nxt)
+        history.withColumn("effective_start", F.col(ts_col))
+        .withColumn("effective_end", nxt)
         .withColumn(
-            current_col, F.when(F.col(end_col).isNull(), 1).otherwise(0)
+            "is_current", F.when(F.col("effective_end").isNull(), 1).otherwise(0)
         )
         .drop(ts_col)
     )
@@ -57,18 +55,13 @@ def scd2_apply_snapshot(
     snapshot: DataFrame,
     key_cols: Sequence[str],
     as_of,
-    *,
-    attr_cols: Sequence[str] | None = None,
-    start_col: str = "effective_start",
-    end_col: str = "effective_end",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """Incremental SCD-2 maintenance: apply one attribute snapshot
     (key..., attrs...) taken at ``as_of`` to an existing SCD-2
     dimension, without rebuilding history.
 
-    - changed key → the current row closes (``end_col`` = as_of,
-      ``current_col`` = 0) and a new current row opens at as_of;
+    - changed key → the current row closes (``effective_end`` = as_of,
+      ``is_current`` = 0) and a new current row opens at as_of;
     - unseen key → a new current row opens;
     - unchanged key, and keys absent from the snapshot → untouched
       (delta-feed semantics, like ``merge_upsert``'s default).
@@ -76,22 +69,20 @@ def scd2_apply_snapshot(
     One full-outer join on the natural key between the CURRENT slice
     and the snapshot; the historical slice passes through untouched —
     at 100 TB the work is proportional to |current| + |snapshot|, never
-    to the accumulated history.  Attribute comparison is null-safe.
+    to the accumulated history.  Every dimension column other than the
+    keys and the three SCD columns is a tracked attribute the snapshot
+    carries; comparison is null-safe.
     Combined with ``scd2_from_history`` for the initial build, this is
     the full Kimball Type-2 lifecycle as pure DataFrame transforms
     (Delta MERGE expresses the same thing transactionally; the operator
     keeps the contract engine-portable)."""
     as_of_lit = F.lit(as_of)
     dim_cols = dim.columns
-    if attr_cols is None:
-        attr_cols = [
-            c for c in dim.columns
-            if c not in (*key_cols, start_col, end_col, current_col)
-        ]
+    attr_cols = [c for c in dim_cols if c not in (*key_cols, *_SCD_COLS)]
     # Exhaustive split: a NULL (or any non-1) flag from an external load
     # must land in the history slice, not vanish — `flag != 1` alone is
     # NULL-valued for NULL flags and would silently drop those rows.
-    is_current = F.coalesce(F.col(current_col), F.lit(0)) == 1
+    is_current = F.coalesce(F.col("is_current"), F.lit(0)) == 1
     cur = dim.filter(is_current)
     hist = dim.filter(~is_current)
 
@@ -122,22 +113,14 @@ def scd2_apply_snapshot(
     # closed versions of changed rows
     closed = j.filter(in_c & in_s & differs).select(
         *[F.col(f"__c_{x}").alias(x) for x in dim_cols]
-    ).withColumn(end_col, as_of_lit).withColumn(current_col, F.lit(0))
-    # newly opened rows: changed keys + unseen keys.  Dim columns NOT
-    # in attr_cols (untracked decorations, e.g. audit notes) are not in
-    # the snapshot — carry them forward from the closing current row
-    # (NULL for brand-new keys, which have no prior row).
-    untracked = [
-        c for c in dim_cols
-        if c not in (*key_cols, *attr_cols, start_col, end_col, current_col)
-    ]
+    ).withColumn("effective_end", as_of_lit).withColumn("is_current", F.lit(0))
+    # newly opened rows: changed keys + unseen keys
     opened = j.filter(in_s & (~in_c | differs)).select(
         *[F.col(f"__s_{k}").alias(k) for k in key_cols],
         *[F.col(f"__s_{a}").alias(a) for a in attr_cols],
-        *[F.col(f"__c_{u}").alias(u) for u in untracked],
-    ).withColumn(start_col, as_of_lit).withColumn(
-        end_col, F.lit(None).cast(dim.schema[end_col].dataType)
-    ).withColumn(current_col, F.lit(1))
+    ).withColumn("effective_start", as_of_lit).withColumn(
+        "effective_end", F.lit(None).cast(dim.schema["effective_end"].dataType)
+    ).withColumn("is_current", F.lit(1))
 
     out_cols = dim_cols
     return (

@@ -400,13 +400,12 @@ def ivf_topk(
 def blocked_cosine_pairs(
     blocked: DataFrame,
     block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     threshold: float = 0.99,
 ) -> DataFrame:
-    """All qualifying cosine pairs (id_a < id_b, cosine ≥ threshold)
-    within each block, via a per-block integer Gram matrix in numpy —
-    the vectorized-Pandas-UDF scale path for embedding near-dup.
+    """All qualifying cosine pairs (vec_id_a < vec_id_b, cosine ≥
+    threshold) among the (vec_id, v) rows of each block, via a
+    per-block integer Gram matrix in numpy — the vectorized-Pandas-UDF
+    scale path for embedding near-dup.
 
     Each block (an IVF/LSH bucket at scale — here the corpus label)
     becomes ONE ``applyInPandas`` group: stack the block's quantized
@@ -425,14 +424,10 @@ def blocked_cosine_pairs(
     import numpy as np
     import pandas as pd
 
-    out_schema = (
-        f"{id_col}_a bigint, {id_col}_b bigint, cosine double"
-    )
-
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        ids = pdf[id_col].to_numpy()
-        m = np.stack([np.asarray(v, dtype=np.int64) for v in pdf[vec_col]])
+        pdf = pdf.sort_values("vec_id")
+        ids = pdf["vec_id"].to_numpy()
+        m = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["v"]])
         gram = m @ m.T
         norms = np.sqrt(np.diag(gram).astype(np.float64))
         cos = _safe_cos(gram, norms, norms)
@@ -440,146 +435,27 @@ def blocked_cosine_pairs(
         keep = cos[ia, ib] >= threshold
         return pd.DataFrame(
             {
-                f"{id_col}_a": ids[ia][keep],
-                f"{id_col}_b": ids[ib][keep],
+                "vec_id_a": ids[ia][keep],
+                "vec_id_b": ids[ib][keep],
                 "cosine": cos[ia, ib][keep],
             }
         )
 
-    return blocked.select(block_col, id_col, vec_col).groupBy(block_col).applyInPandas(
-        kernel, out_schema
+    return blocked.select(block_col, "vec_id", "v").groupBy(block_col).applyInPandas(
+        kernel, "vec_id_a bigint, vec_id_b bigint, cosine double"
     )
-
-
-def split_overcap_blocks(
-    assigned: DataFrame,
-    cap: int,
-    sub_k: int = 8,
-    rounds: int = 3,
-    block_col: str = "cluster",
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """Bound every block to ≤ ``cap`` rows — the mitigation for
-    SemDeDup's documented 100 TB hazard (a mega-cluster re-creating
-    all-pairs inside one Gram block, SCALING.md round-4 stress notes).
-
-    Each round: blocks over cap are re-clustered LOCALLY — one
-    ``applyInPandas`` group per over-cap block runs a small
-    deterministic k-means (seeds = ``sub_k`` smallest md5(id) rows,
-    two numpy Lloyd iterations, exact int64 math, ties → lower id) and
-    refines the block key to ``block·sub_k + child``.  Training is
-    in-kernel rather than a driver loop because every over-cap block
-    must already fit an executor for the Gram pass to be possible at
-    all — so local Lloyd is free parallelism across blocks, one job
-    per round instead of one per block.
-
-    After ``rounds``, any block still over cap (pathological: all
-    vectors identical, k-means cannot separate them) is FORCE-chunked
-    by id-rank — ``ceil(n/cap)`` contiguous-id chunks via one block-
-    keyed window.  That guarantees the cap at the cost of missing
-    cross-chunk pairs, the honest trade for bounded work; callers that
-    need those pairs run the LSH family instead.  Returns the frame
-    with ``block_col`` refined; block ids stay deterministic, so runs
-    are replayable."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-
-    out_schema = f"{block_col} long, {id_col} bigint, {vec_col} array<bigint>"
-
-    def local_kmeans(pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        parent = int(pdf[block_col].iloc[0])
-        vm = np.stack([np.asarray(x, dtype=np.int64) for x in pdf[vec_col]])
-        ids = pdf[id_col].to_numpy()
-        k = min(sub_k, len(pdf))
-        seed_order = np.argsort(
-            [hashlib.md5(str(int(i)).encode()).hexdigest() for i in ids],
-            kind="stable",
-        )[:k]
-        cm = vm[np.sort(seed_order)]
-        for _ in range(2):
-            cn = np.einsum("ij,ij->i", cm, cm)
-            child = np.argmin(-2 * (vm @ cm.T) + cn[None, :], axis=1)
-            new_cm = cm.copy()
-            for c in range(k):
-                members = vm[child == c]
-                if len(members):
-                    # floor-division integer means, same rule as the
-                    # distributed trainer
-                    new_cm[c] = members.sum(axis=0) // len(members)
-            cm = new_cm
-        cn = np.einsum("ij,ij->i", cm, cm)
-        child = np.argmin(-2 * (vm @ cm.T) + cn[None, :], axis=1)
-        return pd.DataFrame(
-            {
-                block_col: parent * sub_k + child.astype("int64"),
-                id_col: ids,
-                vec_col: list(pdf[vec_col]),
-            }
-        )
-
-    cur = assigned.select(
-        F.col(block_col).cast("long").alias(block_col), id_col, vec_col
-    )
-    for _ in range(rounds):
-        sizes = cur.groupBy(block_col).agg(F.count(F.lit(1)).alias("__n"))
-        over = sizes.filter(F.col("__n") > cap).select(block_col)
-        if over.isEmpty():
-            return cur
-        big = cur.join(F.broadcast(over), block_col)
-        small = cur.join(F.broadcast(over), block_col, "left_anti")
-        resplit = big.groupBy(block_col).applyInPandas(local_kmeans, out_schema)
-        cur = small.unionByName(resplit).localCheckpoint(eager=True)
-
-    # force-chunk whatever k-means could not separate
-    sizes = cur.groupBy(block_col).agg(F.count(F.lit(1)).alias("__n"))
-    over = sizes.filter(F.col("__n") > cap).select(block_col)
-    if over.isEmpty():
-        return cur
-    big = cur.join(F.broadcast(over), block_col)
-    small = cur.join(F.broadcast(over), block_col, "left_anti")
-    rn = F.row_number().over(Window.partitionBy(block_col).orderBy(id_col))
-    chunked = big.select(
-        (
-            F.col(block_col) * (sub_k ** rounds + 1)
-            + ((rn - 1) / cap).cast("long")
-        ).alias(block_col),
-        id_col,
-        vec_col,
-    )
-    return small.unionByName(chunked)
 
 
 def semdedup_pairs(
-    vectors: DataFrame,
-    centroids: list[list[int]],
-    threshold: float = 0.95,
-    cluster_cap: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
+    vectors: DataFrame, centroids: list[list[int]], threshold: float
 ) -> DataFrame:
-    """SemDeDup with bounded blocks: assign to trained centroids
-    (carrying vectors through the kernel), optionally split over-cap
-    clusters (:func:`split_overcap_blocks`), then one Gram pass per
-    final block.  The uncapped path is exactly the oracle-gated
-    `dedup_embedding_cosine` kind='semdedup' pipeline; the capped path
-    is its 100 TB form."""
+    """SemDeDup: assign (vec_id, v) vectors to trained centroids
+    (carrying vectors through the kernel), then one Gram pass per
+    cluster — the `dedup_embedding_cosine` kind='semdedup' pipeline.
+    Every cluster must fit an executor (see ``blocked_cosine_pairs``)."""
     from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_assign
 
     assigned = kmeans_assign(
-        vectors, centroids, id_col=id_col, vec_col=vec_col,
-        pre_quantized=True, keep_vec=True,
+        vectors, centroids, vec_col="v", pre_quantized=True, keep_vec=True
     )
-    if cluster_cap is not None:
-        assigned = split_overcap_blocks(
-            assigned, cluster_cap, id_col=id_col, vec_col=vec_col
-        )
-    return blocked_cosine_pairs(
-        assigned, block_col="cluster", id_col=id_col, vec_col=vec_col,
-        threshold=threshold,
-    )
+    return blocked_cosine_pairs(assigned, block_col="cluster", threshold=threshold)

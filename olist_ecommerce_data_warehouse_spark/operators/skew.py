@@ -25,36 +25,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
+NUM_SALTS = 16  # replicas of the other side on the salted path
 
 
-def _salted_core(
-    skewed: DataFrame, other: DataFrame, on: list[str], how: str, num_salts: int
-) -> DataFrame:
+def _salted_core(skewed: DataFrame, other: DataFrame, on: list[str]) -> DataFrame:
     salted = skewed.withColumn(
         SALT_COL,
-        F.pmod(F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(num_salts)).cast("int"),
+        F.pmod(F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(NUM_SALTS)).cast("int"),
     )
     replicated = other.withColumn(
-        SALT_COL, F.explode(F.array(*[F.lit(i) for i in range(num_salts)]))
+        SALT_COL, F.explode(F.array(*[F.lit(i) for i in range(NUM_SALTS)]))
     )
-    return salted.join(replicated, [*on, SALT_COL], how).drop(SALT_COL)
+    return salted.join(replicated, [*on, SALT_COL]).drop(SALT_COL)
 
 
 def salted_join(
     skewed: DataFrame,
     other: DataFrame,
     on: list[str],
-    how: str = "inner",
-    num_salts: int = 16,
     hot_min_rows: int | None = None,
 ) -> DataFrame:
-    """Equi-join ``skewed ⋈ other`` on ``on`` with hot-key salting.
+    """Inner equi-join ``skewed ⋈ other`` on ``on`` with hot-key salting.
 
-    ``other`` is replicated ``num_salts``× (keep it the smaller side —
+    ``other`` is replicated ``NUM_SALTS``× (keep it the smaller side —
     typically the dim/lookup side that is too big to broadcast but far
     smaller than the skewed fact side).  Output columns = join keys +
-    both sides' non-key columns, exactly like ``skewed.join(other, on,
-    how)``.
+    both sides' non-key columns, exactly like ``skewed.join(other, on)``.
 
     ``hot_min_rows``: PARTIAL salting — the production shape.  One
     cheap key-count aggregate (map-side partial, output = |hot keys|,
@@ -67,20 +63,10 @@ def salted_join(
     At 100 TB the hot set is small by definition (that's what makes a
     key hot), so its broadcast is bounded.
 
-    ``how`` is restricted to inner/left/left_semi/left_anti: the
-    row-identity guarantee holds only when unmatched ``other`` rows
-    never surface.  Under right/full outer each unmatched ``other``
-    row would survive once per salt replica (num_salts duplicates);
-    for those, salt the other side instead (swap the arguments)."""
-    allowed = {"inner", "left", "leftouter", "left_outer", "semi", "leftsemi",
-               "left_semi", "anti", "leftanti", "left_anti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join: how={how!r} would duplicate unmatched replicated rows; "
-            f"use one of {sorted(allowed)} (or swap sides)"
-        )
+    The join is inner on purpose: under an outer join each unmatched
+    ``other`` row would survive once per salt replica."""
     if hot_min_rows is None:
-        return _salted_core(skewed, other, on, how, num_salts)
+        return _salted_core(skewed, other, on)
     hot = (
         skewed.groupBy(*on)
         .agg(F.count(F.lit(1)).alias("__kn"))
@@ -90,6 +76,6 @@ def salted_join(
     skew_hot = skewed.join(F.broadcast(hot), on, "left_semi")
     skew_cold = skewed.join(F.broadcast(hot), on, "left_anti")
     other_hot = other.join(F.broadcast(hot), on, "left_semi")
-    hot_joined = _salted_core(skew_hot, other_hot, on, how, num_salts)
-    cold_joined = skew_cold.join(other, on, how)
+    hot_joined = _salted_core(skew_hot, other_hot, on)
+    cold_joined = skew_cold.join(other, on)
     return hot_joined.unionByName(cold_joined)

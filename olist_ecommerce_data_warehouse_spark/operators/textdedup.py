@@ -34,6 +34,9 @@ HEX_DIGITS = "0123456789abcdef"
 MINHASH_K = 16
 MINHASH_BANDS = 4
 MINHASH_ROWS = 4
+SHINGLE_N = 3  # word n-gram length of every dedup shingle
+SIMHASH_BITS = 32
+PREFIX_T = (3, 5)  # prefix-filter Jaccard threshold, an exact rational
 
 # Universal-hash family over one md5-derived base value:
 #   h_i(s) = (A[i] * base(s) + C[i]) % MINHASH_P
@@ -44,23 +47,23 @@ MINHASH_ROWS = 4
 MINHASH_P = (1 << 31) - 1
 
 
-def minhash_coeffs(k: int = MINHASH_K) -> tuple[list[int], list[int]]:
+def minhash_coeffs() -> tuple[list[int], list[int]]:
     """Deterministic (A, C) multiplier/offset lists shared by the Spark
     plan and the SQL oracle."""
-    a = [((i * 2654435761 + 12345) % (1 << 29)) | 1 for i in range(k)]
-    c = [(i * 97531 + 7) % MINHASH_P for i in range(k)]
+    a = [((i * 2654435761 + 12345) % (1 << 29)) | 1 for i in range(MINHASH_K)]
+    c = [(i * 97531 + 7) % MINHASH_P for i in range(MINHASH_K)]
     return a, c
 
 
-def hex_to_long(col: Column, width: int = 8) -> Column:
+def hex_to_long(col: Column) -> Column:
     """hex-string → BIGINT.  One JVM base-conversion call; the SQL
     oracle computes the identical value with a portable positional
-    expansion sum(strpos(ch_j)-1) * 16^(width-j) — same number either
+    expansion sum(strpos(ch_j)-1) * 16^(8-j) — same number either
     way for lowercase md5 hex, so hashes stay engine-independent."""
     return F.conv(col, 16, 10).cast("bigint")
 
 
-def hex2int_sql(hex_expr: str, width: int = 8) -> str:
+def hex2int_sql(hex_expr: str) -> str:
     """THE SQL twin of :func:`hex_to_long` — the single source of the
     positional hex→BIGINT expansion every oracle uses (minhash bases,
     split buckets, gram hashes).  One definition: if the scheme ever
@@ -68,8 +71,8 @@ def hex2int_sql(hex_expr: str, width: int = 8) -> str:
     hand-rolled copies silently diverging."""
     terms = " + ".join(
         f"(CAST(strpos('0123456789abcdef', substr({hex_expr}, {j}, 1)) AS BIGINT) - 1)"
-        f" * {16 ** (width - j)}"
-        for j in range(1, width + 1)
+        f" * {16 ** (8 - j)}"
+        for j in range(1, 9)
     )
     return f"({terms})"
 
@@ -111,9 +114,9 @@ _TH_SQL = f"list_transform({TOKS_SQL}, t -> {hex2int_sql('md5(t)')})"
 # the cross-engine fuzz test use — one definition per side, so neither
 # twin can drift against the other unobserved.
 
-def token_hashes_expr(col: Column | str = "text"):
-    """array<bigint>: 32-bit md5-derived hash per token of ``col``."""
-    return token_hashes_from_tokens(tokens(col))
+def token_hashes_expr():
+    """array<bigint>: 32-bit md5-derived hash per token of ``text``."""
+    return token_hashes_from_tokens(tokens("text"))
 
 
 def token_hashes_from_tokens(toks_col: Column | str):
@@ -169,10 +172,9 @@ def _gramk_sql(th: str, k: int) -> str:
 
 
 
-def shingles(col: Column | str, n: int = 3, distinct: bool = True) -> Column:
-    """Word n-gram shingles as array<string> (space-joined); distinct
-    by default (set membership), multiset with ``distinct=False`` (the
-    repetition plans need occurrences).
+def shingles(col: Column | str) -> Column:
+    """Distinct word ``SHINGLE_N``-gram shingles as array<string>
+    (space-joined; set membership).
 
     Built as n−1 chained ``zip_with`` concats over shifted slices of
     the token array (the same fold shape as ``plans.text.gramk_expr``)
@@ -185,29 +187,25 @@ def shingles(col: Column | str, n: int = 3, distinct: bool = True) -> Column:
     Documents with fewer than n tokens yield an EMPTY array (the slice
     length is clamped to ≥ 0)."""
     toks = tokens(col)
-    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    m = F.greatest(F.size(toks) - (SHINGLE_N - 1), F.lit(0))
     acc = F.slice(toks, 1, m)
-    for j in range(2, n + 1):
+    for j in range(2, SHINGLE_N + 1):
         acc = F.zip_with(
             acc,
             F.slice(toks, j, m),
             lambda a, b: F.concat(a, F.lit(" "), b),
         )
-    return F.array_distinct(acc) if distinct else acc
+    return F.array_distinct(acc)
 
 
-def shingle_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def shingle_table(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) exploded distinct-shingle table (STRING
     shingles — the readable/debuggable form; production dedup plans
     use :func:`shingle_hash_table`)."""
-    return docs.select(
-        F.col(id_col), F.explode(shingles(text_col)).alias("shingle")
-    )
+    return docs.select("doc_id", F.explode(shingles("text")).alias("shingle"))
 
 
-def shingle_hash_table(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
+def shingle_hash_table(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) exploded distinct-shingle table with INT
     shingle identity: the 32-bit-folded rolling n-gram hash of
     per-token hashes (``gramk_expr % GRAM_M``) instead of the joined
@@ -220,10 +218,8 @@ def shingle_hash_table(
     results stay hash-equal and Jaccard remains a faithful estimate.
     The token-hash array lands in a projected column before the fold
     (slices re-evaluate a raw expression k times — measured 8×)."""
-    th = docs.select(
-        F.col(id_col).alias("doc_id"), token_hashes_expr(text_col).alias("__th")
-    )
-    grams = F.transform(gramk_expr("__th", n), lambda x: x % GRAM_M)
+    th = docs.select("doc_id", token_hashes_expr().alias("__th"))
+    grams = F.transform(gramk_expr("__th", SHINGLE_N), lambda x: x % GRAM_M)
     return th.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
 
 
@@ -265,33 +261,29 @@ def mix32_sql_expr(x: str) -> str:
     return f"xor({s4}, (({s4}) >> 16))"
 
 
-def mix32_based_sql(src: str = "sh") -> str:
+def mix32_based_sql() -> str:
     """SQL twin of :func:`mix32` as a FROM-able subquery over
-    ``src(doc_id, shingle)`` → (doc_id, b): staged selects so each
+    ``sh(doc_id, shingle)`` → (doc_id, b): staged selects so each
     intermediate evaluates once."""
     return f"""(
         SELECT doc_id, xor(s4, (s4 >> 16)) AS b FROM (
         SELECT doc_id, (s3 * CAST({_MIX_M2} AS BIGINT)) % {_MIX_M} AS s4 FROM (
         SELECT doc_id, xor(s2, (s2 >> 13)) AS s3 FROM (
         SELECT doc_id, (s1 * CAST({_MIX_M1} AS BIGINT)) % {_MIX_M} AS s2 FROM (
-        SELECT doc_id, xor(shingle, (shingle >> 16)) AS s1 FROM {src})))))"""
+        SELECT doc_id, xor(shingle, (shingle >> 16)) AS s1 FROM sh)))))"""
 
 
-def shingle_hash_sql(n: int = 3, table: str = "corrupted") -> str:
-    """SQL twin of :func:`shingle_hash_table` (FROM-clause fragment)."""
+def shingle_hash_sql() -> str:
+    """SQL twin of :func:`shingle_hash_table` over the ``corrupted``
+    relation (FROM-clause fragment)."""
     return f"""
     SELECT doc_id,
-           unnest(list_distinct(list_transform({_gramk_sql("th", n)}, x -> x % {GRAM_M}))) AS shingle
-    FROM (SELECT doc_id, {_TH_SQL} AS th FROM {table})
+           unnest(list_distinct(list_transform({_gramk_sql("th", SHINGLE_N)}, x -> x % {GRAM_M}))) AS shingle
+    FROM (SELECT doc_id, {_TH_SQL} AS th FROM corrupted)
 """
 
 
-def minhash_band_signatures(
-    sh: DataFrame,
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    rows: int = MINHASH_ROWS,
-) -> DataFrame:
+def minhash_band_signatures(sh: DataFrame) -> DataFrame:
     """(doc_id, band, sig): per-doc MinHash signature split into LSH
     bands, where hash_i(s) = (A[i]*base(s) + C[i]) % P over ONE
     md5-derived 32-bit base per shingle (see MINHASH_A/C/P) — portable
@@ -313,7 +305,7 @@ def minhash_band_signatures(
     32-bit uniform) are the base directly; STRING shingles get the
     md5-substring base.  Both keep base < 2^32, so A[i]·base stays
     inside int64 in either engine."""
-    coeff_a, coeff_c = minhash_coeffs(k)
+    coeff_a, coeff_c = minhash_coeffs()
     if dict(sh.dtypes).get("shingle") in ("bigint", "int", "long"):
         base = mix32(F.col("shingle"))
     else:
@@ -327,16 +319,18 @@ def minhash_band_signatures(
                     (F.lit(coeff_a[i]) * F.col("__base") + F.lit(coeff_c[i]))
                     % F.lit(MINHASH_P)
                 ).alias(f"__mh{i}")
-                for i in range(k)
+                for i in range(MINHASH_K)
             ]
         )
-        .select("doc_id", F.array(*[F.col(f"__mh{i}") for i in range(k)]).alias("mh_arr"))
+        .select(
+            "doc_id", F.array(*[F.col(f"__mh{i}") for i in range(MINHASH_K)]).alias("mh_arr")
+        )
     )
     sig = F.md5(
         F.concat_ws(
             "|",
             F.transform(
-                F.slice("mh_arr", F.col("band") * rows + 1, rows),
+                F.slice("mh_arr", F.col("band") * MINHASH_ROWS + 1, MINHASH_ROWS),
                 lambda m: m.cast("string"),
             ),
         )
@@ -344,18 +338,16 @@ def minhash_band_signatures(
     return (
         per_doc.select(
             "doc_id",
-            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+            F.explode(F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1))).alias("band"),
             "mh_arr",
         )
         .select("doc_id", "band", sig.alias("sig"))
     )
 
 
-def prefix_filter_candidates(
-    sh: DataFrame, t_num: int = 3, t_den: int = 5
-) -> DataFrame:
+def prefix_filter_candidates(sh: DataFrame) -> DataFrame:
     """Exact prefix-filtered candidate pairs for Jaccard ≥ t_num/t_den
-    (PPJoin/All-Pairs prefix principle, Bayardo WWW'07).
+    = ``PREFIX_T`` (PPJoin/All-Pairs prefix principle, Bayardo WWW'07).
 
     Under ANY global total order of shingles, two sets with
     J(A,B) ≥ t must share an element within each other's first
@@ -363,7 +355,7 @@ def prefix_filter_candidates(
     loses NO qualifying pair.  Ordering by ascending document
     frequency puts the *rarest* shingles in the prefixes, which is
     what kills the quadratic blowup of common shingles in a naive
-    shingle self-join.  The threshold is a rational (default 3/5) and
+    shingle self-join.  The threshold is a rational (3/5) and
     ⌈t·n⌉ is computed in integer arithmetic — float ceil(0.6·5) =
     ceil(3.0000000000000004) = 4 would silently shrink the prefix and
     drop true pairs.
@@ -371,6 +363,8 @@ def prefix_filter_candidates(
     Returns distinct (doc_a < doc_b) candidates; callers verify with
     exact Jaccard (``jaccard_on_pairs``)."""
     from pyspark.sql import Window
+
+    t_num, t_den = PREFIX_T
 
     # Doc-frequency ranking: the freq table is a partial-aggregated
     # groupBy (output = |distinct shingles|, far smaller than the
@@ -503,29 +497,27 @@ def jaccard_on_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     )
 
 
-def simhash_table(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 32
-) -> DataFrame:
+def simhash_table(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash): SimHash signatures via explode + hash-agg.
 
     Per-token 32-bit hash (portable md5-derived), signed bit votes,
     sign → bit, assembled into a BIGINT — shaped for throughput: tokens
-    explode to rows, the per-bit signed votes are ``bits`` conditional
+    explode to rows, the per-bit signed votes are ``SIMHASH_BITS`` conditional
     SUM aggregates (all whole-stage-codegen'd, map-side partial agg),
     and the signature assembles in one final projection.  A
     column-expression formulation walks Catalyst higher-order lambdas,
     which are evaluated *interpreted* per element — ~10× slower on
     wide corpora."""
-    tok = docs.select(F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("token"))
+    tok = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
     h = hex_to_long(F.substring(F.md5(F.col("token")), 1, 8))
     votes = [
         F.sum(
             F.when(h.bitwiseAND(F.lit(1 << j).cast("bigint")) != 0, 1).otherwise(-1)
         ).alias(f"__v{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ]
     sig = sum(
-        [F.when(F.col(f"__v{j}") > 0, F.lit(2**j).cast("bigint")).otherwise(F.lit(0).cast("bigint")) for j in range(bits)],
+        [F.when(F.col(f"__v{j}") > 0, F.lit(2**j).cast("bigint")).otherwise(F.lit(0).cast("bigint")) for j in range(SIMHASH_BITS)],
         start=F.lit(0).cast("bigint"),
     )
     return tok.groupBy("doc_id").agg(*votes).select("doc_id", sig.alias("simhash"))

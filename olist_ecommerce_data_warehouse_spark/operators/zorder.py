@@ -26,14 +26,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+ZORDER_BITS = 16  # per-column key resolution
 
-def zorder_key(cols: list[tuple[Column | str, float, float]], bits: int = 16) -> Column:
-    """Morton key interleaving ``len(cols)`` columns at ``bits``
+
+def zorder_key(cols: list[tuple[Column | str, float, float]]) -> Column:
+    """Morton key interleaving ``len(cols)`` columns at ``ZORDER_BITS``
     resolution each (``bits·N ≤ 63`` to stay in a positive long).
     Each entry is (column, lo, hi) — the normalization range; values
     outside clamp to the edge buckets (layout stays valid, skipping
     just coarsens for them).  NULLs land in bucket 0."""
-    n = len(cols)
+    n, bits = len(cols), ZORDER_BITS
     if n == 0:
         raise ValueError("zorder_key: need at least one column")
     if bits * n > 63:
@@ -61,7 +63,7 @@ def zorder_key(cols: list[tuple[Column | str, float, float]], bits: int = 16) ->
     return key
 
 
-def morton_sql(cols: list[tuple[str, float, float]], bits: int = 16) -> str:
+def morton_sql(cols: list[tuple[str, float, float]]) -> str:
     """DuckDB twin of :func:`zorder_key` — same normalization
     literals, same clamp, same interleave order, unrolled into
     shift/mask terms (the unrolled-Lloyd/unrolled-BPE oracle device
@@ -70,7 +72,7 @@ def morton_sql(cols: list[tuple[str, float, float]], bits: int = 16) -> str:
     power-of-two (hi - lo) ranges when gating: every normalization
     step is then exact in IEEE doubles, so floor() has no cross-engine
     1-ulp hazard."""
-    n = len(cols)
+    n, bits = len(cols), ZORDER_BITS
     if n == 0:
         raise ValueError("morton_sql: need at least one column")
     if bits * n > 63:
@@ -98,21 +100,19 @@ def write_zordered(
     path: str,
     cols: list[tuple[str, float, float]],
     n_files: int,
-    bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` as ``n_files`` parquet files laid out along the
     Morton curve of ``cols``: range-partition on the key (compact,
     non-overlapping key ranges per file), sort within each file (tight
     row-group stats too), drop the key before writing — the layout is
     physical, the schema unchanged."""
-    zk = zorder_key([(c, lo, hi) for c, lo, hi in cols], bits=bits)
+    zk = zorder_key([(c, lo, hi) for c, lo, hi in cols])
     (
         df.withColumn("__zk", zk)
         .repartitionByRange(n_files, "__zk")
         .sortWithinPartitions("__zk")
         .drop("__zk")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 

@@ -61,6 +61,10 @@ DOC_SCHEMA = T.StructType(
 )
 
 CONTAM_N = 5  # decontamination n-gram order (GPT-3-style)
+CONTAM_THRESHOLD_PCT = 50  # drop a train doc when ≥ this % of its grams leak
+MAX_TOKENS = 100_000  # length gate: longer documents are "too_long"
+JACCARD_THRESHOLD = 0.8  # near-dup verification cut for LSH candidates
+SEQ_BUDGET = 512  # tokens per packed training sequence
 
 
 def _split_col() -> F.Column:
@@ -91,19 +95,11 @@ class CorpusPipeline:
         base_dir: str,
         *,
         min_tokens: int = 3,
-        max_tokens: int = 100_000,
-        jaccard_threshold: float = 0.8,
-        contam_threshold_pct: int = 50,
-        seq_budget: int = 512,
     ):
         self.spark = spark
         self.base = base_dir.rstrip("/")
         self.audit = AuditLog(spark)
         self.min_tokens = min_tokens
-        self.max_tokens = max_tokens
-        self.jaccard_threshold = jaccard_threshold
-        self.contam_threshold_pct = contam_threshold_pct
-        self.seq_budget = seq_budget
 
     # ------------------------------------------------------------ plumbing
 
@@ -170,7 +166,7 @@ class CorpusPipeline:
         scored = toks.join(quality_scored(docs, tokens("text")), "doc_id")
         reason = (
             F.when(F.col("n_tokens") < self.min_tokens, "too_short")
-            .when(F.col("n_tokens") > self.max_tokens, "too_long")
+            .when(F.col("n_tokens") > MAX_TOKENS, "too_long")
             .when(F.col("qc_pass") == 0, "quality_fail")
         )
         return scored.select("*", reason.alias("reject_reason"))
@@ -221,7 +217,7 @@ class CorpusPipeline:
         sh = shingle_hash_table(exact)
         pairs = lsh_candidate_pairs(minhash_band_signatures(sh))
         verified = jaccard_on_pairs(pairs, sh).filter(
-            F.col("jaccard") >= self.jaccard_threshold
+            F.col("jaccard") >= JACCARD_THRESHOLD
         )
         comp = connected_components(
             exact.select(F.col("doc_id").alias("id")),
@@ -377,7 +373,7 @@ class CorpusPipeline:
                     ),
                     ver_sh,
                 )
-                .filter(F.col("jaccard") >= self.jaccard_threshold)
+                .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
                 .select(F.col("doc_a").alias("doc_id"))
                 .distinct()
             )
@@ -391,7 +387,7 @@ class CorpusPipeline:
             )
             nn_pairs = lsh_candidate_pairs(minhash_band_signatures(surv_sh))
             nn_verified = jaccard_on_pairs(nn_pairs, surv_sh).filter(
-                F.col("jaccard") >= self.jaccard_threshold
+                F.col("jaccard") >= JACCARD_THRESHOLD
             )
             comp = connected_components(
                 survivors_vs_old.select(F.col("doc_id").alias("id")),
@@ -440,7 +436,7 @@ class CorpusPipeline:
             F.transform(gramk_expr("__th", CONTAM_N), lambda x: x % GRAM_M)
         )
         th = docs.select(
-            "doc_id", "split", token_hashes_expr("text").alias("__th")
+            "doc_id", "split", token_hashes_expr().alias("__th")
         ).select("doc_id", "split", grams.alias("__g"))
         eval_grams = (
             th.filter(F.col("split") != "train")
@@ -455,7 +451,7 @@ class CorpusPipeline:
             .join(F.broadcast(eval_grams), "gh", "left_semi")
             .groupBy("doc_id", "n_g")
             .agg(F.count(F.lit(1)).alias("n_overlap"))
-            .filter(100 * F.col("n_overlap") >= self.contam_threshold_pct * F.col("n_g"))
+            .filter(100 * F.col("n_overlap") >= CONTAM_THRESHOLD_PCT * F.col("n_g"))
             .select("doc_id")
         )
         decon = docs.join(train_overlap, "doc_id", "left_anti")
@@ -474,16 +470,15 @@ class CorpusPipeline:
             "lang",
             token_count("text").alias("n_tokens"),
         )
-        packed = greedy_pack_batch(sized, budget=self.seq_budget)
+        packed = greedy_pack_batch(sized, SEQ_BUDGET)
         n_packed = self.audit.write_table(packed, self.base, "gold", "packed")
         return {"decontaminated": n_clean, "train_mixture": n_mixed, "packed": n_packed}
 
-    def export_shards(self, n_shards: int = 8, epoch: int = 0) -> dict:
+    def export_shards(self, n_shards: int = 8) -> dict:
         """gold/packed → gold/shards: the dataloader last mile.  Whole
         packed sequences shard together (group id = lang:seq_no) with
-        within-sequence order pinned by seq_offset; the epoch-seeded
-        shuffle makes every epoch's read order different but rebuilds
-        byte-stable.  Audited like every other stage."""
+        within-sequence order pinned by seq_offset; the epoch-0
+        shuffle rebuilds byte-stable.  Audited like every other stage."""
         from olist_ecommerce_data_warehouse_spark.operators.export import (
             export_training_shards,
         )
@@ -498,7 +493,6 @@ class CorpusPipeline:
                 self.path("gold", "shards"),
                 n_shards,
                 id_col="seq_id",
-                epoch=epoch,
                 order_cols=["seq_offset", "doc_id"],
             )
             return manifest["n_rows"], manifest
@@ -534,20 +528,12 @@ class CorpusPipeline:
     # ----------------------------------------------------------------- run
 
     def run_all(
-        self,
-        *,
-        jsonl_path: str | None = None,
-        docs: DataFrame | None = None,
-        weights: dict[str, float] | None = None,
+        self, jsonl_path: str, weights: dict[str, float] | None = None
     ) -> dict[str, int]:
         """C1/C2: dependency-ordered, fail-fast (any stage error leaves
         its FAILED audit row and propagates — nothing downstream runs)."""
-        if (jsonl_path is None) == (docs is None):
-            raise ValueError("run_all: exactly one of jsonl_path/docs required")
         out: dict[str, int] = {}
-        bronze = (
-            self.ingest_bronze(jsonl_path) if jsonl_path else self.ingest_bronze_df(docs)
-        )
+        bronze = self.ingest_bronze(jsonl_path)
         out["bronze_documents"] = bronze["documents"]
         out["bronze_quarantined"] = bronze["quarantined"]
         out["silver_filtered"] = self.load_silver_filtered()

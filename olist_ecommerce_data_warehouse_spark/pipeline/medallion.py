@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olist_ecommerce_data_warehouse_spark.functions.cleansing import (
@@ -105,14 +105,14 @@ class MedallionPipeline:
     # ---------------------------------------------------------- EP1: bronze
 
     def ingest_bronze(
-        self, name: str, csv_path: str, *, sep: str = ",", multi_line: bool = False
+        self, name: str, csv_path: str, *, multi_line: bool = False
     ) -> int:
         """The source read happens INSIDE the audit scope — a missing
         or unreadable file must leave a FAILED audit row, exactly like
         the reference's CATCH block (03_load_csv_to_bronze.sql:62-72)."""
         return self.audit.write_table(
             lambda: read_csv_bronze(
-                self.spark, csv_path, BRONZE_COLUMNS[name], sep=sep, multi_line=multi_line
+                self.spark, csv_path, BRONZE_COLUMNS[name], multi_line=multi_line
             ),
             self.base, "bronze", name, source_object=csv_path, source_path=csv_path,
         )

@@ -404,7 +404,7 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
     )
-    joined = salted_join(li, o, ["l_orderkey"], num_salts=16, hot_min_rows=5)
+    joined = salted_join(li, o, ["l_orderkey"], hot_min_rows=5)
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_items"),
         as_out(F.sum(money("l_quantity"))).alias("sum_qty"),

@@ -90,7 +90,7 @@ def _dsir_oracle_ctes() -> str:
     dfeats AS (
         SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
             SELECT doc_id, ({mix32_sql_expr("h")}) % {B} AS bucket
-            FROM (SELECT doc_id, unnest({quality_features_sql("text")}) AS h
+            FROM (SELECT doc_id, unnest({quality_features_sql()}) AS h
                   FROM documents)
         ) GROUP BY doc_id, bucket
     ),
@@ -397,9 +397,7 @@ def corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = tok.select("doc_id", "lang")
     mix = (
-        sample_by_weight(
-            d, MIX_WEIGHTS, source_col="lang", id_col="doc_id", salt=":mix"
-        )
+        sample_by_weight(d, MIX_WEIGHTS, source_col="lang")
         .withColumn("epoch", F.col("epoch").cast("int"))
         .select(
             F.lit("mix").alias("kind"),
@@ -547,11 +545,11 @@ def corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = (
         withavg
         .join(
-            F.broadcast(ppl_tertile_bounds_fp(withavg, by_col="lang")),
+            F.broadcast(ppl_tertile_bounds_fp(withavg)),
             "lang",
             "left",
         )
-        .join(F.broadcast(ppl_sketch_bounds(scored, by_col="lang")), "lang", "left")
+        .join(F.broadcast(ppl_sketch_bounds(scored)), "lang", "left")
         .withColumn("ppl_bucket", ppl_tertile_bucket_col())
         .withColumn("__skb", ppl_sketch_bucket_col())
         .drop("__b1", "__b2", "__b")

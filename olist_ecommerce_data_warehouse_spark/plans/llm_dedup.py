@@ -10,7 +10,7 @@ dedup operator itself.
 
 Signature portability: all hash values derive from md5 hex via an
 explicit positional hex→int expansion (operators.textdedup.hex_to_long
-⇔ ``_hex2int_sql``) and the shared rolling gram-hash folds, so Spark
+⇔ ``hex2int_sql``) and the shared rolling gram-hash folds, so Spark
 and DuckDB compute bit-identical shingle ids and MinHash/SimHash
 signatures.  Shingle identity is the INT rolling 3-gram hash
 (``shingle_hash_table`` — round 4): no shingle strings anywhere, every
@@ -79,15 +79,9 @@ def _corrupted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hex2int_sql(h: str) -> str:
-    """SQL twin of operators.textdedup.hex_to_long (width 8) — thin
-    alias over the shared generator."""
-    return hex2int_sql(h)
-
-
 # the oracle's minhash constants come from the SAME Python source as
 # the Spark plan's (operators.textdedup.minhash_coeffs)
-_A, _C = minhash_coeffs(MINHASH_K)
+_A, _C = minhash_coeffs()
 _COEFF_VALUES = ", ".join(f"({i}, {_A[i]}, {_C[i]})" for i in range(MINHASH_K))
 
 TOKS = toks_sql()
@@ -95,7 +89,7 @@ TOKS = toks_sql()
 # folded) — ONE definition with the Spark side (operators.textdedup
 # shingle_hash_table / shingle_hash_sql): no shingle strings anywhere,
 # every dedup shuffle carries 8-byte ints.
-SHINGLES_SQL = shingle_hash_sql(3, "corrupted")
+SHINGLES_SQL = shingle_hash_sql()
 
 
 # ---------------------------------------------------------------- exact dedup
@@ -249,7 +243,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist, not localCheckpoint: lineage stays intact, so block
     # loss at cluster scale recomputes instead of failing the job.
     sh = track_persist(shingle_hash_table(corrupted))
-    cand = prefix_filter_candidates(sh, t_num=3, t_den=5)
+    cand = prefix_filter_candidates(sh)
     return jaccard_on_pairs(cand, sh).filter(F.col("jaccard") >= 0.6)
 
 
@@ -262,7 +256,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH corrupted AS ({CORRUPTED_SQL}),
     sh AS ({SHINGLES_SQL}),
     based AS (
-        SELECT doc_id, b FROM {mix32_based_sql('sh')}
+        SELECT doc_id, b FROM {mix32_based_sql()}
     ),
     mh AS (
         SELECT doc_id, ks.i AS i, MIN((ks.a * b + ks.c) % {MINHASH_P}) AS mh
@@ -325,7 +319,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     votes AS (
         SELECT doc_id, bits.j AS j,
-               SUM((({_hex2int_sql("h")} >> bits.j) % 2) * 2 - 1) AS vote
+               SUM((({hex2int_sql("h")} >> bits.j) % 2) * 2 - 1) AS vote
         FROM th CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS j) bits
         GROUP BY doc_id, bits.j
     ),
@@ -392,7 +386,7 @@ CORRUPTED_CC_SQL = f"""
     WITH RECURSIVE corrupted AS ({CORRUPTED_CC_SQL}),
     sh AS ({SHINGLES_SQL}),
     based AS (
-        SELECT doc_id, b FROM {mix32_based_sql('sh')}
+        SELECT doc_id, b FROM {mix32_based_sql()}
     ),
     mh AS (
         SELECT doc_id, ks.i AS i, MIN((ks.a * b + ks.c) % {MINHASH_P}) AS mh

@@ -28,11 +28,7 @@ SparkFn = Callable[[SparkSession, str], DataFrame]
 _TRACKED_PERSISTS: list[DataFrame] = []
 
 
-def track_persist(
-    df: DataFrame,
-    level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-    eager: bool = True,
-) -> DataFrame:
+def track_persist(df: DataFrame, eager: bool = True) -> DataFrame:
     """Persist ``df`` for intra-plan reuse and register it for release
     before the next plan.  MEMORY_AND_DISK: spills instead of OOMing on
     wide shingle tables; lineage is preserved, so an executor loss at
@@ -44,7 +40,7 @@ def track_persist(
     shingle-table subtrees of the dedup plans) would otherwise race and
     each compute the partitions they touch first — Spark's block store
     dedupes completed blocks, not in-flight computation."""
-    df.persist(level)
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     _TRACKED_PERSISTS.append(df)
     if eager:
         df.count()

@@ -16,6 +16,7 @@ from olist_ecommerce_data_warehouse_spark.operators.similarity import (
     ivf_probes,
     ivf_topk,
     quantized,
+    semdedup_pairs,
     srp_assign,
     srp_hyperplanes,
     srp_probes,
@@ -619,9 +620,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow pass emits both families (a vec_id join of two derivations
     # of the same scan would shuffle the corpus twice — caught by
     # tests/test_plan_quality.py's zero-Exchange budget for this slot)
-    return quantize_int8_stats(
-        emb, id_col="vec_id", vec_col="embedding", pq_codebooks=books
-    )
+    return quantize_int8_stats(emb, pq_codebooks=books)
 
 
 # ---- SemDeDup parameters (shared Spark/oracle): cluster count, Lloyd
@@ -702,10 +701,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.similarity.blocked_cosine_pairs, Arrow-batched numpy) —
     bit-identical to the JVM expression path but without interpreted
     per-pair array lambdas.  Assignment carries the vector through the
-    kernel (kmeans_assign keep_vec=True), so no shuffle join reunites
-    (id, cluster) with its vector."""
-    from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_assign
-
+    kernel (operators.similarity.semdedup_pairs), so no shuffle join
+    reunites (id, cluster) with its vector."""
     emb = table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", "label", quantized("embedding").alias("v"))
     perturbed = base.filter(F.col("vec_id") % 7 == 0).select(
@@ -725,12 +722,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = kmeans_train(
         corrupted, vec_col="v", k=SEM_K, n_iter=SEM_ITERS, pre_quantized=True
     )
-    assigned = kmeans_assign(
-        corrupted, cents, vec_col="v", pre_quantized=True, keep_vec=True
-    )
-    sem_pairs = blocked_cosine_pairs(
-        assigned, block_col="cluster", vec_col="v", threshold=SEM_COS
-    ).select(
+    sem_pairs = semdedup_pairs(corrupted, cents, SEM_COS).select(
         F.lit("semdedup").alias("kind"),
         F.col("vec_id_a").alias("vec_a"),
         F.col("vec_id_b").alias("vec_b"),

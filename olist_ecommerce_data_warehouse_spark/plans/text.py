@@ -64,7 +64,7 @@ def _gopher_cols_sql() -> str:
     from olist_ecommerce_data_warehouse_spark.functions.text import gopher_flags_sql
 
     return ",\n               ".join(
-        f"{expr} AS {name}" for name, expr in gopher_flags_sql("text").items()
+        f"{expr} AS {name}" for name, expr in gopher_flags_sql().items()
     )
 
 
@@ -204,7 +204,7 @@ def text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts["IP"].alias("n_ip"),
         F.length(redacted).alias("redacted_len"),
         F.md5(redacted).alias("redacted_fp"),
-        *[v.alias(k) for k, v in gopher_flags("text").items()],
+        *[v.alias(k) for k, v in gopher_flags().items()],
     ).join(bpe_counts, "doc_id")
 
 
@@ -262,7 +262,7 @@ def _lang_id_oracle() -> str:
         FROM documents
     ),
     feats AS (
-        SELECT doc_id, {quality_features_sql("text")} AS f FROM documents
+        SELECT doc_id, {quality_features_sql()} AS f FROM documents
     ),
     qc AS (
         SELECT doc_id,

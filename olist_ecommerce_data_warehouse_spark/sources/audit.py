@@ -57,13 +57,12 @@ class AuditLog:
         target_schema: str,
         target_table: str,
         source_path: str = "",
-        source_system: str = "engine",
     ) -> tuple[int, dt.datetime]:
         run_id = self._next_run_id
         self._next_run_id += 1
         started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         self.rows.append(
-            (run_id, source_system, source_object, target_schema, target_table,
+            (run_id, "engine", source_object, target_schema, target_table,
              source_path, started, None, "STARTED", None, None)
         )
         return run_id, started

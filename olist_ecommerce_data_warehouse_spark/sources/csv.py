@@ -30,13 +30,12 @@ def read_csv_bronze(
     path: str,
     columns: list[str],
     *,
-    sep: str = ",",
-    quote: str = '"',
     escape: str = "\\",
     multi_line: bool = False,
 ) -> DataFrame:
-    """S1/S2: delimited source with header skip (FIRSTROW=2), UTF-8,
-    quoted fields (BULK INSERT options, 03_load_csv_to_bronze.sql:41-52).
+    """S1/S2: comma-delimited source with header skip (FIRSTROW=2),
+    UTF-8, double-quoted fields (BULK INSERT options,
+    03_load_csv_to_bronze.sql:41-52).
     ``multi_line=True`` parses embedded newlines inside quotes (S3).
     For RFC-4180 files that escape quotes by doubling (the reference's
     ``FORMAT='CSV'`` mode) pass ``escape='"'``.
@@ -47,8 +46,8 @@ def read_csv_bronze(
         path,
         schema=all_string_schema(columns),
         header=True,
-        sep=sep,
-        quote=quote,
+        sep=",",
+        quote='"',
         escape=escape,
         encoding="UTF-8",
         multiLine=multi_line,

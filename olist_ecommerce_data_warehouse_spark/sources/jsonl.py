@@ -12,8 +12,7 @@ Design rules, both the opposite of "just call spark.read.json":
 - Capture, don't drop, corrupt lines: PERMISSIVE mode with an explicit
   ``_corrupt_record`` column lands unparseable lines as raw text so a
   quarantine query can count/inspect them (the audit-sink pattern the
-  reference applies to CSV loads); FAILFAST is available for loads
-  that must abort on first corruption.
+  reference applies to CSV loads).
 
 Plain line-delimited JSON is splittable (unlike ``multiLine`` JSON
 arrays — same caveat as multiLine CSV), so files parallelize by HDFS
@@ -34,11 +33,9 @@ def read_jsonl(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    *,
-    mode: str = "PERMISSIVE",
 ) -> DataFrame:
     """Read newline-delimited JSON with an EXPLICIT schema (never
-    inferred — see module notes).  In PERMISSIVE mode a
+    inferred — see module notes) in PERMISSIVE mode: a
     ``_corrupt_record`` string column is appended: NULL for clean rows,
     the raw line for unparseable ones (quarantine with
     :func:`split_corrupt`).
@@ -51,8 +48,6 @@ def read_jsonl(
     any quarantine ``count()`` — ``from_json`` over a text scan has no
     such restriction, parses in the same codegen'd JVM expression, and
     keeps the splittable-by-line property."""
-    if mode not in ("PERMISSIVE", "FAILFAST"):
-        raise ValueError(f"read_jsonl: mode must be PERMISSIVE/FAILFAST, got {mode!r}")
     if CORRUPT_COL in schema.fieldNames():
         raise ValueError(f"read_jsonl: schema may not contain {CORRUPT_COL!r}")
     full = T.StructType(
@@ -63,11 +58,9 @@ def read_jsonl(
         F.from_json(
             "value",
             full,
-            {"mode": mode, "columnNameOfCorruptRecord": CORRUPT_COL},
+            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
         ).alias("j")
     ).select("j.*")
-    if mode == "FAILFAST":
-        parsed = parsed.drop(CORRUPT_COL)
     return parsed
 
 
@@ -92,15 +85,9 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 def write_jsonl(
     df: DataFrame,
     path: str,
-    *,
-    compression: str | None = "gzip",
-    mode: str = "overwrite",
 ) -> None:
-    """Write a corpus shard set as .jsonl[.gz]: one JSON object per
+    """Write a corpus shard set as .jsonl.gz: one JSON object per
     line, splittable layout (many files — one per task — not one giant
     member, which is the property gzip corpora rely on for parallel
     re-reads)."""
-    w = df.write.mode(mode)
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+    df.write.mode("overwrite").option("compression", "gzip").json(path)

@@ -28,7 +28,6 @@ from olist_ecommerce_data_warehouse_spark.functions.text import tokens
 from olist_ecommerce_data_warehouse_spark.operators.ngram_lm import (
     bigram_pairs,
     ngram_lm_score,
-    perplexity_gate,
 )
 
 
@@ -39,16 +38,13 @@ def streaming_ppl_score(
     v: DataFrame,
     sink: Callable[[DataFrame, int], None],
     checkpoint: str,
-    max_ppl: float | None = None,
-    query_name: str = "streaming_ppl_score",
 ):
-    """Continuously score ``doc_stream`` ((doc_id, text, ...)) under
-    the static trained model (``bigram``/``context`` and the one-row V
-    frame ``v`` from :func:`operators.ngram_lm.ngram_lm_train`).
-    ``sink(df, batch_id)`` receives each batch's score rows (plus
-    ``ppl_pass`` when ``max_ppl`` is set).  Returns the started StreamingQuery
-    (availableNow trigger — drain then stop; production swaps a
-    processingTime trigger)."""
+    """Continuously score ``doc_stream`` ((doc_id, text, ...)) under the
+    static trained model (``bigram``/``context`` and the one-row V frame
+    ``v`` from :func:`operators.ngram_lm.ngram_lm_train`). ``sink(df,
+    batch_id)`` receives each batch's score rows.  Returns the started
+    StreamingQuery (availableNow trigger — drain then stop; production
+    swaps a processingTime trigger)."""
     if not doc_stream.isStreaming:
         raise ValueError("streaming_ppl_score: doc side must be a streaming DataFrame")
     if bigram.isStreaming or context.isStreaming:
@@ -58,15 +54,12 @@ def streaming_ppl_score(
         if not batch_df.head(1):  # empty trigger — nothing to score
             return
         pairs = bigram_pairs(batch_df, tokens("text"))
-        scored = ngram_lm_score(batch_df, pairs, bigram, context, v)
-        if max_ppl is not None:
-            scored = perplexity_gate(scored, max_ppl)
-        sink(scored, batch_id)
+        sink(ngram_lm_score(batch_df, pairs, bigram, context, v), batch_id)
 
     return (
         doc_stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
+        .queryName("streaming_ppl_score")
         .trigger(availableNow=True)
         .start()
     )

@@ -124,20 +124,19 @@ def streaming_upsert(
     target_path: str,
     checkpoint: str,
     keys: list[str],
-    order_col: str = "ts",
-    query_name: str = "streaming_upsert",
 ):
     """Continuously MERGE ``stream`` into the parquet table at
-    ``target_path``.  Returns the started StreamingQuery
-    (``availableNow`` trigger: drains everything currently available
-    then stops — the incremental-backfill mode; a production run swaps
-    in a processingTime trigger, same code path)."""
+    ``target_path``; within a batch the latest ``ts`` per key wins.
+    Returns the started StreamingQuery (``availableNow`` trigger: drains
+    everything currently available then stops — the incremental-backfill
+    mode; a production run swaps in a processingTime trigger, same code
+    path)."""
     return (
         stream.writeStream.foreachBatch(
-            lambda bdf, _bid: upsert_batch(bdf, target_path, keys, order_col)
+            lambda bdf, _bid: upsert_batch(bdf, target_path, keys, "ts")
         )
         .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
+        .queryName("streaming_upsert")
         .trigger(availableNow=True)
         .start()
     )

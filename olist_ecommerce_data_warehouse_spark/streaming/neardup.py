@@ -50,6 +50,7 @@ from olist_ecommerce_data_warehouse_spark.operators.textdedup import (
     MINHASH_K,
     MINHASH_P,
     MINHASH_ROWS,
+    SHINGLE_N,
     gramk_expr,
     minhash_coeffs,
     mix32,
@@ -68,23 +69,15 @@ LSH_OUT_SCHEMA = T.StructType(
 LSH_STATE_SCHEMA = T.StructType([T.StructField("anchor", T.LongType())])
 
 
-def band_signature_rows(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    rows: int = MINHASH_ROWS,
-) -> DataFrame:
+def band_signature_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, band, sig) per document as a PURE MAP (works on both
     streaming and static frames): per-row array-fold twin of
     ``minhash_band_signatures`` — same shingles, same mix32 base, same
     affine family, same md5 band digest, so a stream doc and a batch
     doc with equal text get equal signatures.  Documents with fewer
-    than ``n`` tokens emit no rows (the batch explode drops them the
+    than ``SHINGLE_N`` tokens emit no rows (the batch explode drops them the
     same way)."""
-    coeff_a, coeff_c = minhash_coeffs(k)
+    coeff_a, coeff_c = minhash_coeffs()
 
     # NB: a bare two-arg lambda would receive transform's (element,
     # index) pair — the index Column would shadow a captured default
@@ -92,32 +85,32 @@ def band_signature_rows(
         a, c = coeff_a[i], coeff_c[i]
         return lambda b: (F.lit(a) * b + F.lit(c)) % F.lit(MINHASH_P)
 
-    th = docs.select(F.col(id_col).alias("doc_id"), token_hashes_expr(text_col).alias("__th"))
+    th = docs.select("doc_id", token_hashes_expr().alias("__th"))
     sh = th.select(
         "doc_id",
         F.array_distinct(
-            F.transform(gramk_expr("__th", n), lambda x: x % GRAM_M)
+            F.transform(gramk_expr("__th", SHINGLE_N), lambda x: x % GRAM_M)
         ).alias("__sh"),
     ).filter(F.size("__sh") > 0)
     based = sh.select("doc_id", F.transform("__sh", mix32).alias("__b"))
     mh = based.select(
         "doc_id",
         F.array(
-            *[F.array_min(F.transform("__b", _affine(i))) for i in range(k)]
+            *[F.array_min(F.transform("__b", _affine(i))) for i in range(MINHASH_K)]
         ).alias("mh_arr"),
     )
     sig = F.md5(
         F.concat_ws(
             "|",
             F.transform(
-                F.slice("mh_arr", F.col("band") * rows + 1, rows),
+                F.slice("mh_arr", F.col("band") * MINHASH_ROWS + 1, MINHASH_ROWS),
                 lambda m: m.cast("string"),
             ),
         )
     )
     return mh.select(
         "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+        F.explode(F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1))).alias("band"),
         "mh_arr",
     ).select("doc_id", F.col("band").cast("int").alias("band"), sig.alias("sig"))
 
@@ -149,7 +142,7 @@ def _bucket_fn(
     )
 
 
-def streaming_lsh_neardup(doc_stream: DataFrame, n: int = 3) -> DataFrame:
+def streaming_lsh_neardup(doc_stream: DataFrame) -> DataFrame:
     """Continuous near-dup candidate detection over a (doc_id, text)
     stream: per-row band signatures → stateful bucket anchoring.
     Append output — every (doc, band) emits exactly once, with the
@@ -158,7 +151,7 @@ def streaming_lsh_neardup(doc_stream: DataFrame, n: int = 3) -> DataFrame:
     restarts."""
     if not doc_stream.isStreaming:
         raise ValueError("streaming_lsh_neardup: doc side must be a streaming DataFrame")
-    sigs = band_signature_rows(doc_stream, n=n)
+    sigs = band_signature_rows(doc_stream)
     return sigs.groupBy("band", "sig").applyInPandasWithState(
         _bucket_fn,
         outputStructType=LSH_OUT_SCHEMA,

@@ -68,7 +68,7 @@ def _first_fit(ns, seq_no: int, used: int, budget: int):
 
 
 def greedy_pack_reference(
-    rows: list[tuple[int, str, int]], budget: int = 512
+    rows: list[tuple[int, str, int]], budget: int
 ) -> list[tuple[int, str, int, int, int]]:
     """Driver-side reference implementation (doc_id, lang, n_tokens) →
     (…, seq_no, seq_offset), processing each lang's docs in doc_id
@@ -124,7 +124,7 @@ def _make_packing_fn(budget: int):
     return packing_fn
 
 
-def greedy_packing(sized_docs: DataFrame, budget: int = 512) -> DataFrame:
+def greedy_packing(sized_docs: DataFrame, budget: int) -> DataFrame:
     """Streaming greedy first-fit packing over a stream of
     (doc_id, lang, n_tokens) rows.  Append output: each document is
     emitted exactly once with its (seq_no, seq_offset) assignment."""
@@ -137,7 +137,7 @@ def greedy_packing(sized_docs: DataFrame, budget: int = 512) -> DataFrame:
     )
 
 
-def greedy_pack_batch(sized_docs: DataFrame, budget: int = 512) -> DataFrame:
+def greedy_pack_batch(sized_docs: DataFrame, budget: int) -> DataFrame:
     """BATCH twin of :func:`greedy_packing`: the same first-fit rule
     over a static (doc_id, lang, n_tokens) DataFrame, one
     ``applyInPandas`` group per stream key — state starts at (0, 0)

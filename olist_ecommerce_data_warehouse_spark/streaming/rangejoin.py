@@ -36,8 +36,6 @@ def stream_range_enrich(
     point_ts: str,
     start_col: str,
     end_col: str,
-    bin_width_sec: int = 3600,
-    how: str = "inner",
 ) -> DataFrame:
     """Enrich a STREAM of point rows with every static interval row
     containing their timestamp.  ``points_stream`` must be a streaming
@@ -54,11 +52,5 @@ def stream_range_enrich(
             "stream-stream range joins need watermark design, not this operator"
         )
     return range_join(
-        points_stream,
-        intervals,
-        point_ts=point_ts,
-        start_col=start_col,
-        end_col=end_col,
-        bin_width_sec=bin_width_sec,
-        how=how,
+        points_stream, intervals, point_ts=point_ts, start_col=start_col, end_col=end_col
     )

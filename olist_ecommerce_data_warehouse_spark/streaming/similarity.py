@@ -33,10 +33,8 @@ def streaming_topk(
     corpus: DataFrame,
     sink: Callable[[DataFrame, int], None],
     checkpoint: str,
-    k: int = 5,
-    query_name: str = "streaming_topk",
 ):
-    """Continuously answer top-k cosine queries from ``query_stream``
+    """Continuously answer top-5 cosine queries from ``query_stream``
     ((query_id, qvec) — quantized int64 vectors, see
     ``operators.similarity.quantized``) against the static quantized
     ``corpus`` ((vec_id, cvec)).  ``sink(results_df, batch_id)``
@@ -51,12 +49,12 @@ def streaming_topk(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):  # empty trigger — nothing to score
             return
-        sink(brute_force_topk(batch_df, corpus, k=k), batch_id)
+        sink(brute_force_topk(batch_df, corpus), batch_id)
 
     return (
         query_stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
+        .queryName("streaming_topk")
         .trigger(availableNow=True)
         .start()
     )

@@ -201,7 +201,7 @@ def text_lang_id_replay(con) -> pd.DataFrame:
 
     con.execute(
         f"""CREATE OR REPLACE TEMP TABLE lri_feats AS
-        SELECT doc_id, {quality_features_sql('text')} AS f FROM documents"""
+        SELECT doc_id, {quality_features_sql()} AS f FROM documents"""
     )
     con.execute(
         f"""CREATE OR REPLACE TEMP TABLE lri_pfeats AS

@@ -35,6 +35,9 @@ def spark():
     # width from $SPARK_GRAFT_CPUS (else all local cores), as the bench runs
     s = get_spark("olist_spark_tests")
     yield s
+    # every streaming test drains and stops its queries; one left running
+    # would keep scheduling batches beside the tests that follow it
+    assert not s.streams.active, [q.name for q in s.streams.active]
 
 
 @pytest.fixture(scope="session")

@@ -119,10 +119,4 @@ def test_jsonl_roundtrip_and_quarantine(spark, tmp_path_factory):
     assert {r["doc_id"] for r in clean.collect()} == {1, 2}
     bad = sorted(r["raw_line"] for r in quarantine.collect())
     assert bad == ['["an", "array", "line"]', "{not json at all"]
-
-    # FAILFAST aborts the load on the first corrupt line
-    with pytest.raises(Exception):
-        read_jsonl(spark, dirty, schema, mode="FAILFAST").collect()
-    with pytest.raises(ValueError):
-        read_jsonl(spark, dirty, schema, mode="DROPMALFORMED")
     _ = F  # keep the shared import convention explicit

@@ -33,7 +33,7 @@ def test_decode_metadata_deterministic(spark, media):
 
 
 def test_frame_sampling_reassembles_prefix(spark, media):
-    frames = sample_frames(media, n_frames=4)
+    frames = sample_frames(media)
     got = frames.groupBy("media_id").agg(
         F.count(F.lit(1)).alias("n"), F.sum(F.octet_length("frame_bytes")).alias("nb")
     )
@@ -609,7 +609,7 @@ def test_jpeg_baseline_decode_roundtrip():
     for mid in (0, 1, 5, 11, 254, 255):
         w, h = 8 * (1 + mid % 3), 8 * (1 + mid % 2)
         b = _synth_jpeg_gray_bytes(w, h, mid)
-        dw, dh, planes = _decode_jpeg(b)
+        dw, dh, planes, _ = _decode_jpeg(b)
         assert (dw, dh) == (w, h)
         got = planes[0].astype(np.int64)
         for by in range(h // 8):
@@ -654,7 +654,7 @@ def test_jpeg_baseline_decode_roundtrip():
         + bw.flush()
         + b"\xff\xd9"
     )
-    _, _, planes = _decode_jpeg(jpg)
+    _, _, planes, _ = _decode_jpeg(jpg)
     # independent dense IDCT of coef[zigzag 2] = 2 (natural (0,2))
     A = np.zeros((8, 8))
     for u in range(8):
@@ -686,15 +686,15 @@ def test_jpeg_baseline_decode_roundtrip():
     # non-interleaved per spec, so a 0x22 factor on a grayscale file
     # decodes to the same pixels); the honest raise moved to factors > 2
     sub[i + 2 + 2 + 6 + 1] = 0x22  # sampling factor 2x2
-    dw_s, dh_s, planes_s = _decode_jpeg(bytes(sub))
-    dw_b, dh_b, planes_b = _decode_jpeg(bytes(base))
+    dw_s, dh_s, planes_s, _ = _decode_jpeg(bytes(sub))
+    dw_b, dh_b, planes_b, _ = _decode_jpeg(bytes(base))
     assert (dw_s, dh_s) == (dw_b, dh_b)
     assert (planes_s[0] == planes_b[0]).all()
     # round 8: factors up to 4 decode (and single-component scans
     # ignore them per spec), so 0x33 grayscale decodes identically too
     sub3 = bytearray(base)
     sub3[i + 2 + 2 + 6 + 1] = 0x33
-    _, _, planes_3 = _decode_jpeg(bytes(sub3))
+    _, _, planes_3, _ = _decode_jpeg(bytes(sub3))
     assert (planes_3[0] == planes_b[0]).all()
     # beyond the spec range (factor 5) is malformed input — typed loud
     sub5 = bytearray(base)
@@ -722,7 +722,7 @@ def test_jpeg_baseline_decode_roundtrip():
             + bytes(base[base.find(b"\xff\xdb") :])
         )
 
-    dw_d, dh_d, planes_d = _decode_jpeg(with_dri(4))
+    dw_d, dh_d, planes_d, _ = _decode_jpeg(with_dri(4))
     assert (dw_d, dh_d) == (dw_b, dh_b)
     assert (planes_d[0] == planes_b[0]).all()
     two_mcu = bytearray(_synth_jpeg_gray_bytes(16, 8, 3))  # 2 one-block MCUs
@@ -751,7 +751,7 @@ def test_jpeg_420_subsampled_decode_exact():
 
     for mid in (0, 1, 2, 3, 7, 254):
         w, h = 16 * (1 + mid % 2), 16 * (1 + mid % 3)
-        dw, dh, planes = _decode_jpeg(_synth_jpeg_420_bytes(w, h, mid))
+        dw, dh, planes, _ = _decode_jpeg(_synth_jpeg_420_bytes(w, h, mid))
         assert (dw, dh) == (w, h) and len(planes) == 3
         assert all(p.shape == (h, w) for p in planes)
         y, cb, cr = (p.astype(np.int64) for p in planes)
@@ -943,10 +943,10 @@ def test_jpeg_marker_walk_fill_bytes_and_bare_eoi():
     )
 
     jb = _synth_jpeg_gray_bytes(16, 8, 7)
-    w0, h0, planes0 = _decode_jpeg(jb)
+    w0, h0, planes0, _ = _decode_jpeg(jb)
     # inject fill bytes before the first post-SOI marker
     padded = jb[:2] + b"\xff\xff\xff" + jb[2:]
-    w1, h1, planes1 = _decode_jpeg(padded)
+    w1, h1, planes1, _ = _decode_jpeg(padded)
     assert (w0, h0) == (w1, h1)
     assert all((a == b).all() for a, b in zip(planes0, planes1))
 
@@ -1019,7 +1019,7 @@ def test_jpeg_restart_intervals_decode_exact():
             if b[i] == 0xFF and 0xD0 <= b[i + 1] <= 0xD7
         )
         assert n_rst == max(0, (n_mcu - 1) // ri), (w, h, ri, n_rst)
-        ww, hh, planes = _decode_jpeg(b)
+        ww, hh, planes, _ = _decode_jpeg(b)
         ey, ec = closed_form(w, h, mid)
         assert (ww, hh) == (w, h)
         assert int(planes[0].astype("int64").sum()) == ey, (w, h, mid, ri)
@@ -1080,8 +1080,8 @@ def test_jpeg_progressive_decode_matches_baseline():
                         w, h, mid, color=color, restart_interval=ri
                     )
                     assert b"\xff\xc0" in bb and b"\xff\xc2" in pb  # SOF0 vs SOF2
-                    w0, h0, p0 = _decode_jpeg(bb)
-                    w1, h1, p1 = _decode_jpeg(pb)  # dispatches
+                    w0, h0, p0, _ = _decode_jpeg(bb)
+                    w1, h1, p1, _ = _decode_jpeg(pb)  # dispatches
                     assert (w0, h0) == (w1, h1) == (w, h)
                     assert len(p0) == len(p1) == (3 if color else 1)
                     for a, b in zip(p0, p1):
@@ -1422,7 +1422,7 @@ def test_jpeg_zigzag_and_huffman_spec_fixture():
         + [0xD0, 0x7F]  # '110' (DC cat 5) + '10000' (diff 16) + '0' (EOB) + 1-pad
         + [0xFF, 0xD9]  # EOI
     )
-    w, h, planes = _decode_jpeg(jpeg)
+    w, h, planes, _ = _decode_jpeg(jpeg)
     assert (w, h) == (8, 8)
     assert planes[0].shape == (8, 8)
     assert (planes[0] == np.full((8, 8), 130, dtype=np.uint8)).all()
@@ -1449,7 +1449,7 @@ def test_jpeg_sampling_factors_up_to_4_decode_exact():
     ]
     for factors, w, h, mid in cases:
         b = _synth_jpeg_sampled_bytes(w, h, mid, factors)
-        ww, hh, planes = _decode_jpeg(b)
+        ww, hh, planes, _ = _decode_jpeg(b)
         assert (ww, hh) == (w, h)
         hmax = max(f[0] for f in factors)
         vmax = max(f[1] for f in factors)
@@ -1475,7 +1475,7 @@ def test_jpeg_sampling_factors_up_to_4_decode_exact():
         ([(4, 3), (3, 2), (1, 1)], 96, 48, 7),
     ]:
         b = _synth_jpeg_sampled_bytes(w, h, mid, factors)
-        ww, hh, planes = _decode_jpeg(b)
+        ww, hh, planes, _ = _decode_jpeg(b)
         assert (ww, hh) == (w, h)
         hmax = max(f[0] for f in factors)
         vmax = max(f[1] for f in factors)
@@ -1513,7 +1513,7 @@ def test_jpeg12_extended_sequential_decode_exact():
     for mid in (3, 11, 19, 27, 83, 91, 0, 1, 2, 4, 5, 13):
         w, h = 8 * (1 + mid % 3), 8 * (1 + mid % 2)
         b = _synth_jpeg12_gray_bytes(w, h, mid)
-        dw, dh, planes = _decode_jpeg(b)
+        dw, dh, planes, _ = _decode_jpeg(b)
         assert (dw, dh) == (w, h)
         p = planes[0]
         assert p.dtype == np.uint16
@@ -1555,8 +1555,8 @@ def test_jpeg12_extended_sequential_decode_exact():
     # DQT payload: len(2) + Pq/Tq(1) + 64 u16 — q0 hi byte at i+5
     assert b[i + 5] == 1 and b[i + 6] == 0  # 256 big-endian
     b[i + 5], b[i + 6] = 0, 128  # q0 = 128
-    _, _, planes_q = dec(bytes(b))
-    _, _, planes_o = dec(_synth_jpeg12_gray_bytes(16, 8, 4))
+    _, _, planes_q, _ = dec(bytes(b))
+    _, _, planes_o, _ = dec(_synth_jpeg12_gray_bytes(16, 8, 4))
     assert int(planes_q[0].astype("int64").sum()) != int(
         planes_o[0].astype("int64").sum()
     )

@@ -52,23 +52,6 @@ def test_asof_join_edges(spark):
     assert got == {"l1": "r5", "l2": "r20", "l3": None}  # inclusive tie, no-match → NULL
 
 
-def test_salted_join_rejects_outer(spark):
-    """Outer joins would duplicate unmatched replicated rows once per
-    salt — the operator must refuse instead of silently multiplying."""
-    import pytest
-
-    from olist_ecommerce_data_warehouse_spark.operators.skew import salted_join
-
-    a = spark.range(10).withColumnRenamed("id", "k")
-    b = spark.range(5).withColumnRenamed("id", "k")
-    with pytest.raises(ValueError, match="salted_join"):
-        salted_join(a, b, ["k"], how="full")
-    with pytest.raises(ValueError, match="salted_join"):
-        salted_join(a, b, ["k"], how="right")
-    # left join: unmatched SKEWED rows are fine (they exist once)
-    assert salted_join(a, b, ["k"], how="left").count() == 10
-
-
 def test_distinct_dedup_operator(spark):
     """A1/A3 operator kept library-level after its demo plan's registry
     slot moved to corpus-prep: distinct projection semantics."""
@@ -83,8 +66,8 @@ def test_distinct_dedup_operator(spark):
 
 def test_salted_join_partial_matches_plain(spark):
     """Partial salting (hot keys salted, cold keys plain) must be
-    row-identical to the unsalted join, including left-join NULLs and
-    keys exactly at the hot threshold."""
+    row-identical to the unsalted join, including keys exactly at the
+    hot threshold."""
     from olist_ecommerce_data_warehouse_spark.operators.skew import salted_join
 
     left = spark.createDataFrame(
@@ -92,12 +75,9 @@ def test_salted_join_partial_matches_plain(spark):
         "k int, i int",
     )  # key 3 has 9 rows (hot at threshold 5); key 9 unmatched
     right = spark.createDataFrame([(1, "a"), (3, "c"), (7, "x")], "k int, v string")
-    for how in ("inner", "left"):
-        got = sorted(
-            map(tuple, salted_join(left, right, ["k"], how=how, hot_min_rows=5).collect())
-        )
-        want = sorted(map(tuple, left.join(right, ["k"], how).collect()))
-        assert got == want, how
+    got = sorted(map(tuple, salted_join(left, right, ["k"], hot_min_rows=5).collect()))
+    want = sorted(map(tuple, left.join(right, ["k"]).collect()))
+    assert got == want
 
 
 def test_pii_redaction(spark):
@@ -243,15 +223,14 @@ def test_merge_upsert_actions(spark):
     assert len(got) == 5
 
 
-def test_merge_upsert_null_overwrites_and_delete_missing(spark):
+def test_merge_upsert_null_overwrites(spark):
     from olist_ecommerce_data_warehouse_spark.operators.merge import merge_upsert
 
     target = spark.createDataFrame([(1, "x"), (2, "y")], "k int, v string")
     source = spark.createDataFrame([(1, None)], "k int, v string")
     rows = {r["k"]: r for r in merge_upsert(target, source, ["k"]).collect()}
     assert rows[1]["__merge_action"] == "update" and rows[1]["v"] is None
-    synced = merge_upsert(target, source, ["k"], delete_missing=True).collect()
-    assert [r["k"] for r in synced] == [1]
+    assert rows[2]["__merge_action"] == "keep" and rows[2]["v"] == "y"
 
 
 def test_kmeans_trained_ivf_search_end_to_end(spark):
@@ -464,18 +443,12 @@ def test_shingles_short_docs_no_crash(spark):
     )
     rows = {
         r["id"]: r
-        for r in df.select(
-            "id",
-            shingles("text", n=3).alias("tri"),
-            shingles("text", n=2, distinct=False).alias("bi"),
-            shingles("text", n=5).alias("five"),
-        ).collect()
+        for r in df.select("id", shingles("text").alias("tri")).collect()
     }
-    assert rows[1]["tri"] == [] and rows[1]["bi"] == []
-    assert rows[2]["tri"] == [] and rows[2]["bi"] == []
-    assert rows[3]["tri"] == [] and rows[3]["bi"] == ["two words"]
+    assert rows[1]["tri"] == [] and rows[2]["tri"] == []
+    assert rows[3]["tri"] == []  # two tokens: fewer than n = 3
     assert rows[4]["tri"] == []  # digits don't tokenize
-    assert rows[5]["tri"] == ["a b c", "b c d"] and rows[5]["five"] == []
+    assert rows[5]["tri"] == ["a b c", "b c d"]
 
 
 def test_connected_components_empty_graph(spark):
@@ -491,41 +464,6 @@ def test_connected_components_empty_graph(spark):
         for r in connected_components(verts, edges, max_iter=25).collect()
     }
     assert got == {i: i for i in range(5)}
-
-
-def test_scd2_apply_snapshot_untracked_columns(spark):
-    """attr_cols SUBSET: untracked dim columns carry forward from the
-    closing row (NULL for brand-new keys) instead of failing to
-    resolve."""
-    from olist_ecommerce_data_warehouse_spark.operators.scd import (
-        scd2_apply_snapshot,
-        scd2_from_history,
-    )
-
-    history = spark.createDataFrame(
-        [(1, "addr_a", "note1", 10), (2, "addr_x", "note2", 15)],
-        "k int, addr string, audit_note string, ts int",
-    )
-    dim = scd2_from_history(history, ["k"], "ts")
-    snap = spark.createDataFrame(
-        [(1, "addr_b"), (3, "addr_new")], "k int, addr string"
-    )
-    out = scd2_apply_snapshot(dim, snap, ["k"], 30, attr_cols=["addr"])
-    rows = sorted(
-        map(
-            tuple,
-            out.select(
-                "k", "addr", "audit_note", "effective_start", "effective_end", "is_current"
-            ).collect(),
-        ),
-        key=lambda t: (t[0], t[3]),
-    )
-    assert rows == [
-        (1, "addr_a", "note1", 10, 30, 0),     # closed
-        (1, "addr_b", "note1", 30, None, 1),   # reopened, note carried
-        (2, "addr_x", "note2", 15, None, 1),   # untouched
-        (3, "addr_new", None, 30, None, 1),    # new key, no prior note
-    ]
 
 
 def test_ann_empty_queries_and_zero_norm_vectors(spark):
@@ -1084,75 +1022,6 @@ def test_bpe_train_matches_reference_and_encode_roundtrips(spark):
         docs.unpersist()
 
 
-def test_semdedup_cluster_cap_bounds_blocks(spark):
-    """split_overcap_blocks must (a) leave under-cap corpora EXACTLY
-    as assigned (capped pipeline ≡ uncapped pipeline), (b) bound every
-    block to ≤ cap even on the pathological all-identical corpus where
-    k-means cannot separate anything (force-chunk fallback), and (c)
-    still find the within-block near-dup pairs."""
-    from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_train
-    from olist_ecommerce_data_warehouse_spark.operators.similarity import (
-        quantized,
-        semdedup_pairs,
-        split_overcap_blocks,
-    )
-
-    emb = table(spark, SF_DIR, "embeddings")
-    pure = emb.select("vec_id", quantized("embedding").alias("v"))
-    # inject near-copies so qualifying pairs exist (the plan's shape)
-    base = pure.unionByName(
-        pure.filter(F.col("vec_id") % 7 == 0).select(
-            (F.col("vec_id") + 10000).alias("vec_id"),
-            F.concat(
-                F.array(F.element_at("v", 1) + 1000),
-                F.slice("v", 2, F.size("v") - 1),
-            ).alias("v"),
-        )
-    )
-    cents = kmeans_train(base, vec_col="v", k=8, n_iter=2, pre_quantized=True)
-
-    # (a) cap far above any cluster → identical pair sets
-    uncapped = {
-        tuple(r)
-        for r in semdedup_pairs(base, cents, threshold=0.95).collect()
-    }
-    capped = {
-        tuple(r)
-        for r in semdedup_pairs(
-            base, cents, threshold=0.95, cluster_cap=10_000_000
-        ).collect()
-    }
-    assert capped == uncapped and len(uncapped) > 0
-
-    # (b)+(c) pathological mega-cluster: 600 near-identical vectors
-    one = base.first()["v"]
-    mega = spark.createDataFrame(
-        [(i, [int(x) + (i % 3) for x in one]) for i in range(600)],
-        "vec_id long, v array<bigint>",
-    )
-    mcents = kmeans_train(mega, vec_col="v", k=4, n_iter=2, pre_quantized=True)
-    from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_assign
-
-    assigned = kmeans_assign(
-        mega, mcents, vec_col="v", pre_quantized=True, keep_vec=True
-    )
-    bounded = split_overcap_blocks(assigned, cap=100, sub_k=4, rounds=2)
-    sizes = [r["count"] for r in bounded.groupBy("cluster").count().collect()]
-    assert max(sizes) <= 100, sizes
-    assert sum(sizes) == 600  # nothing lost
-    # ids survive exactly once
-    assert bounded.select("vec_id").distinct().count() == 600
-    pairs = semdedup_pairs(mega, mcents, threshold=0.99, cluster_cap=100)
-    got = pairs.collect()
-    assert len(got) > 0
-    assert all(r["cosine"] >= 0.99 for r in got)
-    # determinism of the whole capped pipeline
-    again = {tuple(r) for r in semdedup_pairs(
-        mega, mcents, threshold=0.99, cluster_cap=100
-    ).collect()}
-    assert {tuple(r) for r in got} == again
-
-
 def test_ivf_index_persist_load_search_with_partition_pruning(spark, tmp_path_factory):
     """IVFIndex lifecycle: search on the LOADED index must equal
     search on the freshly built one; the loaded search must prune to
@@ -1163,7 +1032,7 @@ def test_ivf_index_persist_load_search_with_partition_pruning(spark, tmp_path_fa
     from olist_ecommerce_data_warehouse_spark.operators.similarity import quantized
 
     emb = table(spark, SF_DIR, "embeddings")
-    idx = IVFIndex.build(emb, k=8, n_iter=2)
+    idx = IVFIndex.build(emb)
     path = str(tmp_path_factory.mktemp("ivf") / "index")
     idx.save(path)
     loaded = IVFIndex.load(spark, path)
@@ -1184,7 +1053,7 @@ def test_ivf_index_persist_load_search_with_partition_pruning(spark, tmp_path_fa
     )[1][:200]
 
     # deterministic rebuild
-    idx2 = IVFIndex.build(emb, k=8, n_iter=2)
+    idx2 = IVFIndex.build(emb)
     assert idx2.centroids == idx.centroids
 
 
@@ -1233,19 +1102,21 @@ def test_zorder_layout_skips_both_dimensions(spark, tmp_path_factory):
     under z-order for the dimension the linear layout ignores — and
     the interleave itself must be a correct Morton code."""
     from olist_ecommerce_data_warehouse_spark.operators.zorder import (
+        ZORDER_BITS,
         file_minmax,
         write_zordered,
         zorder_key,
     )
 
-    # Morton correctness on knowns: 16 cells of a 4x4 grid, 2 bits
+    # Morton correctness on knowns: 16 cells of a 4x4 grid; at
+    # ZORDER_BITS per column cell (x, y) scales to (x, y) << (bits - 2)
     cells = spark.createDataFrame(
         [(x, y) for x in range(4) for y in range(4)], "x int, y int"
     )
     got = {
         (r["x"], r["y"]): r["zk"]
         for r in cells.select(
-            "x", "y", zorder_key([("x", 0, 4), ("y", 0, 4)], bits=2).alias("zk")
+            "x", "y", zorder_key([("x", 0, 4), ("y", 0, 4)]).alias("zk")
         ).collect()
     }
 
@@ -1256,7 +1127,8 @@ def test_zorder_layout_skips_both_dimensions(spark, tmp_path_factory):
             out |= ((y >> b) & 1) << (2 * b + 1)
         return out
 
-    assert got == {(x, y): morton2(x, y) for x in range(4) for y in range(4)}
+    shift = 2 * (ZORDER_BITS - 2)
+    assert got == {(x, y): morton2(x, y) << shift for x in range(4) for y in range(4)}
 
     base = tmp_path_factory.mktemp("zorder")
     n = 64
@@ -1340,8 +1212,7 @@ def test_bpe_vocab_and_id_encoding(spark):
 def test_compaction_rewrites_small_files_crash_safe(spark, tmp_path_factory):
     """compact_table: many tiny appended files → few files with
     identical content; a simulated crash state (live gone, trash
-    present) recovers on the next call; sorted compaction restores
-    range locality."""
+    present) recovers on the next call."""
     from olist_ecommerce_data_warehouse_spark.operators.compaction import (
         compact_table,
         table_file_stats,
@@ -1358,20 +1229,17 @@ def test_compaction_rewrites_small_files_crash_safe(spark, tmp_path_factory):
     assert before["n_files"] >= 12
     content_before = sorted(map(tuple, spark.read.parquet(path).collect()))
 
-    res = compact_table(spark, path, target_file_bytes=1 << 30, sort_col="id")
+    res = compact_table(spark, path)
     after = table_file_stats(spark, path)
     assert after["n_files"] == 1 and res["n_out"] == 1
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == content_before
-    # sorted layout: the single file is globally id-ordered
-    ids = [r["id"] for r in spark.read.parquet(path).collect()]
-    assert ids == sorted(ids)
 
     # crash simulation: live renamed away to the trash slot
     import shutil
 
     trash = str(base / ".compact_tmp" / "t__old")
     shutil.move(path, trash)
-    res2 = compact_table(spark, path, target_file_bytes=1 << 30)
+    res2 = compact_table(spark, path)
     assert sorted(map(tuple, spark.read.parquet(path).collect())) == content_before
     assert res2["after"]["n_files"] == 1
 
@@ -1526,7 +1394,10 @@ def test_quality_classifier_trained_on_corpus(spark):
     training errors and classify held-out docs correctly; the trained
     head's output contract matches the stand-in head's."""
     from olist_ecommerce_data_warehouse_spark.functions.text import tokens
+    from olist_ecommerce_data_warehouse_spark.operators.perceptron import pegasos_train
     from olist_ecommerce_data_warehouse_spark.operators.quality import (
+        QC_BUCKETS,
+        hashed_feature_counts,
         quality_scored_trained,
         quality_train,
     )
@@ -1567,7 +1438,8 @@ def test_quality_classifier_trained_on_corpus(spark):
 
     # the corpus-scale head (round 5): PEGASOS trains the same feature
     # space to the same separation, drop-in through the same scorer
-    wp = quality_train(docs, tokens("text"), lab, rounds=40, method="pegasos")
+    feats = hashed_feature_counts(docs, tokens("text"), QC_BUCKETS)
+    wp = pegasos_train(feats, lab, rounds=40, c=100, batches=10)
     scored_p = quality_scored_trained(docs, tokens("text"), wp).join(lab, "doc_id")
     assert scored_p.filter(F.col("y") * F.col("qc_logit_sum") <= 0).count() == 0
     got_p = {r["doc_id"]: r for r in quality_scored_trained(held, tokens("text"), wp).collect()}
@@ -1618,44 +1490,6 @@ def test_export_training_shards(spark, tmp_path_factory):
         for s in range(8)
         for r in read_shard(spark, f"{base}/e1", s).collect()
     ) == list(range(1000))
-
-    # file-size bounding still deterministic: split shards re-read equal
-    export_training_shards(
-        df, f"{base}/e0s", n_shards=8, epoch=0, max_records_per_file=40
-    )
-    import glob
-
-    assert all(
-        len(glob.glob(f"{base}/e0s/shard={s}/*.parquet")) >= 2 for s in range(8)
-    )
-
-
-def test_perceptron_averaged_smooths_oscillation(spark):
-    """The documented full-batch lr=1 pathology, and its standard fix:
-    on a contradictory corpus the last iterate flips between round
-    budgets (w oscillates {b:1} ↔ {}), while the averaged model is a
-    stable majority-leaning classifier regardless of where the budget
-    stops."""
-    from olist_ecommerce_data_warehouse_spark.operators.perceptron import (
-        perceptron_train,
-    )
-
-    feats = spark.createDataFrame(
-        [(0, 1, 2), (1, 1, 1)], "doc_id long, bucket long, cnt long"
-    )
-    lab = spark.createDataFrame([(0, 1), (1, -1)], "doc_id long, y long")
-
-    def weights(rounds, averaged):
-        return {
-            r["bucket"]: r["w"]
-            for r in perceptron_train(
-                feats, lab, rounds=rounds, averaged=averaged
-            ).collect()
-        }
-
-    assert weights(3, False) != weights(4, False)  # the oscillation
-    w3, w4 = weights(3, True), weights(4, True)
-    assert w3 and w4 and w3[1] > 0 and w4[1] > 0  # stable positive lean
 
 
 def test_ppl_buckets_head_middle_tail(spark):
@@ -1892,8 +1726,7 @@ def test_ppl_tertiles_fp_exact_and_oov(spark):
     scored = ppl_tertiles_fp(
         ngram_lm_score(
             docs, bigram_pairs(docs, tokens("text")), bigram, context, v, keep_cols=("lang",)
-        ),
-        by_col="lang",
+        )
     )
     got = {r["doc_id"]: r for r in scored.collect()}
     assert got[7]["ppl_bucket"] == "unscored" and got[7]["avg_fp"] is None
@@ -1947,10 +1780,10 @@ def test_ppl_sketch_agrees_with_exact_tertiles(spark):
     scored = ngram_lm_score(
         docs, pairs, bigram, context, v, keep_cols=("lang",)
     ).persist()
-    ex = ppl_tertiles_fp(scored, by_col="lang").select(
+    ex = ppl_tertiles_fp(scored).select(
         "doc_id", "lang", F.col("ppl_bucket").alias("exb")
     )
-    sk = ppl_buckets(scored, by_col="lang").select(
+    sk = ppl_buckets(scored).select(
         "doc_id", F.col("ppl_bucket").alias("skb")
     )
     for r in (
@@ -2009,7 +1842,7 @@ def test_dsir_gate_rounding_margins():
     )
     feats = f"""
       SELECT doc_id, ({mix32_sql_expr("h")}) % {DSIR_BUCKETS} AS bucket
-      FROM (SELECT doc_id, unnest({quality_features_sql('text')}) AS h
+      FROM (SELECT doc_id, unnest({quality_features_sql()}) AS h
             FROM documents)"""
     tc = dict(
         ddb.execute(

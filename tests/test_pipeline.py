@@ -455,7 +455,7 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path_factory):
 
     # dataloader last mile: whole packed sequences shard together,
     # nothing lost, the stage is audited
-    man = pipe.export_shards(n_shards=4, epoch=0)
+    man = pipe.export_shards(n_shards=4)
     assert man["n_rows"] == packed.count()
     shards = spark.read.parquet(pipe.path("gold", "shards"))
     assert shards.count() == packed.count()
@@ -514,11 +514,6 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path_factory):
     # every stage's rows_inserted is the true row count of what it wrote
     assert _assert_rows_inserted_match_tables(spark, pipe) >= 10
     assert _assert_rows_inserted_match_tables(spark, pipe2) >= 7
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="exactly one"):
-        pipe.run_all()
 
 
 def test_corpus_pipeline_incremental_drop(spark, tmp_path_factory):
@@ -638,6 +633,7 @@ def test_corpus_streaming_ingest_content_idempotent(spark, tmp_path_factory):
     index, no transactional sink required."""
     from olist_ecommerce_data_warehouse_spark.catalog import table
     from olist_ecommerce_data_warehouse_spark.pipeline.corpus import CorpusPipeline
+    from olist_ecommerce_data_warehouse_spark.streaming import drain
     from tests.conftest import SF_DIR
 
     base = tmp_path_factory.mktemp("corpus_stream")
@@ -653,12 +649,11 @@ def test_corpus_streaming_ingest_content_idempotent(spark, tmp_path_factory):
     src = str(base / "src")
     inc.coalesce(1).write.parquet(src)
 
-    def drain(tag):
+    def ingest(tag):
         stream = spark.readStream.schema(inc.schema).parquet(src)
-        q = pipe.streaming_ingest(stream, checkpoint=str(base / f"ckpt_{tag}"))
-        q.awaitTermination(300)
+        drain(pipe.streaming_ingest(stream, checkpoint=str(base / f"ckpt_{tag}")))
 
-    drain("a")
+    ingest("a")
     n1 = pipe.read("silver", "deduped").count()
     assert n1 > n0  # fresh content landed
     assert pipe.read("silver", "index_fingerprints").count() == n1
@@ -670,7 +665,7 @@ def test_corpus_streaming_ingest_content_idempotent(spark, tmp_path_factory):
     inc2.coalesce(1).write.parquet(src2)
     stream2 = spark.readStream.schema(inc2.schema).parquet(src2)
     q2 = pipe.streaming_ingest(stream2, checkpoint=str(base / "ckpt_b"))
-    q2.awaitTermination(300)
+    drain(q2)
     assert pipe.read("silver", "deduped").count() == n1  # nothing re-added
 
     import pytest as _pytest

@@ -98,9 +98,7 @@ def test_corpus_plans_shuffle_budget(spark):
     from olist_ecommerce_data_warehouse_spark.plans.corpus import MIX_WEIGHTS
 
     d = table(spark, SF_DIR, "documents").select("doc_id", "lang")
-    mix = sample_by_weight(
-        d, MIX_WEIGHTS, source_col="lang", id_col="doc_id", salt=":mix"
-    )
+    mix = sample_by_weight(d, MIX_WEIGHTS, source_col="lang")
     mix_plan = mix._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in mix_plan, mix_plan
     pack_plan = _plan(spark, "sequence_packing")
@@ -430,7 +428,7 @@ def test_ivf_publish_routes_scheme_paths_through_hadoop_fs(spark, tmp_path):
         [(i, [int(i % 7), int(i % 11), int(3 * i % 13), 1]) for i in range(64)],
         "vec_id long, embedding array<bigint>",
     )
-    idx = IVFIndex.build(vectors, k=2, n_iter=1, pre_quantized=True)
+    idx = IVFIndex.build(vectors)
 
     uri = f"file://{tmp_path}/ivf_index_hadooproute_v1"
     local = tmp_path / "ivf_index_hadooproute_v1"

@@ -67,13 +67,13 @@ def test_prefix_filter_pipeline_equals_ground_truth(spark, docs):
     sh = shingle_table(df)
     cand = {
         (r["doc_a"], r["doc_b"])
-        for r in prefix_filter_candidates(sh, t_num=3, t_den=5).collect()
+        for r in prefix_filter_candidates(sh).collect()
     }
     assert set(truth) <= cand, f"prefix filter dropped true pairs: {set(truth) - cand}"
     verified = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in jaccard_on_pairs(
-            prefix_filter_candidates(sh, t_num=3, t_den=5), sh
+            prefix_filter_candidates(sh), sh
         )
         .filter(F.col("jaccard") >= 0.6)
         .collect()
@@ -154,7 +154,11 @@ def test_mix32_cross_engine_parity(spark, ddb, xs):
     ddb.execute("CREATE OR REPLACE TABLE _mix_sh (doc_id BIGINT, shingle BIGINT)")
     for i, x in enumerate(xs):
         ddb.execute("INSERT INTO _mix_sh VALUES (?, ?)", [i, x])
-    duck = dict(ddb.execute(f"SELECT doc_id, b FROM {mix32_based_sql('_mix_sh')}").fetchall())
+    duck = dict(
+        ddb.execute(
+            f"WITH sh AS (SELECT * FROM _mix_sh) SELECT doc_id, b FROM {mix32_based_sql()}"
+        ).fetchall()
+    )
     assert duck == got
 
 
@@ -456,7 +460,7 @@ def test_quantize_kernel_cross_engine_parity(spark, ddb, vecs):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = {
         r["vec_id"]: r
-        for r in quantize_int8_stats(df, "vec_id", "embedding").collect()
+        for r in quantize_int8_stats(df).collect()
     }
     ddb.execute("CREATE OR REPLACE TABLE _fuzz_emb AS SELECT * FROM (VALUES (NULL::BIGINT, NULL::FLOAT[])) t(vec_id, embedding) WHERE FALSE")
     for i, v in rows:
@@ -757,7 +761,7 @@ def test_quality_classifier_cross_engine_parity(spark, ddb, texts):
     rows = ddb.execute(
         f"""
         WITH feats AS (
-            SELECT doc_id, {quality_features_sql("text")} AS f FROM _qc_docs
+            SELECT doc_id, {quality_features_sql()} AS f FROM _qc_docs
         ),
         qc AS (
             SELECT doc_id,
@@ -809,15 +813,17 @@ def test_bpe_distributed_equals_reference(spark, words, n_merges):
         min_size=1,
         max_size=25,
     ),
-    bits=st.integers(2, 8),
 )
 @_SETTINGS
-def test_zorder_key_matches_reference_morton(spark, pts, bits):
+def test_zorder_key_matches_reference_morton(spark, pts):
     """zorder_key must equal a reference Morton implementation for any
     points, including out-of-range values (clamped to edge buckets) —
     a wrong interleave silently destroys locality with no visible
     error."""
-    from olist_ecommerce_data_warehouse_spark.operators.zorder import zorder_key
+    from olist_ecommerce_data_warehouse_spark.operators.zorder import (
+        ZORDER_BITS as bits,
+        zorder_key,
+    )
 
     lo, hi = 0, 100
     top = (1 << bits) - 1
@@ -839,7 +845,7 @@ def test_zorder_key_matches_reference_morton(spark, pts, bits):
     got = {
         r["i"]: r["zk"]
         for r in df.select(
-            "i", zorder_key([("x", lo, hi), ("y", lo, hi)], bits=bits).alias("zk")
+            "i", zorder_key([("x", lo, hi), ("y", lo, hi)]).alias("zk")
         ).collect()
     }
     assert got == {i: morton(x, y) for i, (x, y) in enumerate(pts)}
@@ -851,10 +857,9 @@ def test_zorder_key_matches_reference_morton(spark, pts, bits):
         min_size=1,
         max_size=25,
     ),
-    bits=st.integers(2, 8),
 )
 @_SETTINGS
-def test_morton_sql_matches_zorder_key(spark, ddb, pts, bits):
+def test_morton_sql_matches_zorder_key(spark, ddb, pts):
     """The DuckDB twin (morton_sql, the approx_aggregates layout-gate
     oracle) must equal zorder_key exactly for arbitrary points,
     clamping included — the twins share literals but not code, so a
@@ -872,15 +877,15 @@ def test_morton_sql_matches_zorder_key(spark, ddb, pts, bits):
     got = {
         r["i"]: r["zk"]
         for r in df.select(
-            "i", zorder_key([("x", lo, hi), ("y", lo, hi)], bits=bits).alias("zk")
+            "i", zorder_key([("x", lo, hi), ("y", lo, hi)]).alias("zk")
         ).collect()
     }
-    sql = morton_sql([("x", lo, hi), ("y", lo, hi)], bits=bits)
+    sql = morton_sql([("x", lo, hi), ("y", lo, hi)])
     for i, (x, y) in enumerate(pts):
         (want,) = ddb.execute(
             f"SELECT {sql} FROM (SELECT ? AS x, ? AS y)", [x, y]
         ).fetchone()
-        assert got[i] == want, (x, y, bits)
+        assert got[i] == want, (x, y)
 
 
 @given(
@@ -896,12 +901,11 @@ def test_morton_sql_matches_zorder_key(spark, ddb, pts, bits):
     labels=st.lists(st.sampled_from([-1, 1]), min_size=6, max_size=6),
     rounds=st.integers(0, 4),
     mv=st.booleans(),
-    av=st.booleans(),
 )
 @_SETTINGS
-def test_perceptron_cross_engine_parity(spark, ddb, rows, labels, rounds, mv, av):
-    """Distributed perceptron training (batch/max-violator ×
-    last-iterate/averaged) must produce weights identical to the
+def test_perceptron_cross_engine_parity(spark, ddb, rows, labels, rounds, mv):
+    """Distributed perceptron training (batch/max-violator) must
+    produce weights identical to the
     driver-side reference AND to the DuckDB unrolled-round replay for
     arbitrary sparse integer data — the property that makes a trained
     linear model hash-checkable."""
@@ -923,13 +927,9 @@ def test_perceptron_cross_engine_parity(spark, ddb, rows, labels, rounds, mv, av
     )
     got = {
         r["bucket"]: r["w"]
-        for r in perceptron_train(
-            feats, lab, rounds=rounds, max_violator=mv, averaged=av
-        ).collect()
+        for r in perceptron_train(feats, lab, rounds=rounds, max_violator=mv).collect()
     }
-    want = perceptron_train_reference(
-        feat_rows, label_map, rounds, max_violator=mv, averaged=av
-    )
+    want = perceptron_train_reference(feat_rows, label_map, rounds, max_violator=mv)
     assert got == want, (got, want)
 
     ddb.execute("CREATE OR REPLACE TABLE _pf (doc_id BIGINT, bucket BIGINT, cnt BIGINT)")
@@ -938,12 +938,11 @@ def test_perceptron_cross_engine_parity(spark, ddb, rows, labels, rounds, mv, av
     ddb.execute("CREATE OR REPLACE TABLE _pl (doc_id BIGINT, y BIGINT)")
     for d, y in label_map.items():
         ddb.execute("INSERT INTO _pl VALUES (?, ?)", [d, y])
-    final_cte = "pavg" if av else f"pw{rounds}"
     duck = dict(
         ddb.execute(
-            "WITH "
-            + perceptron_oracle_ctes(rounds, "_pf", "_pl", max_violator=mv)
-            + f" SELECT bucket, w FROM {final_cte}"
+            "WITH pfeats AS (SELECT * FROM _pf), plabels AS (SELECT * FROM _pl), "
+            + perceptron_oracle_ctes(rounds, max_violator=mv)
+            + f" SELECT bucket, w FROM pw{rounds}"
         ).fetchall()
     )
     assert duck == want, (duck, want)
@@ -1002,9 +1001,8 @@ def test_pegasos_cross_engine_parity(spark, ddb, rows, labels, rounds, batches, 
         ddb.execute("INSERT INTO _pgl VALUES (?, ?)", [d, y])
     duck = dict(
         ddb.execute(
-            "WITH "
-            + pegasos_oracle_ctes(rounds, c=c, batches=batches,
-                                  feats_cte="_pgf", labels_cte="_pgl")
+            "WITH pfeats AS (SELECT * FROM _pgf), plabels AS (SELECT * FROM _pgl), "
+            + pegasos_oracle_ctes(rounds, c=c, batches=batches)
             + f" SELECT bucket, w FROM pgw{rounds}"
         ).fetchall()
     )
@@ -1171,10 +1169,10 @@ def test_gopher_flags_cross_engine_parity(spark, ddb, parts, sep):
     )
 
     text = sep.join(parts)
-    fl = gopher_flags("text")
+    fl = gopher_flags()
     df = spark.createDataFrame([(0, text)], "i long, text string")
     got = df.select(*[v.alias(k) for k, v in fl.items()]).collect()[0].asDict()
-    sel = ", ".join(f"{v} AS {k}" for k, v in gopher_flags_sql("text").items())
+    sel = ", ".join(f"{v} AS {k}" for k, v in gopher_flags_sql().items())
     want = ddb.execute(
         f"SELECT {sel} FROM (SELECT ? AS text)", [text]
     ).fetchdf().iloc[0].to_dict()
@@ -1259,7 +1257,7 @@ def test_jpeg12_roundtrip_any_dims(bw, bh, mid):
     )
 
     w, h = 8 * bw, 8 * bh
-    dw, dh, planes = _decode_jpeg(_synth_jpeg12_gray_bytes(w, h, mid))
+    dw, dh, planes, _ = _decode_jpeg(_synth_jpeg12_gray_bytes(w, h, mid))
     assert (dw, dh) == (w, h)
     p = planes[0]
     assert p.dtype == np.uint16

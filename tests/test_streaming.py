@@ -8,9 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from olist_ecommerce_data_warehouse_spark.catalog import table
+from olist_ecommerce_data_warehouse_spark.streaming import drain
 from olist_ecommerce_data_warehouse_spark.streaming.events import (
     read_event_stream,
-    run_available_now,
     running_user_totals,
     session_counts,
     sliding_counts,
@@ -34,8 +34,15 @@ def event_source(spark, tmp_path_factory):
 
 
 def _drain(spark, sdf, name, mode="update"):
-    q = run_available_now(sdf, name, output_mode=mode)
-    q.awaitTermination(120)
+    """Drain everything in the source into an in-memory sink
+    (incremental-backfill trigger) and return the sink's table."""
+    drain(
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
     return spark.table(name)
 
 
@@ -127,8 +134,8 @@ def test_streaming_upsert_merges_incrementally(spark, tmp_path_factory):
             .parquet(src)
         )
 
-    q = streaming_upsert(read_src(), target, ckpt, keys=["k"], order_col="ts")
-    q.awaitTermination(120)
+    q = streaming_upsert(read_src(), target, ckpt, keys=["k"])
+    drain(q)
     got = {r["k"]: r for r in spark.read.parquet(target).collect()}
     assert len(got) == 2
     assert got[2]["val"] == 2.5  # within-batch dedup kept the latest ts
@@ -138,8 +145,8 @@ def test_streaming_upsert_merges_incrementally(spark, tmp_path_factory):
     spark.createDataFrame(
         rows2, "k long, ts long, name string, val double"
     ).write.parquet(f"{src}/d2.parquet")
-    q2 = streaming_upsert(read_src(), target, ckpt, keys=["k"], order_col="ts")
-    q2.awaitTermination(120)
+    q2 = streaming_upsert(read_src(), target, ckpt, keys=["k"])
+    drain(q2)
     got = {r["k"]: r for r in spark.read.parquet(target).collect()}
     assert len(got) == 3
     assert got[1]["name"] == "a2" and got[1]["val"] == 9.0
@@ -237,18 +244,18 @@ def test_greedy_packing_stateful_across_restarts(spark, tmp_path_factory):
     spark.createDataFrame(batch1, schema).coalesce(1).write.mode("append").parquet(src)
     out1 = f"{base}/out1"
     q = run_once(out1)
-    q.awaitTermination(120)
+    drain(q)
     got1 = sorted(map(tuple, spark.read.parquet(out1).collect()))
-    assert got1 == greedy_pack_reference([(d, l, n) for d, l, n in batch1])
+    assert got1 == greedy_pack_reference([(d, l, n) for d, l, n in batch1], 512)
 
     # second drop + RESTARTED query on the same checkpoint: continues
     # from persisted per-key state
     spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
     out2 = f"{base}/out2"
     q2 = run_once(out2)
-    q2.awaitTermination(120)
+    drain(q2)
     got2 = sorted(map(tuple, spark.read.parquet(out2).collect()))
-    want_full = greedy_pack_reference([(d, l, n) for d, l, n in batch1 + batch2])
+    want_full = greedy_pack_reference([(d, l, n) for d, l, n in batch1 + batch2], 512)
     want2 = sorted(t for t in want_full if t[0] >= 20)
     assert got2 == want2
     # continuity: batch2's first en-doc did NOT restart at seq 0 offset 0
@@ -277,7 +284,7 @@ def test_greedy_pack_batch_equals_streaming_layout(spark):
     )
     got = sorted(map(tuple, greedy_pack_batch(sized, budget=512).collect()))
     want = greedy_pack_reference(
-        [(r["doc_id"], r["lang"], r["n_tokens"]) for r in sized.collect()]
+        [(r["doc_id"], r["lang"], r["n_tokens"]) for r in sized.collect()], 512
     )
     assert got == want
 
@@ -319,12 +326,10 @@ def test_stream_range_enrich_equals_batch(spark, event_source):
         "event_id", "user_id", "ts"
     )
     enriched = stream_range_enrich(
-        clicks_s, windows, "ts", "w_start", "w_end", bin_width_sec=600
+        clicks_s, windows, "ts", "w_start", "w_end"
     )
     got = _drain(spark, enriched, "t_range_enrich", mode="append")
-    want = range_join(
-        clicks_b, windows, "ts", "w_start", "w_end", bin_width_sec=600
-    )
+    want = range_join(clicks_b, windows, "ts", "w_start", "w_end")
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
     with _pytest.raises(ValueError, match="must be a streaming"):
@@ -398,11 +403,10 @@ def test_streaming_topk_equals_batch(spark, tmp_path_factory):
         corpus,
         sink=lambda df, _bid: df.write.mode("append").parquet(out_dir),
         checkpoint=f"{base}/ckpt",
-        k=3,
     )
-    q.awaitTermination(120)
+    drain(q)
     got = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
-    want = sorted(map(tuple, brute_force_topk(queries, corpus, k=3).collect()))
+    want = sorted(map(tuple, brute_force_topk(queries, corpus).collect()))
     assert got == want
 
     import pytest as _pytest
@@ -488,7 +492,7 @@ def test_streaming_lsh_neardup_matches_batch_and_survives_restart(
 
     ckpt, out = str(base / "ckpt"), str(base / "out")
 
-    def drain():
+    def run():
         stream = spark.readStream.schema(corpus.schema).parquet(src)
         q = (
             streaming_lsh_neardup(stream)
@@ -498,11 +502,11 @@ def test_streaming_lsh_neardup_matches_batch_and_survives_restart(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        drain(q)
 
-    drain()  # batch 1: originals only
+    run()  # batch 1: originals only
     land(d2, "drop2")
-    drain()  # RESTARTED query: dupes arrive against drop1's state
+    run()  # RESTARTED query: dupes arrive against drop1's state
 
     got = spark.read.parquet(out)
     # every (doc, band) emitted exactly once across both runs
@@ -555,7 +559,6 @@ def test_streaming_ppl_score_equals_batch(spark, tmp_path_factory):
         bigram_pairs,
         ngram_lm_score,
         ngram_lm_train,
-        perplexity_gate,
     )
     from olist_ecommerce_data_warehouse_spark.streaming.lm import streaming_ppl_score
 
@@ -582,18 +585,14 @@ def test_streaming_ppl_score_equals_batch(spark, tmp_path_factory):
         v,
         sink=lambda df, _bid: df.write.mode("append").parquet(out_dir),
         checkpoint=f"{base}/ckpt",
-        max_ppl=25.0,
     )
-    q.awaitTermination(120)
+    drain(q)
     got = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
     want = sorted(
         map(
             tuple,
-            perplexity_gate(
-                ngram_lm_score(
-                    probe, bigram_pairs(probe, tokens("text")), bigram, context, v
-                ),
-                25.0,
+            ngram_lm_score(
+                probe, bigram_pairs(probe, tokens("text")), bigram, context, v
             ).collect(),
         )
     )
