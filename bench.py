@@ -93,7 +93,10 @@ BASELINE = {
     "merge_upsert_incremental": 0.4825,
     "multikey_left_distinct": 0.649,
     "multimodal_decode_frames": 0.8962,
-    "multimodal_metadata": 8.7632,
+    # one gate map (was 38 Arrow maps): paired A/B bench_ab/bench_ab.jsonl
+    # record ts 2026-10-19T06:43:22Z, change wins 10/10, median
+    # 11.5085 -> 3.7972 s, parent IQR 1.1029 s
+    "multimodal_metadata": 3.7972,
     "orphan_check": 0.4146,
     "per_order_rollup": 2.5036,
     "pivot_event_types_daily": 0.4346,

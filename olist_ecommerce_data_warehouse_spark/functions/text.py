@@ -145,12 +145,6 @@ def fingerprint_md5(col: Column | str) -> Column:
     return F.md5(normalized)
 
 
-def fingerprint_xxhash(col: Column | str) -> Column:
-    """64-bit engine-internal fingerprint (xxhash64 — fast JVM path,
-    not portable to the oracle; used by dedup internals)."""
-    return F.xxhash64(_c(col))
-
-
 # ---------------------------------------------------------------- PII scrub
 
 # Pre-training corpora must be scrubbed of personally identifiable

@@ -28,11 +28,11 @@ Decode tiers:
   the oracle-gated plans (byte-derived metadata, engine-portable).
 
 The closed-form codec gates behind ``multimodal_metadata`` (one row
-per codec family in ``plans/multimodal.py::GATE_FAMILIES``) run
-through two generic Arrow maps defined here: ``synthesize`` (ids →
-known-content containers via a per-id ``mid → bytes`` function) and
-``decode_stats`` (payloads → exact integer statistics via a per-row
-``bytes → tuple[int, ...]`` function such as ``_png_pixel_stats``).
+per codec family in ``plans/multimodal.py::GATE_FAMILIES``) pair a
+per-id synthesizer (``mid → bytes``, e.g. ``_synth_container_bytes``)
+with a per-payload statistic (``bytes → tuple[int, ...]``, e.g.
+``_png_pixel_stats``) and the header probe's ``_probe_row``; the plan
+runs them all in one Arrow map.
 
 Everything Spark-side — the binary schema, the mapInPandas batch
 iteration, the output schemas, the partitioning — is real and tested.
@@ -381,9 +381,12 @@ def _gif_deinterlace(indices, w: int, h: int):
 
 
 def _parse_wav(b: bytes):
-    """WAV via the stdlib ``wave`` module + PCM sample decode: channel
-    count, sample rate, per-channel frame count, mean |amplitude|
-    normalized to [0, 1]."""
+    """(per-channel frame count, channels, sample rate, bit depth,
+    interleaved samples) of a PCM WAV via the stdlib ``wave`` module —
+    the one PCM reader behind ``real_decode_media`` and the decode:wav
+    gate.  16-bit samples are signed ints, 8-bit ones are re-centred
+    on 0.  A data chunk holding fewer frames than its header declares
+    raises ValueError, never a short sample stream."""
     import array
     import io
     import wave
@@ -399,14 +402,17 @@ def _parse_wav(b: bytes):
         # the stdlib module's mixed exception surface, re-typed to the
         # malformed-input contract every other codec here follows
         raise ValueError(f"malformed WAV: {exc}") from exc
+    if len(frames) < n * ch * width:
+        raise ValueError(
+            f"WAV data chunk truncated: {len(frames) // (ch * width)} of {n} frames"
+        )
     if width == 2:
         samples = array.array("h", frames)
-        mean = (sum(abs(s) for s in samples) / len(samples) / 32768.0) if samples else 0.0
     elif width == 1:
-        mean = (sum(abs(s - 128) for s in frames) / len(frames) / 128.0) if frames else 0.0
+        samples = [s - 128 for s in frames]
     else:
         raise NotImplementedError("WAV sample width beyond the stdlib decoder")
-    return n, 0, ch, rate, width * 8, mean
+    return n, ch, rate, width * 8, samples
 
 
 def _riff_chunks(b: bytes):
@@ -420,15 +426,23 @@ def _riff_chunks(b: bytes):
         i += 8 + csize + (csize & 1)
 
 
-def _wav_fmt_code(b: bytes):
-    """Format code from the RIFF fmt chunk (1 = PCM, 6 = A-law,
-    7 = µ-law, …), or ``None`` when no intact fmt chunk is found —
-    callers then fall through to the stdlib path whose exception
-    re-typing owns the malformed-framing contract."""
+def _wav_fmt(b: bytes):
+    """(format code, channels, sample_rate, bits_per_sample) from a
+    REAL RIFF chunk walk — NOT fixed offsets: real-world WAVs carry
+    LIST/fact/bext chunks before ``fmt ``, and WAVE_FORMAT_EXTENSIBLE
+    widens the fmt chunk past 16 bytes; fixed-offset reads silently
+    yield garbage for both.  The walk mirrors the JPEG SOF and MP4 box
+    traversals: chunk id(4) + little-endian size(4) + payload (padded
+    to even), scanned until ``fmt `` with a validated size ≥ 16.
+    Format codes: 1 = PCM, 6 = A-law, 7 = µ-law, …"""
     for cid, p, csize in _riff_chunks(b):
-        if cid == b"fmt " and csize >= 2 and p + 2 <= len(b):
-            return struct.unpack("<H", b[p : p + 2])[0]
-    return None
+        if cid == b"fmt ":
+            if csize < 16 or p + 16 > len(b):
+                raise ValueError("WAV fmt chunk truncated")
+            code, ch, rate = struct.unpack("<HHI", b[p : p + 8])
+            (bits,) = struct.unpack("<H", b[p + 14 : p + 16])
+            return code, ch, rate, bits
+    raise ValueError("WAV has no fmt chunk")
 
 
 def _stdlib_decode_row(b: bytes) -> tuple:
@@ -445,15 +459,13 @@ def _stdlib_decode_row(b: bytes) -> tuple:
         # dispatch on the fmt chunk's format code: the stdlib wave
         # module only reads PCM, so G.711 µ-law (7) / A-law (6) route
         # to the real expander instead of a spurious 'malformed WAV'
-        if _wav_fmt_code(b) in (6, 7):
+        if _wav_fmt(b)[0] in (6, 7):
             n, ch, rate, samples = _parse_wav_mulaw(b)
-            mean = (
-                sum(abs(s) for s in samples) / len(samples) / 32768.0
-                if samples
-                else 0.0
-            )
-            return ("wav", n, 0, ch, rate, 8, mean)
-        n, _, ch, rate, depth, mean = _parse_wav(b)
+            depth, full_scale = 8, 32768.0  # expanded to int16 range
+        else:
+            n, ch, rate, depth, samples = _parse_wav(b)
+            full_scale = float(1 << (depth - 1))
+        mean = sum(abs(s) for s in samples) / len(samples) / full_scale if samples else 0.0
         return ("wav", n, 0, ch, rate, depth, mean)
     if b[:6] in (b"GIF87a", b"GIF89a"):
         w, h, total, count = _parse_gif(b)
@@ -885,22 +897,35 @@ def _mp4_dims(b: bytes):
     return w, h, brand
 
 
-def _wav_fmt(b: bytes):
-    """(channels, sample_rate, bits_per_sample) from a REAL RIFF chunk
-    walk — NOT fixed offsets: real-world WAVs carry LIST/fact/bext
-    chunks before ``fmt ``, and WAVE_FORMAT_EXTENSIBLE widens the fmt
-    chunk past 16 bytes; fixed-offset reads silently yield garbage for
-    both.  The walk mirrors the JPEG SOF and MP4 box traversals: chunk
-    id(4) + little-endian size(4) + payload (padded to even), scanned
-    until ``fmt `` with a validated size ≥ 16."""
-    for cid, p, csize in _riff_chunks(b):
-        if cid == b"fmt ":
-            if csize < 16 or p + 16 > len(b):
-                raise ValueError("WAV fmt chunk truncated")
-            ch, rate = struct.unpack("<HI", b[p + 2 : p + 8])
-            (bits,) = struct.unpack("<H", b[p + 14 : p + 16])
-            return ch, rate, bits
-    raise ValueError("WAV has no fmt chunk")
+def _probe_row(b: bytes) -> tuple[str, int, int, int, int, int, int]:
+    """(format, width, height, n_channels, sample_rate, bit_depth,
+    progressive) of one payload's container header — the row
+    ``probe_media_headers`` emits, minus the id.  Unknown formats
+    classify as 'unknown', malformed headers as 'corrupt'."""
+    try:
+        if b[:8] == _PNG_SIG:
+            w, h = struct.unpack(">II", b[16:24])
+            depth, ctype = b[24], b[25]
+            return ("png", w, h, _PNG_CHANNELS.get(ctype, 0), 0, depth, 0)
+        if b[:2] == b"BM":
+            w, h = struct.unpack("<ii", b[18:26])
+            (bpp,) = struct.unpack("<H", b[28:30])
+            return ("bmp", w, abs(h), max(bpp // 8, 1), 0, 8, 0)
+        if b[:6] in (b"GIF87a", b"GIF89a"):
+            w, h = struct.unpack("<HH", b[6:10])
+            return ("gif", w, h, 3, 0, 8, 0)
+        if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+            _, ch, rate, bits = _wav_fmt(b)
+            return ("wav", 0, 0, ch, rate, bits, 0)
+        if b[:2] == b"\xff\xd8":
+            w, h, ncomp, prec, prog = _jpeg_header(b)
+            return ("jpeg", w, h, ncomp, 0, prec, prog)
+        if len(b) >= 12 and b[4:8] == b"ftyp":
+            w, h, brand = _mp4_dims(b)
+            return (f"mp4/{brand}", w, h, 0, 0, 0, 0)
+        return ("unknown", 0, 0, 0, 0, 0, 0)
+    except (ValueError, struct.error, IndexError):
+        return ("corrupt", 0, 0, 0, 0, 0, 0)
 
 
 def probe_media_headers(media: DataFrame) -> DataFrame:
@@ -925,89 +950,13 @@ def probe_media_headers(media: DataFrame) -> DataFrame:
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                b = bytes(r["payload"])
-                mid = r["media_id"]
-                try:
-                    if b[:8] == _PNG_SIG:
-                        w, h = struct.unpack(">II", b[16:24])
-                        depth, ctype = b[24], b[25]
-                        ch = _PNG_CHANNELS.get(ctype, 0)
-                        rows.append((mid, "png", w, h, ch, 0, depth, 0))
-                    elif b[:2] == b"BM":
-                        w, h = struct.unpack("<ii", b[18:26])
-                        (bpp,) = struct.unpack("<H", b[28:30])
-                        rows.append((mid, "bmp", w, abs(h), max(bpp // 8, 1), 0, 8, 0))
-                    elif b[:6] in (b"GIF87a", b"GIF89a"):
-                        w, h = struct.unpack("<HH", b[6:10])
-                        rows.append((mid, "gif", w, h, 3, 0, 8, 0))
-                    elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                        ch, rate, bits = _wav_fmt(b)
-                        rows.append((mid, "wav", 0, 0, ch, rate, bits, 0))
-                    elif b[:2] == b"\xff\xd8":
-                        w, h, ncomp, prec, prog = _jpeg_header(b)
-                        rows.append((mid, "jpeg", w, h, ncomp, 0, prec, prog))
-                    elif len(b) >= 12 and b[4:8] == b"ftyp":
-                        w, h, brand = _mp4_dims(b)
-                        rows.append((mid, f"mp4/{brand}", w, h, 0, 0, 0, 0))
-                    else:
-                        rows.append((mid, "unknown", 0, 0, 0, 0, 0, 0))
-                except (ValueError, struct.error, IndexError):
-                    rows.append((mid, "corrupt", 0, 0, 0, 0, 0, 0))
+            rows = [
+                (mid, *_probe_row(bytes(p)))
+                for mid, p in zip(pdf["media_id"], pdf["payload"])
+            ]
             yield pd.DataFrame(rows, columns=[f.name for f in PROBE_SCHEMA.fields])
 
     return media.select("media_id", "payload").mapInPandas(kernel, PROBE_SCHEMA)
-
-
-# ---------------------------------------------------------------- gate maps
-
-PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def synthesize(docs: DataFrame, make_bytes: Callable[[int], bytes]) -> DataFrame:
-    """(media_id, payload) with ``payload = make_bytes(doc_id)``.
-    Deterministic: same ids ⇒ byte-identical payloads on any executor,
-    any retry.  One Arrow map, no shuffle."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(mid) for mid in pdf["media_id"]]
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": [make_bytes(mid) for mid in ids]}
-            )
-
-    return docs.select(F.col("doc_id").alias("media_id")).mapInPandas(
-        kernel, PAYLOAD_SCHEMA
-    )
-
-
-def decode_stats(
-    media: DataFrame,
-    row_fn: Callable[[bytes], tuple[int, ...]],
-    names: tuple[str, ...],
-) -> DataFrame:
-    """(media_id, *names), one row per payload, ``names`` filled from
-    ``row_fn(payload)``.  The statistics are exact integers, so every
-    column is ``bigint`` and their sums are hash-comparable against a
-    closed-form oracle.  One Arrow map, no shuffle."""
-    columns = ["media_id", *names]
-    schema = T.StructType([T.StructField(n, T.LongType()) for n in columns])
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(mid), *row_fn(bytes(p)))
-                for mid, p in zip(pdf["media_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=columns)
-
-    return media.select("media_id", "payload").mapInPandas(kernel, schema)
 
 
 # ------------------------------------------------- real-container synthesis
@@ -1373,15 +1322,10 @@ def _png_pixel_stats(b: bytes) -> tuple[int, int]:
 
 def _wav_pcm_stats(b: bytes) -> tuple[int, int]:
     """(sample sum, sample count) over all interleaved samples via the
-    REAL stdlib WAV/PCM decode (``wave`` module + int16 array) —
-    closed-form-checkable when the content is a known function of
-    position (see ``_synth_wav_bytes``)."""
-    import array
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(b)) as wf:
-        samples = array.array("h", wf.readframes(wf.getnframes()))
+    REAL stdlib WAV/PCM decode (``_parse_wav``) — closed-form-checkable
+    when the content is a known function of position (see
+    ``_synth_wav_bytes``)."""
+    samples = _parse_wav(b)[4]
     return sum(samples), len(samples)
 
 
@@ -3639,24 +3583,20 @@ def _synth_wav_mulaw_bytes(n: int, mid: int, alaw: bool = False) -> bytes:
 
 def _parse_wav_mulaw(b: bytes):
     """(n_samples, channels, rate, decoded int16 samples) for a
-    WAVE_FORMAT_MULAW stream: RIFF chunk walk to fmt + data, then the
+    WAVE_FORMAT_MULAW stream: ``_wav_fmt``, a RIFF walk to data, then the
     G.711 expansion per byte.  Non-µ-law formats and malformed
     framing raise ValueError."""
     if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError("not a WAV")
-    fmt_code = ch = rate = None
+    fmt_code, ch, rate, _ = _wav_fmt(b)
     data = None
     for cid, p, csize in _riff_chunks(b):
-        if cid == b"fmt ":
-            if csize < 16 or p + 16 > len(b):
-                raise ValueError("WAV fmt chunk truncated")
-            fmt_code, ch, rate = struct.unpack("<HHI", b[p : p + 8])
-        elif cid == b"data":
+        if cid == b"data":
             if p + csize > len(b):
                 raise ValueError("WAV data chunk truncated")
             data = b[p : p + csize]
-    if fmt_code is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
+    if data is None:
+        raise ValueError("WAV has no data chunk")
     if ch == 0:
         raise ValueError("WAV with zero channels")
     if fmt_code == 7:

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olist_ecommerce_data_warehouse_spark.catalog import table
-from olist_ecommerce_data_warehouse_spark.functions.numeric import as_out, dec, money
+from olist_ecommerce_data_warehouse_spark.functions.numeric import as_out, dec, dec_dbl_sql, money
 from olist_ecommerce_data_warehouse_spark.operators.asof import asof_join
 from olist_ecommerce_data_warehouse_spark.operators.datedim import build_date_dim
 from olist_ecommerce_data_warehouse_spark.operators.merge import merge_upsert
@@ -24,23 +24,21 @@ from olist_ecommerce_data_warehouse_spark.operators.zorder import morton_sql, zo
 from olist_ecommerce_data_warehouse_spark.pipeline.star import build_dim_customer
 from olist_ecommerce_data_warehouse_spark.plans.gold import DIM_CUSTOMER_SQL
 from olist_ecommerce_data_warehouse_spark.plans.registry import query
+from olist_ecommerce_data_warehouse_spark.plans.warehouse import REV_SQL
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
 @query(
     "pricing_summary",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sum_qty,
-           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
-           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                    * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
-           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                    * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
-                    * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2)))) AS VARCHAR) AS DOUBLE) AS sum_charge,
-           CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) / COUNT(*) AS avg_qty,
-           CAST(CAST(SUM(CAST(l_discount AS DECIMAL(4,2))) AS VARCHAR) AS DOUBLE) / COUNT(*) AS avg_disc,
+           {dec_dbl_sql('SUM(CAST(l_quantity AS DECIMAL(12,2)))')} AS sum_qty,
+           {dec_dbl_sql('SUM(CAST(l_extendedprice AS DECIMAL(12,2)))')} AS sum_base_price,
+           {dec_dbl_sql(f'SUM({REV_SQL})')} AS sum_disc_price,
+           {dec_dbl_sql(f'SUM({REV_SQL} * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2))))')} AS sum_charge,
+           {dec_dbl_sql('SUM(CAST(l_quantity AS DECIMAL(12,2)))')} / COUNT(*) AS avg_qty,
+           {dec_dbl_sql('SUM(CAST(l_discount AS DECIMAL(4,2)))')} / COUNT(*) AS avg_disc,
            COUNT(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -76,7 +74,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH dim_customer AS ({DIM_CUSTOMER_SQL})
     SELECT d.region_name, d.c_mktsegment AS segment,
            COUNT(*) AS n_orders,
-           CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS total_sales,
+           {dec_dbl_sql('SUM(CAST(o.o_totalprice AS DECIMAL(12,2)))')} AS total_sales,
            CAST(GROUPING(d.region_name) AS INT) AS g_region,
            CAST(GROUPING(d.c_mktsegment) AS INT) AS g_segment,
            CAST(GROUPING(d.region_name, d.c_mktsegment) AS BIGINT) AS gid
@@ -381,10 +379,10 @@ def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "skew_salted_join",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            COUNT(*) AS n_items,
-           CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sum_qty
+           {dec_dbl_sql('SUM(CAST(l_quantity AS DECIMAL(12,2)))')} AS sum_qty
     FROM lineitem
     JOIN orders ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority

@@ -24,7 +24,7 @@ from olist_ecommerce_data_warehouse_spark.functions.cleansing import (
     try_ts,
     valid_id,
 )
-from olist_ecommerce_data_warehouse_spark.functions.numeric import as_out, money
+from olist_ecommerce_data_warehouse_spark.functions.numeric import as_out, dec_dbl_sql, money
 from olist_ecommerce_data_warehouse_spark.plans.registry import query
 
 
@@ -78,7 +78,7 @@ def cleanse_trim_case_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cleanse_decimal_comma",
-    oracle="""
+    oracle=f"""
     WITH corrupted AS (
         SELECT l_orderkey, l_linenumber,
                CASE WHEN l_suppkey % 13 = 0 THEN 'N/A'
@@ -88,13 +88,11 @@ def cleanse_trim_case_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem
     )
     SELECT l_orderkey, l_linenumber,
-           CAST(CAST(TRY_CAST(replace(raw_amount, ',', '.') AS DECIMAL(12,2)) AS VARCHAR) AS DOUBLE) AS amount,
+           {dec_dbl_sql("TRY_CAST(replace(raw_amount, ',', '.') AS DECIMAL(12,2))")} AS amount,
            CASE WHEN TRY_CAST(replace(raw_amount, ',', '.') AS DECIMAL(12,2)) IS NULL
                 THEN 1 ELSE 0 END AS is_bad,
-           CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) +
-                CAST(l_tax AS DECIMAL(12,2)) AS VARCHAR) AS DOUBLE) AS total_value,
-           CAST(CAST(CAST(l_quantity AS DECIMAL(12,2)) *
-                CAST(l_extendedprice AS DECIMAL(12,2)) AS VARCHAR) AS DOUBLE) AS volume_value,
+           {dec_dbl_sql("CAST(l_extendedprice AS DECIMAL(12,2)) + CAST(l_tax AS DECIMAL(12,2))")} AS total_value,
+           {dec_dbl_sql("CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))")} AS volume_value,
            CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END AS is_discounted,
            CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS is_returned
     FROM corrupted

@@ -14,19 +14,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from olist_ecommerce_data_warehouse_spark.catalog import table
-from olist_ecommerce_data_warehouse_spark.functions.numeric import as_out, money
+from olist_ecommerce_data_warehouse_spark.functions.numeric import as_out, dec_dbl_sql, money
 from olist_ecommerce_data_warehouse_spark.plans.registry import query
 
 
 @query(
     "events_windows",
-    oracle="""
+    oracle=f"""
     WITH tumbling AS (
         SELECT 'tumbling' AS window_kind,
                date_trunc('hour', ts) AS window_start,
                event_type,
                COUNT(*) AS n_events,
-               CAST(CAST(SUM(CAST(value AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS total_value
+               {dec_dbl_sql('SUM(CAST(value AS DECIMAL(12,2)))')} AS total_value
         FROM events
         GROUP BY 2, 3
     ),
@@ -39,7 +39,7 @@ from olist_ecommerce_data_warehouse_spark.plans.registry import query
     sliding AS (
         SELECT 'sliding' AS window_kind, window_start, event_type,
                COUNT(*) AS n_events,
-               CAST(CAST(SUM(CAST(value AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS total_value
+               {dec_dbl_sql('SUM(CAST(value AS DECIMAL(12,2)))')} AS total_value
         FROM expanded
         GROUP BY 2, 3
     )

@@ -10,12 +10,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from olist_ecommerce_data_warehouse_spark.functions.numeric import dec_dbl_sql
 from olist_ecommerce_data_warehouse_spark.pipeline.star import (
     build_dim_customer,
     build_fact_lineitem,
     build_fact_orders,
 )
 from olist_ecommerce_data_warehouse_spark.plans.registry import query
+from olist_ecommerce_data_warehouse_spark.plans.warehouse import REV_SQL
 
 DIM_CUSTOMER_SQL = """
     SELECT CAST(ROW_NUMBER() OVER (ORDER BY c_custkey) AS BIGINT) AS customer_sk,
@@ -72,8 +74,7 @@ def gold_fact_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(strftime(l.l_shipdate, '%Y%m%d') AS INT) AS ship_date_key,
            l.l_quantity AS quantity,
            l.l_extendedprice AS price,
-           CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) *
-                (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))) AS VARCHAR) AS DOUBLE) AS item_revenue
+           {dec_dbl_sql(REV_SQL)} AS item_revenue
     FROM lineitem l
     JOIN fact_orders o ON l.l_orderkey = o.o_orderkey
     JOIN dim_part dp   ON l.l_partkey  = dp.p_partkey
@@ -92,7 +93,7 @@ def gold_fact_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH dim_customer AS ({DIM_CUSTOMER_SQL})
     SELECT d.region_name,
            COUNT(*) AS n_orders,
-           CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS total_sales
+           {dec_dbl_sql('SUM(CAST(o.o_totalprice AS DECIMAL(12,2)))')} AS total_sales
     FROM orders o
     JOIN dim_customer d ON o.o_custkey = d.c_custkey
     GROUP BY d.region_name

@@ -12,14 +12,14 @@ live in tests/test_multimodal.py."""
 
 from __future__ import annotations
 
-import functools
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator
 from typing import NamedTuple
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olist_ecommerce_data_warehouse_spark.catalog import table
+from olist_ecommerce_data_warehouse_spark.catalog import spread, table
 from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
     SYNTH_FIELDS_SQL,
     _flac_sample_stats,
@@ -32,6 +32,7 @@ from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
     _parse_gif,
     _png_pixel_stats,
     _png_weighted_stats,
+    _probe_row,
     _synth_bmp8_bytes,
     _synth_bmp_bytes,
     _synth_container_bytes,
@@ -53,20 +54,16 @@ from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
     _tiff_pixel_stats,
     _wav_pcm_stats,
     decode_media,
-    decode_stats,
-    probe_media_headers,
     sample_frames,
-    synthesize,
     synthesize_media,
 )
-from olist_ecommerce_data_warehouse_spark.plans.registry import query, track_persist
+from olist_ecommerce_data_warehouse_spark.plans.registry import query
 
 
 class GateFamily(NamedTuple):
     """One closed-form decode gate of ``multimodal_metadata``.  The
     docs with ``doc_id % modulus == residue`` are synthesized by
-    ``synth`` (``None``: filter the shared real-container persist
-    instead), decoded to exact integers by ``stats``, and rolled up as
+    ``synth``, decoded to exact integers by ``stats``, and rolled up as
     ``n_media`` plus one ``sum`` per name in ``names`` — the metrics
     the oracle's ``*_agg`` CTE for ``kind`` derives in closed form from
     the same id arithmetic, never parsing a byte."""
@@ -74,7 +71,7 @@ class GateFamily(NamedTuple):
     kind: str
     modulus: int
     residue: int
-    synth: Callable[[int], bytes] | None
+    synth: Callable[[int], bytes]
     stats: Callable[[bytes], tuple[int, ...]]
     names: tuple[str, ...]
 
@@ -88,7 +85,7 @@ GATE_FAMILIES: tuple[GateFamily, ...] = (
     # closed-form double sum — a defilter bug in any branch changes
     # the pixels and fails the driver hash.
     GateFamily(
-        "decode:png", 4, 0, None,
+        "decode:png", 4, 0, _synth_container_bytes,
         _png_pixel_stats, ("sum_pixels", "sum_npixels"),
     ),
     # kind='decode:wav' — the same device for the PCM path: the wav
@@ -96,7 +93,7 @@ GATE_FAMILIES: tuple[GateFamily, ...] = (
     # (((j * 37) % 2048) - 1024 over the interleaved stream), and the
     # real ``wave``-module decode must recover the exact sample sums.
     GateFamily(
-        "decode:wav", 4, 2, None,
+        "decode:wav", 4, 2, _synth_container_bytes,
         _wav_pcm_stats, ("sum_samples", "sum_nsamples"),
     ),
     # kind='decode:gif' — the device applied to the LZW decoder (the
@@ -311,11 +308,42 @@ GATE_FAMILIES: tuple[GateFamily, ...] = (
 )
 
 
-def _long(agg: DataFrame, kind: str, metrics: Sequence[str]) -> DataFrame:
-    """(kind, metric, value) rows from a rollup with one column per
-    metric; ``kind`` is a SQL expression."""
-    pairs = ", ".join(f"'{m}', {m}" for m in metrics)
-    return agg.selectExpr(kind, f"stack({len(metrics)}, {pairs}) AS (metric, value)")
+# The header probe's per-format sums, in ``_probe_row`` field order.
+PROBE_SUMS = (
+    "sum_width", "sum_height", "sum_channels", "sum_rate", "sum_depth", "sum_progressive",
+)
+
+
+def _gate_sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Every gate of ``multimodal_metadata`` over one Arrow batch of
+    ids → (kind, metric, value) partial sums.  Each id's real
+    container (``_synth_container_bytes``) goes through the header
+    probe, and each ``GATE_FAMILIES`` row the id selects runs
+    ``fam.stats(fam.synth(mid))``; ``n_media`` counts 1 per id.  Every
+    batch also emits each family's ``n_media`` 0 and NULL sums, so a
+    family no id selects still rolls up like the oracle's ungrouped
+    aggregate (count 0, sums NULL)."""
+    for pdf in batches:
+        sums: dict[tuple[str, str], int | None] = {}
+        for fam in GATE_FAMILIES:
+            sums[fam.kind, "n_media"] = 0
+            sums.update(((fam.kind, n), None) for n in fam.names)
+
+        def add(kind: str, names: tuple[str, ...], values) -> None:
+            for name, v in zip(("n_media", *names), (1, *values)):
+                sums[kind, name] = (sums.get((kind, name)) or 0) + v
+
+        for mid in map(int, pdf["media_id"]):
+            fmt, *fields = _probe_row(_synth_container_bytes(mid))
+            add(f"probe:{fmt}", PROBE_SUMS, fields)
+            for fam in GATE_FAMILIES:
+                if mid % fam.modulus == fam.residue:
+                    add(fam.kind, fam.names, fam.stats(fam.synth(mid)))
+        yield pd.DataFrame({
+            "kind": [k for k, _ in sums],
+            "metric": [m for _, m in sums],
+            "value": pd.array(list(sums.values()), dtype="Int64"),
+        })
 
 
 @query(
@@ -786,53 +814,34 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each row's comment says which codec path its gate pins and why its
     id selector and statistic are what they are.
 
-    Scale shape: synthesis, probing and decoding are Arrow maps (no
-    shuffle) — one ``synthesize`` and one ``decode_stats`` map per
-    family; the rollups are small aggregates.  Round 7 also
-    de-duplicates the heaviest synthesis: the real-container synthesis
-    used to run THREE times (probe over all docs, png decode over
-    id%4==0, wav decode over id%4==2) — it now synthesizes once into a
-    tracked persist the three branches filter (the slot was at 1.94×
-    its r04 anchor; two of three Python synthesis passes were pure
-    waste)."""
+    Scale shape: two branches.  The storage rollup is JVM-only (no
+    Python).  Every probe and decode gate runs in ONE Arrow map
+    (``_gate_sums``): each id synthesizes its real container once for
+    the probe, plus one known-content container per family it
+    belongs to, and the map emits (kind, metric) partial sums per
+    batch, so one small grouped sum finishes the rollup.  The id scan
+    is ``spread`` first: the gates are serial Python (~4.5 s at sf0.1,
+    ``decode:jpegprog`` alone ~1.5 s), and a one-row-group scan would
+    otherwise run them as one task."""
     docs = table(spark, sf_dir, "documents")
-    media = synthesize_media(docs)
     n_bytes = F.octet_length("payload")
-    bytes_agg = media.groupBy("kind").agg(
+    bytes_agg = synthesize_media(docs).groupBy("kind").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_media"),
         F.sum(n_bytes).cast("bigint").alias("total_bytes"),
         F.min(n_bytes).cast("bigint").alias("min_bytes"),
         F.max(n_bytes).cast("bigint").alias("max_bytes"),
+    ).selectExpr(
+        "kind",
+        "stack(4, 'n_media', n_media, 'total_bytes', total_bytes,"
+        " 'min_bytes', min_bytes, 'max_bytes', max_bytes) AS (metric, value)",
     )
-    branches = [
-        _long(bytes_agg, "kind", ("n_media", "total_bytes", "min_bytes", "max_bytes"))
-    ]
-    # ONE synthesis pass for the three real-container consumers
-    containers = track_persist(synthesize(docs, _synth_container_bytes))
-    probe_agg = probe_media_headers(containers).groupBy(
-        F.concat(F.lit("probe:"), F.col("format")).alias("kind")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_media"),
-        F.sum("width").cast("bigint").alias("sum_width"),
-        F.sum("height").cast("bigint").alias("sum_height"),
-        F.sum("n_channels").cast("bigint").alias("sum_channels"),
-        F.sum("sample_rate").cast("bigint").alias("sum_rate"),
-        F.sum("bit_depth").cast("bigint").alias("sum_depth"),
-        F.sum("progressive").cast("bigint").alias("sum_progressive"),
+    gates = (
+        spread(docs.select(F.col("doc_id").alias("media_id")))
+        .mapInPandas(_gate_sums, "kind string, metric string, value bigint")
+        .groupBy("kind", "metric")
+        .agg(F.sum("value").alias("value"))
     )
-    branches.append(_long(probe_agg, "kind", probe_agg.columns[1:]))
-    for fam in GATE_FAMILIES:
-        if fam.synth is None:
-            fam_media = containers.filter(F.col("media_id") % fam.modulus == fam.residue)
-        else:
-            fam_docs = docs.filter(F.col("doc_id") % fam.modulus == fam.residue)
-            fam_media = synthesize(fam_docs, fam.synth)
-        agg = decode_stats(fam_media, fam.stats, fam.names).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_media"),
-            *(F.sum(n).cast("bigint").alias(n) for n in fam.names),
-        )
-        branches.append(_long(agg, f"'{fam.kind}' AS kind", ("n_media", *fam.names)))
-    return functools.reduce(DataFrame.unionByName, branches)
+    return bytes_agg.unionByName(gates)
 
 
 @query(

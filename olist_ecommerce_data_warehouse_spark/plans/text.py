@@ -122,9 +122,8 @@ def text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     content fingerprinting + PII scrub in one pass: whitespace/regex
     tokenizer, distinct-token (vocabulary) count, type-token ratio,
     stopword-ratio / length heuristics with a boolean quality gate;
-    md5 content fingerprint (portable across engines — the fast
-    engine-internal twin is xxhash64, functions.text.fingerprint_xxhash);
-    and the C4/Dolma-tier regex PII scrub (functions.text.redact_pii /
+    md5 content fingerprint (portable across engines); and the
+    C4/Dolma-tier regex PII scrub (functions.text.redact_pii /
     pii_counts) over a deterministically PII-injected variant of the
     text — per-kind match counts, redacted length and a full-content
     fingerprint of the redacted output, so the driver hash gates the

@@ -18,7 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olist_ecommerce_data_warehouse_spark.catalog import table
-from olist_ecommerce_data_warehouse_spark.functions.numeric import as_out, money, revenue_expr
+from olist_ecommerce_data_warehouse_spark.functions.numeric import (
+    as_out,
+    dec_dbl_sql,
+    money,
+    revenue_expr,
+)
 from olist_ecommerce_data_warehouse_spark.plans.registry import query
 
 # Shared oracle fragment: discounted line revenue in exact decimal
@@ -31,7 +36,7 @@ REV_SQL = "CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - C
     oracle=f"""
     SELECT p_brand,
            COUNT(*) AS n_items,
-           CAST(CAST(SUM({REV_SQL}) AS VARCHAR) AS DOUBLE) AS revenue
+           {dec_dbl_sql(f'SUM({REV_SQL})')} AS revenue
     FROM lineitem JOIN part ON l_partkey = p_partkey
     GROUP BY p_brand
     ORDER BY revenue DESC, p_brand
@@ -74,7 +79,7 @@ def flagship_revenue_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders o
         JOIN dim_date dd ON CAST(strftime(o.o_orderdate, '%Y%m%d') AS INT) = dd.date_key
     )
-    SELECT (SELECT CAST(CAST(SUM({REV_SQL}) AS VARCHAR) AS DOUBLE) FROM lineitem) AS total_revenue,
+    SELECT (SELECT {dec_dbl_sql(f'SUM({REV_SQL})')} FROM lineitem) AS total_revenue,
            (SELECT COUNT(*) FROM lineitem) AS n_lineitems,
            (SELECT MIN(o_orderdate) FROM orders) AS first_order_ts,
            (SELECT MAX(o_orderdate) FROM orders) AS last_order_ts,
@@ -173,8 +178,8 @@ def volumetrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT l_orderkey,
            COUNT(*) AS n_items,
-           CAST(CAST(SUM({REV_SQL}) AS VARCHAR) AS DOUBLE) AS order_revenue,
-           CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS total_qty
+           {dec_dbl_sql(f'SUM({REV_SQL})')} AS order_revenue,
+           {dec_dbl_sql('SUM(CAST(l_quantity AS DECIMAL(12,2)))')} AS total_qty
     FROM lineitem
     GROUP BY l_orderkey
     """,
@@ -217,7 +222,7 @@ def orphan_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sk_resolution_chain",
     oracle=f"""
     SELECT l.l_orderkey, l.l_linenumber, o.o_custkey, p.p_brand, s.s_name,
-           CAST(CAST({REV_SQL} AS VARCHAR) AS DOUBLE) AS item_revenue
+           {dec_dbl_sql(REV_SQL)} AS item_revenue
     FROM lineitem l
     JOIN orders o   ON l.l_orderkey = o.o_orderkey
     JOIN part p     ON l.l_partkey  = p.p_partkey

@@ -1218,7 +1218,7 @@ MP4_STBL_NAMES = (
 )
 
 
-def test_mp4_stbl_walk_exact(spark):
+def test_mp4_stbl_walk_exact():
     """Round 8: the sample-table walk recovers every known quantity —
     stsz count + size sum, stco count + offset sum, ALL stts runs, and
     the run-length stsc resolution (which must agree with the stsz
@@ -1227,18 +1227,13 @@ def test_mp4_stbl_walk_exact(spark):
         _mp4_sample_table_stats,
         _mp4_stbl_fields,
         _synth_mp4_stbl_bytes,
-        decode_stats,
-        synthesize,
     )
 
     ids = [7, 15, 23, 31, 39, 55, 103]
-    docs = spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
-    media = synthesize(docs, _synth_mp4_stbl_bytes)
     got = {
-        r["media_id"]: r
-        for r in decode_stats(media, _mp4_sample_table_stats, MP4_STBL_NAMES).collect()
+        mid: dict(zip(MP4_STBL_NAMES, _mp4_sample_table_stats(_synth_mp4_stbl_bytes(mid))))
+        for mid in ids
     }
-    assert set(got) == set(ids)
     for mid in ids:
         n, sizes, spc, nc, n1, d1, d2, offsets = _mp4_stbl_fields(mid)
         r = got[mid]
@@ -1250,7 +1245,7 @@ def test_mp4_stbl_walk_exact(spark):
         assert r["stsc_samples"] == n  # run-length resolution closes
 
 
-def test_mp4_stbl_uniform_stsz(spark):
+def test_mp4_stbl_uniform_stsz():
     """The uniform-size stsz form (sample_size != 0, NO size list) is
     a distinct spec path — the walk must multiply, not read absent
     entries."""
@@ -1258,7 +1253,6 @@ def test_mp4_stbl_uniform_stsz(spark):
 
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
         _mp4_sample_table_stats,
-        decode_stats,
     )
 
     def box(btype, payload):
@@ -1276,8 +1270,7 @@ def test_mp4_stbl_uniform_stsz(spark):
         b"moov",
         box(b"trak", box(b"mdia", box(b"minf", box(b"stbl", stbl)))),
     )
-    media = spark.createDataFrame([(1, bytearray(b))], "media_id bigint, payload binary")
-    r = decode_stats(media, _mp4_sample_table_stats, MP4_STBL_NAMES).collect()[0]
+    r = dict(zip(MP4_STBL_NAMES, _mp4_sample_table_stats(b)))
     assert r["n_samples"] == 5
     assert r["sum_sample_bytes"] == 240
     assert r["n_chunks"] == 3
@@ -2098,30 +2091,30 @@ def test_flac_utf8_code_large_frame_numbers():
         assert decode(_flac_utf8_code(n)) == n, n
 
 
-def test_gate_decode_rejects_truncated_gif_and_bmp(spark):
-    """The decode:gif and decode:bmp gates run the same decoders as
-    real_decode_media (``_parse_gif`` / ``_parse_bmp``), input checks
-    included: a 24bpp BMP cut inside its last pixel row and a GIF whose
-    sub-block chain is cut before its terminator raise ValueError, both
-    per row and through the gate's Arrow map — never a silently short
-    sum or an untyped IndexError."""
+def test_gate_decode_rejects_truncated_gif_and_bmp():
+    """The decode:gif, decode:bmp and decode:wav gates run the same
+    decoders as real_decode_media (``_parse_gif`` / ``_parse_bmp`` /
+    ``_parse_wav``), input checks included: a 24bpp BMP cut inside its
+    last pixel row, a GIF whose sub-block chain is cut before its
+    terminator, a WAV whose data chunk holds fewer frames than its
+    header declares and a WAV cut inside its fmt chunk raise
+    ValueError — never a silently short sum or an untyped IndexError
+    or EOFError."""
     from olist_ecommerce_data_warehouse_spark.operators.multimodal import (
         _synth_bmp_bytes,
+        _synth_container_bytes,
         _synth_gif_bytes,
-        decode_stats,
     )
     from olist_ecommerce_data_warehouse_spark.plans.multimodal import GATE_FAMILIES
 
     fams = {f.kind: f for f in GATE_FAMILIES}
+    wav = _synth_container_bytes(2)  # 80 bytes: 18 mono 16-bit samples
     cases = [
         (fams["decode:bmp"], _synth_bmp_bytes(4, 3)[:-5], "BMP pixel array past EOF"),
         (fams["decode:gif"], _synth_gif_bytes(4, 3)[:-2], "truncated GIF sub-block chain"),
+        (fams["decode:wav"], wav[:-20], "WAV data chunk truncated: 8 of 18 frames"),
+        (fams["decode:wav"], wav[:30], "malformed WAV"),
     ]
     for fam, payload, msg in cases:
         with pytest.raises(ValueError, match=msg):
             fam.stats(payload)
-        media = spark.createDataFrame(
-            [(1, bytearray(payload))], "media_id bigint, payload binary"
-        )
-        with pytest.raises(Exception, match=f"ValueError: {msg}"):
-            decode_stats(media, fam.stats, fam.names).collect()

@@ -286,19 +286,17 @@ def test_morton_gate_adds_no_scan(spark):
 
 
 def test_multimodal_metadata_is_pure_map_rollup(spark):
-    """The multimodal gate plan is ~20 synthesize→decode→aggregate
-    branches; its 100 TB shape must stay 'Arrow map + tiny rollup':
-    ZERO joins of any kind, zero windows, and every Exchange a
-    single-row partial-aggregate fan-in (one per branch — budget 20).
-    The three real-container consumers (probe, decode:png, decode:wav)
-    must share ONE persisted synthesis (InMemoryTableScan), not re-run
-    it (the round-7 1.94x finding)."""
+    """The multimodal gate plan is one Arrow map + one small rollup:
+    every probe and decode gate runs in a SINGLE mapInPandas over the
+    (spread) id scan, ZERO joins of any kind, zero windows, and at
+    most three Exchanges — the spread, the gates' grouped sum and the
+    storage rollup's aggregate."""
     plan = _plan(spark, "multimodal_metadata")
     for op in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
                "BroadcastNestedLoopJoin", "Window"):
         assert op not in plan, (op, plan[:2000])
-    assert plan.count("Exchange") <= 20, plan.count("Exchange")
-    assert plan.count("InMemoryTableScan") >= 3
+    assert plan.count("MapInPandas") == 1, plan.count("MapInPandas")
+    assert plan.count("Exchange") <= 3, plan.count("Exchange")
 
 
 def test_ivf_index_reconstruction_runs_no_write_jobs(spark):
