@@ -16,7 +16,7 @@ quadratic in per-key row counts.  Alternative for grouped workloads:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from olist_ecommerce_data_warehouse_spark.operators.lineage import cut_lineage
-from olist_ecommerce_data_warehouse_spark.operators.similarity import QUANT, quantized
+from olist_ecommerce_data_warehouse_spark.operators.similarity import quantized
 
 
 def _qcol(vec_col: str, pre_quantized: bool):

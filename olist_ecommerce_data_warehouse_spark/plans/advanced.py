@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from olist_ecommerce_data_warehouse_spark.catalog import table
 from olist_ecommerce_data_warehouse_spark.functions.numeric import as_out, dec, dec_dbl_sql, money
 from olist_ecommerce_data_warehouse_spark.operators.asof import asof_join
-from olist_ecommerce_data_warehouse_spark.operators.datedim import build_date_dim
 from olist_ecommerce_data_warehouse_spark.operators.merge import merge_upsert
 from olist_ecommerce_data_warehouse_spark.operators.rangejoin import range_join
 from olist_ecommerce_data_warehouse_spark.operators.scd import (

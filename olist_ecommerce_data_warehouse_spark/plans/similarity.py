@@ -399,27 +399,25 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties resolve (adc_dist, vec_id) lexicographically in both the
     per-batch prune and the global window.
 
-    Round 7 merges the PERSISTENT-INDEX lifecycle as kind='ivf-loaded'
-    (the round-6 verdict's #4 — the actual 100 TB serving path was
-    pytest-only): the SAME trained index is saved
-    (``partitionBy(centroid_id)`` parquet — the cluster IS the
-    physical layout, Spark's analogue of FAISS inverted lists),
-    RELOADED from disk, and searched through operators.ann_index's
-    static ``centroid_id IN (probes)`` filter, which Catalyst turns
-    into PartitionFilters at the scan (asserted in
-    tests/test_operators.py) — only nprobe/nlist of the stored corpus
-    is ever read.  Search math is exact int64 over round-tripped
-    bigint arrays, so the loaded path must reproduce the in-query IVF
-    rows BIT-FOR-BIT: the oracle gates it as a second emission of
-    ivf_top, putting save → load → prune → search under the driver
-    hash."""
+    The PERSISTENT-INDEX lifecycle rides along as kind='ivf-loaded':
+    the SAME trained index is saved (``partitionBy(centroid_id)``
+    parquet — the cluster IS the physical layout, Spark's analogue of
+    FAISS inverted lists) into a fresh ``.scratch/ivf_index_*`` dir
+    that only this construction writes, RELOADED from disk, and
+    searched through operators.ann_index's static
+    ``centroid_id IN (probes)`` filter, which Catalyst turns into
+    PartitionFilters at the scan (asserted in tests/test_operators.py)
+    — only nprobe/nlist of the stored corpus is ever read.  One index
+    write per construction: 2 write jobs in ``save`` and 1 centroid
+    collect in ``load``, every time.  Search math is exact int64 over
+    round-tripped bigint arrays, so the loaded path must reproduce the
+    in-query IVF rows BIT-FOR-BIT: the oracle gates it as a second
+    emission of ivf_top, putting save → load → prune → search under
+    the driver hash."""
     import os
+    import tempfile
 
-    from olist_ecommerce_data_warehouse_spark.operators.ann_index import (
-        LAYOUT_VERSION,
-        IVFIndex,
-        gc_stale_indexes,
-    )
+    from olist_ecommerce_data_warehouse_spark.operators.ann_index import IVFIndex
     from olist_ecommerce_data_warehouse_spark.operators.pq import (
         pq_adc_topk,
         pq_encode,
@@ -471,53 +469,19 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "adc_dist",
         "rank",
     )
-    # persistent-index lifecycle: publish the SAME trained index in its
+    # persistent-index lifecycle: save the SAME trained index in its
     # centroid-partitioned layout, reload, search — partition pruning
-    # (not a recompute) must reproduce the in-query rows exactly.
-    # Round 9 (ADVICE r07/r08 residue): the path is CONTENT-ADDRESSED
-    # — (sf basename, build params, layout version) — and written
-    # exactly once via IVFIndex.publish's tmp-dir + atomic-rename:
-    # the first construction ever pays the two write jobs, every later
-    # construction (same session or a new one — the integer Lloyd is
-    # bit-deterministic, same corpus + params ⇒ same index) finds the
-    # dir and runs ZERO index jobs, so an .explain()-only caller after
-    # first build costs nothing and .scratch no longer accumulates
-    # session-keyed dirs (the old naming is swept by gc_stale_indexes;
-    # asserted in tests/test_plan_quality.py).  Concurrent sessions
-    # race only on the rename — one wins, losers read the winner's
-    # complete dir, never a partial write.
+    # (not a recompute) must reproduce the in-query rows exactly.  Each
+    # construction writes into its own fresh dir and never rewrites it,
+    # so an earlier construction's lazy frame (which has already listed
+    # its part files) can never be clobbered by a later one; the scratch
+    # sweep (scripts/clean_scratch.py) ages these dirs out after 24 h.
     scratch = os.path.join(
         os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch"
     )
-    gc_stale_indexes(scratch)
-    # the corpus fingerprint (size + mtime of the embeddings parquet,
-    # no Spark job) keys the dir to THIS corpus content: a regenerated
-    # testdata tree gets a fresh index instead of a silently stale one
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        # nanosecond mtime: a tree regenerated in place to the same
-        # byte size within the same SECOND must still re-key (publish
-        # is write-once, so the fingerprint is the only staleness
-        # defense)
-        fp = f"{st.st_size:x}-{st.st_mtime_ns:x}"
-    except OSError:
-        # per-path fallback — a shared constant here would alias every
-        # unstat-able corpus at the same sf basename onto ONE index
-        import hashlib
-
-        fp = "nofp" + hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:8]
-    idx_path = os.path.join(
-        scratch,
-        "ivf_index_{}_{}_k{}i{}_v{}".format(
-            os.path.basename(sf_dir.rstrip("/")),
-            fp,
-            IVF_K,
-            IVF_ITERS,
-            LAYOUT_VERSION,
-        ),
-    )
-    IVFIndex(spark, trained, assigned).publish(idx_path)
+    os.makedirs(scratch, exist_ok=True)
+    idx_path = tempfile.mkdtemp(prefix="ivf_index_", dir=scratch)
+    IVFIndex(spark, trained, assigned).save(idx_path)
     loaded = IVFIndex.load(spark, idx_path).search(q, k=5, nprobe=2).select(
         F.lit("ivf-loaded").alias("kind"),
         "query_id",

@@ -24,7 +24,6 @@ from olist_ecommerce_data_warehouse_spark.functions.text import (
     tokens,
     toks_sql,
 )
-from olist_ecommerce_data_warehouse_spark.operators.textdedup import hex2int_sql, hex_to_long
 from olist_ecommerce_data_warehouse_spark.plans.registry import query
 
 
@@ -434,8 +433,6 @@ TOKS_SQL = toks_sql()
 # plans→operators import cycle; re-exported here because every text
 # oracle (and the cross-engine fuzz suite) builds on these names.
 from olist_ecommerce_data_warehouse_spark.operators.textdedup import (  # noqa: E402
-    GRAM_M,
-    GRAM_P,
     SPAN_BOILER,
     SPAN_K,
     _TH_SQL,

@@ -28,6 +28,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import statistics
 import subprocess
@@ -70,6 +71,22 @@ def run_session(side_dir: Path, queries: list[str], sf_dir: str) -> dict[str, fl
     raise RuntimeError(f"runner produced no result; stderr tail:\n{proc.stderr[-2000:]}")
 
 
+def sha(d: Path) -> str:
+    """The checkout's HEAD sha; for a tree with uncommitted changes,
+    ``<sha>+dirty.<first 12 hex of sha256(git diff HEAD --binary)>``,
+    so an A/B of an uncommitted change never records the parent's sha
+    on both sides."""
+
+    def git(*args: str) -> bytes:
+        return subprocess.check_output(["git", *args], cwd=d)
+
+    head = git("rev-parse", "HEAD").decode().strip()
+    if not git("status", "--porcelain").strip():
+        return head
+    digest = hashlib.sha256(git("diff", "HEAD", "--binary")).hexdigest()[:12]
+    return f"{head}+dirty.{digest}"
+
+
 def summarize(ref: list[float], head: list[float]) -> dict:
     """Each side's median and quartiles, head's win count over the
     pairs (ties count for neither side) and the paired-rule verdict."""
@@ -108,11 +125,6 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--out", type=Path, help="append the full record to this JSONL file")
     args = ap.parse_args()
-
-    def sha(d: Path) -> str:
-        return subprocess.check_output(
-            ["git", "rev-parse", "HEAD"], cwd=d, text=True
-        ).strip()
 
     queries = args.queries.split(",")
     sides = {"ref": args.ref_dir.resolve(), "head": REPO}

@@ -7,14 +7,11 @@ existing only as a manually-run script).
 
 What accumulates and the policy applied:
 
-- ``.scratch/ivf_index_*`` — published content-addressed IVF indexes
-  (current format, kept 7 days — immutable, rebuilt on demand), legacy
-  session-keyed dirs and orphaned ``.tmp-*`` publishes (kept 24 h);
-  delegated to ``operators.ann_index.gc_stale_indexes``, the same
-  sweep ann_ivf_topk construction runs opportunistically.
-- ``.scratch/csv_roundtrip_sf*`` — per-scale CSV ingest fixtures the
-  csv_roundtrip_ingest plan re-materializes deterministically on each
-  run: age-swept (default 24 h).
+- ``.scratch/ivf_index_*`` — the per-construction IVF index dirs
+  ``ann_ivf_topk`` writes (one fresh dir per construction, never
+  rewritten) and ``.scratch/csv_roundtrip_sf*`` — per-scale CSV ingest
+  fixtures the csv_roundtrip_ingest plan re-materializes
+  deterministically on each run: both age-swept (default 24 h).
 - ``.scratch/sf1`` / ``.scratch/sf10`` … — synthesized scale-stress
   parquet trees (gen_sf1 pattern, the big one: ~177 MB at sf1): kept
   ``--keep-sf-days`` (default 7) since re-synthesis costs minutes.
@@ -65,19 +62,8 @@ def sweep(
     this at startup so a dirty scratch tree is provably bounded by any
     bench or verify session (round 10; planted-stale-dir test in
     tests/test_bench_gate.py).  Idempotent; never touches ``bench_ab/``."""
-    if REPO not in sys.path:
-        sys.path.insert(0, REPO)
-    from olist_ecommerce_data_warehouse_spark.operators.ann_index import (
-        gc_stale_indexes,
-    )
-
     now = time.time()
     removed: list[str] = []
-
-    # 1. IVF indexes — the operator's own GC (shared policy)
-    removed += gc_stale_indexes(
-        scratch, max_age_hours=max_age_hours, dry_run=dry_run
-    )
 
     if os.path.isdir(scratch):
         for name in sorted(os.listdir(scratch)):
@@ -86,11 +72,11 @@ def sweep(
                 mtime = os.path.getmtime(p)
             except OSError:
                 continue
-            # 2. per-session CSV fixtures
-            if name.startswith("csv_roundtrip_"):
+            # 1. per-construction IVF indexes and per-session CSV fixtures
+            if name.startswith(("ivf_index_", "csv_roundtrip_")):
                 if mtime < now - max_age_hours * 3600.0:
                     _rm(p, dry_run, removed)
-            # 3. synthesized scale trees (sf1, sf10, ...)
+            # 2. synthesized scale trees (sf1, sf10, ...)
             elif name.startswith("sf") and name[2:].replace(".", "").isdigit():
                 if mtime < now - keep_sf_days * 86400.0:
                     _rm(p, dry_run, removed)

@@ -18,7 +18,7 @@ local mode cannot test are tested:
   ``addPyFile`` package-zip shipping in ``session.get_spark``;
 - broadcasts (dim tables, centroids, λ tables, BPE merges) travel over
   torrent broadcast instead of a driver-local reference;
-- the IVF publish renames a directory that EXECUTORS wrote.
+- the IVF index is loaded back from a directory that EXECUTORS wrote.
 
 Each side runs in its own subprocess (one JVM per master — restarting
 a SparkContext with a different master inside one process leaks config

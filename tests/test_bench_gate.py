@@ -300,3 +300,31 @@ def test_scratch_sweep_bounds_planted_stale_dirs(tmp_path):
     assert (bench_ab / "anchoring_r6_run1.json").exists()
     # idempotent: a second sweep removes nothing
     assert sweep(scratch=str(scratch)) == []
+
+
+def test_bench_ab_stamps_dirty_trees(tmp_path):
+    """``bench_ab.sha`` stamps a clean checkout with its bare HEAD sha
+    and an edited one with ``<sha>+dirty.<diff hash>``, so an A/B of
+    an uncommitted change records a head distinct from its parent."""
+    import subprocess
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
+    from bench_ab import sha
+
+    def git(*args):
+        return subprocess.check_output(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path, text=True,
+        ).strip()
+
+    git("init", "-q")
+    (tmp_path / "f.txt").write_text("a\n")
+    git("add", "f.txt")
+    git("commit", "-q", "-m", "init")
+    head = git("rev-parse", "HEAD")
+    assert sha(tmp_path) == head
+
+    (tmp_path / "f.txt").write_text("b\n")
+    dirty = sha(tmp_path)
+    assert dirty != head and dirty.startswith(head + "+dirty.")
+    assert len(dirty) == len(head) + len("+dirty.") + 12

@@ -1027,72 +1027,38 @@ def test_ivf_index_persist_load_search_with_partition_pruning(spark, tmp_path_fa
     search on the freshly built one; the loaded search must prune to
     the probed clusters AT THE SCAN (PartitionFilters on centroid_id —
     the inverted-list property); rebuilding from the same corpus gives
-    a bit-identical index."""
+    a bit-identical index.  A bare path and a ``file://`` URI (the
+    Hadoop-scheme route ``hdfs://``/``s3a://`` take) round-trip alike."""
     from olist_ecommerce_data_warehouse_spark.operators.ann_index import IVFIndex
     from olist_ecommerce_data_warehouse_spark.operators.similarity import quantized
 
     emb = table(spark, SF_DIR, "embeddings")
     idx = IVFIndex.build(emb)
-    path = str(tmp_path_factory.mktemp("ivf") / "index")
-    idx.save(path)
-    loaded = IVFIndex.load(spark, path)
-    assert loaded.centroids == idx.centroids
-
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), quantized("embedding").alias("qvec")
     )
     fresh = sorted(map(tuple, idx.search(queries, k=5).collect()))
-    persisted = sorted(map(tuple, loaded.search(queries, k=5).collect()))
-    assert fresh == persisted and len(fresh) > 0
+    assert len(fresh) > 0
+    for scheme in ("", "file://"):
+        path = scheme + str(tmp_path_factory.mktemp("ivf") / "index")
+        idx.save(path)
+        loaded = IVFIndex.load(spark, path)
+        assert loaded.centroids == idx.centroids, scheme
 
-    plan = loaded.search(queries, k=5)._sc._jvm.PythonSQLUtils.explainString(
-        loaded.search(queries, k=5)._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan and "centroid_id" in plan.split(
-        "PartitionFilters"
-    )[1][:200]
+        persisted = sorted(map(tuple, loaded.search(queries, k=5).collect()))
+        assert fresh == persisted, scheme
+
+        search = loaded.search(queries, k=5)
+        plan = search._sc._jvm.PythonSQLUtils.explainString(
+            search._jdf.queryExecution(), "formatted"
+        )
+        assert "PartitionFilters" in plan and "centroid_id" in plan.split(
+            "PartitionFilters"
+        )[1][:200], scheme
 
     # deterministic rebuild
     idx2 = IVFIndex.build(emb)
     assert idx2.centroids == idx.centroids
-
-
-def test_gc_stale_indexes_dry_run_verified_removal_and_touch(tmp_path):
-    """Round-9 GC contract: dry_run lists without deleting; removal is
-    VERIFIED (a stray regular FILE named ivf_index_* that rmtree
-    refuses is never reported as removed); and the week tier measures
-    age since LAST USE — a touched dir survives the sweep."""
-    import os
-    import time
-
-    from olist_ecommerce_data_warehouse_spark.operators.ann_index import (
-        LAYOUT_VERSION,
-        gc_stale_indexes,
-    )
-
-    scratch = str(tmp_path)
-    old = 10 * 24 * 3600.0
-    stale = os.path.join(scratch, f"ivf_index_stale_v{LAYOUT_VERSION}")
-    live = os.path.join(scratch, f"ivf_index_live_v{LAYOUT_VERSION}")
-    stray = os.path.join(scratch, "ivf_index_strayfile")
-    os.makedirs(stale)
-    os.makedirs(live)
-    with open(stray, "w") as f:
-        f.write("not a dir")
-    for p in (stale, live, stray):
-        os.utime(p, (time.time() - old, time.time() - old))
-    # last-use touch: what load()/publish-reuse do — live must survive
-    os.utime(live, None)
-
-    listed = gc_stale_indexes(scratch, dry_run=True)
-    assert stale in listed and live not in listed
-    assert os.path.isdir(stale), "dry_run deleted"
-
-    removed = gc_stale_indexes(scratch)
-    assert stale in removed and not os.path.exists(stale)
-    assert live not in removed and os.path.isdir(live)
-    # rmtree can't remove a regular file: must NOT be reported removed
-    assert stray not in removed and os.path.exists(stray)
 
 
 def test_zorder_layout_skips_both_dimensions(spark, tmp_path_factory):

@@ -16,7 +16,7 @@ SHAPE is the one that survives a 1000-executor scale-up:
 from __future__ import annotations
 
 from olist_ecommerce_data_warehouse_spark.plans import REGISTRY
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, canonical_rows
 
 
 def _plan(spark, name: str) -> str:
@@ -299,72 +299,68 @@ def test_multimodal_metadata_is_pure_map_rollup(spark):
     assert plan.count("Exchange") <= 3, plan.count("Exchange")
 
 
-def test_ivf_index_reconstruction_runs_no_write_jobs(spark):
-    """Round 9 (ADVICE r07/r08 residue): the persistent IVF index is
-    published ONCE to a content-addressed dir (tmp write + atomic
-    rename); re-constructing the ann_ivf_topk DataFrame — e.g. an
-    .explain()-only caller — must run strictly fewer jobs than the
-    publishing construction and ZERO write jobs (the index dir stays
-    byte-identical, publish() returns without saving, and the cached
-    centroids make the reload collect nothing)."""
+def test_ivf_constructions_write_distinct_dirs_and_keep_earlier_frames(spark):
+    """Every ann_ivf_topk construction saves its trained index into a
+    fresh ``.scratch/ivf_index_*`` dir that nothing rewrites: two
+    constructions leave two distinct complete index dirs, and the
+    FIRST frame (whose scan already listed its part files) still
+    collects after the second construction, with the same rows."""
     import os
     import shutil
 
-    from olist_ecommerce_data_warehouse_spark.operators import ann_index
-    from olist_ecommerce_data_warehouse_spark.plans import REGISTRY
-
-    # hermetic start regardless of test order: force the first
-    # construction to really publish and really collect centroids
-    scratch_pre = os.path.join(
+    scratch = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
     )
-    if os.path.isdir(scratch_pre):
-        for d in os.listdir(scratch_pre):
-            if d.startswith("ivf_index_"):
-                shutil.rmtree(os.path.join(scratch_pre, d), ignore_errors=True)
-    ann_index._CENTROID_CACHE.clear()
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    def index_dirs():
+        if not os.path.isdir(scratch):
+            return set()
+        return {d for d in os.listdir(scratch) if d.startswith("ivf_index_")}
 
-    def construct(group):
-        sc.setJobGroup(group, group)
-        try:
-            df = REGISTRY["ann_ivf_topk"].fn(spark, SF_DIR)
-            df.explain()  # explain-only caller: no action
-        finally:
-            sc.setJobGroup(None, None)
-        return len(tracker.getJobIdsForGroup(group))
+    before = index_dirs()
+    first = REGISTRY["ann_ivf_topk"].fn(spark, SF_DIR)
+    after_first = index_dirs()
+    second = REGISTRY["ann_ivf_topk"].fn(spark, SF_DIR)
+    new_first = after_first - before
+    new_second = index_dirs() - after_first
+    try:
+        assert len(new_first) == 1 and len(new_second) == 1, (new_first, new_second)
+        assert new_first != new_second
+        for d in new_first | new_second:
+            for part in ("centroids", "assigned"):
+                assert os.path.exists(os.path.join(scratch, d, part, "_SUCCESS")), (d, part)
+        rows_first = canonical_rows(first.toPandas())
+        rows_second = canonical_rows(second.toPandas())
+        assert rows_first == rows_second and len(rows_first) > 0
+    finally:
+        for d in new_first | new_second:
+            shutil.rmtree(os.path.join(scratch, d), ignore_errors=True)
 
-    n_first = construct("ivf-construct-1")  # publishes (dir was cleared)
-    scratch = scratch_pre
-    idx_dirs = sorted(
-        d for d in os.listdir(scratch) if d.startswith("ivf_index_") and "_v" in d
-    )
-    assert idx_dirs, "published index dir missing"
-    newest = os.path.join(scratch, idx_dirs[-1])
 
-    def content_sig(root):
-        # per-FILE (relpath, size, mtime): reconstruction must not
-        # rewrite any index byte.  The dir's own mtime is exempt — the
-        # GC's last-use touch (publish-reuse/load) legitimately bumps
-        # it so a live index never ages out under a reader.
-        sig = []
-        for dp, _, fns in os.walk(root):
-            for fn in fns:
-                p = os.path.join(dp, fn)
-                st = os.stat(p)
-                sig.append((os.path.relpath(p, root), st.st_size, st.st_mtime))
-        return sorted(sig)
+def test_package_has_no_unused_imports():
+    """Every name a package module imports is used in that module: an
+    ``ast`` walk over the non-``__init__`` modules (the ``__init__``
+    files re-export on purpose) compares each import's bound name with
+    the module's ``Name`` nodes."""
+    import ast
+    from pathlib import Path
 
-    files_before = content_sig(newest)
-
-    n_second = construct("ivf-construct-2")
-    assert content_sig(newest) == files_before, "index dir was rewritten"
-    assert os.path.getmtime(newest) > 0  # dir itself may be touched
-    # kmeans/probes collects are inherent (model-sized driver state);
-    # the two index-write jobs and the centroid-load job must be gone
-    assert n_second < n_first, (n_first, n_second)
+    pkg = Path(__file__).resolve().parents[1] / "olist_ecommerce_data_warehouse_spark"
+    unused = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for alias in node.names:
+                    name = alias.asname or alias.name.split(".")[0]
+                    if name not in used:
+                        unused.append(f"{path.relative_to(pkg)}:{node.lineno} {name}")
+    assert not unused, unused
 
 
 def test_session_factory_cluster_topology_support():
@@ -400,73 +396,3 @@ def test_session_factory_cluster_topology_support():
     assert "olist_ecommerce_data_warehouse_spark/__init__.py" in names
     assert "olist_ecommerce_data_warehouse_spark/operators/similarity.py" in names
     assert len(names) > 30
-
-
-def test_ivf_publish_routes_scheme_paths_through_hadoop_fs(spark, tmp_path):
-    """The round-10 FS seam: a scheme'd index location (here
-    ``file://`` — same Hadoop FileSystem API route as hdfs://s3a://)
-    must round-trip the full write-once lifecycle — publish-if-absent,
-    zero-write reuse with a last-use touch, load + partition-pruned
-    search — without any driver-local ``os`` call touching the path.
-    Also pins the classic Hadoop rename pitfall: rename onto an
-    existing directory moves the source INSIDE it instead of failing,
-    so a race loser must detect the nested-move signature and clean
-    it up (``_rename_if_absent``)."""
-    import os
-    import time
-
-    from olist_ecommerce_data_warehouse_spark.operators import ann_index
-    from olist_ecommerce_data_warehouse_spark.operators.ann_index import (
-        IVFIndex,
-        _hadoop_fs,
-        _rename_if_absent,
-    )
-
-    vectors = spark.createDataFrame(
-        [(i, [int(i % 7), int(i % 11), int(3 * i % 13), 1]) for i in range(64)],
-        "vec_id long, embedding array<bigint>",
-    )
-    idx = IVFIndex.build(vectors)
-
-    uri = f"file://{tmp_path}/ivf_index_hadooproute_v1"
-    local = tmp_path / "ivf_index_hadooproute_v1"
-    assert idx.publish(uri) is True
-    assert (local / "centroids").exists() and (local / "assigned").exists()
-    # no orphaned tmp dir
-    assert not [p for p in os.listdir(tmp_path) if ".tmp-" in p]
-
-    # reuse: returns False, writes nothing, bumps the last-use mtime
-    before = os.path.getmtime(local)
-    sig_before = sorted(
-        (os.path.relpath(os.path.join(dp, f), local), os.path.getsize(os.path.join(dp, f)))
-        for dp, _, fs_ in os.walk(local) for f in fs_
-    )
-    time.sleep(0.05)
-    assert idx.publish(uri) is False
-    assert os.path.getmtime(local) >= before
-    sig_after = sorted(
-        (os.path.relpath(os.path.join(dp, f), local), os.path.getsize(os.path.join(dp, f)))
-        for dp, _, fs_ in os.walk(local) for f in fs_
-    )
-    assert sig_after == sig_before  # byte-stable reuse
-
-    # load through the scheme'd path: cache keys on the URI verbatim,
-    # search answers from the partitioned layout
-    ann_index._CENTROID_CACHE.pop(uri, None)
-    loaded = IVFIndex.load(spark, uri)
-    assert uri in ann_index._CENTROID_CACHE
-    q = spark.createDataFrame(
-        [(0, [1, 2, 3, 1])], "query_id long, qvec array<bigint>"
-    )
-    rows = loaded.search(q, k=3, nprobe=2).collect()
-    assert 0 < len(rows) <= 3
-
-    # the rename pitfall, deterministically: dst already exists (the
-    # race winner), loser's tmp must NOT end up nested inside it
-    fs, path_cls, dst = _hadoop_fs(spark, uri)
-    tmp_uri = f"{uri}.tmp-loser"
-    os.makedirs(tmp_path / "ivf_index_hadooproute_v1.tmp-loser/centroids")
-    assert _rename_if_absent(fs, path_cls, path_cls(tmp_uri), dst) is False
-    assert not (local / "ivf_index_hadooproute_v1.tmp-loser").exists()  # no nested stray
-    assert not (tmp_path / "ivf_index_hadooproute_v1.tmp-loser").exists()  # tmp cleaned
-    assert (local / "centroids").exists()  # winner's index intact
