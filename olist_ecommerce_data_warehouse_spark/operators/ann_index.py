@@ -6,8 +6,10 @@ production vector store builds the index ONCE and answers query
 batches against the stored layout.  This operator is that lifecycle,
 Spark-first:
 
-- **build**: train centroids (``operators/kmeans.py`` distributed
-  Lloyd), assign every vector (``ivf_assign``, narrow Arrow pass).
+- **construct**: ``IVFIndex(spark, centroids, assigned)`` from trained
+  centroids (``operators/kmeans.py`` distributed Lloyd) and the
+  assigned corpus (``ivf_assign``, narrow Arrow pass) — the calls
+  ``ann_ivf_topk`` makes.
 - **save**: centroids as one tiny parquet; the assigned corpus
   ``partitionBy("centroid_id")`` — the cluster IS the physical layout,
   so a search that probes ``nprobe`` of ``nlist`` clusters reads only
@@ -33,15 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_train
 from olist_ecommerce_data_warehouse_spark.operators.similarity import (
-    ivf_assign,
     ivf_probes,
     ivf_topk,
 )
-
-BUILD_K = 8  # IVFIndex.build: lists (centroids) and Lloyd iterations
-BUILD_ITERS = 2
 
 
 class IVFIndex:
@@ -55,19 +52,6 @@ class IVFIndex:
             [(i, [int(x) for x in v]) for i, v in enumerate(self.centroids)],
             "centroid_id long, centvec array<bigint>",
         )
-
-    @classmethod
-    def build(cls, vectors: DataFrame) -> "IVFIndex":
-        """Train ``BUILD_K`` centroids over ``(vec_id, embedding)`` rows
-        with ``BUILD_ITERS`` Lloyd iterations and assign every vector."""
-        from olist_ecommerce_data_warehouse_spark.operators.similarity import quantized
-
-        spark = vectors.sparkSession
-        cents = kmeans_train(vectors, k=BUILD_K, n_iter=BUILD_ITERS)
-        corpus = vectors.select("vec_id", quantized("embedding").alias("cvec"))
-        idx = cls(spark, cents, None)  # type: ignore[arg-type]
-        idx.assigned = ivf_assign(corpus, idx._cent_df())
-        return idx
 
     def save(self, path: str) -> None:
         self._cent_df().write.mode("overwrite").parquet(f"{path}/centroids")

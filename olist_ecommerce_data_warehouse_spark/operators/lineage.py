@@ -1,7 +1,7 @@
 """Lineage cutting for loop-consumed DataFrames.
 
 An iterative operator (CC label propagation, Lloyd k-means, BPE merge
-rounds, perceptron rounds) that merely ``persist()``s its
+rounds, PEGASOS rounds) that merely ``persist()``s its
 loop-invariant input keeps the DATA cached but re-embeds the full
 upstream LOGICAL PLAN in every round's Catalyst analysis — driver
 cost O(upstream tree size × rounds), invisible in executor metrics

@@ -2,7 +2,7 @@
 filtering.
 
 The fourth member of the in-loop-training family (k-means → IVF, pair
-counts → BPE merges, labeled updates → perceptron, and now corpus
+counts → BPE merges, labeled updates → PEGASOS, and now corpus
 counts → an n-gram LM): CCNet (Wenzek et al. 2020) and Gopher (Rae et
 al. 2021) both gate web documents on language-model perplexity, and at
 100 TB you want that model TRAINED on (a clean slice of) the corpus by
@@ -30,8 +30,8 @@ repartitioning (asserted in tests).  The one honest caveat: ``ln`` is
 libm, deterministic within a platform but only 1-ulp-specified across
 engines, so this operator is pytest-gated (driver-side reference
 trainer + scorer, counts exact, log-probs within quantization
-tolerance) rather than DuckDB-hash-gated — same policy as the
-perceptron's oscillating-batch caveat: document, don't hide.
+tolerance) rather than DuckDB-hash-gated: document the caveat,
+don't hide it.
 """
 
 from __future__ import annotations

@@ -1,54 +1,27 @@
-"""Distributed integer batch perceptron — a linear classifier TRAINED
-in the query, exactly cross-engine replayable.
+"""Mini-batch PEGASOS — a linear classifier TRAINED in the query,
+exactly cross-engine replayable.
 
-Completes the in-loop-training trilogy (k-means → IVF index, pair
-counting → BPE merges, and now labeled classification): production
-pipelines train their fasttext-style language/quality models ON the
-corpus; this operator is that training loop in its simplest form that
-is still exactly replayable by an ANSI-SQL oracle — every quantity is
-an integer, so there is no float-summation order or learning-rate
-rounding to diverge on.
-
-Batch perceptron update (Rosenblatt, batch form): with sparse hashed
-features x_d (bucket → count) and labels y_d ∈ {−1, +1},
-
-  round t:  score_d = Σ_b w_t[b] · x_d[b]          (join + agg)
-            M       = {d : y_d · score_d ≤ 0}      (misclassified;
-                                                    0 counts — w_0 = 0
-                                                    must update)
-            w_{t+1}[b] = w_t[b] + Σ_{d ∈ M} y_d · x_d[b]
+Production pipelines train their fasttext-style language/quality
+models ON the corpus; :func:`pegasos_train` is that training loop over
+sparse hashed features (doc_id, bucket, cnt) and labels y ∈ {−1, +1}.
+Weights are integers at fixed-point scale :data:`FX`, and both update
+divisions truncate toward zero (:func:`_itdiv`), the semantics Spark's
+``div`` and DuckDB's ``//`` share — so there is no float-summation
+order or learning-rate rounding to diverge on, and the trained model
+is replayed bit-for-bit by the driver-side
+:func:`pegasos_train_reference` and the unrolled-round SQL of
+:func:`pegasos_oracle_ctes` (``text_lang_id``'s oracle re-trains the
+model that way).
 
 Each round is ONE broadcast join (the weight vector is bounded by the
-bucket space — model-sized, not corpus-sized) plus one aggregation —
-the same small-model/big-data loop as Lloyd.
+bucket space — model-sized, not corpus-sized) plus one aggregation
+over a deterministic 1/K batch slice of the lineage-cut feature
+matrix — the same small-model/big-data loop as Lloyd.  A fixed round
+budget (no convergence probe) keeps runs comparable and the SQL
+replay finite.
 
-Two update modes, both integer-exact:
-
-- ``batch`` (default): the full misclassified-sum update above.
-  Caveat measured on the driver corpus: with unit step and large
-  count features, full-batch updates OSCILLATE between the two class
-  extremes on hard/inseparable labels (round t predicts everything
-  one way, t+1 the other) — the classic lr=1 batch-perceptron
-  pathology.  Fine for the dataflow shape; not a model you'd ship.
-- ``max_violator``: per round, update with the SINGLE worst
-  misclassified document (most negative y·score; ties → lowest id) —
-  the classic sequential perceptron driven by an argmax, so the
-  Novikoff convergence theorem applies on separable data: with enough
-  rounds it reaches ZERO training errors (asserted in tests).  Each
-  round adds one tiny argmin collect, the same driver-argmax shape as
-  a BPE merge round.
-
-A fixed round budget (no convergence probe) keeps runs comparable and
-the SQL replay (``perceptron_oracle_ctes``) finite.
-
-Round 5 adds :func:`pegasos_train` — the mini-batch PEGASOS margin
-trainer that actually CONVERGES on the hard labels where full-batch
-lr=1 collapses (measured: 22.04% → <0.1% training error at 100×).
-Same broadcast-join + aggregation dataflow per round over a
-deterministic 1/K batch slice; integer fixed-point weights (scale
-``FX``) with truncating divisions shared bit-for-bit by Spark's
-``div``, DuckDB's ``//`` and the python reference, so the trained
-model remains exactly SQL-replayable (:func:`pegasos_oracle_ctes`).
+:func:`perceptron_score` scores documents under trained weights
+(Σ w[bucket]·cnt); read decisions as sign(score).
 """
 
 from __future__ import annotations
@@ -59,11 +32,9 @@ from pyspark.sql import functions as F
 from olist_ecommerce_data_warehouse_spark.operators.lineage import cut_lineage
 
 
-def _merge_weights(a: DataFrame | None, b: DataFrame) -> DataFrame:
+def _merge_weights(a: DataFrame, b: DataFrame) -> DataFrame:
     """a ⊕ b on (bucket, w): null-safe full-outer sum, zero rows
     dropped — both operands are model-sized."""
-    if a is None:
-        return b.filter(F.col("w") != 0)
     return (
         a.join(b.withColumnRenamed("w", "d"), "bucket", "full")
         .select(
@@ -74,74 +45,6 @@ def _merge_weights(a: DataFrame | None, b: DataFrame) -> DataFrame:
         )
         .filter(F.col("w") != 0)
     )
-
-
-def perceptron_train(
-    features: DataFrame,
-    labels: DataFrame,
-    rounds: int = 2,
-    max_violator: bool = False,
-) -> DataFrame:
-    """(bucket, w) after ``rounds`` updates from w=0 (see module notes
-    for the two modes).
-
-    ``features``: (doc_id, bucket, cnt) sparse integer counts;
-    ``labels``: (doc_id, y) with y ∈ {−1, +1}.  Deterministic on any
-    partitioning: every aggregate is an integer SUM, and the
-    max-violator pick breaks ties to the lowest id."""
-    feats = features.join(labels, "doc_id").select(
-        "doc_id", "bucket", F.col("cnt").cast("bigint").alias("cnt"), "y"
-    )
-    if rounds > 0:
-        # lineage CUT, not persisted: the per-round scoring join and
-        # violation aggregate re-analyze feats' upstream (the hashed
-        # feature pipeline is WIDE — uni+bigram explodes) once per
-        # round otherwise (operators/lineage.py)
-        feats = cut_lineage(feats)
-    w = None  # bucket -> weight; None = all zeros
-    try:
-        for _ in range(rounds):
-            if w is None:
-                scored = feats.select(
-                    "doc_id", "y", F.lit(0).cast("bigint").alias("score")
-                ).distinct()
-            else:
-                scored = (
-                    feats.join(F.broadcast(w), "bucket", "left")
-                    .groupBy("doc_id", "y")
-                    .agg(
-                        F.sum(
-                            F.col("cnt") * F.coalesce(F.col("w"), F.lit(0))
-                        ).alias("score")
-                    )
-                )
-            mis = scored.filter(F.col("y") * F.col("score") <= 0)
-            if max_violator:
-                worst = (
-                    mis.orderBy((F.col("y") * F.col("score")).asc(), F.col("doc_id"))
-                    .limit(1)
-                    .select("doc_id")
-                    .collect()
-                )
-                if not worst:
-                    break  # separated: zero training errors
-                mis = feats.sparkSession.createDataFrame(
-                    [(worst[0][0],)], "doc_id bigint"
-                )
-            else:
-                mis = mis.select("doc_id")
-            delta = (
-                feats.join(mis, "doc_id")
-                .groupBy("bucket")
-                .agg(F.sum(F.col("y") * F.col("cnt")).alias("d"))
-            ).select("bucket", F.col("d").alias("w"))
-            w = _merge_weights(w, delta).localCheckpoint(eager=True)
-    finally:
-        if rounds > 0:
-            feats.unpersist()
-    if w is None:
-        return features.sparkSession.createDataFrame([], "bucket bigint, w bigint")
-    return w
 
 
 def perceptron_score(features: DataFrame, weights: DataFrame) -> DataFrame:
@@ -157,97 +60,6 @@ def perceptron_score(features: DataFrame, weights: DataFrame) -> DataFrame:
             ).alias("score")
         )
     )
-
-
-def perceptron_train_reference(
-    feat_rows: list[tuple[int, int, int]],
-    label_map: dict[int, int],
-    rounds: int,
-    max_violator: bool = False,
-) -> dict[int, int]:
-    """Driver-side reference trainer over (doc_id, bucket, cnt) rows —
-    the distributed trainer must produce identical weights."""
-    by_doc: dict[int, list[tuple[int, int]]] = {}
-    for d, b, c in feat_rows:
-        if d in label_map:
-            by_doc.setdefault(d, []).append((b, c))
-    w: dict[int, int] = {}
-    for _ in range(rounds):
-        scores = {
-            d: sum(c * w.get(b, 0) for b, c in fs) for d, fs in by_doc.items()
-        }
-        viol = [
-            (label_map[d] * scores[d], d)
-            for d in by_doc
-            if label_map[d] * scores[d] <= 0
-        ]
-        if viol:
-            if max_violator:
-                viol = [min(viol)]
-            for _, d in viol:
-                y = label_map[d]
-                for b, c in by_doc[d]:
-                    w[b] = w.get(b, 0) + y * c
-            w = {b: v for b, v in w.items() if v != 0}
-    return w
-
-
-def perceptron_oracle_ctes(rounds: int, max_violator: bool = False) -> str:
-    """SQL replay of :func:`perceptron_train` as unrolled-round CTEs
-    (the trained-IVF/BPE oracle device): expects ``pfeats(doc_id,
-    bucket, cnt)`` and ``plabels(doc_id, y)`` to exist; emits
-    ``pw{rounds}(bucket, w)`` plus ``pscores(doc_id, score)`` under
-    the final weights.  No leading WITH."""
-    parts = [
-        """pf AS (
-        SELECT f.doc_id, f.bucket, CAST(f.cnt AS BIGINT) AS cnt, l.y
-        FROM pfeats f JOIN plabels l USING (doc_id)
-    )""",
-        """pw0 AS (SELECT CAST(NULL AS BIGINT) AS bucket, CAST(NULL AS BIGINT) AS w WHERE FALSE)""",
-    ]
-    for i in range(1, rounds + 1):
-        p = i - 1
-        parts.append(
-            f"""pscore{p} AS (
-        SELECT pf.doc_id, pf.y,
-               CAST(COALESCE(SUM(pf.cnt * w.w), 0) AS BIGINT) AS score
-        FROM pf LEFT JOIN pw{p} w USING (bucket)
-        GROUP BY pf.doc_id, pf.y
-    )"""
-        )
-        if max_violator:
-            mis_sql = (
-                f"SELECT doc_id FROM pscore{p} WHERE y * score <= 0 "
-                f"ORDER BY y * score ASC, doc_id LIMIT 1"
-            )
-        else:
-            mis_sql = f"SELECT doc_id FROM pscore{p} WHERE y * score <= 0"
-        parts.append(
-            f"""pdelta{i} AS (
-        SELECT pf.bucket, CAST(SUM(pf.y * pf.cnt) AS BIGINT) AS d
-        FROM pf JOIN ({mis_sql}) m
-          USING (doc_id)
-        GROUP BY pf.bucket
-    )"""
-        )
-        parts.append(
-            f"""pw{i} AS (
-        SELECT bucket, w FROM (
-            SELECT COALESCE(a.bucket, b.bucket) AS bucket,
-                   COALESCE(a.w, 0) + COALESCE(b.d, 0) AS w
-            FROM pw{p} a FULL OUTER JOIN pdelta{i} b ON a.bucket = b.bucket
-        ) WHERE w != 0
-    )"""
-        )
-    parts.append(
-        f"""pscores AS (
-        SELECT f.doc_id,
-               CAST(COALESCE(SUM(f.cnt * w.w), 0) AS BIGINT) AS score
-        FROM pfeats f LEFT JOIN pw{rounds} w USING (bucket)
-        GROUP BY f.doc_id
-    )"""
-    )
-    return ",\n    ".join(parts)
 
 
 # --------------------------------------------------------------- PEGASOS
@@ -277,8 +89,8 @@ def pegasos_train(
     """PEGASOS-style margin trainer (Shalev-Shwartz et al., "Pegasos:
     Primal Estimated sub-GrAdient SOlver for SVM", ICML 2007) in its
     deterministic MINI-BATCH form — the convergent fix for the lr=1
-    batch-perceptron oscillation ``perceptron_train`` documents: hinge
-    VIOLATORS (y·⟨w,x⟩ < 1, not just misclassified) drive the update,
+    batch-perceptron oscillation (full-batch unit-step updates swing
+    between the two class extremes on hard labels): hinge VIOLATORS (y·⟨w,x⟩ < 1, not just misclassified) drive the update,
     the step decays 1/(λt), and the iterate shrinks (1−1/t) toward the
     max-margin solution.  Mini-batching is what makes it converge in
     practice (measured on the content label: full-batch oscillates at
@@ -311,12 +123,11 @@ def pegasos_train(
 
     Returns (bucket, w) with w at FX scale; score with
     :func:`perceptron_score` and read decisions as sign(score)."""
-    feats = features.join(labels, "doc_id").select(
-        "doc_id", "bucket", F.col("cnt").cast("bigint").alias("cnt"), "y"
+    feats = cut_lineage(
+        features.join(labels, "doc_id").select(
+            "doc_id", "bucket", F.col("cnt").cast("bigint").alias("cnt"), "y"
+        )
     )
-    if rounds == 0:
-        return features.sparkSession.createDataFrame([], "bucket bigint, w bigint")
-    feats = cut_lineage(feats)
     # per-batch doc counts, ONCE (model-sized: K numbers)
     bt_col = F.pmod(F.col("doc_id"), F.lit(batches))
     sizes = {
@@ -327,40 +138,27 @@ def pegasos_train(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    if not sizes:
-        feats.unpersist()
-        return features.sparkSession.createDataFrame([], "bucket bigint, w bigint")
-    w: DataFrame | None = None
+    w = features.sparkSession.createDataFrame([], "bucket bigint, w bigint")
     try:
         for t in range(1, rounds + 1):
             bt = (t - 1) % batches
             nb = sizes.get(bt, 0)
-            shrunk = (
-                None
-                if w is None
-                else w.select("bucket", F.expr(f"w - (w div {t})").alias("w"))
-            )
+            shrunk = w.select("bucket", F.expr(f"w - (w div {t})").alias("w"))
             if nb == 0:
                 # empty batch: shrink-only round (the SQL replay's
                 # no-violator rounds behave identically)
-                if shrunk is not None:
-                    w = shrunk.filter(F.col("w") != 0).localCheckpoint(eager=True)
+                w = shrunk.filter(F.col("w") != 0).localCheckpoint(eager=True)
                 continue
             batch = feats.filter(bt_col == bt)
-            if w is None:
-                scored = batch.select(
-                    "doc_id", "y", F.lit(0).cast("bigint").alias("score")
-                ).distinct()
-            else:
-                scored = (
-                    batch.join(F.broadcast(w), "bucket", "left")
-                    .groupBy("doc_id", "y")
-                    .agg(
-                        F.sum(
-                            F.col("cnt") * F.coalesce(F.col("w"), F.lit(0))
-                        ).alias("score")
+            scored = (
+                batch.join(F.broadcast(w), "bucket", "left")
+                .groupBy("doc_id", "y")
+                .agg(
+                    F.sum(F.col("cnt") * F.coalesce(F.col("w"), F.lit(0))).alias(
+                        "score"
                     )
                 )
+            )
             viol = scored.filter(F.col("y") * F.col("score") < FX).select("doc_id")
             grad = (
                 batch.join(viol, "doc_id")
@@ -368,16 +166,9 @@ def pegasos_train(
                 .agg(F.sum(F.col("y") * F.col("cnt")).alias("g"))
                 .select("bucket", F.expr(f"({c} * {FX} * g) div {t * nb}").alias("w"))
             )
-            w = (
-                _merge_weights(shrunk, grad)
-                if shrunk is not None
-                else grad.filter(F.col("w") != 0)
-            )
-            w = w.localCheckpoint(eager=True)
+            w = _merge_weights(shrunk, grad).localCheckpoint(eager=True)
     finally:
         feats.unpersist()
-    if w is None:
-        return features.sparkSession.createDataFrame([], "bucket bigint, w bigint")
     return w
 
 

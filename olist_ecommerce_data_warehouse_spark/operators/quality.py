@@ -149,32 +149,6 @@ def quality_scored(df, toks: Column):
     )
 
 
-# ---------------------------------------------------------------------------
-# TRAINED head: the same hashed-feature space, with weights learned on
-# the corpus by the integer perceptron (operators/perceptron.py)
-# instead of the deterministic stand-in table above.  This is the full
-# fasttext training story — hash → bucket → linear model — with every
-# quantity an integer, so the trained weights are exactly reproducible
-# on any partitioning (and, via perceptron_oracle_ctes, in ANSI SQL).
-# The perceptron-ready sparse training matrix is
-# ``hashed_feature_counts(df, toks, QC_BUCKETS)``.
-
-
-def quality_train(df, toks: Column, labels, rounds: int = 50):
-    """Train (bucket, w) quality weights on labeled docs — labels is
-    (doc_id, y) with y ∈ {−1 junk, +1 clean}.  The model is
-    bucket-space-bounded (≤ 2^20 rows), broadcastable at any corpus
-    size.  The trainer is the sequential perceptron driven by the
-    worst violator — Novikoff convergence on separable corpora, but
-    one update per round makes it the wrong tool past ~10^5 docs; the
-    corpus-scale trainer is :func:`pegasos_train` over the same
-    ``hashed_feature_counts`` matrix (``plans/text.py``)."""
-    from .perceptron import perceptron_train
-
-    feats = hashed_feature_counts(df, toks, QC_BUCKETS)
-    return perceptron_train(feats, labels, rounds=rounds, max_violator=True)
-
-
 def quality_dual_head(feats, weights):
     """BOTH classifier heads from ONE pass over a pre-aggregated
     (doc_id, bucket, cnt) feature table: the deterministic stand-in head
@@ -207,34 +181,3 @@ def quality_dual_head(feats, weights):
         )
     )
 
-
-def quality_scored_trained(df, toks: Column, weights):
-    """Score docs under TRAINED weights: same output contract as
-    :func:`quality_scored` (qc_n_features / qc_logit_sum / qc_score /
-    qc_pass) so the two heads are drop-in interchangeable; mean pool
-    divides by total feature count, missing buckets weigh 0, and
-    featureless docs score (0, 0, 0.0, pass) — no evidence against
-    them, matching the stand-in head's convention."""
-    counts = hashed_feature_counts(df, toks, QC_BUCKETS)
-    agg = (
-        counts.join(F.broadcast(weights), "bucket", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("qc_n_features"),
-            F.sum(F.col("cnt") * F.coalesce("w", F.lit(0)))
-            .cast("bigint")
-            .alias("qc_logit_sum"),
-        )
-    )
-    base = df.select("doc_id").join(agg, "doc_id", "left")
-    n = F.coalesce("qc_n_features", F.lit(0))
-    wsum = F.coalesce("qc_logit_sum", F.lit(0))
-    return base.select(
-        "doc_id",
-        n.alias("qc_n_features"),
-        wsum.alias("qc_logit_sum"),
-        F.when(n > 0, wsum / n.cast("double")).otherwise(F.lit(0.0)).alias(
-            "qc_score"
-        ),
-        (wsum >= 0).cast("int").alias("qc_pass"),
-    )

@@ -771,13 +771,10 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a broadcast left-semi join, JVM-side and exact, so only train
     grams that actually overlap eval ever reach a shuffle (measured at
     sf0.1: 226.8k train gram rows → 36.6k past the filter, a 6.2×
-    shuffle-volume cut and ~15% wall-time win — see SCALING.md).  When
-    the eval gram set outgrows broadcast range, the same prepass drops
-    in as ``operators.bloom.bloom_prefilter`` (bit-array Bloom, ~2‰
-    false positives, provably result-unchanged — measured equivalent
-    row cut here: 36.8k kept).  The surviving train set is a distinct
-    hash-aggregate (map-side partials collapse repeats); the overlap
-    join is a plain equi-join on the 8-byte gram hash —
+    shuffle-volume cut and ~15% wall-time win — see SCALING.md).  The
+    surviving train set is a distinct hash-aggregate (map-side
+    partials collapse repeats); the overlap join is a plain equi-join
+    on the 8-byte gram hash —
     boilerplate-shingle skew goes to AQE skew-join (or the salted-join
     operator).  Documents shorter than {CONTAM_N} tokens produce no
     shingles and are (by definition) not assessable — both engines

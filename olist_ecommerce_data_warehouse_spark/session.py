@@ -172,7 +172,7 @@ def get_spark(app_name: str = "olist_spark_engine", *, cpus: int | None = None) 
         # Reliable checkpoints (cut_lineage when a checkpoint dir is
         # set) write files Spark otherwise NEVER deletes during the
         # app, and unpersist() is a no-op on them — without this flag
-        # every iterative operator (CC, k-means, BPE, perceptron)
+        # every iterative operator (CC, k-means, BPE, PEGASOS)
         # leaks checkpoint files for the app lifetime.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")

@@ -73,9 +73,11 @@ def run_session(side_dir: Path, queries: list[str], sf_dir: str) -> dict[str, fl
 
 def sha(d: Path) -> str:
     """The checkout's HEAD sha; for a tree with uncommitted changes,
-    ``<sha>+dirty.<first 12 hex of sha256(git diff HEAD --binary)>``,
-    so an A/B of an uncommitted change never records the parent's sha
-    on both sides."""
+    ``<sha>+dirty.<first 12 hex of sha256>`` over ``git diff HEAD
+    --binary`` and the path and content of every untracked,
+    non-ignored file, so an A/B of an uncommitted change never records
+    the parent's sha on both sides, and two trees that differ only in
+    new files get different stamps."""
 
     def git(*args: str) -> bytes:
         return subprocess.check_output(["git", *args], cwd=d)
@@ -83,8 +85,11 @@ def sha(d: Path) -> str:
     head = git("rev-parse", "HEAD").decode().strip()
     if not git("status", "--porcelain").strip():
         return head
-    digest = hashlib.sha256(git("diff", "HEAD", "--binary")).hexdigest()[:12]
-    return f"{head}+dirty.{digest}"
+    h = hashlib.sha256(git("diff", "HEAD", "--binary"))
+    for rel in git("ls-files", "-z", "--others", "--exclude-standard").split(b"\0"):
+        if rel:
+            h.update(b"\0" + rel + b"\0" + (d / rel.decode()).read_bytes())
+    return f"{head}+dirty.{h.hexdigest()[:12]}"
 
 
 def summarize(ref: list[float], head: list[float]) -> dict:

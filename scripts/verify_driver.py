@@ -1,4 +1,4 @@
-import sys, json, time, traceback
+import sys, json, time
 sys.path.insert(0, "/root/repo")
 import duckdb
 import __spark_entry__ as e

@@ -304,8 +304,9 @@ def test_scratch_sweep_bounds_planted_stale_dirs(tmp_path):
 
 def test_bench_ab_stamps_dirty_trees(tmp_path):
     """``bench_ab.sha`` stamps a clean checkout with its bare HEAD sha
-    and an edited one with ``<sha>+dirty.<diff hash>``, so an A/B of
-    an uncommitted change records a head distinct from its parent."""
+    and an edited one with ``<sha>+dirty.<hash>`` over the diff and the
+    untracked files, so an A/B of an uncommitted change records a head
+    distinct from its parent."""
     import subprocess
 
     sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
@@ -328,3 +329,8 @@ def test_bench_ab_stamps_dirty_trees(tmp_path):
     dirty = sha(tmp_path)
     assert dirty != head and dirty.startswith(head + "+dirty.")
     assert len(dirty) == len(head) + len("+dirty.") + 12
+
+    # an untracked file changes the stamp too
+    (tmp_path / "new.txt").write_text("c\n")
+    with_new = sha(tmp_path)
+    assert with_new != dirty and with_new.startswith(head + "+dirty.")

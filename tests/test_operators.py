@@ -626,67 +626,6 @@ def test_lang_id_real_sentences(spark):
         }
 
 
-def test_bloom_prefilter_no_false_negatives(spark):
-    """The Bloom pre-pass may only drop rows whose key is DEFINITELY
-    absent from the small side: zero false negatives (every true match
-    survives), bounded false positives, and the downstream join result
-    is bit-identical with or without the prepass."""
-    import numpy as np
-
-    from olist_ecommerce_data_warehouse_spark.operators.bloom import (
-        bloom_prefilter,
-        build_bloom,
-        might_contain,
-    )
-
-    rng = np.random.default_rng(7)
-    members = rng.choice(10_000_000, size=5000, replace=False).astype(np.int64)
-    non_members = np.setdiff1d(
-        rng.choice(10_000_000, size=20000, replace=False).astype(np.int64), members
-    )
-    words, m = build_bloom(members)
-    assert might_contain(words, m, members).all()  # no false negatives
-    fp = might_contain(words, m, non_members).mean()
-    assert fp < 0.01, f"false-positive rate too high: {fp}"
-
-    big = spark.range(0, 20000).select((F.col("id") * 7 % 9973).alias("k"))
-    small = spark.range(0, 300).select((F.col("id") * 31 % 9973).alias("k"))
-    filtered = bloom_prefilter(big, small, "k")
-    direct = big.join(small.distinct(), "k", "left_semi")
-    via_bloom = filtered.join(small.distinct(), "k", "left_semi")
-    assert sorted(r["k"] for r in direct.collect()) == sorted(
-        r["k"] for r in via_bloom.collect()
-    )
-    # and the prepass really dropped definite non-members
-    assert filtered.count() < big.count()
-
-
-def test_bloom_prefilter_null_probe_keys_pass_through(spark):
-    """NULL keys on the BIG (probe) side must neither crash the Arrow
-    kernel (np.int64 can't hold None) nor be dropped: the Bloom test
-    only knows about real keys, so NULL-keyed rows bypass the filter —
-    a left join downstream sees exactly the rows it would without the
-    prepass."""
-    from olist_ecommerce_data_warehouse_spark.operators.bloom import bloom_prefilter
-
-    big = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (None, "c"), (99, "d"), (None, "e")],
-        "k long, payload string",
-    )
-    small = spark.createDataFrame([(1,), (2,), (None,)], "k long")
-    filtered = bloom_prefilter(big, small, "k")
-    rows = {r["payload"]: r["k"] for r in filtered.collect()}
-    # members kept, NULLs passed through untouched, non-member dropped
-    assert set(rows) == {"a", "b", "c", "e"}
-    assert rows["c"] is None and rows["e"] is None
-    # the inner join the prepass feeds is bit-identical with or
-    # without it (the operator's result-preservation contract)
-    keys = small.filter(F.col("k").isNotNull()).distinct()
-    direct = big.join(keys, "k", "inner")
-    via = filtered.join(keys, "k", "inner")
-    assert sorted(map(tuple, direct.collect())) == sorted(map(tuple, via.collect()))
-
-
 def test_connected_components_long_chain_logarithmic(spark):
     """Adversarial long-chain graph (256-node path, diameter 255): the
     pointer-jumping step must converge in O(log diameter) rounds —
@@ -1026,14 +965,29 @@ def test_ivf_index_persist_load_search_with_partition_pruning(spark, tmp_path_fa
     """IVFIndex lifecycle: search on the LOADED index must equal
     search on the freshly built one; the loaded search must prune to
     the probed clusters AT THE SCAN (PartitionFilters on centroid_id —
-    the inverted-list property); rebuilding from the same corpus gives
-    a bit-identical index.  A bare path and a ``file://`` URI (the
+    the inverted-list property); retraining on the same corpus gives
+    bit-identical centroids.  A bare path and a ``file://`` URI (the
     Hadoop-scheme route ``hdfs://``/``s3a://`` take) round-trip alike."""
     from olist_ecommerce_data_warehouse_spark.operators.ann_index import IVFIndex
-    from olist_ecommerce_data_warehouse_spark.operators.similarity import quantized
+    from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_train
+    from olist_ecommerce_data_warehouse_spark.operators.similarity import (
+        ivf_assign,
+        quantized,
+    )
+    from olist_ecommerce_data_warehouse_spark.plans.similarity import (
+        IVF_ITERS,
+        IVF_K,
+    )
 
+    # constructed with the calls ann_ivf_topk makes
     emb = table(spark, SF_DIR, "embeddings")
-    idx = IVFIndex.build(emb)
+    trained = kmeans_train(emb, k=IVF_K, n_iter=IVF_ITERS)
+    cents = spark.createDataFrame(
+        [(i, [int(x) for x in v]) for i, v in enumerate(trained)],
+        "centroid_id long, centvec array<bigint>",
+    )
+    corpus = emb.select("vec_id", quantized("embedding").alias("cvec"))
+    idx = IVFIndex(spark, trained, ivf_assign(corpus, cents))
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), quantized("embedding").alias("qvec")
     )
@@ -1057,8 +1011,7 @@ def test_ivf_index_persist_load_search_with_partition_pruning(spark, tmp_path_fa
         )[1][:200], scheme
 
     # deterministic rebuild
-    idx2 = IVFIndex.build(emb)
-    assert idx2.centroids == idx.centroids
+    assert kmeans_train(emb, k=IVF_K, n_iter=IVF_ITERS) == trained
 
 
 def test_zorder_layout_skips_both_dimensions(spark, tmp_path_factory):
@@ -1210,52 +1163,15 @@ def test_compaction_rewrites_small_files_crash_safe(spark, tmp_path_factory):
     assert res2["after"]["n_files"] == 1
 
 
-def test_perceptron_converges_on_separable_data(spark):
-    """Novikoff guarantee exercised end-to-end: on linearly separable
-    data the max-violator perceptron must reach ZERO training errors
-    within a finite round budget — and the trained weights classify a
-    held-out separable sample correctly.  The full-batch mode's
-    documented oscillation is also pinned (it exists; the operator is
-    honest about it)."""
-    from olist_ecommerce_data_warehouse_spark.operators.perceptron import (
-        perceptron_score,
-        perceptron_train,
-    )
-
-    # label = does the doc contain bucket 7 (margin ≥ 1 by design)
-    rows, labels = [], []
-    for d in range(40):
-        has7 = d % 2 == 0
-        buckets = {7, (d % 5) + 10} if has7 else {(d % 5) + 10, (d % 3) + 20}
-        rows += [(d, b, 1 + (d + b) % 3) for b in sorted(buckets)]
-        labels.append((d, 1 if has7 else -1))
-    feats = spark.createDataFrame(rows, "doc_id long, bucket long, cnt long")
-    lab = spark.createDataFrame(labels, "doc_id long, y long")
-
-    w = perceptron_train(feats, lab, rounds=200, max_violator=True)
-    scored = perceptron_score(feats, w).join(lab, "doc_id")
-    errors = scored.filter(F.col("y") * F.col("score") <= 0).count()
-    assert errors == 0, errors
-
-    # held-out: new docs, same concept
-    t_rows = [(100, 7, 2), (100, 11, 1), (101, 12, 3), (101, 21, 1)]
-    tf = spark.createDataFrame(t_rows, "doc_id long, bucket long, cnt long")
-    got = {r["doc_id"]: r["score"] for r in perceptron_score(tf, w).collect()}
-    assert got[100] > 0 and got[101] <= 0, got
-
-
-def test_pegasos_beats_batch_perceptron_on_hard_labels(spark):
-    """The round-5 margin trainer must fix the measured full-batch
-    pathology: on an imbalanced, nearly-but-not-perfectly separable
-    label (the shape that collapsed batch mode to the majority class
-    at 500k docs), mini-batch PEGASOS reaches low training error where
-    5 rounds of lr=1 batch perceptron sit at the majority-class rate.
-    Also pins the margin property on clean data: a separable concept
-    trains to zero errors AND classifies held-out docs."""
+def test_pegasos_trains_hard_labels_and_generalizes(spark):
+    """On an imbalanced, nearly-but-not-perfectly separable label (the
+    shape that collapses full-batch lr=1 perceptron updates to the
+    majority class at 500k docs), mini-batch PEGASOS reaches low
+    training error; the trained weights also classify held-out docs
+    of the separable concept."""
     from olist_ecommerce_data_warehouse_spark.operators.perceptron import (
         pegasos_train,
         perceptron_score,
-        perceptron_train,
     )
 
     # imbalanced 3:1 label driven by bucket 7, plus shared noise
@@ -1271,25 +1187,16 @@ def test_pegasos_beats_batch_perceptron_on_hard_labels(spark):
     feats = spark.createDataFrame(rows, "doc_id long, bucket long, cnt long")
     lab = spark.createDataFrame(labels, "doc_id long, y long")
 
-    def err(w) -> int:
-        return (
-            perceptron_score(feats, w)
-            .join(lab, "doc_id")
-            .filter(F.col("y") * F.col("score") <= 0)
-            .count()
-        )
-
-    e_batch = err(perceptron_train(feats, lab, rounds=5))
-    e_pegasos = err(pegasos_train(feats, lab, rounds=40, c=100, batches=8))
+    w = pegasos_train(feats, lab, rounds=40, c=100, batches=8)
+    e_pegasos = (
+        perceptron_score(feats, w)
+        .join(lab, "doc_id")
+        .filter(F.col("y") * F.col("score") <= 0)
+        .count()
+    )
     assert e_pegasos <= 4, e_pegasos  # ≤5% of 80
-    # never worse than batch mode here; the full-batch COLLAPSE this
-    # fixes is corpus-scale (measured at 500k docs: 22% = majority
-    # class) and re-measured by stress_lm_train.py
-    # (git show e45d88a:scripts/stress_lm_train.py)
-    assert e_pegasos <= e_batch, (e_pegasos, e_batch)
 
     # held-out generalization on the separable concept
-    w = pegasos_train(feats, lab, rounds=40, c=100, batches=8)
     t_rows = [(100, 7, 2), (100, 12, 1), (101, 13, 3), (101, 31, 1)]
     tf = spark.createDataFrame(t_rows, "doc_id long, bucket long, cnt long")
     got = {r["doc_id"]: r["score"] for r in perceptron_score(tf, w).collect()}
@@ -1355,17 +1262,16 @@ def test_ngram_lm_perplexity_filter(spark):
 
 def test_quality_classifier_trained_on_corpus(spark):
     """The full fasttext training story: hashed uni+bigram features →
-    perceptron-trained integer weights → drop-in scored head.  On a
-    separable clean-vs-junk corpus the trained gate must reach zero
-    training errors and classify held-out docs correctly; the trained
-    head's output contract matches the stand-in head's."""
+    PEGASOS-trained integer weights → the trained head of
+    ``quality_dual_head``.  On a separable clean-vs-junk corpus the
+    trained gate must reach zero training errors and classify
+    held-out docs correctly."""
     from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.perceptron import pegasos_train
     from olist_ecommerce_data_warehouse_spark.operators.quality import (
         QC_BUCKETS,
         hashed_feature_counts,
-        quality_scored_trained,
-        quality_train,
+        quality_dual_head,
     )
 
     clean = [
@@ -1385,31 +1291,26 @@ def test_quality_classifier_trained_on_corpus(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     lab = spark.createDataFrame(labels, "doc_id long, y long")
 
-    w = quality_train(docs, tokens("text"), lab, rounds=100)
-    scored = quality_scored_trained(docs, tokens("text"), w).join(lab, "doc_id")
-    assert scored.filter(F.col("y") * F.col("qc_logit_sum") <= 0).count() == 0
+    feats = hashed_feature_counts(docs, tokens("text"), QC_BUCKETS)
+    wp = pegasos_train(feats, lab, rounds=40, c=100, batches=10)
+    scored = quality_dual_head(feats, wp).join(lab, "doc_id")
+    assert scored.count() == len(rows)
+    assert scored.filter(F.col("y") * F.col("qt_logit_sum") <= 0).count() == 0
 
     held = spark.createDataFrame(
         [
             (50, "the model reads each document and writes quality scores"),
             (51, "vvkk wwpp zzp zzp qwv jjk"),
-            (52, ""),  # featureless → neutral pass
         ],
         "doc_id long, text string",
     )
-    got = {r["doc_id"]: r for r in quality_scored_trained(held, tokens("text"), w).collect()}
-    assert got[50]["qc_pass"] == 1 and got[50]["qc_score"] > 0
-    assert got[51]["qc_pass"] == 0 and got[51]["qc_score"] < 0
-    assert got[52] == (52, 0, 0, 0.0, 1)
-
-    # the corpus-scale head (round 5): PEGASOS trains the same feature
-    # space to the same separation, drop-in through the same scorer
-    feats = hashed_feature_counts(docs, tokens("text"), QC_BUCKETS)
-    wp = pegasos_train(feats, lab, rounds=40, c=100, batches=10)
-    scored_p = quality_scored_trained(docs, tokens("text"), wp).join(lab, "doc_id")
-    assert scored_p.filter(F.col("y") * F.col("qc_logit_sum") <= 0).count() == 0
-    got_p = {r["doc_id"]: r for r in quality_scored_trained(held, tokens("text"), wp).collect()}
-    assert got_p[50]["qc_pass"] == 1 and got_p[51]["qc_pass"] == 0
+    got = {
+        r["doc_id"]: r["qt_logit_sum"]
+        for r in quality_dual_head(
+            hashed_feature_counts(held, tokens("text"), QC_BUCKETS), wp
+        ).collect()
+    }
+    assert got[50] > 0 and got[51] < 0, got
 
 
 def test_export_training_shards(spark, tmp_path_factory):

@@ -338,16 +338,18 @@ def test_ivf_constructions_write_distinct_dirs_and_keep_earlier_frames(spark):
 
 
 def test_package_has_no_unused_imports():
-    """Every name a package module imports is used in that module: an
-    ``ast`` walk over the non-``__init__`` modules (the ``__init__``
-    files re-export on purpose) compares each import's bound name with
-    the module's ``Name`` nodes."""
+    """Every name a module of the package, ``scripts/`` or ``tests/``
+    imports is used in that module: an ``ast`` walk over the
+    non-``__init__`` modules (the ``__init__`` files re-export on
+    purpose) compares each import's bound name with the module's
+    ``Name`` nodes."""
     import ast
     from pathlib import Path
 
-    pkg = Path(__file__).resolve().parents[1] / "olist_ecommerce_data_warehouse_spark"
+    repo = Path(__file__).resolve().parents[1]
+    dirs = ("olist_ecommerce_data_warehouse_spark", "scripts", "tests")
     unused = []
-    for path in sorted(pkg.rglob("*.py")):
+    for path in sorted(p for d in dirs for p in (repo / d).rglob("*.py")):
         if path.name == "__init__.py":
             continue
         tree = ast.parse(path.read_text())
@@ -359,7 +361,7 @@ def test_package_has_no_unused_imports():
                 for alias in node.names:
                     name = alias.asname or alias.name.split(".")[0]
                     if name not in used:
-                        unused.append(f"{path.relative_to(pkg)}:{node.lineno} {name}")
+                        unused.append(f"{path.relative_to(repo)}:{node.lineno} {name}")
     assert not unused, unused
 
 

@@ -450,10 +450,6 @@ def test_quantize_kernel_cross_engine_parity(spark, ddb, vecs):
     from olist_ecommerce_data_warehouse_spark.functions.embedding import (
         quantize_int8_stats,
     )
-    from olist_ecommerce_data_warehouse_spark.plans import REGISTRY  # noqa: F401
-    from olist_ecommerce_data_warehouse_spark.plans.similarity import (
-        embedding_quantize,
-    )
     import __spark_entry__ as e
 
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
@@ -556,10 +552,7 @@ def test_kmeans_unrolled_lloyd_oracle_parity(spark, ddb, vecs, k):
     import duckdb as _d
 
     from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_train
-    from olist_ecommerce_data_warehouse_spark.plans.similarity import (
-        _dot_sql,
-        _lloyd_iter_sql,
-    )
+    from olist_ecommerce_data_warehouse_spark.plans.similarity import _lloyd_iter_sql
 
     k = min(k, len(vecs))
     rows = [(i, [float(x) / 1000.0 for x in v]) for i, v in enumerate(vecs)]
@@ -886,66 +879,6 @@ def test_morton_sql_matches_zorder_key(spark, ddb, pts):
             f"SELECT {sql} FROM (SELECT ? AS x, ? AS y)", [x, y]
         ).fetchone()
         assert got[i] == want, (x, y)
-
-
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(0, 5),   # doc
-            st.integers(0, 7),   # bucket
-            st.integers(1, 4),   # cnt
-        ),
-        min_size=1,
-        max_size=20,
-    ),
-    labels=st.lists(st.sampled_from([-1, 1]), min_size=6, max_size=6),
-    rounds=st.integers(0, 4),
-    mv=st.booleans(),
-)
-@_SETTINGS
-def test_perceptron_cross_engine_parity(spark, ddb, rows, labels, rounds, mv):
-    """Distributed perceptron training (batch/max-violator) must
-    produce weights identical to the
-    driver-side reference AND to the DuckDB unrolled-round replay for
-    arbitrary sparse integer data — the property that makes a trained
-    linear model hash-checkable."""
-    from olist_ecommerce_data_warehouse_spark.operators.perceptron import (
-        perceptron_oracle_ctes,
-        perceptron_train,
-        perceptron_train_reference,
-    )
-
-    dedup = {}
-    for d, b, c in rows:
-        dedup[(d, b)] = dedup.get((d, b), 0) + c
-    feat_rows = [(d, b, c) for (d, b), c in dedup.items()]
-    label_map = {d: labels[d] for d in range(6)}
-
-    feats = spark.createDataFrame(feat_rows, "doc_id long, bucket long, cnt long")
-    lab = spark.createDataFrame(
-        list(label_map.items()), "doc_id long, y long"
-    )
-    got = {
-        r["bucket"]: r["w"]
-        for r in perceptron_train(feats, lab, rounds=rounds, max_violator=mv).collect()
-    }
-    want = perceptron_train_reference(feat_rows, label_map, rounds, max_violator=mv)
-    assert got == want, (got, want)
-
-    ddb.execute("CREATE OR REPLACE TABLE _pf (doc_id BIGINT, bucket BIGINT, cnt BIGINT)")
-    for d, b, c in feat_rows:
-        ddb.execute("INSERT INTO _pf VALUES (?, ?, ?)", [d, b, c])
-    ddb.execute("CREATE OR REPLACE TABLE _pl (doc_id BIGINT, y BIGINT)")
-    for d, y in label_map.items():
-        ddb.execute("INSERT INTO _pl VALUES (?, ?)", [d, y])
-    duck = dict(
-        ddb.execute(
-            "WITH pfeats AS (SELECT * FROM _pf), plabels AS (SELECT * FROM _pl), "
-            + perceptron_oracle_ctes(rounds, max_violator=mv)
-            + f" SELECT bucket, w FROM pw{rounds}"
-        ).fetchall()
-    )
-    assert duck == want, (duck, want)
 
 
 @given(
