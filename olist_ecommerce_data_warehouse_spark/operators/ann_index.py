@@ -19,7 +19,8 @@ Spark-first:
   construction), assigned table lazily.  Both reads go through
   ``spark.read``, so a bare path and any Hadoop scheme (``file://``,
   ``hdfs://``, ``s3a://``) take the same route.
-- **search**: probe selection driver-side (``ivf_probes``), then a
+- **search**: probe selection driver-side (``ivf_probes`` over the
+  centroid list), then a
   STATIC ``centroid_id IN (probed)`` filter on the assigned table —
   static, not a join, precisely so Catalyst turns it into
   PartitionFilters at the scan (asserted in tests) — then the shared
@@ -47,14 +48,12 @@ class IVFIndex:
         self.centroids = centroids
         self.assigned = assigned
 
-    def _cent_df(self) -> DataFrame:
-        return self.spark.createDataFrame(
+    def save(self, path: str) -> None:
+        # the one place the centroid list becomes a frame: its stored form
+        self.spark.createDataFrame(
             [(i, [int(x) for x in v]) for i, v in enumerate(self.centroids)],
             "centroid_id long, centvec array<bigint>",
-        )
-
-    def save(self, path: str) -> None:
-        self._cent_df().write.mode("overwrite").parquet(f"{path}/centroids")
+        ).write.mode("overwrite").parquet(f"{path}/centroids")
         (
             self.assigned.write.mode("overwrite")
             .partitionBy("centroid_id")
@@ -74,7 +73,7 @@ class IVFIndex:
         int64-quantized.  Probed-cluster pruning happens via a STATIC
         IN filter so it reaches the parquet scan as PartitionFilters
         when the index was loaded from its partitioned layout."""
-        probes = ivf_probes(queries, self._cent_df(), nprobe=nprobe)
+        probes = ivf_probes(queries, self.centroids, nprobe=nprobe)
         if not probes:
             return ivf_topk(self.assigned.limit(0), probes, k=k)
         probed = self.assigned.filter(

@@ -41,7 +41,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from olist_ecommerce_data_warehouse_spark.functions.text import tokens
-from olist_ecommerce_data_warehouse_spark.operators.lineage import cut_lineage
+from olist_ecommerce_data_warehouse_spark.operators.lineage import (
+    cut_lineage,
+    release_cut,
+)
 
 # End-of-word sentinel (classic BPE): distinguishes "est</w>" from
 # "est" mid-word.  Any symbol containing it never merges across words
@@ -136,7 +139,7 @@ def bpe_train(
             merges.append((best[0]["left"], best[0]["right"]))
     finally:
         if n_merges > 0:
-            wc.unpersist()
+            release_cut(wc)
     return merges
 
 

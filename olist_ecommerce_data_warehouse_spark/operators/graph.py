@@ -13,13 +13,18 @@ in Map-Reduce in Logarithmic Rounds", ICDE'13) in its simplest
 deterministic form.  Design decisions that matter at scale (and, it
 turns out, even at bench scale — job count dominates tiny-graph cost):
 
-- **the loop runs on edge ENDPOINTS only.**  In a dedup graph the
-  vertices touching any edge are a sliver of the corpus (most
-  documents are not duplicates); vertices with no edges are singleton
-  components by definition and never enter the iteration.  Callers
-  that want them in the output get them via one map-side anti-join
-  (``include_singletons=True``), not via O(rounds) shuffles of the
-  whole corpus.
+- **edges in, endpoint labels out.**  The operator reads only the
+  ``(src, dst)`` edge list.  In a dedup graph the vertices touching
+  any edge are a sliver of the corpus (most documents are not
+  duplicates); vertices with no edges are singleton components by
+  definition, so they never enter the iteration or the output.  A
+  caller that needs them adds them with one anti-join against its own
+  corpus, not via O(rounds) shuffles of the whole corpus.
+- **the caller owns the result.**  The returned ``(id, component)``
+  frame is the last round's persisted label table, already
+  materialized by that round's action; the caller unpersists it (or
+  hands it to ``registry.track_persist``).  Every intermediate — the
+  earlier rounds' labels and the lineage cuts — is released here.
 - **one Spark job per round.**  The round's min-aggregation is
   materialized into its persisted cache by the same ``agg(sum)``
   action that decides convergence: per-vertex min-labels are monotone
@@ -31,8 +36,9 @@ turns out, even at bench scale — job count dominates tiny-graph cost):
   iterative plans otherwise double their lineage every round and
   re-execute the whole history at each action.  The edge table itself
   is lineage-CUT up front (``cut_lineage`` — localCheckpoint by
-  default): the loop re-analyzes its plan every round, and an uncut
-  candidate pipeline costs O(plan size × rounds) in driver replanning.
+  default, freed with ``release_cut`` on exit): the loop re-analyzes
+  its plan every round, and an uncut candidate pipeline costs
+  O(plan size × rounds) in driver replanning.
   The trade is explicit (documented in ``operators/lineage.py``): a
   localCheckpoint drops the recompute path, so an executor loss fails
   the job instead of recomputing — acceptable because the cut input
@@ -52,56 +58,40 @@ the cost of one extra small self-join per round.  The jump is
 ADAPTIVE (switches on after round 3), so the shallow graphs dedup
 actually produces never pay for it (measured: a 256-node path
 converges in 10 rounds vs 255 for pure propagation; the sf0.1 dedup
-graph still finishes in 3 jump-free rounds).
+graph still finishes in 3 jump-free rounds).  ``MAX_ITER`` rounds
+without a fixpoint raise instead of returning wrong labels.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from olist_ecommerce_data_warehouse_spark.operators.lineage import cut_lineage
+from olist_ecommerce_data_warehouse_spark.operators.lineage import (
+    cut_lineage,
+    release_cut,
+)
+
+# enough for a component of diameter 2^MAX_ITER plus one confirmation
+# round (pointer jumping doubles the hop distance per round)
+MAX_ITER = 25
 
 
-def _default_track(df: DataFrame) -> DataFrame:
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    return df
+def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFrame:
+    """(id, component) for every endpoint of the ``(src, dst)`` edges;
+    ``component`` = smallest vertex id reachable through ``edges``
+    (undirected, direction ignored).  Vertices with no edge are not in
+    the output.
 
-
-def connected_components(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 25,
-    track: Callable[[DataFrame], DataFrame] | None = None,
-    include_singletons: bool = True,
-    stats: dict | None = None,
-) -> DataFrame:
-    """(id, component) per vertex; ``component`` = smallest vertex id
-    reachable through ``edges`` (undirected, direction ignored).
-
-    ``vertices``: one column ``id_col``; isolated vertices become
-    singleton components (returned only when ``include_singletons`` —
-    callers that decorate clusters further can skip them and union
-    fully-formed singleton rows themselves, keeping the corpus-wide
-    path to a single anti-join).
-    ``track``: persist-and-materialize hook for the FINAL label table
-    (plans pass ``registry.track_persist`` so blocks are released
-    after the plan is consumed); intermediates are released internally.
+    The result is persisted and OWNED BY THE CALLER: ``unpersist()``
+    it after its last use (see the module doc).
     ``stats``: optional dict filled with run diagnostics (rounds,
     n_edge_rows, converged) — the hook scale tests use to pin the
     O(log diameter) round bound.  Raises RuntimeError if no fixpoint
-    is reached within ``max_iter`` rounds (needs diameter ≤ 2^max_iter
-    plus one confirmation round).
+    is reached within ``MAX_ITER`` rounds.
     """
-    track = track or _default_track
-    spark = vertices.sparkSession
+    spark = edges.sparkSession
     # Materialize the DIRECTED edge list once WITH AQE — candidate-pair
     # joins are exactly where runtime skew splitting matters, and the
     # symmetrized view below would otherwise evaluate the whole
@@ -122,18 +112,16 @@ def connected_components(
     # for the full CC call).  See operators/lineage.py for the
     # checkpoint-vs-localCheckpoint policy (same as the round-5 label
     # cut below).
-    e = cut_lineage(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    )
+    e = cut_lineage(edges.select("src", "dst"))
     n_edges = e.count()
-    # symmetrized view over the cache (narrow column swap per round —
-    # cheaper than persisting a second copy).  With both directions
-    # present, the src column alone covers every endpoint.
+    # symmetrized view over the cut (narrow column swap per round —
+    # cheaper than materializing a second copy).  With both
+    # directions present, the src column alone covers every endpoint.
     sym = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     parts_session = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     loop_parts = max(2, min(parts_session, (n_edges * 2) // 500_000 + 1))
     # round 0 folded into initialization: component⁰(v) = min(v, its
-    # direct neighbors) is one narrow aggregation over the cached edge
+    # direct neighbors) is one narrow aggregation over the cut edge
     # list — one fewer join round
     labels = (
         sym.repartition(loop_parts, "src")
@@ -160,16 +148,21 @@ def connected_components(
     # ClusteredDistribution, so the repartition IS the aggregation
     # shuffle, not an extra one.  A billion-edge graph computes the
     # session value and is unaffected.
+    label_cut = None  # the latest every-5-rounds cut of the labels
     try:
-        # empty graph: no endpoints, nothing to iterate — without this,
-        # SUM over zero rows is NULL every round and the sentinel-based
-        # equality below would still catch it after round 2, but the
-        # early exit skips even those empty jobs
+        # empty graph: no endpoints, nothing to iterate — without the
+        # early exit, SUM over zero rows is NULL every round and the
+        # sentinel-based equality below would still catch it after
+        # round 2, but the exit skips even those empty jobs.  No round
+        # fills the (empty) label cache then, so one count does: the
+        # edge cut it reads is released on return.
         _UNSET = object()
         prev_sum = _UNSET
         converged = n_edges == 0
+        if converged:
+            labels.count()
         rounds = 0
-        for _ in range(max_iter if n_edges > 0 else 0):
+        for _ in range(MAX_ITER if n_edges > 0 else 0):
             rounds += 1
             # for edge (src→dst), dst hears src's current label
             heard = (
@@ -182,12 +175,12 @@ def connected_components(
             # doubles each round, so long chains converge in O(log
             # diameter) rounds instead of O(diameter).  Without this, a
             # 1000-link near-duplicate chain (template pages, version
-            # histories) silently exhausts max_iter and returns wrong
+            # histories) silently exhausts MAX_ITER and returns wrong
             # labels.  comp(v) is always itself an endpoint vertex (it
             # is min(v, neighbors…) of endpoint ids), so the self-join
             # always finds a row; left+coalesce guards the invariant
             # anyway.  ADAPTIVE: the jump join only switches on after
-    	    # round 3 — real dedup graphs (diameter 2-4) converge
+            # round 3 — real dedup graphs (diameter 2-4) converge
             # before that and skip its per-round label self-join
             # entirely (measured ~35% of loop wall-time at sf0.1);
             # deep graphs pay 3 cheap rounds then double: still
@@ -222,59 +215,47 @@ def connected_components(
             ).collect()[0][0]
             labels.unpersist()
             labels = new_labels
+            # sentinel (not None): a SUM over an empty/degenerate label
+            # table is NULL, and `prev_sum is not None` would make
+            # None == None unreachable — the loop would spin all
+            # MAX_ITER rounds instead of converging
+            if prev_sum is not _UNSET and cur_sum == prev_sum:
+                converged = True
+                break
+            prev_sum = cur_sum
             # Lineage truncation every 5 rounds: each round references
             # the previous labels THREE times (carry ∪ heard ∪ jumped),
             # so the logical plan grows ~3^rounds — by round 10 Catalyst
             # itself stack-overflows just printing the tree.  persist()
             # caches DATA but not the plan, so deep graphs need a hard
             # lineage cut; shallow dedup graphs (2-4 rounds) never reach
-            # it and keep pure persist-with-lineage semantics.  A
-            # reliable checkpoint dir is honored when the session has
-            # one (survives executor loss); localCheckpoint otherwise —
-            # the documented trade for adversarial-depth graphs only.
+            # it and keep pure persist-with-lineage semantics.  The cut
+            # comes after the convergence check, so the returned labels
+            # are always a persisted round table, never a cut.
             if rounds % 5 == 0:
-                if spark.sparkContext.getCheckpointDir() is not None:
-                    cut = labels.checkpoint(eager=True)
-                else:
-                    cut = labels.localCheckpoint(eager=True)
+                cut = cut_lineage(labels)
                 labels.unpersist()
-                labels = cut
-            # sentinel (not None): a SUM over an empty/degenerate label
-            # table is NULL, and `prev_sum is not None` would make
-            # None == None unreachable — the loop would spin all
-            # max_iter rounds instead of converging
-            if prev_sum is not _UNSET and cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
+                if label_cut is not None:
+                    release_cut(label_cut)
+                labels = label_cut = cut
         if stats is not None:
             stats["rounds"] = rounds
             stats["n_edge_rows"] = n_edges
             stats["converged"] = converged
         if not converged:
             # silently wrong labels are worse than failing: a component
-            # whose diameter outruns the doubling budget (2^max_iter)
-            # means max_iter was set pathologically low.  Release the
-            # last round's persisted labels first — the finally below
-            # frees only the edge cache, and a caller that catches and
-            # retries would otherwise leak a vertex-sized cache table
-            # per attempt.
+            # whose diameter outruns the doubling budget (2^MAX_ITER).
+            # Release the last round's persisted labels first — a caller
+            # that catches and retries would otherwise leak a
+            # vertex-sized cache table per attempt.
             labels.unpersist()
             raise RuntimeError(
-                f"connected_components: no fixpoint after {max_iter} rounds"
+                f"connected_components: no fixpoint after {MAX_ITER} rounds"
             )
+        return labels
     finally:
-        e.unpersist()
-    # blocks already hot from the last round's action — track() only
-    # moves ownership to the caller's release lifecycle, no new job
-    labels = track(labels)
-    out = labels.select("id", "component")
-    if include_singletons:
-        singles = (
-            vertices.select(F.col(id_col).alias("id"))
-            .distinct()
-            .join(labels.select("id"), "id", "left_anti")
-            .withColumn("component", F.col("id"))
-        )
-        out = out.unionByName(singles)
-    return out
+        # the returned labels are materialized, so their reads never
+        # reach the cuts again
+        release_cut(e)
+        if label_cut is not None:
+            release_cut(label_cut)

@@ -19,15 +19,18 @@ these inputs are CANDIDATE/FEATURE pipelines whose recompute-on-loss
 costs the same work the checkpoint write already did, and the loops
 that consume them re-derive nothing else from the lineage.
 
-Release semantics differ between the two forms, and callers must not
-assume ``unpersist()`` frees either one the way it frees a plain
-persist:
+Release a cut with :func:`release_cut`, not ``unpersist()``:
 
-- ``localCheckpoint`` stores its blocks in the executor block store —
-  ``unpersist()`` releases them.
+- ``localCheckpoint`` keeps its blocks in the executor block store
+  under the checkpointed RDD, which the returned frame's plan scans
+  directly — the frame itself is not in the cache manager, so its
+  ``unpersist()`` frees nothing (the RDD stays in
+  ``getPersistentRDDs`` until a driver GC happens to collect it).
+  ``release_cut`` unpersists that RDD.
 - a RELIABLE checkpoint writes files under the checkpoint dir and
-  re-reads them from disk each round; ``unpersist()`` is a no-op on
-  those files, and Spark only deletes them at the end of the app when
+  re-reads them from disk each round; its RDD is not persisted, so
+  ``release_cut`` does nothing there, and Spark deletes the files only
+  at the end of the app when
   ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (set in
   :func:`session.get_spark` for exactly this reason — without it every
   iterative-operator call leaks checkpoint files for the app
@@ -47,3 +50,10 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     if spark.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def release_cut(cut: DataFrame) -> None:
+    """Free the blocks of a frame ``cut_lineage`` returned (see module
+    doc): unpersist the RDD its plan scans.  A no-op for a reliable
+    checkpoint, whose RDD is not persisted."""
+    cut._jdf.queryExecution().analyzed().rdd().unpersist(False)

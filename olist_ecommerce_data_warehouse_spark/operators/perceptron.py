@@ -29,7 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from olist_ecommerce_data_warehouse_spark.operators.lineage import cut_lineage
+from olist_ecommerce_data_warehouse_spark.operators.lineage import (
+    cut_lineage,
+    release_cut,
+)
 
 
 def _merge_weights(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -168,7 +171,7 @@ def pegasos_train(
             )
             w = _merge_weights(shrunk, grad).localCheckpoint(eager=True)
     finally:
-        feats.unpersist()
+        release_cut(feats)
     return w
 
 

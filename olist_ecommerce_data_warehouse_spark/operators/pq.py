@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_train
-from olist_ecommerce_data_warehouse_spark.operators.similarity import quantized
+from olist_ecommerce_data_warehouse_spark.operators.similarity import l2sq, quantized
 
 
 def pq_train(
@@ -53,8 +53,8 @@ def pq_train(
 ) -> list[list[list[int]]]:
     """Train ``m`` subspace codebooks (each k × d/m int64-quantized
     centroids) over ``dim``-wide ``(vec_id, embedding)`` vectors.  ``dim`` must divide by m.
-    Each subspace is a full ``kmeans_train`` over the sliced,
-    pre-quantized vectors — m small trainings, each the documented
+    Each subspace is a full ``kmeans_train`` over the sliced quantized
+    vectors — m small trainings, each the documented
     small-model/big-data loop.
 
     The m trainings are INDEPENDENT chains of driver-blocking jobs
@@ -94,17 +94,9 @@ def pq_train(
     )
 
     def one(j: int) -> list[list[int]]:
-        sliced = q.select("vec_id", F.slice("__qv", j * sub + 1, sub).alias("__sub"))
-        return kmeans_train(
-            sliced,
-            vec_col="__sub",
-            k=k,
-            n_iter=n_iter,
-            pre_quantized=True,
-        )
+        sliced = q.select("vec_id", F.slice("__qv", j * sub + 1, sub).alias("cvec"))
+        return kmeans_train(sliced, k=k, n_iter=n_iter)
 
-    if m == 1:
-        return [one(0)]
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
@@ -113,8 +105,8 @@ def pq_train(
 
 def pq_encode_block(qv, codebooks):
     """Shared numpy core of PQ encoding over a block of PRE-QUANTIZED
-    int64 vectors: per-subspace exact-int64 L2² argmin (ties → lower
-    code, np.argmin takes the first minimum).  Returns
+    int64 vectors: per-subspace exact-int64 ``l2sq`` argmin (ties →
+    lower code, np.argmin takes the first minimum).  Returns
     ``(codes int32 (n, m), recon_err int64 (n,))``.  Used by BOTH
     :func:`pq_encode` and the fused int8-stats kernel
     (functions/embedding.py) so the two paths cannot drift apart."""
@@ -125,10 +117,7 @@ def pq_encode_block(qv, codebooks):
     codes = np.zeros((len(qv), m), dtype=np.int32)
     err = np.zeros(len(qv), dtype=np.int64)
     for j in range(m):
-        cb = np.asarray(codebooks[j], dtype=np.int64)
-        cn = np.einsum("ij,ij->i", cb, cb)
-        s = qv[:, j * sub : (j + 1) * sub]
-        d2 = np.einsum("ij,ij->i", s, s)[:, None] - 2 * (s @ cb.T) + cn[None, :]
+        d2 = l2sq(qv[:, j * sub : (j + 1) * sub], codebooks[j])
         codes[:, j] = np.argmin(d2, axis=1)
         err += d2[np.arange(len(qv)), codes[:, j]]
     return codes, err
@@ -208,17 +197,9 @@ def pq_adc_topk(
     ).collect()
     qids = np.array([r["__qid"] for r in qrows], dtype=np.int64)
     qm = np.stack([np.asarray(r["__qv"], dtype=np.int64) for r in qrows])
-    cbs = [np.asarray(cb, dtype=np.int64) for cb in codebooks]
     # LUT[q, j, c] = L2²(query_q subvector j, codebook_j centroid c)
     lut = np.stack(
-        [
-            np.einsum("ij,ij->i", qs, qs)[:, None]
-            - 2 * (qs @ cbs[j].T)
-            + np.einsum("ij,ij->i", cbs[j], cbs[j])[None, :]
-            for j, qs in (
-                (j, qm[:, j * sub : (j + 1) * sub]) for j in range(m)
-            )
-        ],
+        [l2sq(qm[:, j * sub : (j + 1) * sub], codebooks[j]) for j in range(m)],
         axis=1,
     )  # (n_q, m, k)
 

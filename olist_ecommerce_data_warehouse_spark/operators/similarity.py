@@ -15,8 +15,11 @@ Scale notes: brute-force is the correctness baseline (O(Q·N·d) but
 embarrassingly parallel map-side work after broadcasting Q query
 vectors — no shuffle until top-k).  The IVF variant buckets vectors by
 nearest centroid so each query scans only nprobe clusters — the
-standard billion-scale layout; cluster assignment is one broadcast
-join + argmin, i.e. a narrow map."""
+standard billion-scale layout.  Centroids are one ``list[list[int]]``
+(what ``kmeans_train`` returns and ``IVFIndex`` holds); assignment
+(``ivf_assign``) is one narrow Arrow map whose kernel closes over the
+k×d matrix and takes the argmin of ``l2sq`` — the one exact-integer
+L2² builder that k-means, IVF and PQ share."""
 
 from __future__ import annotations
 
@@ -32,6 +35,21 @@ def quantized(col: Column | str) -> Column:
     return F.transform(c, lambda x: F.floor(x.cast("double") * QUANT).cast("bigint"))
 
 
+def l2sq(a, b):
+    """Exact int64 squared L2 distances between the rows of ``a`` (n×d)
+    and ``b`` (k×d): the (n, k) matrix |a|² + |b|² − 2·a·bᵀ.  The |a|²
+    term is constant per row, so it never moves a row's argmin; numpy's
+    argmin takes the FIRST minimum, i.e. ties go to the lowest column
+    (centroid/code) id — the oracle's tie rule."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.int64)
+    b = np.asarray(b, dtype=np.int64)
+    an = np.einsum("ij,ij->i", a, a)
+    bn = np.einsum("ij,ij->i", b, b)
+    return an[:, None] + bn[None, :] - 2 * (a @ b.T)
+
+
 def _collect_query_matrix(queries: DataFrame):
     """Collect (query_id, qvec) into sorted numpy arrays.  The query
     set is broadcast-sized by contract (Q ≪ N — the same assumption a
@@ -41,8 +59,7 @@ def _collect_query_matrix(queries: DataFrame):
 
     An EMPTY input returns empty arrays (shape (0, 0) matrix) rather
     than letting ``np.stack([])`` throw — callers emit empty results
-    for zero queries and raise their own contract errors for zero
-    centroids."""
+    for zero queries."""
     import numpy as np
 
     rows = sorted(queries.collect(), key=lambda r: r[0])
@@ -146,38 +163,35 @@ def brute_force_topk(
     )
 
 
-def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Assign every corpus vector to its nearest centroid by exact
-    integer L2² (ties → lowest centroid_id), as one narrow mapInPandas:
-    per Arrow batch, D² = |c|² + |cent|² − 2·(C @ Centᵀ) is a single
-    int64 matmul and an argmin — no per-pair interpreted lambdas, no
-    shuffle.  ``centroids``: (centroid_id, centvec), broadcast-sized by
-    definition (nlist ≪ N).  Output carries the vector through so the
-    scoring stage needs no re-join: (vec_id, centroid_id, cvec, cn)."""
+def ivf_assign(corpus: DataFrame, centroids: list[list[int]]) -> DataFrame:
+    """Assign every ``(vec_id, cvec)`` corpus vector to its nearest
+    centroid by exact integer L2² (``l2sq``; ties → lowest
+    centroid_id, the list index), as one narrow mapInPandas: per Arrow
+    batch a single int64 matmul and an argmin — no per-pair
+    interpreted lambdas, no shuffle.  ``centroids`` is the k×d int64
+    list ``kmeans_train`` returns; the kernel closes over it (nlist ≪ N,
+    model-sized).  Output carries the vector through so the scoring
+    stage needs no re-join: (vec_id, centroid_id, cvec, cn)."""
     import numpy as np
     import pandas as pd
 
-    cent_ids, centm, _ = _collect_query_matrix(centroids.select("centroid_id", "centvec"))
-    if cent_ids.size == 0:
+    if not centroids:
         raise ValueError("ivf_assign: centroid set is empty (nlist must be >= 1)")
-    centn2 = np.einsum("ij,ij->i", centm, centm)  # exact int64
-    bc = corpus.sparkSession.sparkContext.broadcast((cent_ids, centm, centn2))
+    centm = np.asarray(centroids, dtype=np.int64)
 
     def kernel(batches):
-        cent_ids, centm, centn2 = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             cm = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["cvec"]])
-            cn2 = np.einsum("ij,ij->i", cm, cm)
-            d2 = cn2[:, None] + centn2[None, :] - 2 * (cm @ centm.T)  # exact int64
-            # argmin returns the FIRST minimum → lowest centroid_id
-            # (cent_ids are sorted), matching the oracle's tie-break
-            nearest = cent_ids[np.argmin(d2, axis=1)]
             out = pdf[["vec_id", "cvec"]].copy()
-            out["centroid_id"] = pd.Series(nearest, index=pdf.index, dtype="int64")
+            out["centroid_id"] = pd.Series(
+                np.argmin(l2sq(cm, centm), axis=1), index=pdf.index, dtype="int64"
+            )
             out["cn"] = pd.Series(
-                np.sqrt(cn2.astype(np.float64)), index=pdf.index, dtype="float64"
+                np.sqrt(np.einsum("ij,ij->i", cm, cm).astype(np.float64)),
+                index=pdf.index,
+                dtype="float64",
             )
             yield out[["vec_id", "centroid_id", "cvec", "cn"]]
 
@@ -186,28 +200,26 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def ivf_probes(queries: DataFrame, centroids: DataFrame, nprobe: int = 2) -> dict[int, list]:
+def ivf_probes(
+    queries: DataFrame, centroids: list[list[int]], nprobe: int = 2
+) -> dict[int, list]:
     """Driver-side probe selection: each query's ``nprobe`` nearest
-    centroids by exact integer L2² (ties → lowest centroid_id).  Both
-    inputs are broadcast-sized (Q queries, nlist centroids), so this is
-    two tiny collects + an O(Q·nlist) numpy pass — the same work a
-    vector-search coordinator does per request batch."""
+    centroids by exact integer L2² (``l2sq``; ties → lowest
+    centroid_id).  Queries are broadcast-sized (Q ≪ N) and the
+    centroid list is model-sized, so this is one tiny collect + an
+    O(Q·nlist) numpy pass — the same work a vector-search coordinator
+    does per request batch."""
     import numpy as np
 
     qids, qm, qn = _collect_query_matrix(queries.select("query_id", "qvec"))
-    cent_ids, centm, _ = _collect_query_matrix(centroids.select("centroid_id", "centvec"))
-    if qids.size == 0 or cent_ids.size == 0:
+    if qids.size == 0 or not centroids:
         return {}
-    centn2 = np.einsum("ij,ij->i", centm, centm)
-    qn2 = np.einsum("ij,ij->i", qm, qm)
-    d2 = qn2[:, None] + centn2[None, :] - 2 * (qm @ centm.T)  # exact int64
+    d2 = l2sq(qm, centroids)
     probes: dict[int, list] = {}
     for i, qid in enumerate(qids):
-        order = np.lexsort((cent_ids, d2[i]))
-        for ci in order[:nprobe]:
-            probes.setdefault(int(cent_ids[ci]), []).append(
-                (int(qid), qm[i], float(qn[i]))
-            )
+        # stable sort: equal distances keep ascending centroid_id
+        for ci in np.argsort(d2[i], kind="stable")[:nprobe]:
+            probes.setdefault(int(ci), []).append((int(qid), qm[i], float(qn[i])))
     return probes
 
 
@@ -449,13 +461,12 @@ def blocked_cosine_pairs(
 def semdedup_pairs(
     vectors: DataFrame, centroids: list[list[int]], threshold: float
 ) -> DataFrame:
-    """SemDeDup: assign (vec_id, v) vectors to trained centroids
-    (carrying vectors through the kernel), then one Gram pass per
-    cluster — the `dedup_embedding_cosine` kind='semdedup' pipeline.
-    Every cluster must fit an executor (see ``blocked_cosine_pairs``)."""
-    from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_assign
-
-    assigned = kmeans_assign(
-        vectors, centroids, vec_col="v", pre_quantized=True, keep_vec=True
-    )
-    return blocked_cosine_pairs(assigned, block_col="cluster", threshold=threshold)
+    """SemDeDup: assign quantized (vec_id, v) vectors to trained
+    centroids with ``ivf_assign`` (which carries each vector through
+    its kernel), then one Gram pass per ``centroid_id`` block — the
+    `dedup_embedding_cosine` kind='semdedup' pipeline.  Every cluster
+    must fit an executor (see ``blocked_cosine_pairs``)."""
+    assigned = ivf_assign(
+        vectors.select("vec_id", F.col("v").alias("cvec")), centroids
+    ).select("vec_id", "centroid_id", F.col("cvec").alias("v"))
+    return blocked_cosine_pairs(assigned, block_col="centroid_id", threshold=threshold)

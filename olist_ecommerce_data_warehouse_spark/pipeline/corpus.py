@@ -88,6 +88,24 @@ def _split_col() -> F.Column:
     )
 
 
+def _collapse_neardups(docs: DataFrame, sh: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One keeper per near-dup family of ``docs`` (with ``sh`` its
+    shingle table): LSH candidates → exact Jaccard ≥
+    ``JACCARD_THRESHOLD`` → connected components → drop every endpoint
+    whose component (the family's minimum doc_id) is not itself, with
+    one left-anti join.  Returns ``(kept, labels)``; ``labels`` is the
+    persisted CC table, which the caller unpersists after its write."""
+    pairs = lsh_candidate_pairs(minhash_band_signatures(sh))
+    verified = jaccard_on_pairs(pairs, sh).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    labels = connected_components(
+        verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    )
+    dropped = labels.filter(F.col("id") != F.col("component")).select(
+        F.col("id").alias("doc_id")
+    )
+    return docs.join(dropped, "doc_id", "left_anti"), labels
+
+
 class CorpusPipeline:
     def __init__(
         self,
@@ -214,19 +232,9 @@ class CorpusPipeline:
         )
         exact = docs.join(keeper.select("doc_id"), "doc_id")
         # near-dup over the exact survivors
-        sh = shingle_hash_table(exact)
-        pairs = lsh_candidate_pairs(minhash_band_signatures(sh))
-        verified = jaccard_on_pairs(pairs, sh).filter(
-            F.col("jaccard") >= JACCARD_THRESHOLD
-        )
-        comp = connected_components(
-            exact.select(F.col("doc_id").alias("id")),
-            verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        )
-        keep_ids = comp.groupBy("component").agg(F.min("id").alias("doc_id"))
-        n = self.audit.write_table(
-            exact.join(keep_ids.select("doc_id"), "doc_id"), self.base, "silver", "deduped"
-        )
+        survivors, labels = _collapse_neardups(exact, shingle_hash_table(exact))
+        n = self.audit.write_table(survivors, self.base, "silver", "deduped")
+        labels.unpersist()
         kept = self.read("silver", "deduped")
         self.audit.write_table(
             kept.select("doc_id", F.md5("text").alias("fp")),
@@ -382,23 +390,11 @@ class CorpusPipeline:
             ).localCheckpoint(eager=True)
 
             # within-increment near-dup family collapse (batch rule)
-            surv_sh = new_sh.join(
-                survivors_vs_old.select("doc_id"), "doc_id"
+            survivors, labels = _collapse_neardups(
+                survivors_vs_old,
+                new_sh.join(survivors_vs_old.select("doc_id"), "doc_id"),
             )
-            nn_pairs = lsh_candidate_pairs(minhash_band_signatures(surv_sh))
-            nn_verified = jaccard_on_pairs(nn_pairs, surv_sh).filter(
-                F.col("jaccard") >= JACCARD_THRESHOLD
-            )
-            comp = connected_components(
-                survivors_vs_old.select(F.col("doc_id").alias("id")),
-                nn_verified.select(
-                    F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                ),
-            )
-            keep_ids = comp.groupBy("component").agg(F.min("id").alias("doc_id"))
-            added = survivors_vs_old.join(
-                keep_ids.select("doc_id"), "doc_id"
-            ).localCheckpoint(eager=True)
+            added = survivors.localCheckpoint(eager=True)
             n_neardup_dropped = exact_new.count() - added.count()
 
             # append with the EXACT silver schema (gate columns ride
@@ -414,6 +410,7 @@ class CorpusPipeline:
                 shingle_hash_table(added_cols)
             ).write.mode("append").parquet(self.path("silver", "index_band_sigs"))
             n_added = added.count()
+            labels.unpersist()
             new_sh.unpersist()
             new_sigs.unpersist()
             return n_added, {

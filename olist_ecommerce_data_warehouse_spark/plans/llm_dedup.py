@@ -490,18 +490,14 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # singleton rows (self-cluster: size 1, keeper).  At 100 TB this
     # keeps every per-round shuffle proportional to |duplicates|, not
     # |corpus|.
-    labels = connected_components(
-        corrupted.select("doc_id"),
-        edges,
-        id_col="doc_id",
-        src_col="doc_a",
-        dst_col="doc_b",
-        max_iter=10,
-        # eager=False: the final label blocks are already materialized
-        # by the loop's last convergence action — registering ownership
-        # must not cost another job
-        track=lambda df: track_persist(df, eager=False),
-        include_singletons=False,
+    labels = track_persist(
+        connected_components(
+            edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        ),
+        # eager=False: the label blocks are already materialized by the
+        # loop's last convergence action — registering ownership must
+        # not cost another job
+        eager=False,
     ).select(F.col("id").alias("doc_id"), F.col("component").alias("cluster_rep"))
     sizes = labels.groupBy("cluster_rep").agg(F.count(F.lit(1)).alias("cluster_size"))
     clustered = labels.join(sizes, "cluster_rep").select(

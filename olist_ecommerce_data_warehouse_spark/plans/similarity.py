@@ -425,6 +425,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = table(spark, sf_dir, "embeddings")
+    c = emb.select("vec_id", quantized("embedding").alias("cvec"))
     # the IVF k-means and the PQ codebook trainings are INDEPENDENT
     # chains of driver-blocking jobs (seed + one collect per Lloyd
     # round each) — overlap them from a thread pool (guide §2.6) so
@@ -435,22 +436,17 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_ivf = _pool.submit(kmeans_train, emb, k=IVF_K, n_iter=IVF_ITERS)
+        _f_ivf = _pool.submit(kmeans_train, c, k=IVF_K, n_iter=IVF_ITERS)
         _f_pq = _pool.submit(
             pq_train, emb, m=PQ_M, k=PQ_K, n_iter=PQ_ITERS, dim=SRP_DIM
         )
         trained = _f_ivf.result()
         books = _f_pq.result()
-    cents = spark.createDataFrame(
-        [(i, [int(x) for x in v]) for i, v in enumerate(trained)],
-        "centroid_id long, centvec array<bigint>",
-    )
-    c = emb.select("vec_id", quantized("embedding").alias("cvec"))
     q = c.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("cvec").alias("qvec")
     )
-    assigned = ivf_assign(c, cents)
-    probes = ivf_probes(q, cents, nprobe=2)
+    assigned = ivf_assign(c, trained)
+    probes = ivf_probes(q, trained, nprobe=2)
     ivf = ivf_topk(assigned, probes, k=5).select(
         F.lit("ivf").alias("kind"),
         "query_id",
@@ -684,7 +680,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cosine",
     )
     cents = kmeans_train(
-        corrupted, vec_col="v", k=SEM_K, n_iter=SEM_ITERS, pre_quantized=True
+        corrupted.select("vec_id", F.col("v").alias("cvec")), k=SEM_K, n_iter=SEM_ITERS
     )
     sem_pairs = semdedup_pairs(corrupted, cents, SEM_COS).select(
         F.lit("semdedup").alias("kind"),

@@ -108,23 +108,52 @@ def test_pii_redaction(spark):
     assert all(got[3][k] == 0 for k in ("EMAIL", "PHONE", "SSN", "IP"))
 
 
-def test_connected_components_chain_and_singletons(spark):
-    """A 6-node path (diameter 5, forces multiple propagation rounds),
-    a triangle, and two isolated vertices — labels must be the
-    component-minimum id everywhere, regardless of edge direction."""
+def test_connected_components_chain(spark):
+    """A 6-node path (diameter 5, forces multiple propagation rounds)
+    and a triangle — labels must be the component-minimum id
+    everywhere, regardless of edge direction.  Only edge endpoints are
+    labelled: vertices 10 and 11 of the 11-vertex graph touch no edge
+    and are absent.  The caller's ``unpersist()`` of the returned
+    labels leaves no cache behind (the edge cut is released inside)."""
     from olist_ecommerce_data_warehouse_spark.operators.graph import connected_components
 
-    verts = spark.createDataFrame([(i,) for i in range(1, 12)], ["id"])
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
     edges = spark.createDataFrame(
         # path 1-2-3-4-5-6 with mixed directions; triangle 7-8-9
         [(2, 1), (2, 3), (4, 3), (4, 5), (6, 5), (7, 8), (8, 9), (9, 7)],
         ["src", "dst"],
     )
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(verts, edges, max_iter=25).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 7: 7, 8: 7, 9: 7, 10: 10, 11: 11}
+    labels = connected_components(edges)
+    got = {r["id"]: r["component"] for r in labels.collect()}
+    labels.unpersist()
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 7: 7, 8: 7, 9: 7}
+    assert jsc.getPersistentRDDs().size() == start
+
+
+def test_load_silver_deduped_releases_its_caches(spark, tmp_path_factory):
+    """The corpus near-dup stage owns the CC labels it asks for and
+    releases them (and the CC edge cut) after its write: no persisted
+    RDD outlives the call."""
+    from olist_ecommerce_data_warehouse_spark.pipeline.corpus import CorpusPipeline
+
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
+    # planted near-dups (one appended token), so the stage's CC runs
+    # over a non-empty graph
+    docs = table(spark, SF_DIR, "documents").select("doc_id", "text", "lang", "source")
+    docs = docs.filter(F.col("doc_id") < 60)
+    near = docs.select(
+        (F.col("doc_id") + 900000).alias("doc_id"),
+        F.concat("text", F.lit(" addendum")).alias("text"),
+        "lang",
+        "source",
+    )
+    p = CorpusPipeline(spark, str(tmp_path_factory.mktemp("cc_release")), min_tokens=2)
+    p.ingest_bronze_df(docs.unionByName(near))
+    n_filtered = p.load_silver_filtered()
+    assert p.load_silver_deduped() < n_filtered
+    assert jsc.getPersistentRDDs().size() == start
 
 
 def test_dedup_cluster_cc_transitive_groups(spark):
@@ -176,18 +205,22 @@ def test_kmeans_trains_deterministically_and_reduces_inertia(spark):
 
     from olist_ecommerce_data_warehouse_spark.operators.kmeans import (
         inertia,
-        kmeans_assign,
         kmeans_train,
+    )
+    from olist_ecommerce_data_warehouse_spark.operators.similarity import (
+        ivf_assign,
+        quantized,
     )
 
     emb = table(spark, SF_DIR, "embeddings")
-    c0 = kmeans_train(emb, k=8, n_iter=0)  # seeds only
-    c3 = kmeans_train(emb, k=8, n_iter=3)
+    c = emb.select("vec_id", quantized("embedding").alias("cvec"))
+    c0 = kmeans_train(c, k=8, n_iter=0)  # seeds only
+    c3 = kmeans_train(c, k=8, n_iter=3)
     assert inertia(emb, c3) <= inertia(emb, c0)
     # bit-identical retrain (numpy/int paths only, no float summation)
-    assert kmeans_train(emb, k=8, n_iter=3) == c3
+    assert kmeans_train(c, k=8, n_iter=3) == c3
     # assignment is the exact argmin over the quantized grid
-    got = {r["vec_id"]: r["cluster"] for r in kmeans_assign(emb, c3).collect()}
+    got = {r["vec_id"]: r["centroid_id"] for r in ivf_assign(c, c3).collect()}
     cm = np.asarray(c3, dtype=np.int64)
     for r in emb.limit(50).collect():
         v = np.floor(np.asarray(r["embedding"], dtype=np.float64) * 1_000_000).astype(
@@ -260,26 +293,21 @@ def test_kmeans_trained_ivf_search_end_to_end(spark):
         for r in brute_force_topk(q, c, k=5).select("query_id", "vec_id").collect()
     }
 
-    def recall(cents_df):
+    def recall(cents):
         got = {
             (r["query_id"], r["vec_id"])
-            for r in ivf_topk(ivf_assign(c, cents_df), ivf_probes(q, cents_df, nprobe=1), k=5)
+            for r in ivf_topk(ivf_assign(c, cents), ivf_probes(q, cents, nprobe=1), k=5)
             .select("query_id", "vec_id")
             .collect()
         }
         return len(got & truth) / len(truth)
 
-    seed_cents = c.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), F.col("cvec").alias("centvec")
-    )
-    seed_vecs = [list(r["centvec"]) for r in seed_cents.collect()]
-    trained = kmeans_train(emb, k=8, n_iter=3)
-    trained_cents = spark.createDataFrame(
-        [(i, list(v)) for i, v in enumerate(trained)],
-        "centroid_id long, centvec array<bigint>",
-    )
+    seed_vecs = [
+        list(r["cvec"]) for r in c.filter(F.col("vec_id") < 8).orderBy("vec_id").collect()
+    ]
+    trained = kmeans_train(c, k=8, n_iter=3)
     assert inertia(emb, trained) < inertia(emb, seed_vecs)
-    assert recall(trained_cents) >= recall(seed_cents) - 0.05
+    assert recall(trained) >= recall(seed_vecs) - 0.05
 
 
 def test_sample_by_weight_mixing(spark):
@@ -452,18 +480,17 @@ def test_shingles_short_docs_no_crash(spark):
 
 
 def test_connected_components_empty_graph(spark):
-    """Zero edges: every vertex is its own component, and the operator
-    must not spin max_iter empty rounds (SUM over no rows is NULL; the
-    sentinel-based convergence treats it correctly)."""
+    """Zero edges: zero endpoint labels, and the operator must not spin
+    MAX_ITER empty rounds (SUM over no rows is NULL; the sentinel-based
+    convergence treats it correctly)."""
     from olist_ecommerce_data_warehouse_spark.operators.graph import connected_components
 
-    verts = spark.createDataFrame([(i,) for i in range(5)], ["id"])
     edges = spark.createDataFrame([], "src long, dst long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(verts, edges, max_iter=25).collect()
-    }
-    assert got == {i: i for i in range(5)}
+    stats = {}
+    labels = connected_components(edges, stats=stats)
+    assert labels.count() == 0
+    labels.unpersist()
+    assert stats["rounds"] == 0 and stats["converged"]
 
 
 def test_ann_empty_queries_and_zero_norm_vectors(spark):
@@ -473,6 +500,7 @@ def test_ann_empty_queries_and_zero_norm_vectors(spark):
     oracle-identical contract)."""
     from olist_ecommerce_data_warehouse_spark.operators.similarity import (
         brute_force_topk,
+        ivf_assign,
         ivf_probes,
         ivf_topk,
         quantized,
@@ -483,11 +511,13 @@ def test_ann_empty_queries_and_zero_norm_vectors(spark):
     empty_q = c.filter(F.lit(False)).select(
         F.col("vec_id").alias("query_id"), F.col("cvec").alias("qvec")
     )
+    import pytest
+
     assert brute_force_topk(empty_q, c, k=3).count() == 0
-    empty_cents = c.filter(F.lit(False)).select(
-        F.col("vec_id").alias("centroid_id"), F.col("cvec").alias("centvec")
-    )
-    assert ivf_probes(empty_q, empty_cents) == {}
+    assert ivf_probes(empty_q, []) == {}
+    # an empty centroid list is a contract error, not an empty index
+    with pytest.raises(ValueError, match="centroid set is empty"):
+        ivf_assign(c, [])
 
     corpus = spark.createDataFrame(
         [(1, [10, 0]), (2, [0, 0]), (3, [7, 7])], "vec_id long, cvec array<bigint>"
@@ -629,17 +659,17 @@ def test_lang_id_real_sentences(spark):
 def test_connected_components_long_chain_logarithmic(spark):
     """Adversarial long-chain graph (256-node path, diameter 255): the
     pointer-jumping step must converge in O(log diameter) rounds —
-    pure neighbor propagation would need 255 and silently exhaust
-    max_iter.  Labels must still be the component minimum."""
+    pure neighbor propagation would need 255 and exhaust MAX_ITER.  Labels must still be the component minimum."""
     from olist_ecommerce_data_warehouse_spark.operators.graph import (
         connected_components,
     )
 
     n = 256
-    verts = spark.createDataFrame([(i,) for i in range(n)], ["id"])
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
     stats = {}
-    rows = connected_components(verts, edges, max_iter=25, stats=stats).collect()
+    labels = connected_components(edges, stats=stats)
+    rows = labels.collect()
+    labels.unpersist()
     assert stats["converged"]
     assert stats["rounds"] <= 12, f"not logarithmic: {stats['rounds']} rounds"
     assert len(rows) == n and all(r["component"] == 0 for r in rows)
@@ -777,19 +807,19 @@ def test_unpivot_inverts_pivot(spark):
     assert a == b
 
 
-def test_semdedup_recall_and_keep_vec_assignment(spark):
+def test_semdedup_recall_and_assignment_carries_vector(spark):
     """SemDeDup (kind='semdedup' in dedup_embedding_cosine) must find
     nearly all injected near-copies: a copy perturbed by one grid step
     on one component is nearest the same trained centroid as its
     source except when the pair straddles a cluster boundary — the
     documented SemDeDup recall trade, which must stay rare.  Also pins
-    kmeans_assign(keep_vec=True): the carried vector is the input
-    vector, and (id → cluster) equals the keep_vec=False path."""
-    from olist_ecommerce_data_warehouse_spark.operators.kmeans import (
-        kmeans_assign,
-        kmeans_train,
+    the assignment SemDeDup blocks on (ivf_assign): the carried vector
+    is the input vector."""
+    from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_train
+    from olist_ecommerce_data_warehouse_spark.operators.similarity import (
+        ivf_assign,
+        quantized,
     )
-    from olist_ecommerce_data_warehouse_spark.operators.similarity import quantized
     from olist_ecommerce_data_warehouse_spark.plans.registry import REGISTRY
 
     out = REGISTRY["dedup_embedding_cosine"].fn(spark, SF_DIR).collect()
@@ -805,19 +835,13 @@ def test_semdedup_recall_and_keep_vec_assignment(spark):
     # artifact rows)
     assert all(r["cosine"] >= 0.95 for r in out if r["kind"] == "semdedup")
 
-    base = emb.select("vec_id", quantized("embedding").alias("v"))
-    cents = kmeans_train(base, vec_col="v", k=4, n_iter=1, pre_quantized=True)
-    plain = {
-        r["vec_id"]: r["cluster"]
-        for r in kmeans_assign(base, cents, vec_col="v", pre_quantized=True).collect()
-    }
-    kept = kmeans_assign(
-        base, cents, vec_col="v", pre_quantized=True, keep_vec=True
-    ).collect()
-    assert {r["vec_id"]: r["cluster"] for r in kept} == plain
-    orig = {r["vec_id"]: list(r["v"]) for r in base.collect()}
+    base = emb.select("vec_id", quantized("embedding").alias("cvec"))
+    cents = kmeans_train(base, k=4, n_iter=1)
+    kept = ivf_assign(base, cents).collect()
+    orig = {r["vec_id"]: list(r["cvec"]) for r in base.collect()}
+    assert len(kept) == len(orig)
     for r in kept:
-        assert list(r["v"]) == orig[r["vec_id"]]
+        assert list(r["cvec"]) == orig[r["vec_id"]]
 
 
 def test_quality_classifier_head(spark):
@@ -981,13 +1005,9 @@ def test_ivf_index_persist_load_search_with_partition_pruning(spark, tmp_path_fa
 
     # constructed with the calls ann_ivf_topk makes
     emb = table(spark, SF_DIR, "embeddings")
-    trained = kmeans_train(emb, k=IVF_K, n_iter=IVF_ITERS)
-    cents = spark.createDataFrame(
-        [(i, [int(x) for x in v]) for i, v in enumerate(trained)],
-        "centroid_id long, centvec array<bigint>",
-    )
     corpus = emb.select("vec_id", quantized("embedding").alias("cvec"))
-    idx = IVFIndex(spark, trained, ivf_assign(corpus, cents))
+    trained = kmeans_train(corpus, k=IVF_K, n_iter=IVF_ITERS)
+    idx = IVFIndex(spark, trained, ivf_assign(corpus, trained))
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), quantized("embedding").alias("qvec")
     )
@@ -1011,7 +1031,7 @@ def test_ivf_index_persist_load_search_with_partition_pruning(spark, tmp_path_fa
         )[1][:200], scheme
 
     # deterministic rebuild
-    assert kmeans_train(emb, k=IVF_K, n_iter=IVF_ITERS) == trained
+    assert kmeans_train(corpus, k=IVF_K, n_iter=IVF_ITERS) == trained
 
 
 def test_zorder_layout_skips_both_dimensions(spark, tmp_path_factory):
@@ -1388,10 +1408,16 @@ def test_cut_lineage_truncates_plan_and_preserves_rows(spark):
     """operators/lineage.py contract: the returned DataFrame carries
     the same rows but its ANALYZED plan no longer embeds the upstream
     pipeline — the property every iterative trainer's per-round driver
-    cost now rests on (a persist would keep the full tree)."""
-    from olist_ecommerce_data_warehouse_spark.operators.lineage import cut_lineage
+    cost now rests on (a persist would keep the full tree).  Its blocks
+    are freed by ``release_cut``, not by ``unpersist()``."""
+    from olist_ecommerce_data_warehouse_spark.operators.lineage import (
+        cut_lineage,
+        release_cut,
+    )
     from pyspark.sql import functions as F
 
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
     base = spark.range(100).select(
         F.col("id"),
         F.md5(F.col("id").cast("string")).alias("h"),
@@ -1410,7 +1436,11 @@ def test_cut_lineage_truncates_plan_and_preserves_rows(spark):
         assert "Aggregate" in pplan  # persist keeps the tree; cut removes it
     finally:
         persisted.unpersist()
+    # a localCheckpoint's blocks outlive unpersist(); release_cut frees them
     cut.unpersist()
+    assert jsc.getPersistentRDDs().size() == start + 1
+    release_cut(cut)
+    assert jsc.getPersistentRDDs().size() == start
 
 
 def test_dsir_importance_resampling(spark):

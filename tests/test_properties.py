@@ -191,7 +191,7 @@ def test_surrogate_key_matches_simple_for_any_keys(spark, keys):
 def test_connected_components_matches_union_find(spark, edges):
     """Iterative min-label propagation ≡ classic union-find for ANY
     small graph (self-loops, parallel edges, disconnected vertices,
-    long chains)."""
+    long chains), over the vertices that touch an edge."""
     from olist_ecommerce_data_warehouse_spark.operators.graph import connected_components
 
     n = 15
@@ -213,15 +213,15 @@ def test_connected_components_matches_union_find(spark, edges):
         comp.setdefault(find(v), []).append(v)
     truth = {v: min(members) for members in comp.values() for v in members}
 
-    verts = spark.createDataFrame([(i,) for i in range(n)], ["id"])
     edf = spark.createDataFrame(edges, "src long, dst long") if edges else (
         spark.createDataFrame([], "src long, dst long")
     )
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(verts, edf, max_iter=20).collect()
-    }
-    assert got == truth
+    labels = connected_components(edf)
+    got = {r["id"]: r["component"] for r in labels.collect()}
+    labels.unpersist()
+    # only vertices that touch an edge are labelled
+    endpoints = {v for e in edges for v in e}
+    assert got == {v: truth[v] for v in endpoints}
 
 
 @given(
@@ -552,12 +552,15 @@ def test_kmeans_unrolled_lloyd_oracle_parity(spark, ddb, vecs, k):
     import duckdb as _d
 
     from olist_ecommerce_data_warehouse_spark.operators.kmeans import kmeans_train
+    from olist_ecommerce_data_warehouse_spark.operators.similarity import quantized
     from olist_ecommerce_data_warehouse_spark.plans.similarity import _lloyd_iter_sql
 
     k = min(k, len(vecs))
     rows = [(i, [float(x) / 1000.0 for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    trained = kmeans_train(df, k=k, n_iter=2)
+    trained = kmeans_train(
+        df.select("vec_id", quantized("embedding").alias("cvec")), k=k, n_iter=2
+    )
 
     con = _d.connect()
     con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
