@@ -28,6 +28,12 @@ stamped ``bench_ab/bench_full_<UTC>.json`` so re-anchoring decisions
 stay auditable; STDOUT carries only the compact gate summary
 (``compact_line``) because the harness that records bench runs keeps
 just the last 2,000 chars of output.
+
+After the samples and the gate, one traced pass (``traced_pass``) runs
+every plan once more through e2ebench's ``Recorder`` and adds a
+``traced`` map to the full record: where each plan's seconds go
+(build vs exec, jobs, tasks, shuffle, executor busy time, GC, driver
+gap).  It never feeds a gated number.
 """
 
 from __future__ import annotations
@@ -204,6 +210,56 @@ def compact_line(full: dict) -> str:
     )
 
 
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def traced_pass(spark, names: list[str], sf_dir: str, timed: dict[str, float]) -> dict:
+    """Run each plan once more, untimed, through e2ebench's ``Recorder``
+    (imported from ``e2ebench/tracing.py``, which stays as it is) and
+    return per plan: the span wall, the ``build_s`` (``fn()``) and
+    ``exec_s`` (noop write) call walls, the jobs of each phase, and
+    over both phases the tasks, shuffle read + write MB, executor busy
+    seconds, GC seconds and driver gap (each call's wall minus the
+    time its jobs cover).  ``traced_minus_timed_s`` is build + exec
+    minus the plan's timed median ``timed[name]``.  ``overhead_s`` is
+    the recorder's own bookkeeping inside the span (a listener-bus
+    drain and a status-store read after each call), so ``wall_s`` =
+    ``build_s + exec_s + overhead_s`` up to the loop's own Python.
+    Each plan gets ``run_plan``'s hygiene outside its span and its own
+    recorder, so one plan's work is never attributed to another."""
+    if str(REPO / "e2ebench") not in sys.path:
+        sys.path.insert(0, str(REPO / "e2ebench"))
+    from tracing import Recorder
+
+    out = {}
+    for name in names:
+        release_stale_checkpoints(spark)
+        spark.sparkContext._jvm.System.gc()
+        rec = Recorder(spark, traced=True, run_id=name)
+        mark_s = rec.overhead_s  # the recorder's first mark, before the span
+        with rec.span(f"plans.{name}") as plan:
+            df = rec.call(f"plans.build.{name}", REGISTRY[name].fn, spark, sf_dir)
+            rec.call(f"plans.exec.{name}", _noop, df)
+        build, exe = rec.spans[1:]
+        work, gap = rec.layer_work("plans")
+        out[name] = {
+            "wall_s": round(plan.wall, 4),
+            "build_s": round(build.wall, 4),
+            "exec_s": round(exe.wall, 4),
+            "build_jobs": build.work.jobs,
+            "exec_jobs": exe.work.jobs,
+            "tasks": work.tasks,
+            "shuffle_mb": round(work.shuffle_bytes / 1e6, 3),
+            "exec_busy_s": round(work.exec_run_ms / 1000, 3),
+            "gc_s": round(work.gc_ms / 1000, 3),
+            "driver_gap_s": round(gap, 4),
+            "traced_minus_timed_s": round(build.wall + exe.wall - timed[name], 4),
+            "overhead_s": round(rec.overhead_s - mark_s, 4),
+        }
+    return out
+
+
 def run_plan(spark, name: str, sf_dir: str) -> float:
     # cross-plan cleanup runs BEFORE the clock: it is session hygiene,
     # not part of the measured query.  release_stale_checkpoints frees
@@ -252,9 +308,7 @@ def main() -> None:
     # whichever Arrow-using plan samples first (alphabetically
     # ann_cosine_topk: its r08 samples read 4.58/2.07 because sample 1
     # carried the session's Arrow startup).
-    spark.range(32).mapInPandas(lambda it: it, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    _noop(spark.range(32).mapInPandas(lambda it: it, "id long"))
 
     # two samples per query: single-shot numbers on this box carry
     # sporadic 2-3x environment outliers that rotate between queries
@@ -298,6 +352,7 @@ def main() -> None:
         "rig_factor": rig_factor_of(samples) if at_sf01 else 1.0,
         "regressions": regressions_of(samples) if at_sf01 else {},
     }
+    out["traced"] = traced_pass(spark, names, sf_dir, out["queries_median"])
     # full record to disk (auditable: every sample), COMPACT gate
     # summary to stdout — the recorder keeps only the last 2,000 chars of
     # output, which truncated the full record's head in BENCH_r06.json

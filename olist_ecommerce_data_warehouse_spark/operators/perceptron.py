@@ -150,26 +150,35 @@ def pegasos_train(
             if nb == 0:
                 # empty batch: shrink-only round (the SQL replay's
                 # no-violator rounds behave identically)
-                w = shrunk.filter(F.col("w") != 0).localCheckpoint(eager=True)
-                continue
-            batch = feats.filter(bt_col == bt)
-            scored = (
-                batch.join(F.broadcast(w), "bucket", "left")
-                .groupBy("doc_id", "y")
-                .agg(
-                    F.sum(F.col("cnt") * F.coalesce(F.col("w"), F.lit(0))).alias(
-                        "score"
+                step = shrunk.filter(F.col("w") != 0)
+            else:
+                batch = feats.filter(bt_col == bt)
+                scored = (
+                    batch.join(F.broadcast(w), "bucket", "left")
+                    .groupBy("doc_id", "y")
+                    .agg(
+                        F.sum(F.col("cnt") * F.coalesce(F.col("w"), F.lit(0))).alias(
+                            "score"
+                        )
                     )
                 )
-            )
-            viol = scored.filter(F.col("y") * F.col("score") < FX).select("doc_id")
-            grad = (
-                batch.join(viol, "doc_id")
-                .groupBy("bucket")
-                .agg(F.sum(F.col("y") * F.col("cnt")).alias("g"))
-                .select("bucket", F.expr(f"({c} * {FX} * g) div {t * nb}").alias("w"))
-            )
-            w = _merge_weights(shrunk, grad).localCheckpoint(eager=True)
+                viol = scored.filter(F.col("y") * F.col("score") < FX).select("doc_id")
+                grad = (
+                    batch.join(viol, "doc_id")
+                    .groupBy("bucket")
+                    .agg(F.sum(F.col("y") * F.col("cnt")).alias("g"))
+                    .select("bucket", F.expr(f"({c} * {FX} * g) div {t * nb}").alias("w"))
+                )
+                step = _merge_weights(shrunk, grad)
+            # only the returned cut outlives the call: the one this
+            # round supersedes is freed whether or not the round's job
+            # succeeds (round 1 supersedes the empty frame, not a cut)
+            try:
+                w_next = cut_lineage(step)
+            finally:
+                if t > 1:
+                    release_cut(w)
+            w = w_next
     finally:
         release_cut(feats)
     return w

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from olist_ecommerce_data_warehouse_spark.functions.text import token_count, tokens
 from olist_ecommerce_data_warehouse_spark.operators.graph import connected_components
+from olist_ecommerce_data_warehouse_spark.operators.lineage import cut_lineage, release_cut
 from olist_ecommerce_data_warehouse_spark.operators.quality import quality_scored
 from olist_ecommerce_data_warehouse_spark.operators.sampling import sample_by_weight
 from olist_ecommerce_data_warehouse_spark.operators.textdedup import (
@@ -324,13 +325,14 @@ class CorpusPipeline:
         shingle table.  Appends survivors to silver/deduped and updates
         both indexes; returns per-fate counts."""
         def stage() -> tuple[int, dict[str, int]]:
-            # localCheckpoint at stage boundaries: each stage is read
+            # lineage cuts at stage boundaries: each stage is read
             # several times downstream (counts + two join consumers),
             # and the combined gates→LSH→CC→append lineage otherwise
             # grows past what plan stringification/codegen tolerate —
             # at scale these barriers are the staging tables a real
-            # incremental job writes anyway
-            flagged = self._apply_gates(new_docs).localCheckpoint(eager=True)
+            # incremental job writes anyway.  All four are released
+            # once the last count has run.
+            flagged = cut_lineage(self._apply_gates(new_docs))
             gated = flagged.filter(F.col("reject_reason").isNull()).drop(
                 "reject_reason"
             )
@@ -341,9 +343,7 @@ class CorpusPipeline:
             # exact vs history + within-increment (min id wins)
             no_hist = with_fp.join(fps.select("fp"), "fp", "left_anti")
             first = no_hist.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-            exact_new = no_hist.join(first.select("doc_id"), "doc_id").localCheckpoint(
-                eager=True
-            )
+            exact_new = cut_lineage(no_hist.join(first.select("doc_id"), "doc_id"))
             n_exact_dropped = gated.count() - exact_new.count()
 
             new_sh = shingle_hash_table(exact_new).persist()
@@ -385,16 +385,14 @@ class CorpusPipeline:
                 .select(F.col("doc_a").alias("doc_id"))
                 .distinct()
             )
-            survivors_vs_old = exact_new.join(
-                old_hits, "doc_id", "left_anti"
-            ).localCheckpoint(eager=True)
+            survivors_vs_old = cut_lineage(exact_new.join(old_hits, "doc_id", "left_anti"))
 
             # within-increment near-dup family collapse (batch rule)
             survivors, labels = _collapse_neardups(
                 survivors_vs_old,
                 new_sh.join(survivors_vs_old.select("doc_id"), "doc_id"),
             )
-            added = survivors.localCheckpoint(eager=True)
+            added = cut_lineage(survivors)
             n_neardup_dropped = exact_new.count() - added.count()
 
             # append with the EXACT silver schema (gate columns ride
@@ -410,6 +408,8 @@ class CorpusPipeline:
                 shingle_hash_table(added_cols)
             ).write.mode("append").parquet(self.path("silver", "index_band_sigs"))
             n_added = added.count()
+            for cut in (flagged, exact_new, survivors_vs_old, added):
+                release_cut(cut)
             labels.unpersist()
             new_sh.unpersist()
             new_sigs.unpersist()

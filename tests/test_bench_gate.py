@@ -4,11 +4,13 @@ The gate is the repo's only defense against silent performance decay,
 so its logic is tested like an operator: a genuine per-plan slowdown
 (the injected-sleep scenario) MUST flag, a uniform rig slowdown MUST
 cancel, and the noise floors MUST hold.  These run without Spark —
-pure arithmetic over synthetic timings.
+pure arithmetic over synthetic timings — except the traced-pass test,
+which runs two plans through the full record's tracer.
 """
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -334,3 +336,47 @@ def test_bench_ab_stamps_dirty_trees(tmp_path):
     (tmp_path / "new.txt").write_text("c\n")
     with_new = sha(tmp_path)
     assert with_new != dirty and with_new.startswith(head + "+dirty.")
+
+
+def test_traced_pass_fills_every_field(spark):
+    """The full record's ``traced`` map, over two cheap plans at sf0.01:
+    every field is present and numeric, each plan ran jobs and tasks,
+    and the span wall is the two call walls plus the recorder's own
+    in-span bookkeeping, to within 3% (e2ebench's span-cover
+    tolerance)."""
+    from tests.conftest import SF_DIR_MID
+
+    names = ["date_dimension", "cleanse_validity_filter"]
+    traced = bench.traced_pass(spark, names, SF_DIR_MID, dict.fromkeys(names, 0.1))
+    fields = {
+        "wall_s", "build_s", "exec_s", "build_jobs", "exec_jobs", "tasks",
+        "shuffle_mb", "exec_busy_s", "gc_s", "driver_gap_s",
+        "traced_minus_timed_s", "overhead_s",
+    }
+    assert set(traced) == set(names)
+    for name, t in traced.items():
+        assert set(t) == fields, name
+        assert all(isinstance(v, (int, float)) and v >= 0 for k, v in t.items()
+                   if k != "traced_minus_timed_s"), (name, t)
+        assert t["exec_jobs"] >= 1 and t["tasks"] >= 1 and t["exec_busy_s"] > 0, (name, t)
+        assert abs(t["traced_minus_timed_s"] - (t["build_s"] + t["exec_s"] - 0.1)) < 1e-3
+        parts = t["build_s"] + t["exec_s"] + t["overhead_s"]
+        assert abs(t["wall_s"] - parts) <= 0.03 * t["wall_s"], (name, t)
+
+
+def test_one_tracer_outside_e2ebench():
+    """e2ebench's ``Recorder`` is the one reader of Spark's execution
+    statistics: no other Python file in the repo reads the status store
+    or status tracker, the event log, a listener's events or the UI's
+    REST API.  (This file is skipped: it names them.)"""
+    repo = Path(__file__).resolve().parents[1]
+    readers = re.compile(r"statusStore|statusTracker|eventLog|SparkListener|/api/v1")
+    found = []
+    for path in repo.rglob("*.py"):
+        rel = path.relative_to(repo)
+        if rel.parts[0] in ("e2ebench", ".git", ".scratch") or path == Path(__file__).resolve():
+            continue
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if readers.search(line):
+                found.append(f"{rel}:{i}")
+    assert found == []

@@ -1188,7 +1188,10 @@ def test_pegasos_trains_hard_labels_and_generalizes(spark):
     shape that collapses full-batch lr=1 perceptron updates to the
     majority class at 500k docs), mini-batch PEGASOS reaches low
     training error; the trained weights also classify held-out docs
-    of the separable concept."""
+    of the separable concept.  Of the 40 rounds' weight cuts only the
+    returned one stays persisted (counted by RDD id: the cleaner may
+    free an earlier test's garbage meanwhile)."""
+    from olist_ecommerce_data_warehouse_spark.operators.lineage import release_cut
     from olist_ecommerce_data_warehouse_spark.operators.perceptron import (
         pegasos_train,
         perceptron_score,
@@ -1207,7 +1210,10 @@ def test_pegasos_trains_hard_labels_and_generalizes(spark):
     feats = spark.createDataFrame(rows, "doc_id long, bucket long, cnt long")
     lab = spark.createDataFrame(labels, "doc_id long, y long")
 
+    jsc = spark.sparkContext._jsc
+    start = set(jsc.getPersistentRDDs())
     w = pegasos_train(feats, lab, rounds=40, c=100, batches=8)
+    assert len(set(jsc.getPersistentRDDs()) - start) == 1
     e_pegasos = (
         perceptron_score(feats, w)
         .join(lab, "doc_id")
@@ -1221,6 +1227,8 @@ def test_pegasos_trains_hard_labels_and_generalizes(spark):
     tf = spark.createDataFrame(t_rows, "doc_id long, bucket long, cnt long")
     got = {r["doc_id"]: r["score"] for r in perceptron_score(tf, w).collect()}
     assert got[100] > 0 and got[101] <= 0, got
+    release_cut(w)
+    assert not set(jsc.getPersistentRDDs()) - start
 
 
 def test_ngram_lm_perplexity_filter(spark):

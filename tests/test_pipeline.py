@@ -523,7 +523,8 @@ def test_corpus_pipeline_incremental_drop(spark, tmp_path_factory):
     case-variant near-dups (same tokens → Jaccard 1.0, different raw
     text → different md5) drop at the verified-LSH gate both
     against history and within the drop, fresh docs append, and a
-    replayed identical drop adds nothing."""
+    replayed identical drop adds nothing.  Its four stage cuts are
+    released: no RDD persisted during either call outlives it."""
     from olist_ecommerce_data_warehouse_spark.catalog import table
     from olist_ecommerce_data_warehouse_spark.functions.text import tokens
     from olist_ecommerce_data_warehouse_spark.operators.quality import quality_scored
@@ -565,7 +566,10 @@ def test_corpus_pipeline_incremental_drop(spark, tmp_path_factory):
         ],
         "doc_id long, text string, lang string, source string",
     )
+    jsc = spark.sparkContext._jsc
+    start = set(jsc.getPersistentRDDs())
     out = pipe.apply_increment(inc)
+    assert not set(jsc.getPersistentRDDs()) - start
     assert out["dropped_exact"] == 1
     # 500002 drops vs history; 500005 drops vs its twin 500004; 500004
     # itself near-dups 500003 (J ≈ n/(n+1) ≥ 0.8 for ≥5-token texts) —
@@ -589,6 +593,7 @@ def test_corpus_pipeline_incremental_drop(spark, tmp_path_factory):
         (F.col("doc_id") + 1000).alias("doc_id"), "text", "lang", "source"
     )
     out2 = pipe.apply_increment(inc2)
+    assert not set(jsc.getPersistentRDDs()) - start
     assert out2["added"] == 0
     assert pipe.read("silver", "deduped").count() == n1
     audit = pipe.audit.to_df().toPandas()
